@@ -1,10 +1,18 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
+  * throws does not stop the dump, but the run exits non-zero naming it. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+  def main(args: Array[String]): Unit = args match {
+    case Array(sfDir, outDir) => run(sfDir, outDir)
+    case _ =>
+      System.err.println("usage: graft.Verify <sfDir> <outDir>")
+      sys.exit(2)
+  }
+
+  private def run(sfDir: String, outDir: String): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Sessions.local(cores = cpus, shufflePartitions = cpus, appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -12,17 +20,8 @@ object Verify {
     // queries (the driver never sets it, so the gate always runs the lot)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // drop checkpointed blocks so 34 queries' worth don't accumulate
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    val failed = dumpQueries(spark, sfDir, outDir,
+      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -39,5 +38,31 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Dump each query's result to `<outDir>/<name>` as parquet and return
+    * the names of the queries that threw (sorted), after dumping the rest.
+    */
+  def dumpQueries(
+      spark: SparkSession, sfDir: String, outDir: String,
+      queries: Iterable[(String, (SparkSession, String) => DataFrame)]): Seq[String] = {
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      val error =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
+      // drop checkpointed blocks so 34 queries' worth don't accumulate
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      error
+    }
+    failed.sorted
   }
 }

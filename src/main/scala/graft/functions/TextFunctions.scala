@@ -52,12 +52,6 @@ object TextFunctions {
   def normalizeWord(word: Column): Column =
     regexp_replace(lower(word), PunctTrimPattern, "")
 
-  /** Per-document array of normalized, non-empty words (HOF form — keeps the
-    * doc → words mapping inside one row, no explode).
-    */
-  def normalizedWords(text: Column): Column =
-    filter(transform(tokens(text), normalizeWord _), w => length(w) > 0)
-
   /** Upper bound on tokens a single document contributes to shingling.
     * Without it, shingle row size is linear in document length — one
     * pathological 100 MB document materializes a ~GB-scale array row and

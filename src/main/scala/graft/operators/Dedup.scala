@@ -131,10 +131,6 @@ object Dedup {
         (0 until numHashes).map(i => col(s"mh$i")): _*)
   }
 
-  /** Signature-column projection of a [[shingleSignatureTable]] frame. */
-  private def sigCols(tbl: DataFrame): DataFrame =
-    tbl.select(col("doc_id") +: (0 until NumHashes).map(i => col(s"mh$i")): _*)
-
   /** Pin a verification input onto `defaultParallelism` hash partitions
     * of `key` — the CPU-width guard for the exact-Jaccard verify joins.
     *
@@ -160,21 +156,6 @@ object Dedup {
     */
   private def pinWidth(df: DataFrame, key: String): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
-
-  /** Exact-Jaccard verification of candidate pairs against the true
-    * shingle sets — the tail shared by the from-text and from-table pair
-    * generators.
-    */
-  private def verifyPairs(pairs: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
-    pairs
-      .join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-      .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-      .select(
-        col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
-        size(array_union(col("sh_a"), col("sh_b"))).as("uni"))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-      .where(col("jaccard") >= threshold)
 
   /** Content-group assignment for a signature frame: `group_id` = the
     * smallest doc_id sharing this row's exact shingle ARRAY (order

@@ -348,11 +348,6 @@ object Multimodal {
     media.mapPartitions { it => ensureInMemoryImageIO(); it.map(decodeOne) }
   }
 
-  /** Historical name for [[decode]] — the seam the real image codec was
-    * wired behind; kept so existing callers compile unchanged.
-    */
-  def decodeStub(media: Dataset[MediaFile]): Dataset[MediaFeatures] = decode(media)
-
   /** REAL image resize (JDK AWT + imageio, headless-safe): decode, bilinear
     * scale to (width, height), re-encode as PNG. Non-image and undecodable
     * payloads pass through unchanged, so the operator composes anywhere in

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -121,12 +121,8 @@ object EventStreams {
     * max(ts) sits ≥ 35 s away from a half-hour boundary — four orders of
     * magnitude past the watermark's ms truncation.
     */
-  def slidingStatsAppendToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sliding")
-    val out = runAppendToFiles(spark, dir, slidingStats, s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp)
-    out
-  }
+  def slidingStatsAppendToBatch(spark: SparkSession, dir: String): DataFrame =
+    drainAppendToParquet(slidingStats(source(spark, dir)))
 
   /** Event-time session windows (30-minute gap) per user — the streaming
     * generalization of the batch gaps-and-islands sessionization.
@@ -201,8 +197,9 @@ object EventStreams {
   def hourlyStatsToBatch(spark: SparkSession, dir: String): DataFrame =
     runToBatch(spark, dir, hourlyStats, s"stream_hourly_${System.nanoTime()}")
 
-  /** PRODUCTION streaming topology: append output mode + file sink. This —
-    * not [[runToBatch]] — is the shape that runs on an unbounded stream:
+  /** The shared append drain — the PRODUCTION streaming topology: append
+    * output mode + file sink. This — not [[runToBatch]] — is the shape
+    * that runs on an unbounded stream:
     *
     *   - append mode emits each window exactly once, when the watermark
     *     passes its end, then EVICTS its state: state size is bounded by
@@ -216,45 +213,131 @@ object EventStreams {
     *     processing-time trigger for continuous ingest; nothing else
     *     changes.
     *
-    * Returns the path-backed result read back from the sink. Windows still
-    * inside the watermark horizon at end-of-input are NOT emitted — that is
-    * append-mode's contract (they could still receive late data), asserted
-    * against the batch answer + cutoff in the oracle and EventStreamsSpec.
+    * Returns the path-backed result read back from a temp sink dir. Windows
+    * still inside the watermark horizon at end-of-input are NOT emitted —
+    * that is append-mode's contract (they could still receive late data),
+    * asserted against the batch answer + cutoff in the oracle and
+    * EventStreamsSpec. Every append twin (events, sessions, document
+    * dedup and quality, stream-stream attribution) drains here, so the
+    * sink/checkpoint/read-back contract lives in ONE place.
     */
-  def runAppendToFiles(
-      spark: SparkSession, dir: String,
-      transform: DataFrame => DataFrame,
-      outPath: String, checkpointPath: String,
-      watermark: String = "1 hour"): DataFrame = {
-    val out = transform(source(spark, dir, watermark))
-    drainAppendToParquet(spark, out, outPath, checkpointPath)
-  }
-
-  /** The shared drain: run a streaming frame to completion in append mode
-    * against an exactly-once parquet sink, then read the result back.
-    * Used by every *ToBatch harness (events, sessions, document dedup,
-    * stream-stream attribution) so the sink/checkpoint/read-back contract
-    * lives in ONE place.
-    */
-  private[streaming] def drainAppendToParquet(
-      spark: SparkSession, out: DataFrame,
-      outPath: String, checkpointPath: String): DataFrame = {
+  private[streaming] def drainAppendToParquet(out: DataFrame): DataFrame = {
+    val spark = out.sparkSession
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_append")
     // the scope covers awaitTermination: batch planning reads the conf
     // asynchronously after start() returns
     withStreamShufflePartitions(spark) {
-      val q = out
-        .writeStream
+      out.writeStream
         .format("parquet")
-        .option("path", outPath)
-        .option("checkpointLocation", checkpointPath)
+        .option("path", s"$tmp/out")
+        .option("checkpointLocation", s"$tmp/ckpt")
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+        .awaitTermination()
     }
     // explicit schema: an all-late/empty stream legally emits zero files,
     // and schema inference over an empty sink dir would throw
-    spark.read.schema(out.schema).parquet(outPath)
+    val result = spark.read.schema(out.schema).parquet(s"$tmp/out")
+    deleteRecursivelyOnExit(tmp) // deletion happens at JVM exit, after any read
+    result
+  }
+
+  /** Run `stream` to completion (Trigger.AvailableNow) under the stream
+    * shuffle-partition scope, handing each micro-batch and its id to
+    * `sink` in the calling JVM — the one `foreachBatch` behind
+    * [[drainPerBatch]], [[drainUpdateToLog]] and the DLQ split.
+    */
+  private[streaming] def drainForeachBatch(
+      stream: DataFrame, outputMode: String, checkpointPath: String)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    withStreamShufflePartitions(stream.sparkSession) {
+      stream.writeStream
+        .outputMode(outputMode)
+        .option("checkpointLocation", checkpointPath)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(sink)
+        .start()
+        .awaitTermination()
+    }
+
+  /** The shared PER-BATCH sink — the streaming form of the reference's
+    * idempotent-by-overwrite task output. Every micro-batch's
+    * `probe(batch)` overwrites its own `batch=<id>` directory, so a batch
+    * replayed after a crash replaces rather than duplicates its rows
+    * (with the checkpointed batch ids: exactly-once in the log); the
+    * drained rows are read back across the per-batch directories. The
+    * read-back schema is the probe's own output type, recorded from the
+    * first micro-batch (`foreachBatch` runs in the calling JVM, so this
+    * costs no job) or, when no batch fired, taken from the probe over an
+    * empty frame of the stream's schema.
+    */
+  private[streaming] def drainPerBatch(stream: DataFrame)(
+      probe: DataFrame => DataFrame): DataFrame = {
+    val spark = stream.sparkSession
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_batches")
+    val out = tmp.resolve("out")
+    java.nio.file.Files.createDirectories(out)
+    val schema = new java.util.concurrent.atomic.AtomicReference[StructType]()
+    drainForeachBatch(stream, "append", tmp.resolve("ckpt").toString) { (batch, id) =>
+      val rows = probe(batch)
+      schema.compareAndSet(null, rows.schema)
+      rows.write.mode("overwrite").parquet(out.resolve(s"batch=$id").toString)
+    }
+    val readSchema = Option(schema.get).getOrElse(probe(spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), stream.schema)).schema)
+    // recursiveFileLookup: read across the per-batch directories without
+    // partition inference, so `batch=` never becomes a result column
+    val result = spark.read.schema(readSchema)
+      .option("recursiveFileLookup", "true").parquet(out.toString)
+    deleteRecursivelyOnExit(tmp)
+    result
+  }
+
+  /** UPDATE-mode drain into a log-structured keyed store: each micro-batch
+    * APPENDS its changed rows stamped with `batch_id`, and
+    * [[latestPerKey]] merges on read — the offline stand-in for a keyed
+    * upsert sink (Delta MERGE, HBase/Cassandra, a compacting topic). The
+    * stamp makes the upsert idempotent under foreachBatch's at-least-once
+    * replay: a re-delivered batch rewrites identical rows, and the merge
+    * collapses them.
+    */
+  private[streaming] def drainUpdateToLog(
+      updates: DataFrame, storeDir: String, checkpointPath: String): Unit = {
+    // an empty stream never fires foreachBatch: pre-create the store dir
+    // so the read-back sees a legal (empty) store, not a missing path
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
+    drainForeachBatch(updates, "update", checkpointPath) { (batch, id) =>
+      batch.withColumn("batch_id", lit(id)).write.mode("append").parquet(storeDir)
+    }
+  }
+
+  /** Latest-batch-wins merge-on-read of a [[drainUpdateToLog]] store: one
+    * row per `keys`, carrying the value columns and `batch_id` of the
+    * key's highest batch id (`max(struct(batch_id, values...))` — one
+    * distributed aggregate, nothing collected). `schema` is the DDL of
+    * the key and value columns: explicit, because an empty store holds no
+    * file to infer it from.
+    */
+  private[streaming] def latestPerKey(
+      spark: SparkSession, storeDir: String, schema: String, keys: String*): DataFrame = {
+    val log = spark.read.schema(s"$schema, batch_id BIGINT").parquet(storeDir)
+    val values = log.columns.toSeq.filterNot(c => c == "batch_id" || keys.contains(c))
+    log.groupBy(keys.map(col): _*)
+      .agg(max(struct(("batch_id" +: values).map(col): _*)).as("s"))
+      .select(keys.map(col) ++ (values :+ "batch_id").map(c => col(s"s.$c").as(c)): _*)
+  }
+
+  /** Drain into a fresh temp keyed store with `drain(storeDir,
+    * checkpointPath)` and `read` the store back.
+    */
+  private[streaming] def viaTempStore(drain: (String, String) => Unit)(
+      read: String => DataFrame): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_store")
+    drain(s"$tmp/store", s"$tmp/ckpt")
+    val result = read(s"$tmp/store")
+    deleteRecursivelyOnExit(tmp)
+    result
   }
 
   /** Register `root` (and everything under it, recursively) for deletion at
@@ -275,12 +358,8 @@ object EventStreams {
     * a temp dir. Oracle: the batch hourly aggregation restricted to windows
     * whose end the final watermark (max event time − 1 h) passed.
     */
-  def hourlyStatsAppendToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_append")
-    val out = runAppendToFiles(spark, dir, hourlyStats, s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp) // deletion happens at JVM exit, after any read
-    out
-  }
+  def hourlyStatsAppendToBatch(spark: SparkSession, dir: String): DataFrame =
+    drainAppendToParquet(hourlyStats(source(spark, dir)))
 
   /** Per-session rows from event-time session windows (30-minute gap),
     * with boundaries in epoch MICROS: integer columns are hash-portable
@@ -305,12 +384,8 @@ object EventStreams {
     * state row is evicted (session state is bounded by open sessions per
     * user within the watermark horizon, never by stream history).
     */
-  def sessionWindowsAppendToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sessions")
-    val out = runAppendToFiles(spark, dir, sessionWindows(_), s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp)
-    out
-  }
+  def sessionWindowsAppendToBatch(spark: SparkSession, dir: String): DataFrame =
+    drainAppendToParquet(sessionWindows(source(spark, dir)))
 
   /** STREAM-STREAM INTERVAL JOIN: every (purchase, click) pair for the same
     * user with the click inside the hour before (or at) the purchase — the
@@ -350,11 +425,7 @@ object EventStreams {
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
-    val out = attributionPairs(purchases, clicks)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_attr")
-    val result = drainAppendToParquet(spark, out, s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp)
-    result
+    drainAppendToParquet(attributionPairs(purchases, clicks))
   }
 
   /** Conversion window for [[funnelRows]]: steps 2..n must land within
@@ -516,15 +587,8 @@ object EventStreams {
     * shape). The oracle replays the windowed, watermark-gated semantics
     * exactly — see `q_stream_funnel_append` in SparkEntry.
     */
-  def funnelAppendToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_funnel")
-    val out = withStreamShufflePartitions(spark) {
-      val frame = funnelRows(source(spark, dir)).toDF()
-      drainAppendToParquet(spark, frame, s"$tmp/out", s"$tmp/ckpt")
-    }
-    deleteRecursivelyOnExit(tmp)
-    out
-  }
+  def funnelAppendToBatch(spark: SparkSession, dir: String): DataFrame =
+    drainAppendToParquet(funnelRows(source(spark, dir)).toDF())
 
   /** STREAM-STATIC ENRICHMENT JOIN — the dimension-lookup topology every
     * ingest pipeline runs: the purchase stream joins the static customer
@@ -547,14 +611,9 @@ object EventStreams {
   /** Drain [[enrichedPurchases]] over the driver's events dir to a parquet
     * sink and read it back.
     */
-  def enrichedPurchasesToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_enrich")
-    val out = drainAppendToParquet(spark,
-      enrichedPurchases(rawSource(spark, dir), graft.Tables.customer(spark, dir)),
-      s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp)
-    out
-  }
+  def enrichedPurchasesToBatch(spark: SparkSession, dir: String): DataFrame =
+    drainAppendToParquet(
+      enrichedPurchases(rawSource(spark, dir), graft.Tables.customer(spark, dir)))
 
   /** Streaming exactly-once ingest dedup: drop duplicate event ids within
     * the watermark horizon — the standard at-least-once → exactly-once

@@ -65,33 +65,13 @@ object SketchStreams {
     * store (append-only log + merge-on-read, the LSM shape).
     */
   def nodeCountsUpdateToStore(
-      orders: DataFrame, storeDir: String, ckptDir: String): Unit = {
-    val counts = nodeCounts(orders)
-    EventStreams.withStreamShufflePartitions(counts.sparkSession) {
-      val q = counts.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(storeDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-  }
+      orders: DataFrame, storeDir: String, ckptDir: String): Unit =
+    EventStreams.drainUpdateToLog(nodeCounts(orders), storeDir, ckptDir)
 
   /** Merge-on-read of the node store: latest batch's count wins per node. */
-  def readNodeStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("l", IntegerType), StructField("b", LongType),
-      StructField("cnt", LongType), StructField("batch_id", LongType)))
-    spark.read.schema(schema).parquet(storeDir)
-      .groupBy("l", "b")
-      .agg(max_by(struct(col("batch_id"), col("cnt")), col("batch_id"))
-        .getField("cnt").as("cnt"))
-  }
+  def readNodeStore(spark: SparkSession, storeDir: String): DataFrame =
+    EventStreams.latestPerKey(spark, storeDir, "l INT, b BIGINT, cnt BIGINT", "l", "b")
+      .drop("batch_id")
 
   /** End-to-end twin: stream the orders table into the node store, then
     * answer ranks/quantiles off the drained store with the SAME answer
@@ -100,12 +80,9 @@ object SketchStreams {
     */
   def quantileSketchViaStore(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_qsketch")
-    // an empty stream never fires foreachBatch: pre-create the store dir
-    java.nio.file.Files.createDirectories(tmp.resolve("store"))
-    nodeCountsUpdateToStore(ordersSource(spark, dir), s"$tmp/store", s"$tmp/ckpt")
-    val nodes = readNodeStore(spark, s"$tmp/store").localCheckpoint()
-    EventStreams.deleteRecursivelyOnExit(tmp)
+    val nodes = EventStreams.viaTempStore(
+      nodeCountsUpdateToStore(ordersSource(spark, dir), _, _))(
+      readNodeStore(spark, _).localCheckpoint())
     Sketches.quantileAnswers(
       nodes,
       Sketches.quantileCents(graft.Tables.orders(spark, dir)).localCheckpoint())
@@ -132,33 +109,13 @@ object SketchStreams {
     * store (append-only log + merge-on-read, the LSM shape).
     */
   def hllRegistersUpdateToStore(
-      docs: DataFrame, storeDir: String, ckptDir: String): Unit = {
-    val mins = hllRegisterMins(docs)
-    EventStreams.withStreamShufflePartitions(mins.sparkSession) {
-      val q = mins.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(storeDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-  }
+      docs: DataFrame, storeDir: String, ckptDir: String): Unit =
+    EventStreams.drainUpdateToLog(hllRegisterMins(docs), storeDir, ckptDir)
 
   /** Merge-on-read of the register store: latest batch's min wins. */
-  def readRegisterStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("lang", StringType), StructField("j", LongType),
-      StructField("minb", IntegerType), StructField("batch_id", LongType)))
-    spark.read.schema(schema).parquet(storeDir)
-      .groupBy("lang", "j")
-      .agg(max_by(struct(col("batch_id"), col("minb")), col("batch_id"))
-        .getField("minb").as("minb"))
-  }
+  def readRegisterStore(spark: SparkSession, storeDir: String): DataFrame =
+    EventStreams.latestPerKey(spark, storeDir, "lang STRING, j BIGINT, minb INT", "lang", "j")
+      .drop("batch_id")
 
   /** End-to-end twin: stream the documents table into the register store,
     * then estimate per-language vocabulary off the drained store with the
@@ -168,12 +125,9 @@ object SketchStreams {
     */
   def hllVocabViaStore(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_hll")
-    java.nio.file.Files.createDirectories(tmp.resolve("store"))
-    hllRegistersUpdateToStore(
-      DocumentStreams.rawSource(spark, dir), s"$tmp/store", s"$tmp/ckpt")
-    val regs = readRegisterStore(spark, s"$tmp/store").localCheckpoint()
-    EventStreams.deleteRecursivelyOnExit(tmp)
+    val regs = EventStreams.viaTempStore(
+      hllRegistersUpdateToStore(DocumentStreams.rawSource(spark, dir), _, _))(
+      readRegisterStore(spark, _).localCheckpoint())
     Sketches.hllAnswers(
       regs,
       Sketches.tokenize(

@@ -349,4 +349,25 @@ class EventStreamsSpec extends SparkSpec {
     val perUser = sessions.groupBy(_.getLong(0)).view.mapValues(_.length.toLong).toMap
     assert(perUser === batchSessions.view.mapValues(_._1).toMap)
   }
+
+  test("per-batch sink reads back the probe's schema whether or not a batch fired") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("perbatch_src")
+    val stream = spark.readStream.schema("id BIGINT, text STRING")
+      .option("recursiveFileLookup", "true").parquet(src.toString)
+    // the probe changes every column type, so a schema taken from the
+    // stream instead of the probe would show
+    val probe = (b: org.apache.spark.sql.DataFrame) =>
+      b.select(col("id").cast("int").as("id"), length(col("text")).cast("long").as("n"))
+    def types(df: org.apache.spark.sql.DataFrame) = df.schema.map(_.dataType.catalogString)
+    val none = EventStreams.drainPerBatch(stream)(probe)
+    assert(none.count() === 0)
+    assert(types(none) === Seq("int", "bigint"))
+    Seq((1L, "ab"), (2L, "cde")).toDF("id", "text").write.parquet(s"$src/f1")
+    val fired = EventStreams.drainPerBatch(stream)(probe)
+    assert(types(fired) === Seq("int", "bigint"))
+    assert(fired.collect().map(r => (r.getInt(0), r.getLong(1))).toSet === Set((1, 2L), (2, 3L)))
+    EventStreams.deleteRecursivelyOnExit(src)
+  }
 }

@@ -8,18 +8,28 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "=== gate 0/3: bench-gate self-test (contention refusal) ==="
+echo "=== gate 0/3: bench-gate self-test (contention refusal) + benchmark-harness unit tests ==="
 python3 tools/check_bench_regression.py --self-test
+python3 -m unittest discover -s perfbench/tests
 
 echo "=== gate 1/3: sbt test ==="
 sbt -batch test
 
 echo "=== gate 2/3: correctness (Verify + DuckDB oracle, sf0.01) ==="
+# Verify exits non-zero when a query threw, after dumping all the others:
+# record its status, still run the oracle compare over the dumps, then fail
+set +e
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gates_verify"
+verify_status=$?
+set -e
 # third arg writes the load-marker-stamped JSON artifact (r16): commit it
 # as CORRECTNESS_r<N>.json so the round closes with marker evidence
 python3 tools/check_correctness.py /root/testdata/sf0.01 /tmp/gates_verify \
   /tmp/gates_correctness.json
+if [[ $verify_status -ne 0 ]]; then
+  echo "Verify failed (exit $verify_status): see the [verify] lines above" >&2
+  exit "$verify_status"
+fi
 
 echo "=== gate 3/3: bench regression (sf0.1 vs BENCH_BASELINE.json) ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
