@@ -91,6 +91,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // dev affordance: SPARK_GRAFT_ONLY=q1,q2 restricts the run (official
+    // runs leave it unset, so their numbers always cover the lot)
+    val queries = SparkEntry.selectFromEnv("bench")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Sessions.local(cores = cpus, shufflePartitions = cpus, appName = "graft-bench")
     // the LSH dedup paths localCheckpoint their self-join inputs; drop
@@ -117,18 +120,18 @@ object Bench {
       df.queryExecution.toRdd.foreachPartition { it =>
         while (it.hasNext) it.next()
       }
-    // dev affordance: SPARK_GRAFT_ONLY=q1,q2 restricts the run (the
-    // driver never sets it, so official numbers always cover the lot)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // warmup pass: JIT + codegen caches + parquet footer caches, so the
     // measured passes reflect steady-state per-query cost
-    queries.foreach { case (name, fn) =>
+    val warmupFailed = queries.toSeq.flatMap { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"warmup:$name")
-      try drain(fn(spark, sfDir)) catch { case _: Throwable => () }
+      val failed =
+        try { drain(fn(spark, sfDir)); None }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       clearCaches()
+      failed
     }
     // pass p of EVERY query before pass p+1 of any — per-query samples land
     // in well-separated time windows (see [[Passes]])
@@ -216,7 +219,7 @@ object Bench {
     // artifact the round-end commit picks up — skip the file write unless
     // an explicit output path asks for it
     val fullOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .orElse(if (only.isEmpty) Some("BENCH_FULL.json") else None)
+      .orElse(if (sys.env.contains("SPARK_GRAFT_ONLY")) None else Some("BENCH_FULL.json"))
     fullOut.foreach { p =>
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(p), line.getBytes("UTF-8"))
@@ -225,5 +228,10 @@ object Bench {
     }
     println(line)
     spark.stop()
+    val failed = (warmupFailed ++ medians.collect { case (n, v) if v < 0 => n }).distinct.sorted
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -36,7 +36,7 @@ object ChaosRun {
     * keeps duplicate rows (which XOR alone would cancel in pairs)
     * visible. Computed distributed; one long comes back.
     */
-  private def contentHash(df: DataFrame): Long = {
+  private[graft] def contentHash(df: DataFrame): Long = {
     val cols = df.columns.map(c => coalesce(col(c).cast("string"), lit("<null>")))
     val h = xxhash64(cols.toIndexedSeq: _*)
     val r = df.select(
@@ -63,7 +63,7 @@ object ChaosRun {
       args.lift(2).foreach(r => spark.conf.set(Chaos.CrashRateKey, r))
       args.lift(3).foreach(r => spark.conf.set(Chaos.DelayRateKey, r))
       val results = names.map { name =>
-        val fn = SparkEntry.queries(name)
+        val fn = SparkEntry.query(name)
         spark.conf.set(Chaos.EnabledKey, "false")
         val clean = contentHash(fn(spark, dir))
         spark.conf.set(Chaos.EnabledKey, "true")

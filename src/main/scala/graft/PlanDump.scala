@@ -317,7 +317,7 @@ object PlanDump {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
       }
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val df = SparkEntry.query(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(FormattedMode)
       if (pinned) {
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -24,9 +24,7 @@ object PlanOne {
     try {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       names.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
-        val fn = SparkEntry.queries.getOrElse(n,
-          sys.error(s"unknown query '$n' — names come from SparkEntry.queries"))
-        val df = fn(spark, sfDir)
+        val df = SparkEntry.query(n)(spark, sfDir)
         val plan = df.queryExecution.explainString(FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),

@@ -10,6 +10,10 @@ package graft
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println("usage: runMain graft.RunOne <sfDir> <q1,q2,...>")
+      sys.exit(2)
+    }
     val Array(sfDir, names) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark =
@@ -19,7 +23,7 @@ object RunOne {
       val t0 = System.nanoTime()
       // drain InternalRows, not .count(): same honesty rationale as Bench
       // (count lets Catalyst delete projections and aggregate expressions)
-      val rows = SparkEntry.queries(n)(spark, sfDir)
+      val rows = SparkEntry.query(n)(spark, sfDir)
         .queryExecution.toRdd
         .mapPartitions { it =>
           var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator(n)

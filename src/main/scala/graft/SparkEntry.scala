@@ -1,15 +1,17 @@
 package graft
 
 import graft.operators._
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query surface: every operator in SURVEY §2's inventory (and the
+  * LLM-pipeline extension surface) as a named query over the parquet
+  * tables, each with a DuckDB SQL oracle. Column names/aliases match the
+  * oracle exactly (the compare hashes by sorted column name).
   *
-  * Every operator in SURVEY §2's inventory (and the LLM-pipeline extension
-  * surface) is exposed as a named query over the driver's parquet tables,
-  * with a DuckDB-equivalent SQL oracle where the semantics are
-  * SQL-expressible. Column names/aliases match the oracle exactly (the
-  * driver's compare hashes by sorted column name).
+  * Each query is defined once, builder and oracle together, in the
+  * `graft.queries` object of its operator family; [[queries]] and
+  * [[oracleSql]] are views of that one registry.
   */
 object SparkEntry {
 
@@ -20,6997 +22,51 @@ object SparkEntry {
       Tables.customer(spark, dir), Tables.orders(spark, dir), Tables.lineitem(spark, dir))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- reference surface: word count + top-k (SURVEY §2.1 #1-13) ---
-    "wordcount_topk" -> ((s, dir) =>
-      WordCount.topK(WordCount.counts(Tables.documents(s, dir), "text"), 50)),
-    "mr_wordcount" -> ((s, dir) => {
-      implicit val spark: SparkSession = s
-      import s.implicits._
-      val input = Tables.documents(s, dir)
-        .select($"doc_id".cast("string"), $"text").as[(String, String)]
-      MapReduce.wordCountJob(input).toDF("word", "cnt")
-    }),
-    "mr_inverted_index" -> ((s, dir) => {
-      implicit val spark: SparkSession = s
-      import s.implicits._
-      val input = Tables.documents(s, dir)
-        .select($"doc_id".cast("string"), $"text").as[(String, String)]
-      MapReduce.invertedIndexJob(input).toDF("word", "doc_ids")
-    }),
-    // --- relational suite (SURVEY §2 generalized; build plan M3) ---
-    "q1_pricing_summary" -> ((s, dir) => Relational.pricingSummary(Tables.lineitem(s, dir))),
-    "q6_forecast_revenue" -> ((s, dir) => Relational.forecastRevenue(Tables.lineitem(s, dir))),
-    "q3_shipping_priority" -> ((s, dir) =>
-      Relational.shippingPriority(Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "q5_local_supplier" -> ((s, dir) =>
-      Relational.localSupplierRevenue(
-        Tables.region(s, dir), Tables.nation(s, dir), Tables.customer(s, dir),
-        Tables.supplier(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "q14_promo_revenue" -> ((s, dir) =>
-      Relational.promoRevenue(Tables.lineitem(s, dir), Tables.part(s, dir))),
-    "q19_disjunctive" -> ((s, dir) =>
-      Relational.disjunctiveRevenue(Tables.lineitem(s, dir), Tables.part(s, dir))),
-    "q10_returned_item" -> ((s, dir) =>
-      Relational.returnedItemRevenue(
-        Tables.customer(s, dir), Tables.orders(s, dir), Tables.nation(s, dir),
-        Tables.lineitem(s, dir))),
-    "q18_large_volume" -> ((s, dir) =>
-      Relational.largeVolumeCustomers(
-        Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "q4_order_priority" -> ((s, dir) =>
-      Relational.latePriorityOrders(Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "q13_order_distribution" -> ((s, dir) =>
-      Relational.customerOrderDistribution(Tables.customer(s, dir), Tables.orders(s, dir))),
-    "q17_small_qty_revenue" -> ((s, dir) =>
-      Relational.smallQuantityRevenue(Tables.lineitem(s, dir), Tables.part(s, dir))),
-    "q22_dormant_rich" -> ((s, dir) =>
-      Relational.dormantRichCustomers(Tables.customer(s, dir), Tables.orders(s, dir))),
-    // EXISTS + NOT EXISTS on the same fact with an inequality residual —
-    // two keyed semi/anti self-joins, the hardest standard decorrelation.
-    "q21_waiting_supplier" -> ((s, dir) =>
-      Relational.waitingSuppliers(
-        Tables.supplier(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    // Aggregate view consumed twice (global max + selection) — q15 shape.
-    "q15_top_supplier" -> ((s, dir) =>
-      Relational.topRevenueSupplier(Tables.supplier(s, dir), Tables.lineitem(s, dir))),
-    // Correlated MIN across a join (region-restricted offers) — q2 shape.
-    "q2_min_cost_supplier" -> ((s, dir) =>
-      Relational.minCostSuppliers(
-        Tables.region(s, dir), Tables.nation(s, dir), Tables.supplier(s, dir),
-        Tables.part(s, dir), Tables.lineitem(s, dir))),
-    // Symmetric nation-pair revenue flows per ship year — q7 shape.
-    "q7_volume_shipping" -> ((s, dir) =>
-      Relational.volumeShipping(
-        Tables.nation(s, dir), Tables.customer(s, dir), Tables.supplier(s, dir),
-        Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    // Conditional-sum ratio per order year (one nation's share) — q8 shape.
-    "q8_market_share" -> ((s, dir) =>
-      Relational.marketShare(
-        Tables.region(s, dir), Tables.nation(s, dir), Tables.customer(s, dir),
-        Tables.supplier(s, dir), Tables.part(s, dir), Tables.orders(s, dir),
-        Tables.lineitem(s, dir))),
-    // Widest star rollup: profit per (nation, year) — q9 shape.
-    "q9_product_profit" -> ((s, dir) =>
-      Relational.productTypeProfit(
-        Tables.nation(s, dir), Tables.supplier(s, dir), Tables.part(s, dir),
-        Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    // Grouped agg vs global scalar threshold, cross-multiplied — q11 shape.
-    "q11_important_parts" -> ((s, dir) =>
-      Relational.importantParts(
-        Tables.nation(s, dir), Tables.supplier(s, dir), Tables.lineitem(s, dir))),
-    // Cross-table date band + two conditional counts — q12 shape.
-    "q12_ship_lag_priority" -> ((s, dir) =>
-      Relational.shippingLagPriority(Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    // DISTINCT agg over an anti-joined (part, supplier) pair set — q16 shape.
-    "q16_part_supplier_counts" -> ((s, dir) =>
-      Relational.partSupplierCounts(
-        Tables.supplier(s, dir), Tables.part(s, dir), Tables.lineitem(s, dir))),
-    // Correlated agg inside a semi join, fully decorrelated — q20 shape.
-    "q20_excess_stock" -> ((s, dir) =>
-      Relational.excessStockSuppliers(
-        Tables.nation(s, dir), Tables.supplier(s, dir), Tables.part(s, dir),
-        Tables.lineitem(s, dir))),
-    "q_distinct_agg" -> ((s, dir) => Relational.distinctCustomers(Tables.orders(s, dir))),
-    "q_correlated_min" -> ((s, dir) =>
-      Relational.cheapestOrderPerCustomer(s, Tables.orders(s, dir))),
-    "q_pivot" -> ((s, dir) => Relational.ordersByPriorityPivot(Tables.orders(s, dir))),
-    "q_window_profile" -> ((s, dir) => Relational.orderWindowProfile(Tables.orders(s, dir))),
-    "q_median" -> ((s, dir) => Relational.medianOrderValue(Tables.orders(s, dir))),
-    // fixed-width histogram percentile sketch (deterministic approx form)
-    "q_histogram_quantile" -> ((s, dir) => Relational.histogramQuantiles(Tables.orders(s, dir))),
-    "q_rollup" -> ((s, dir) => Relational.rollupSummary(Tables.lineitem(s, dir))),
-    "q_cube" -> ((s, dir) => Relational.cubeSummary(Tables.lineitem(s, dir))),
-    "q_outer_join" -> ((s, dir) =>
-      Relational.customerOrderCoverage(Tables.customer(s, dir), Tables.orders(s, dir))),
-    "q_window_rank" -> ((s, dir) => Relational.topOrdersPerCustomer(Tables.orders(s, dir))),
-    "q_window_moving" -> ((s, dir) => Relational.movingAvgOrderValue(Tables.orders(s, dir))),
-    // RANGE (value-based) frame: trailing 7-day spend in exact epoch micros
-    "q_window_range" -> ((s, dir) => Relational.trailingSpend(Tables.orders(s, dir))),
-    // order-independent XOR integrity digest per source
-    "q_table_digest" -> ((s, dir) => Sketches.tableDigest(Tables.documents(s, dir))),
-    "q_setops" -> ((s, dir) => Relational.customerSetOps(Tables.customer(s, dir), Tables.orders(s, dir))),
-    // Co-located bucketed join: both sides written bucketed+sorted on the
-    // customer key, then joined and aggregated with ZERO exchanges
-    // (BucketingSpec asserts the plan) — the amortized-write shape every
-    // repeated 100 TB fact join wants.
-    "q_bucketed_join" -> ((s, dir) => Bucketing.ordersPerCustomerCoLocated(s, dir)),
-    "q_semijoin" -> ((s, dir) =>
-      Relational.customersWithUrgentOrders(Tables.customer(s, dir), Tables.orders(s, dir))),
-    "q_antijoin" -> ((s, dir) =>
-      Relational.customersWithoutUrgentOrders(Tables.customer(s, dir), Tables.orders(s, dir))),
-    "q_scalar_funcs" -> ((s, dir) => Relational.scalarShowcase(Tables.orders(s, dir))),
-    "q_topk_global" -> ((s, dir) => Relational.topRevenueLineitems(Tables.lineitem(s, dir))),
-    // Built-in sketches are approximate and not engine-portable, so the
-    // oracle form is a hashable tolerance band: exact counts + in-band
-    // booleans (TRUE rows replayed by DuckDB).
-    "sketch_summary" -> ((s, dir) => Relational.sketchSummary(Tables.lineitem(s, dir))),
-    // Hand-rolled order-independent sketches: deterministic, fully
-    // oracle-replayed (unlike the built-in HLL++/percentile sketches).
-    "q_hll_vocab" -> ((s, dir) => Sketches.hllVocabByLang(Tables.documents(s, dir))),
-    // Streaming HLL register maintenance (update-mode keyed store, no
-    // watermark — structurally bounded state); same answers as the batch.
-    "q_stream_hll_update" -> ((s, dir) =>
-      graft.streaming.SketchStreams.hllVocabViaStore(s, dir)),
-    // The same HLL through the typed-Aggregator/udaf surface
-    // (ObjectHashAggregate path) — identical frame, shared oracle.
-    "q_hll_vocab_agg" -> ((s, dir) => Sketches.hllVocabByLangUdaf(Tables.documents(s, dir))),
-    "q_countmin_probe" -> ((s, dir) => Sketches.countMinProbe(Tables.documents(s, dir))),
-    // Mergeable fixed-universe dyadic quantile sketch (typed-Aggregator
-    // state, order-independent) — rank + quantile answers hash-replayed.
-    "q_quantile_sketch" -> ((s, dir) => Sketches.quantileSketch(Tables.orders(s, dir))),
-    // Float-universe quantile sketch: deterministic level-sampling (KLL's
-    // weight ladder, content-hashed coin) — multiset-invariant state.
-    "q_kll_quantile" -> ((s, dir) => Sketches.kllQuantile(Tables.orders(s, dir))),
-    // Per-group sketch states through ONE hash-agg — grouped quantiles
-    // with group-partitioned exact ranks (no global sort anywhere).
-    "q_kll_segment" -> ((s, dir) =>
-      Sketches.kllQuantileBySegment(Tables.customer(s, dir), Tables.orders(s, dir))),
-    // KMV distinct sketches + pairwise Jaccard estimation between
-    // language vocabularies (the set-operation estimator HLL lacks).
-    "q_kmv_overlap" -> ((s, dir) => Sketches.kmvLangOverlap(Tables.documents(s, dir))),
-    // Bucket-level digest reconciliation: localize the planted change to
-    // its doc-id block by exchanging per-bucket XOR digests.
-    "q_digest_diff" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Sketches.digestDiffBuckets(d, Sketches.tamperedReplica(d))
-    }),
-    // Row-level drill-down of the digest diff: classify added / removed /
-    // changed keys (demo replica: one edit + one dropped row).
-    "q_row_diff" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      import org.apache.spark.sql.functions.col
-      Sketches.rowDiff(d,
-        Sketches.tamperedReplica(d).where(col("doc_id") =!= Sketches.DroppedDocId))
-    }),
-    // Explicit GROUPING SETS (marginals + grand total) with grouping_id.
-    "q_grouping_sets" -> ((s, dir) =>
-      Relational.groupingSetsSummary(Tables.lineitem(s, dir))),
-    // Dead-letter-queue split: the quality gate's reject side with the
-    // first-failing-rule reason, two-sink idempotent foreachBatch routing.
-    "q_stream_dlq" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.dlqSplitToBatch(s, dir)),
-    // --- events: JSON, time buckets, sessionization (build plan M4/M5) ---
-    "q_events_json" -> ((s, dir) => EventAnalytics.perTypeStats(Tables.events(s, dir))),
-    "q_events_hourly" -> ((s, dir) => EventAnalytics.hourlyStats(Tables.events(s, dir))),
-    // Point-in-interval range join (no equi key) via time-bucket rewrite —
-    // never a BNLJ/cartesian (PlanSpec pins it).
-    "q_range_join" -> ((s, dir) => EventAnalytics.campaignStats(Tables.events(s, dir))),
-    // Date-partitioned layout: one day's stats off a pruned scan (29/30 of
-    // the table never read — PartitionedLayoutSpec asserts the pruning,
-    // static and DPP).
-    "q_partition_pruning" -> ((s, dir) =>
-      graft.sources.PartitionedLayout.dailyStatsPruned(s, dir)),
-    // Z-order (Morton) interleave of (user_id, value-cents) — the
-    // multi-dimensional clustering key; file-skipping asserted in
-    // ZOrderLayoutSpec, the key itself oracle-checked here.
-    "q_zorder" -> ((s, dir) => graft.sources.ZOrderLayout.eventZ(Tables.events(s, dir))),
-    // Bloom runtime filter: probe pruned by k broadcast semi joins on the
-    // build digest, exact join after — shares the plain join's oracle.
-    "q_bloom_join" -> ((s, dir) =>
-      RuntimeFilter.urgentRevenue(Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "q_events_sessions" -> ((s, dir) => EventAnalytics.sessionCounts(Tables.events(s, dir))),
-    // Ordered conversion funnel (view -> click -> purchase, strictly after)
-    "q_funnel" -> ((s, dir) => EventAnalytics.funnelSteps(Tables.events(s, dir))),
-    // Weekly cohort retention cells (integer epoch-week arithmetic)
-    "q_cohort_retention" -> ((s, dir) => EventAnalytics.cohortRetention(Tables.events(s, dir))),
-    "q_asof_attribution" -> ((s, dir) => EventAnalytics.purchaseAttribution(Tables.events(s, dir))),
-    // per-session event-type paths, most common patterns
-    "q_session_paths" -> ((s, dir) => EventAnalytics.sessionPaths(Tables.events(s, dir))),
-    // --- text analysis (LLM-pipeline surface) ---
-    "q_text_stats" -> ((s, dir) => TextAnalysis.docStats(Tables.documents(s, dir))),
-    "q_lang_id" -> ((s, dir) => TextAnalysis.langId(Tables.documents(s, dir))),
-    // detector QA: (true, predicted) confusion cells with milli shares
-    "q_langid_confusion" -> ((s, dir) =>
-      TextAnalysis.langIdConfusion(Tables.documents(s, dir))),
-    "q_token_counts" -> ((s, dir) => TextAnalysis.tokenCounts(Tables.documents(s, dir))),
-    // Sequence packing (concat-and-chunk): per-doc global token offsets
-    // via a two-level distributed prefix sum, then fixed-length training
-    // example spans/rollups. All-integer, fully oracle-replayed.
-    "q_pack_offsets" -> ((s, dir) => Packing.packedDocSpans(Tables.documents(s, dir))),
-    "q_pack_chunks" -> ((s, dir) => Packing.packedChunkStats(Tables.documents(s, dir))),
-    // BM25-style ranked retrieval (rational k1/b cross-multiplied to exact
-    // integers, linear idf, fixed-order term sum) — full oracle replay.
-    "q_bm25_topk" -> ((s, dir) => TextAnalysis.bm25TopK(Tables.documents(s, dir))),
-    // Vocabulary induction + id encoding: top-V tokens by (count DESC,
-    // tok ASC) get ids 1..V, every position encoded, OOV -> 0.
-    "q_token_ids" -> ((s, dir) => TextAnalysis.tokenIdSequences(Tables.documents(s, dir))),
-    // Degree-ordered triangle counting on the word co-occurrence graph
-    // (each triangle enumerated once at its (deg, id)-min vertex).
-    "q_word_triangles" -> ((s, dir) => GraphAnalytics.wordTriangles(Tables.documents(s, dir))),
-    // k-core peeling (fixed BSP rounds, loop unrolled in the oracle).
-    "q_kcore_words" -> ((s, dir) => GraphAnalytics.kCoreWords(Tables.documents(s, dir))),
-    "q_fingerprint" -> ((s, dir) => TextAnalysis.fingerprints(Tables.documents(s, dir))),
-    "q_tfidf_topterms" -> ((s, dir) => TextAnalysis.tfIdfTopTerms(Tables.documents(s, dir))),
-    "q_top_terms_per_lang" -> ((s, dir) => TextAnalysis.topTermsPerLang(Tables.documents(s, dir))),
-    // At-scale twin: per-lang TakeOrdered (bound heaps) instead of the
-    // vocabulary-wide window sort; same answer, same oracle.
-    "q_top_terms_per_lang_scalable" -> ((s, dir) =>
-      TextAnalysis.topTermsPerLangTakeOrdered(Tables.documents(s, dir))),
-    "q_chunked" -> ((s, dir) => TextAnalysis.chunked(Tables.documents(s, dir))),
-    "q_repetition" -> ((s, dir) => TextAnalysis.repetitionStats(Tables.documents(s, dir))),
-    "q_bpe_merges" -> ((s, dir) => TextAnalysis.bpeMergeCandidates(Tables.documents(s, dir))),
-    // REAL iterative BPE: k rounds of weighted pair-count + merge over the
-    // evolving segmentation (vocabulary-scale rounds, kernel-applied rules).
-    // Trained ONCE per corpus into the persisted TokenizerStore table;
-    // this query reads the artifact back.
-    "q_bpe_trained" -> ((s, dir) => TokenizerStore.mergesTable(s, dir)),
-    // Bounded-sample training (r14): identical trainer on a deterministic
-    // 1/16 doc sample — the 100 TB production path (both the word scan
-    // and every merge round are sample-bounded); the agreement card below
-    // is its acceptance gate vs the exact trainer.
-    "q_bpe_sampled" -> ((s, dir) =>
-      TextAnalysis.bpeSampledMerges(Tables.documents(s, dir))),
-    "q_bpe_sample_agreement" -> ((s, dir) =>
-      TextAnalysis.bpeSampleAgreement(Tables.documents(s, dir))),
-    // The tokenizer's APPLY step: every distinct word segmented under
-    // rules RELOADED from the persisted table (train-once/apply-everywhere
-    // — encode never retrains).
-    "q_bpe_encode" -> ((s, dir) =>
-      TextAnalysis.bpeEncodeWithRules(Tables.documents(s, dir), TokenizerStore.rules(s, dir))),
-    // vocab-sizing curve (r17): ONE training to the deepest checkpoint,
-    // then per-checkpoint rule-prefix encodes — fertility/compression/
-    // distinct-piece utilization vs merge count, all exact integers
-    "q_bpe_vocab_curve" -> ((s, dir) =>
-      TextAnalysis.bpeVocabCurve(Tables.documents(s, dir))),
-    // byte-fallback card (r17): character_coverage-kept alphabet ∪ merge
-    // outputs from the SAMPLED trainer; full corpus encoded under the
-    // sampled rules, OOV pieces expanded to UTF-8 bytes — per-lang rates
-    "q_bpe_byte_fallback" -> ((s, dir) =>
-      TextAnalysis.bpeByteFallback(Tables.documents(s, dir))),
-    "q_bigram_lm" -> ((s, dir) => TextAnalysis.bigramNextTokens(Tables.documents(s, dir))),
-    // per-lang BPE fertility under the PERSISTED tokenizer (tokenizer QA)
-    "q_tokenizer_fertility" -> ((s, dir) =>
-      TextAnalysis.tokenizerFertility(Tables.documents(s, dir), TokenizerStore.rules(s, dir))),
-    // per-doc BPE compression ratio under the persisted tokenizer — the
-    // cheap gibberish detector, flagged against a corpus-relative floor
-    "q_doc_compression" -> ((s, dir) =>
-      TextAnalysis.docCompression(Tables.documents(s, dir), TokenizerStore.rules(s, dir))),
-    // rare-transition share per doc: the log-free perplexity-filter proxy
-    "q_rare_bigram_rate" -> ((s, dir) =>
-      TextAnalysis.rareBigramRate(Tables.documents(s, dir))),
-    // CCNet-style LM quality score: per-doc surprisal under the corpus's
-    // add-1 bigram model, every ln the portable fixed-point ln_f
-    "q_lm_surprisal" -> ((s, dir) =>
-      TextAnalysis.lmSurprisal(Tables.documents(s, dir))),
-    // held-out trigram surprisal with Stupid Backoff: LM trains on the
-    // train split, scores the eval split; level counts profile backoff
-    // CCNet-style per-LINE surprisal under the same held-out LM: flags
-    // outlier lines (above 3/2 of the corpus mean line average) so a
-    // gibberish run is excised, not the whole document
-    "q_line_surprisal" -> ((s, dir) =>
-      TextAnalysis.lineSurprisal(Tables.documents(s, dir))),
-    "q_lm_backoff" -> ((s, dir) =>
-      TextAnalysis.backoffSurprisal(Tables.documents(s, dir))),
-    // top-p (nucleus) truncation of the bigram LM, integer threshold
-    "q_bigram_nucleus" -> ((s, dir) => TextAnalysis.bigramNucleus(Tables.documents(s, dir))),
-    "q_pii_scan" -> ((s, dir) => TextAnalysis.piiScan(Tables.documents(s, dir))),
-    // PII redaction as a usable pipeline stage: the redacted text itself
-    // (same placeholder chain the scan hashes) + per-category counts.
-    "q_pii_redacted" -> ((s, dir) => TextAnalysis.piiRedact(Tables.documents(s, dir))),
-    // TextRank keyword ranking: all-integer PageRank (3 rounds, unrolled
-    // in the oracle) over the word-bigram graph.
-    "q_pagerank_words" -> ((s, dir) => GraphAnalytics.wordPageRank(Tables.documents(s, dir))),
-    // Phrase search over the positional inverted index.
-    "q_phrase_search" -> ((s, dir) => TextAnalysis.phraseSearch(Tables.documents(s, dir))),
-    "q_decontam" -> ((s, dir) => TextAnalysis.decontaminate(Tables.documents(s, dir))),
-    // span-level decontamination: WHERE the leaked 13-grams sit (merged
-    // token-offset spans) — the excision cut list, not just the flag
-    "q_span_decontam" -> ((s, dir) =>
-      TextAnalysis.spanDecontaminate(Tables.documents(s, dir))),
-    // The 100 TB shape of the same cut list: eval grams folded into an
-    // m-bounded Bloom bitmap, every train window pays one codegen'd
-    // scan-stage membership test, only the contaminated sliver reaches
-    // the exact semi-join. Pass-through (same oracle) by construction.
-    "q_decontam_bloom" -> ((s, dir) =>
-      TextAnalysis.spanDecontaminateBloom(Tables.documents(s, dir))),
-    // CDC apply: latest-wins MERGE INTO (update matched, keep unmatched)
-    "q_merge_upsert" -> ((s, dir) =>
-      Relational.upsertLatestOrders(Tables.customer(s, dir), Tables.orders(s, dir))),
-    // SCD2 versioned history from the same change log
-    "q_scd2_history" -> ((s, dir) => Relational.scd2OrderHistory(Tables.orders(s, dir))),
-    // --- deterministic sampling ---
-    "q_sample_stratified" -> ((s, dir) => Sampling.stratifiedSample(Tables.documents(s, dir))),
-    // EXACT-k per-stratum sampling by smallest content hash — selection by
-    // counting (coarse hash histogram + cutoff-bucket rank), never a sort
-    "q_sample_exact" -> ((s, dir) =>
-      Sampling.exactStratifiedSample(Tables.documents(s, dir))),
-    // quality-weighted Bernoulli (keep prob ∝ token count, content-hash draw)
-    "q_sample_weighted" -> ((s, dir) => Sampling.weightedSample(Tables.documents(s, dir))),
-    // EXACT-k weighted sample without replacement (Efraimidis–Spirakis
-    // A-ES): bottom-k of −ln(u)/w keys through the portable fixed-point
-    // ln; k-bounded TakeOrderedAndProject, never a global sort.
-    "q_sample_aes" -> ((s, dir) => Sampling.weightedExactSample(Tables.documents(s, dir))),
-    // The continuously-maintained twin: per micro-batch, the batch's own
-    // bottom-k appended to a log-structured store (bottom-k is a monoid);
-    // merge-on-read resolves the running sample. Full drain ≡ batch.
-    "q_stream_sample_aes" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.aesSampleToBatch(s, dir)),
-    // source-mixture schedule: equal token share per source, epochs for
-    // small sources, content-hash thinning for big ones
-    "q_mixture_schedule" -> ((s, dir) => Sampling.mixtureSchedule(Tables.documents(s, dir))),
-    // Temperature-scaled mixture (p_s ∝ n_s^(1/T), T = 2): shares derived
-    // from source sizes through the portable ln_f/exp_f pair, then the
-    // same epoch + content-hash-Bernoulli schedule tail.
-    "q_mixture_temperature" -> ((s, dir) =>
-      Sampling.temperatureSchedule(Tables.documents(s, dir))),
-    // Temperature schedule composed with the two-level packing prefix sum
-    // (the q_mixture_packed composition over the tempered shares).
-    "q_mixture_temperature_packed" -> ((s, dir) =>
-      Packing.scheduleOffsets(Sampling.temperatureSchedule(Tables.documents(s, dir)))),
-    // mixture ∘ packing: stream offsets for the mixed corpus, repeats as
-    // counts (never materialized) through the two-level prefix sum
-    "q_mixture_packed" -> ((s, dir) =>
-      Packing.scheduleOffsets(Sampling.mixtureSchedule(Tables.documents(s, dir)))),
-    // training-export manifest: hash-sharded deterministic shuffle order,
-    // per-shard counts/tokens/XOR digest/order head
-    "q_shard_manifest" -> ((s, dir) => Packing.shardManifest(Tables.documents(s, dir))),
-    // padding-waste card: naive per-doc batching vs the packed stream at
-    // each candidate context length — the GPU-hours argument for packing
-    "q_pack_waste" -> ((s, dir) => Packing.packWaste(Tables.documents(s, dir))),
-    // No-split harmonic-class packing (Krell et al. shape): every fitting
-    // doc lands whole in exactly one bin; oversize docs surface flagged.
-    "q_pack_bestfit" -> ((s, dir) => Packing.packBestFit(Tables.documents(s, dir))),
-    // Zipf-slope fit over the top-1000 terms, all-integer least squares
-    "q_zipf_fit" -> ((s, dir) => TextAnalysis.zipfFit(Tables.documents(s, dir))),
-    // N-gram novelty by ingestion bucket: new-vs-seen trigram shares —
-    // the corpus-saturation read before paying for more crawl
-    "q_ngram_novelty" -> ((s, dir) =>
-      TextAnalysis.ngramNovelty(Tables.documents(s, dir))),
-    // Heaps-law vocabulary-growth exponent over the novelty curve, same
-    // fixed-point ln axes as the Zipf fit
-    "q_heaps_fit" -> ((s, dir) => TextAnalysis.heapsFit(Tables.documents(s, dir))),
-    // C4-style denylist-phrase impact card: per-source flagged share
-    "q_phrase_blocklist" -> ((s, dir) =>
-      TextAnalysis.phraseBlocklist(Tables.documents(s, dir))),
-    // Per-source token-budget cap (the domain cap, budgeted in tokens):
-    // content-hash-prefix selection by counting, never a global sort
-    "q_source_budget" -> ((s, dir) =>
-      Sampling.sourceTokenBudget(Tables.documents(s, dir))),
-    // --- URL/domain-level curation (registered-domain key; power-law) ---
-    // deterministic synthetic url + host/registered-domain extraction,
-    // row-level oracle-checked
-    "q_domain_urls" -> ((s, dir) =>
-      Domains.urlTable(Tables.documents(s, dir)).drop("text")),
-    // per-registered-domain rollup: docs, hosts, within-domain dups, tokens
-    "q_domain_stats" -> ((s, dir) => Domains.domainStats(Tables.documents(s, dir))),
-    // frequency cap: at most DomainCapDocs per domain, counting-selection
-    "q_domain_cap" -> ((s, dir) =>
-      Domains.domainFrequencyCap(Tables.documents(s, dir))),
-    // token budget per domain: first-crossing kept, hash order
-    "q_domain_budget" -> ((s, dir) =>
-      Domains.domainTokenBudget(Tables.documents(s, dir))),
-    // domain-level temperature: per-domain budget = tempered n^(1/T)
-    // share of the corpus; head domains truncated, tail passes whole
-    "q_domain_budget_tempered" -> ((s, dir) =>
-      Domains.temperedDomainBudget(Tables.documents(s, dir))),
-    // continuous-ingestion twin: frozen per-(domain, bucket) spend grid,
-    // arrivals admitted iff corpus mass hashed before them is under budget
-    "q_domain_budget_incremental" -> ((s, dir) =>
-      Domains.incrementalDomainBudget(Tables.documents(s, dir))),
-    // the same probe per micro-batch against the static spend artifacts
-    "q_stream_domain_budget" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.incrementalDomainBudgetToBatch(s, dir)),
-    // domain x domain near-dup contamination matrix (who copies whom)
-    "q_domain_overlap" -> ((s, dir) =>
-      Domains.domainOverlapMatrix(
-        Tables.documents(s, dir),
-        Dedup.nearDuplicatePairsFromTable(SignatureStore.table(s, dir)))),
-    // wholesale domain-level keep decision: classifier + prose majorities
-    "q_domain_quality" -> ((s, dir) =>
-      Domains.domainQualityCard(Tables.documents(s, dir))),
-    // --- HTML main-content extraction (r14): the crawl pipeline's first
-    // stage — deterministic page synthesis around each doc's text (the
-    // withUrl tradition), then the REAL regex extractor; the oracle
-    // rebuilds the page and re-runs the extraction, so the extractor is
-    // what's checked. The dedup-lift card is the one-row argument for
-    // extracting before dedup: raw pages are chrome-unique, content dups.
-    "q_html_extract" -> ((s, dir) =>
-      Html.extractionReport(Tables.documents(s, dir))),
-    "q_html_boilerplate" -> ((s, dir) =>
-      Html.boilerplateShare(Tables.documents(s, dir))),
-    "q_html_dedup_lift" -> ((s, dir) =>
-      Html.dedupLift(Tables.documents(s, dir))),
-    // STREAMING extraction: doc-local (no corpus state), so micro-batches
-    // union to the batch report (shared oracle) — the position a crawl
-    // pipeline actually runs extraction in.
-    "q_stream_html_extract" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.htmlExtractToBatch(s, dir)),
-    // --- host-level link graph (r15): the crawl-graph stage — anchors
-    // PARSED from the raw page bytes (absolute hrefs cross hosts via the
-    // grammar's `next` anchor; relative hrefs resolve to the page's own
-    // host), aggregated to the host webgraph, ranked by the all-integer
-    // PageRank kernel already proven on the word graph. The oracle
-    // rebuilds the pages and re-parses the same regexps end to end.
-    "q_link_hosts" -> ((s, dir) =>
-      LinkGraph.hostEdges(Tables.documents(s, dir))),
-    "q_link_rank" -> ((s, dir) =>
-      LinkGraph.hostRank(Tables.documents(s, dir))),
-    "q_link_frontier" -> ((s, dir) =>
-      LinkGraph.frontier(Tables.documents(s, dir))),
-    // STREAMING twin: per-batch doc-local anchor extraction appended to
-    // the anchor log, ONE post-drain cross-host rollup (shared
-    // edgesFromLinks) — the webgraph-accumulation position; shares the
-    // batch oracle verbatim.
-    "q_stream_link_hosts" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.linkHostsToBatch(s, dir)),
-    "q_link_authority" -> ((s, dir) =>
-      LinkGraph.authorityBySource(Tables.documents(s, dir))),
-    // pivot-sampled harmonic centrality (the other published host-rank
-    // metric): deterministic 8-pivot BFS, 3 unrolled all-integer rounds
-    "q_link_harmonic" -> ((s, dir) =>
-      LinkGraph.harmonicCentrality(Tables.documents(s, dir))),
-    // web communities: weakly-connected host components (per-source site
-    // families under this grammar) via the proven CC machinery
-    "q_link_components" -> ((s, dir) =>
-      LinkGraph.hostComponents(Tables.documents(s, dir))),
-    // authority under STORED ranks (RankStore on the ArtifactStore
-    // kernel): the periodic-webgraph-rebuild production shape — zero
-    // parse/rank jobs on the apply path; shares the fresh oracle
-    "q_link_authority_stored" -> ((s, dir) =>
-      RankStore.authorityBySource(s, dir)),
-    // TrustRank: personalized PageRank from a trusted seed-host set —
-    // the link-spam demotion signal; trust flows only outward from seeds
-    "q_link_trustrank" -> ((s, dir) =>
-      LinkGraph.trustRank(Tables.documents(s, dir))),
-    // STORED-RANK staleness: RankStore's persisted ranks probed against
-    // a grown re-crawl (even/odd page-id replica) — per-status host
-    // buckets, rank-shift mass, frontier delta, rebuild verdict (r16)
-    "q_link_rank_stale" -> ((s, dir) =>
-      LinkGraph.rankStalenessCard(s, dir)),
-    // ANCHOR-TEXT hybrid retrieval: BM25 over the anchor-text index
-    // (cross-host anchor tokens keyed by TARGET host, from the same
-    // single-pass extraction as the edge list) RRF-fused with content
-    // BM25 (r16)
-    "q_anchor_bm25" -> ((s, dir) =>
-      Pipeline.anchorHybridTopK(Tables.documents(s, dir))),
-    // the same fusion under the PERSISTED AnchorStore term index — zero
-    // page synthesis / anchor parsing on the query path; exact longs
-    // round-trip parquet so it shares the fresh oracle (r16)
-    "q_anchor_bm25_stored" -> ((s, dir) =>
-      Pipeline.anchorHybridStoredTopK(s, dir)),
-    // per-anchor ±N-token visible-prose context windows (r17): the
-    // anchor text says what the TARGET is; the window says what the
-    // source was talking about — the row-level extraction card
-    "q_anchor_context" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.{array_join, col}
-      LinkGraph.anchorContexts(Tables.documents(s, dir))
-        .select(col("doc_id"), col("src_host"), col("dst_host"),
-          col("absolute"), col("anchor_text"),
-          array_join(col("ctx_before"), " ").as("ctx_before"),
-          array_join(col("ctx_after"), " ").as("ctx_after"))
-    }),
-    // anchor-context retrieval through the STORED context index (r17):
-    // anchor + window tokens per target host, BM25 scoring shared with
-    // the inner-text path — zero parsing on the query path
-    "q_anchor_ctx_bm25_stored" -> ((s, dir) =>
-      AnchorStore.anchorCtxBm25Hosts(s, dir)),
-    // fused retrieval over the context index: content BM25 + the
-    // context-anchor ranking through the same stored path + RRF (r17)
-    "q_anchor_ctx_fused" -> ((s, dir) =>
-      Pipeline.anchorCtxHybridStoredTopK(s, dir)),
-    // continuous-crawl twin (r17): the arriving shard is the ONLY thing
-    // parsed; its term counts merge additively with the stored base
-    // index (base ⊎ shard ≡ full rebuild exactly — shares the fresh
-    // oracle), then one BM25 pass over the merged index
-    "q_anchor_ctx_incremental" -> ((s, dir) =>
-      AnchorStore.anchorCtxBm25Incremental(s, dir)),
-    // streaming twin: per-micro-batch shard-only parse appended to the
-    // persisted base index inside foreachBatch, one post-drain rollup +
-    // BM25 pass — batches compose additively, so stream ≡ incremental ≡
-    // full and all three share one oracle (r17)
-    "q_stream_anchor_ctx" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.anchorCtxToBatch(s, dir)),
-    // publish/compaction: base ⊎ shard persisted as the NEXT base-crawl
-    // artifact, per-host rollup read back FROM the artifact — closes the
-    // probe → publish → probe loop; published ≡ full rebuild (r17)
-    "q_anchor_ctx_publish" -> ((s, dir) =>
-      AnchorStore.publishCtxBase(s, dir)),
-    // retention funnel with the TrustRank spam gate composed in: every
-    // doc's FIRST-reject verdict across quality -> spam-host -> exact ->
-    // near-dup, per (source, verdict) — counts sum to the corpus (r16)
-    "q_pipeline_trust_funnel" -> ((s, dir) =>
-      Pipeline.retentionFunnel(Tables.documents(s, dir),
-        sigTable = Some(SignatureStore.table(s, dir)))),
-    // continuous-ingestion twin: the arriving fifth scored first-reject
-    // against artifacts FROZEN on the existing corpus (spam set, keeper
-    // fps, keeper LSH band index) — no per-batch PageRank/rerank (r17)
-    "q_trust_funnel_incremental" -> ((s, dir) =>
-      Pipeline.incrementalTrustFunnel(Tables.documents(s, dir),
-        sigTable = Some(SignatureStore.table(s, dir)))),
-    // streaming twin: per-micro-batch first-reject scoring against the
-    // same frozen artifacts inside foreachBatch (shared
-    // scoreShardAgainstFunnel), rollup post-drain — shared oracle
-    "q_stream_trust_funnel" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.trustFunnelToBatch(s, dir)),
-    // stored-bundle twin: the arriving shard scored against the
-    // PERSISTED FunnelStore artifacts — zero PageRank / keeper / corpus
-    // work on the scoring path (r17); shares the incremental oracle
-    "q_trust_funnel_stored" -> ((s, dir) =>
-      FunnelStore.trustFunnelStored(s, dir)),
-    // curriculum order: length-banded difficulty buckets, hash-shuffled
-    // within bucket; bucket-major + interleaved order keys
-    "q_curriculum_order" -> ((s, dir) => Sampling.curriculumOrder(Tables.documents(s, dir))),
-    // DSIR (Xie et al. 2023): hashed-n-gram importance weights toward the
-    // curated target feeds — log-likelihood ratios as exact fixed-point ints
-    "q_dsir_score" -> ((s, dir) => Dsir.importanceScores(Tables.documents(s, dir))),
-    // DSIR resampling: Gumbel-top-k over the importance weights (hash
-    // Gumbel), computed by counting — the corpus is never globally sorted
-    "q_dsir_select" -> ((s, dir) => Dsir.gumbelTopK(Tables.documents(s, dir))),
-    // continuous-ingestion DSIR: the incoming fifth scored under weights
-    // FROZEN on the existing corpus (never re-featurized, never shifted
-    // by the batch being judged); novel buckets take the smoothing floor
-    "q_dsir_incremental" -> ((s, dir) =>
-      Dsir.incrementalScores(Tables.documents(s, dir))),
-    // streaming twin: per-micro-batch scoring against the same frozen
-    // weight table inside foreachBatch (shared scoreShardAgainstWeights)
-    "q_stream_dsir_score" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.dsirScoresToBatch(s, dir)),
-    // per-source steering report: score rollup + the exact selected set
-    "q_dsir_report" -> ((s, dir) => Dsir.steeringReport(Tables.documents(s, dir))),
-    // --- dedup: exact, MinHash+LSH / n-gram Jaccard, SimHash ---
-    // The MinHash family reads the session-persisted SignatureStore (the
-    // ingest-time artifact): signatures/shingles computed once per corpus,
-    // probed by every consumer below — never re-shingled per query.
-    "q_dedup_exact" -> ((s, dir) => Dedup.exactDuplicates(Tables.documents(s, dir))),
-    "q_minhash_sig" -> ((s, dir) =>
-      SignatureStore.table(s, dir).drop("sh", "group_id", "members")),
-    "q_dedup_neardup" -> ((s, dir) =>
-      Dedup.nearDuplicatePairsFromTable(SignatureStore.table(s, dir))),
-    // EXACT (recall-1) near-dup pairs by SSJoin/PPJoin prefix filtering:
-    // rarest-first ordered prefixes joined, length-filtered, verified —
-    // the deterministic ground-truth twin of the banded miner, same
-    // brute-force oracle with no banding-equivalence caveat.
-    "q_neardup_exact" -> ((s, dir) =>
-      Dedup.prefixNearDupPairs(SignatureStore.table(s, dir))),
-    // The DEPLOYABLE form of the exact miner: same prefix join under a
-    // doc-weighted size cap, dropping degenerate prefix join keys
-    // (template-family boilerplate) before they go quadratic.
-    // Identical-content pairs always survive (they never join). r15:
-    // registered at ExercisedPrefixCap, which this corpus EXCEEDS — the
-    // valve fires under the oracle gate and the result observably
-    // differs from q_neardup_exact (see the constant's docstring).
-    "q_neardup_exact_capped" -> ((s, dir) =>
-      Dedup.prefixNearDupPairs(SignatureStore.table(s, dir),
-        maxPrefixGroup = Dedup.ExercisedPrefixCap)),
-    // Banding S-curve tuning card: closed-form P(detect | jaccard) for the
-    // configured (bands, rows) next to the observed verified-pair mass.
-    "q_lsh_curve" -> ((s, dir) =>
-      Dedup.lshThresholdCurve(SignatureStore.table(s, dir))),
-    // Incoming shard probed against the corpus's persisted LSH index —
-    // the continuous-ingestion dedup shape (no corpus self-join).
-    "q_dedup_incremental" -> ((s, dir) =>
-      Dedup.incrementalNearDupsFromTable(SignatureStore.table(s, dir))),
-    // the ingestion dashboard number: per arrival band, how much of what
-    // came in was already in the corpus
-    "q_ingest_dup_rate" -> ((s, dir) =>
-      Dedup.ingestDupRateFromTable(SignatureStore.table(s, dir))),
-    // Exact-substring dedup (Lee et al. 2022, window formulation): maximal
-    // per-doc token spans covered by any 8-token window occurring twice
-    // anywhere in the corpus — counting, not pairing, so no candidate join.
-    "q_dedup_substring" -> ((s, dir) =>
-      Dedup.duplicatedNgramSpans(Tables.documents(s, dir))),
-    // Suffix-array-EXACT substring dedup (50-char windows == Lee et al.'s
-    // marked set, distributed): maximal duplicated char runs per doc.
-    "q_dedup_substring_exact" -> ((s, dir) =>
-      Dedup.duplicatedCharSpans(Tables.documents(s, dir))),
-    // Benchmark decontamination: corpus docs sharing >=2 distinct 8-token
-    // windows with any eval-set doc; eval grams broadcast, corpus scanned
-    "q_benchmark_contamination" -> ((s, dir) =>
-      Dedup.benchmarkContamination(
-        Tables.documents(s, dir), Dedup.evalSample(Tables.documents(s, dir)))),
-    // ingestion-time gate: the same probe per micro-batch against the
-    // frozen eval gram index (doc-local verdicts -> shares the oracle)
-    "q_stream_benchmark_contamination" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.benchmarkContaminationToBatch(s, dir)),
-    // the linear production form: one row per contaminated doc (rollup
-    // at rep level, so near-dup families never make the output quadratic)
-    "q_contamination_verdict" -> ((s, dir) =>
-      Dedup.contaminationVerdicts(
-        Tables.documents(s, dir), Dedup.evalSample(Tables.documents(s, dir)))),
-    // Exactness-gap card: where the 8-token window approximation and the
-    // 50-char exact miner disagree, per doc, in chars (both directions).
-    "q_substring_gap" -> ((s, dir) =>
-      Dedup.substringExactnessGap(Tables.documents(s, dir))),
-    // C4/RefinedWeb line-level dedup: corpus-frequent fixed-token-window
-    // "lines" excised from every document; per-doc totals + kept-text md5.
-    "q_line_dedup" -> ((s, dir) =>
-      Dedup.lineDedup(Tables.documents(s, dir))),
-    // The continuous-ingestion twin: shard lines excised against the
-    // corpus-frozen frequency index (freq >= minOcc-1 tips the threshold);
-    // shard-internal repeats wait for the next full pass.
-    "q_line_dedup_incremental" -> ((s, dir) =>
-      Dedup.incrementalLineDedup(Tables.documents(s, dir))),
-    // The same probe as continuous ingestion: per-micro-batch excision
-    // against the static index inside foreachBatch (stateless).
-    "q_stream_line_dedup_incremental" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.incrementalLineDedupToBatch(s, dir)),
-    // Denylist EXCISION transform: blocked-bigram token union removed,
-    // surviving text hash-checked — all higher-order expressions, no
-    // explode, no shuffle.
-    "q_blocklist_excised" -> ((s, dir) =>
-      TextAnalysis.blocklistExcise(Tables.documents(s, dir))),
-    // Per-arriving-doc novelty against the frozen corpus vocabulary:
-    // the "does this doc add anything" ingestion filter signal.
-    "q_ngram_novelty_incremental" -> ((s, dir) =>
-      TextAnalysis.incrementalNgramNovelty(Tables.documents(s, dir))),
-    // The same probe as continuous ingestion (stateless per-doc verdicts
-    // against the static index inside foreachBatch).
-    "q_stream_ngram_novelty" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.ngramNoveltyToBatch(s, dir)),
-    // The same probe running as continuous ingestion: per-micro-batch
-    // foreachBatch against the static corpus index (stateless).
-    "q_stream_dedup_incremental" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.incrementalNearDupsToBatch(s, dir)),
-    // WITHIN-document repetition excision (Gopher-style): repeated lines
-    // keep their first occurrence only; per-doc report + kept-text md5.
-    "q_repetition_excised" -> ((s, dir) =>
-      Dedup.repetitionExcise(Tables.documents(s, dir))),
-    // Winnowing fingerprint selection (MOSS): per-window rightmost-min
-    // gram hash, deduplicated — one row per selected (pos, hash).
-    "q_winnow_fingerprints" -> ((s, dir) =>
-      TextAnalysis.winnowFingerprints(Tables.documents(s, dir))),
-    // Hybrid retrieval: integer reciprocal-rank fusion of the BM25 and
-    // dense-cosine top-k lists (doc-aligned embeddings).
-    "q_hybrid_rrf" -> ((s, dir) =>
-      Pipeline.hybridRrfTopK(Tables.documents(s, dir), Tables.embeddings(s, dir))),
-    // The same fusion with the dense side on the trained IVF probe — the
-    // at-index-scale hybrid, registered rather than promised.
-    "q_hybrid_rrf_ivf" -> ((s, dir) =>
-      Pipeline.hybridRrfIvfTopK(
-        Tables.documents(s, dir), requireOracleDim(Tables.embeddings(s, dir)))),
-    // Per-dimension INT8 scalar-quantization error card (FAISS SQ8).
-    "q_embed_quant" -> ((s, dir) =>
-      Similarity.int8QuantReport(Tables.embeddings(s, dir))),
-    // Cumulative vocabulary-growth curve via HLL registers — the
-    // fixed-state scale twin of q_ngram_novelty's exact cum_vocab.
-    "q_vocab_growth_hll" -> ((s, dir) =>
-      Sketches.hllVocabGrowth(Tables.documents(s, dir))),
-    // MOSS-style overlap pairs over winnowing fingerprints (hot
-    // fingerprints leave by broadcast anti-join before the pair join).
-    "q_winnow_overlap" -> ((s, dir) =>
-      Dedup.winnowOverlapPairs(Tables.documents(s, dir))),
-    // STREAMING within-doc repetition excision: doc-local verdicts, so
-    // micro-batches union to the batch report (shared oracle).
-    "q_stream_repetition_excised" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.repetitionExciseToBatch(s, dir)),
-    // Data-constrained epoch allocation: budget waterfilled toward the
-    // tempered shares under a per-source repetition cap.
-    "q_epoch_allocation" -> ((s, dir) =>
-      Sampling.epochAllocation(Tables.documents(s, dir))),
-    // Gopher quality-rule card: six exact-integer heuristics, one
-    // boolean per rule, conjunction as keep.
-    "q_gopher_rules" -> ((s, dir) =>
-      TextAnalysis.gopherRules(Tables.documents(s, dir))),
-    // Soft exact dedup: each copy kept with probability 1/n_copies via
-    // the content-hash Bernoulli (expected one survivor per group).
-    "q_dedup_soft" -> ((s, dir) =>
-      Dedup.softDedup(Tables.documents(s, dir))),
-    // Ingestion-time winnow overlap: arriving docs probe the frozen
-    // capped corpus fingerprint index (shard-vs-corpus pairs only).
-    "q_winnow_overlap_incremental" -> ((s, dir) =>
-      Dedup.incrementalWinnowOverlap(Tables.documents(s, dir))),
-    // The same probe per micro-batch against the static artifacts.
-    "q_stream_winnow_overlap" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.incrementalWinnowOverlapToBatch(s, dir)),
-    // Per-ingest-batch distribution drift report (fixed histogram + TVD
-    // contributions, no ln — bit-portable).
-    "q_drift_report" -> ((s, dir) =>
-      TextAnalysis.tokenDriftReport(Tables.documents(s, dir))),
-    "q_simhash_sig" -> ((s, dir) => Dedup.simhashSignatures(Tables.documents(s, dir))),
-    // Zipf/hapax frequency-of-frequencies corpus diagnostic
-    "q_token_spectrum" -> ((s, dir) =>
-      TextAnalysis.tokenFrequencySpectrum(Tables.documents(s, dir))),
-    // top collocations by all-integer scaled PMI
-    "q_collocations" -> ((s, dir) =>
-      TextAnalysis.topCollocations(Tables.documents(s, dir))),
-    "q_simhash_pairs" -> ((s, dir) => Dedup.simhashNearDupPairs(Tables.documents(s, dir))),
-    "q_dedup_clusters" -> ((s, dir) =>
-      Dedup.clustersFromPairs(
-        Tables.documents(s, dir),
-        Dedup.nearDuplicatePairsFromTable(SignatureStore.table(s, dir)))),
-    // the full retention pipeline: quality gate -> exact dedup -> near-dup
-    // (near-dup stage probes the SignatureStore semi-joined to survivors)
-    "q_pipeline_retained" -> ((s, dir) =>
-      Pipeline.retainedCorpus(Tables.documents(s, dir),
-        sigTable = Some(SignatureStore.table(s, dir)))),
-    // --- split hygiene (r12) ---
-    // deterministic 90/5/5 content-hash split: per-(source, split) docs/tokens
-    "q_split_assign" -> ((s, dir) => Splits.splitAllocation(Tables.documents(s, dir))),
-    // train<->heldout contamination: near-dup pairs crossing split lines
-    // (split is a per-row hash CASE on the pair endpoints — zero extra joins)
-    "q_split_leakage" -> ((s, dir) =>
-      Splits.splitLeakage(Dedup.nearDuplicatePairsFromTable(SignatureStore.table(s, dir)))),
-    // decontamination by construction: split by near-dup CLUSTER id, so
-    // no mined pair can straddle a split line (leakage empty by design)
-    "q_leakfree_split" -> ((s, dir) =>
-      Splits.leakFreeSplit(
-        Tables.documents(s, dir),
-        Dedup.nearDuplicatePairsFromTable(SignatureStore.table(s, dir)))),
-    // continuous-ingestion twin: frozen corpus clusters+splits, arriving
-    // docs inherit the split of their matched cluster (or hash-split as
-    // fresh singletons) — a late near-copy of a test doc never trains
-    "q_leakfree_split_incremental" -> ((s, dir) =>
-      Splits.incrementalLeakFreeSplit(
-        Tables.documents(s, dir), SignatureStore.table(s, dir))),
-    // the same assignment as continuous ingestion: frozen index +
-    // assignment, per micro-batch probe + shared assignment tail; a full
-    // drain equals the batch twin row-for-row
-    "q_stream_leakfree_split" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.leakFreeSplitsToBatch(s, dir)),
-    // source x source near-dup contamination matrix over the same pair set
-    "q_source_overlap" -> ((s, dir) =>
-      Pipeline.sourceOverlapMatrix(
-        Tables.documents(s, dir),
-        Dedup.nearDuplicatePairsFromTable(SignatureStore.table(s, dir)))),
-    // hashed linear quality-classifier inference: in-expression weights,
-    // per-row fold, no shuffle
-    "q_classifier_score" -> ((s, dir) =>
-      TextAnalysis.classifierScore(Tables.documents(s, dir))),
-    // TRAINED Naive Bayes quality model (distant supervision from the
-    // corpus's own weak label, train split only): per-token smoothed
-    // log-likelihood ratios through the portable fixed-point ln.
-    "q_nb_train" -> ((s, dir) => TextAnalysis.nbTrain(Tables.documents(s, dir))),
-    // Every doc scored under the trained model: prior + sum c*llr, the
-    // smoothing-floor constant for out-of-vocabulary tokens.
-    "q_nb_score" -> ((s, dir) => TextAnalysis.nbScore(Tables.documents(s, dir))),
-    // Stored-model scoring (r14): the persisted ModelStore artifact gates
-    // the corpus with ZERO training aggregations on the apply path — the
-    // production quality-filter shape (train once, score every ingest).
-    "q_nb_score_stored" -> ((s, dir) => ModelStore.score(s, dir)),
-    // The trained filter as a continuous ingest gate: model + constants
-    // frozen, each micro-batch scored through the shared fold; a full
-    // drain equals the batch scoring row-for-row.
-    "q_stream_nb_score" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.nbScoresToBatch(s, dir)),
-    // Reliability card: eval docs bucketed by clamped score-nat band
-    // with observed weak-label positive rate — the calibration read
-    // before a learned filter gates a corpus.
-    "q_nb_calibration" -> ((s, dir) =>
-      TextAnalysis.nbCalibration(Tables.documents(s, dir))),
-    // Held-out confusion card: the trained filter vs the weak label on
-    // docs the model never saw.
-    "q_nb_eval" -> ((s, dir) => TextAnalysis.nbEval(Tables.documents(s, dir))),
-    // quality-ranked keeper per near-dup cluster (longest member, min-id tie)
-    "q_dedup_keep_best" -> ((s, dir) =>
-      Pipeline.bestOfClusterKeepers(Tables.documents(s, dir),
-        Dedup.nearDuplicatePairsFromTable(SignatureStore.table(s, dir)))),
-    // directional containment over the mined pair set: mutual / a_in_b /
-    // b_in_a / partial (integer-milli ratios, two slim size joins)
-    "q_containment" -> ((s, dir) =>
-      Dedup.pairContainment(SignatureStore.table(s, dir))),
-    // MinHash-vs-SimHash detector agreement (both / minhash_only /
-    // simhash_only pair counts; both miners are the banded joins)
-    "q_dedup_agreement" -> ((s, dir) =>
-      Dedup.dedupMethodAgreement(
-        Tables.documents(s, dir), SignatureStore.table(s, dir))),
-    // quality-filter funnel: first-reject attribution per (source, rule)
-    "q_filter_funnel" -> ((s, dir) =>
-      TextAnalysis.filterFunnel(Tables.documents(s, dir))),
-    // per-source best-decile selection card (rank by classifier score)
-    "q_select_best" -> ((s, dir) =>
-      Pipeline.selectBestPerSource(Tables.documents(s, dir))),
-    // the one-row corpus datasheet (single scan, many axes)
-    "q_corpus_datasheet" -> ((s, dir) =>
-      Pipeline.corpusDatasheet(Tables.documents(s, dir))),
-    // quality-signal agreement: classifier x LM-surprisal x rare-bigram,
-    // the 2^3-cell detector-comparison card
-    "q_quality_agreement" -> ((s, dir) =>
-      Pipeline.qualityAgreement(Tables.documents(s, dir))),
-    // per-ingest-feed curation rollup (corpus-wide dup contamination)
-    "q_source_stats" -> ((s, dir) => Pipeline.sourceCurationStats(Tables.documents(s, dir))),
-    // --- similarity search over embeddings ---
-    // Default = the exact grid-blocked join: recall 1 by construction, and
-    // the cheaper plan on this data's margin-free threshold (the LSH path
-    // does ~tables/2^planes = 3x the candidate work here). The LSH variant
-    // stays registered as the opt-in scale path for margin-bearing corpora.
-    "q_embed_neardup" -> ((s, dir) =>
-      Similarity.cosineNearDupPairsBlocked(Tables.embeddings(s, dir))),
-    "q_embed_neardup_lsh" -> ((s, dir) =>
-      Similarity.cosineNearDupPairs(Tables.embeddings(s, dir))),
-    // clustering composes with ANY pair source: here the exact cosine pairs
-    "q_embed_clusters" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s, dir)
-      Dedup.clustersFromPairs(
-        emb.select(col("vec_id").as("doc_id")),
-        Similarity.cosineNearDupPairsBlocked(emb)
-          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-        .select(col("doc_id").as("vec_id"), col("cluster_id"), col("cluster_n"))
-    }),
-    // SemDeDup: k-means cells bound the pair search; smaller-id in-cell
-    // near-dups drop the vector (deterministic keep-one rule)
-    "q_semdedup" -> ((s, dir) => Similarity.semDeDup(Tables.embeddings(s, dir))),
-    // cluster-balanced diversity sampling: √cell-size budget allocation
-    // over the trained k-means cells, content-hash Bernoulli within cell
-    "q_sample_diverse" -> ((s, dir) =>
-      Similarity.cellBalancedSample(Tables.embeddings(s, dir))),
-    // label-relevance retrieval eval: MRR + recall@k of the embedding
-    // space itself (exact cosine ranking, integer milli metrics)
-    "q_retrieval_eval" -> ((s, dir) =>
-      Similarity.retrievalEval(Tables.embeddings(s, dir))),
-    // SEMANTIC split leakage: eval vectors probed against the train
-    // side's frozen cells at cosine >= 0.8 — catches what string
-    // decontamination misses
-    "q_semantic_leakage" -> ((s, dir) =>
-      Similarity.semanticLeakage(Tables.embeddings(s, dir))),
-    // embedding-space drift at the ingest boundary: per-cell occupancy
-    // shares of the incoming fifth vs the corpus, frozen cells
-    "q_embed_drift" -> ((s, dir) =>
-      Similarity.embeddingDrift(Tables.embeddings(s, dir))),
-    // streaming twin: per-micro-batch cell counts summed into the same
-    // card through the shared driftCardOf
-    "q_stream_embed_drift" -> ((s, dir) =>
-      graft.streaming.EmbeddingStreams.embeddingDriftToBatch(s, dir)),
-    // stored-index STALENESS: ann_ivf_stored's persisted centroids probed
-    // against a drifted replica (reversed-dim twins), recall vs a fresh
-    // retrain per region, retrain verdict — what the artifact stores
-    // defer and a real pipeline must trigger on (r15)
-    "q_ann_stale" -> ((s, dir) => Similarity.annStalenessCard(s, dir)),
-    // METADATA-FILTERED ANN (the RAG-serving shape): stored-index IVF
-    // probe with the label class composed into the candidate JOIN KEY —
-    // the filter prunes before any cosine (r16)
-    "q_ann_filtered" -> ((s, dir) => {
-      requireOracleDim(Tables.embeddings(s, dir))
-      Similarity.ivfFilteredTopK(s, dir)
-    }),
-    // recall-vs-filter-selectivity: filtered probe vs filtered brute
-    // force at label-congruence tiers 10/5/2/1 — prices the candidate
-    // starvation narrowing filters cause (r16)
-    "q_ann_filtered_recall" -> ((s, dir) => {
-      requireOracleDim(Tables.embeddings(s, dir))
-      Similarity.annFilteredRecallCard(s, dir)
-    }),
-    // continuous-ingestion SemDeDup: the incoming fifth probes the
-    // corpus's persisted cells; the corpus is never self-joined again
-    "q_semdedup_incremental" -> ((s, dir) =>
-      Similarity.semDeDupIncremental(Tables.embeddings(s, dir))),
-    // the same probe as a stream: per-micro-batch assignment + index
-    // probe inside foreachBatch (stateless; shares the batch oracle)
-    "q_stream_semdedup_incremental" -> ((s, dir) =>
-      graft.streaming.EmbeddingStreams.semDeDupIncrementalToBatch(s, dir)),
-    // semi-supervised label assignment: nearest labeled seed within the
-    // trained-IVF cell (1-NN, cell-keyed equi-join, never corpus^2)
-    "q_knn_label" -> ((s, dir) => Similarity.cellKnnLabel(Tables.embeddings(s, dir))),
-    // per-cell outlier report: cosine of each vector to its own trained
-    // centroid, rolled up to |cells| rows (the embedding-junk monitor)
-    "q_embed_outliers" -> ((s, dir) =>
-      Similarity.cellOutlierReport(Tables.embeddings(s, dir))),
-    "q_ann_bruteforce" -> ((s, dir) => Similarity.bruteForceTopK(Tables.embeddings(s, dir))),
-    // hard negatives: top-k most-similar vectors with a DIFFERENT label
-    "q_hard_negatives" -> ((s, dir) => Similarity.hardNegatives(Tables.embeddings(s, dir))),
-    // JL random projection: exploded (vec_id, k, component) reduced vectors
-    "q_embed_rp" -> ((s, dir) => Similarity.randomProjections(Tables.embeddings(s, dir))),
-    // int8 scalar quantization: per-dim ranges -> codes + midpoint error
-    "q_embed_sq8" -> ((s, dir) => Similarity.scalarQuantize(Tables.embeddings(s, dir))),
-    // per-label class prototypes (quantized-portable means)
-    "q_label_centroids" -> ((s, dir) => Similarity.labelCentroids(Tables.embeddings(s, dir))),
-    // nearest-centroid confusion matrix over the label prototypes
-    "q_nearest_centroid" -> ((s, dir) =>
-      Similarity.nearestCentroidConfusion(Tables.embeddings(s, dir))),
-    // hourly stats off a fragmented-then-compacted copy (layout-only op,
-    // same oracle as q_events_hourly)
-    "q_compacted_scan" -> ((s, dir) => graft.sources.Compaction.hourlyStatsCompacted(s, dir)),
-    // ANN paths are approximate by design, but their bucketing/assignment
-    // is deterministic (md5 hyperplanes, first-n centroids), so the full
-    // candidate generation + rerank is mirrored in DuckDB SQL below.
-    "ann_lsh" -> ((s, dir) => Similarity.lshTopK(requireOracleDim(Tables.embeddings(s, dir)))),
-    "ann_ivf" -> ((s, dir) => Similarity.ivfTopK(requireOracleDim(Tables.embeddings(s, dir)))),
-    // The trained-centroid production path: 2 k-means rounds, whole loop
-    // replayed by the oracle (integer-quantized means are bit-portable).
-    "ann_ivf_trained" -> ((s, dir) =>
-      Similarity.ivfTopK(requireOracleDim(Tables.embeddings(s, dir)), trainIters = 2)),
-    // Train-once/apply-everywhere (r14): the SAME trained probe, but the
-    // centroids/codebooks come from the persisted CentroidStore artifact —
-    // k-means runs once per corpus ever; the apply path reads nLists (or
-    // M×K) parquet rows and probes. Hash-identical to the retrain forms,
-    // so these share their oracles verbatim.
-    "ann_ivf_stored" -> ((s, dir) => {
-      requireOracleDim(Tables.embeddings(s, dir))
-      Similarity.ivfTopKStored(s, dir)
-    }),
-    "ann_pq_stored" -> ((s, dir) => {
-      requireOracleDim(Tables.embeddings(s, dir))
-      ProductQuantization.pqTopKStored(s, dir)
-    }),
-    "ann_ivfpq_stored" -> ((s, dir) => {
-      requireOracleDim(Tables.embeddings(s, dir))
-      ProductQuantization.ivfPqTopKStored(s, dir)
-    }),
-    // Product quantization: subspace k-means codebooks → 8-byte codes →
-    // exhaustive ADC scan → exact rerank; the whole pipeline (training
-    // included) is replayed by the oracle.
-    "ann_pq" -> ((s, dir) =>
-      ProductQuantization.pqTopK(requireOracleDim(Tables.embeddings(s, dir)))),
-    // IVF-ADC: the composed production ANN shape — IVF cells prune the
-    // candidate set, PQ codes compress the scan, exact rerank finishes.
-    // Both training loops replayed by the oracle.
-    "ann_ivfpq" -> ((s, dir) =>
-      ProductQuantization.ivfPqTopK(requireOracleDim(Tables.embeddings(s, dir)))),
-    // Exact recall@k of LSH/IVF/IVF-PQ vs the brute-force top-k — the
-    // acceptance gate an ANN index ships behind; deterministic, so the
-    // whole report (all four result sets + intersections) is oracle-checked.
-    "q_ann_recall" -> ((s, dir) =>
-      Similarity.annRecallReport(requireOracleDim(Tables.embeddings(s, dir)))),
-    // --- multimodal binary-column plumbing ---
-    "q_multimodal_meta" -> ((s, dir) => Multimodal.payloadMeta(Tables.documents(s, dir))),
-    // Undecodable payloads surface as NULL features + decodable=false —
-    // closed-form for the oracle (testdata payloads are all `fake/*`).
-    "mm_features" -> ((s, dir) => Multimodal.featuresOf(s, Tables.documents(s, dir))),
-    // The deterministically-decodable half of the multimodal surface,
-    // full-oracle: real MP4/AVI/BMP containers built per doc id, decoded by
-    // the production parsers, every field a closed form of doc_id.
-    "q_mm_decoded" -> ((s, dir) => Multimodal.decodedFeatures(s, Tables.documents(s, dir))),
-    // --- structured streaming (event-time windows, run to completion) ---
-    // The `_complete_oracle` pair is the ORACLE HARNESS form (complete
-    // output mode + memory sink = a driver-side materialization by
-    // construction) — named so no production-shaped registered query embeds
-    // a driver collect. The production topologies are the `_append` pair.
-    "q_stream_hourly_complete_oracle" -> ((s, dir) =>
-      graft.streaming.EventStreams.hourlyStatsToBatch(s, dir)),
-    "q_stream_sessions_complete_oracle" -> ((s, dir) =>
-      graft.streaming.EventStreams.sessionCountsToBatch(s, dir)),
-    // The production topology: append mode + parquet sink, state evicted at
-    // the watermark. Emits only watermark-passed windows (see oracle).
-    "q_stream_hourly_append" -> ((s, dir) =>
-      graft.streaming.EventStreams.hourlyStatsAppendToBatch(s, dir)),
-    // Sliding windows (1h every 30min): batch twin + production append twin
-    // share the 2-windows-per-event oracle.
-    "q_events_sliding" -> ((s, dir) =>
-      graft.streaming.EventStreams.slidingStats(Tables.events(s, dir))),
-    "q_stream_sliding_append" -> ((s, dir) =>
-      graft.streaming.EventStreams.slidingStatsAppendToBatch(s, dir)),
-    "q_stream_sessions_append" -> ((s, dir) =>
-      graft.streaming.EventStreams.sessionWindowsAppendToBatch(s, dir)),
-    // Ingest-time content dedup of documents (streaming twin of
-    // q_dedup_exact): the surviving-fingerprint SET is deterministic even
-    // though the surviving copy depends on arrival order.
-    "q_stream_dedup_docs" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.dedupToBatch(s, dir)),
-    // Stateless ingest-time quality+PII gate: append == batch filter.
-    "q_stream_quality" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.qualityFilteredToBatch(s, dir)),
-    // Stream-stream interval join (watermark-evicted two-sided state);
-    // inner-join emission is not watermark-gated, so a full drain equals
-    // the batch interval join exactly.
-    "q_stream_attribution" -> ((s, dir) =>
-      graft.streaming.EventStreams.attributionPairsToBatch(s, dir)),
-    // Stream-static dimension enrichment: purchases joined to the
-    // broadcast customer dim — stateless append, batch-join oracle.
-    "q_stream_enriched" -> ((s, dir) =>
-      graft.streaming.EventStreams.enrichedPurchasesToBatch(s, dir)),
-    // Append-mode ordered funnel via flatMapGroupsWithState: per-user
-    // keyed state, steps resolve only once the watermark passes them
-    // (arrival-order independent), 24h conversion window, emission at
-    // completion / window close / GC — the streaming twin of q_funnel.
-    "q_stream_funnel_append" -> ((s, dir) =>
-      graft.streaming.EventStreams.funnelAppendToBatch(s, dir)),
-    // Streaming maintenance of the dyadic quantile sketch: update-mode
-    // node counts upserted into a keyed store (state structurally bounded
-    // at <= 8191 rows — no watermark needed); shares the batch oracle.
-    "q_stream_quantile_update" -> ((s, dir) =>
-      graft.streaming.SketchStreams.quantileSketchViaStore(s, dir)),
-    // The reference's flagship query as a continuous query (state = one
-    // row per distinct word; complete-mode oracle harness).
-    "q_stream_wordcount_complete_oracle" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.wordCountsToBatch(s, dir)),
-    // Production twin: update mode + foreachBatch upsert into a keyed
-    // (log-structured parquet) store, merged on read — only changed words
-    // are written per micro-batch, nothing driver-side.
-    "q_stream_wordcount_update" -> ((s, dir) =>
-      graft.streaming.DocumentStreams.wordCountsViaKeyedStore(s, dir)),
-  )
+  /** Every registered query, family by family. */
+  lazy val registry: Seq[QueryDef] = Seq(
+    WordCountQueries.all, RelationalQueries.all, SketchQueries.all, TextQueries.all,
+    EventQueries.all, PackingQueries.all, TokenizerQueries.all, GraphQueries.all,
+    SamplingQueries.all, DomainQueries.all, HtmlQueries.all, LinkGraphQueries.all,
+    PipelineQueries.all, DsirQueries.all, DedupQueries.all, SimilarityQueries.all,
+    SplitQueries.all, ClassifierQueries.all, MultimodalQueries.all).flatten
 
-  /** DuckDB fragments shared by the text oracles. Tokenization and 3-gram
-    * shingling mirror TextFunctions.{tokens,shingles} exactly — including
-    * the r14 NFC composition (DuckDB's `nfc_normalize` == the engine's
-    * codegen'd [[graft.functions.UnicodeNormalize]]; identity on the
-    * ASCII testdata, load-bearing on mixed-normalization crawl text).
-    * The 60-bit seeded hash mirrors HashFunctions.md5Long (15 hex chars
-    * of md5("<seed>:<x>") parsed as an integer).
+  private lazy val builders: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(d => d.name -> d.build).toMap
+
+  /** Query name → builder over a testdata directory. Builds no oracle SQL. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = builders
+
+  /** Query name → equivalent SQL runnable by DuckDB on the same parquet
+    * tables; a twin maps to its batch query's SQL.
     */
-  private val tokCte =
-    "SELECT doc_id, regexp_split_to_array(trim(nfc_normalize(text)), '\\s+') AS toks FROM documents"
+  def oracleSql: Map[String, String] = registry.map(d => d.name -> d.oracleSql).toMap
 
-  /** The `Splits.splitOf` 90/5/5 hash CASE over an arbitrary SQL
-    * expression — thresholds and seed interpolated from the operator.
+  /** The builder of a registered query; fails naming it when there is none. */
+  def query(name: String): (SparkSession, String) => DataFrame =
+    queries.getOrElse(name, throw new NoSuchElementException(s"unknown query '$name'"))
+
+  /** The queries a comma-separated name list selects (every query when
+    * there is no list), or Left with the listed names no query answers to.
     */
-  private def splitCaseSql(x: String): String = {
-    import graft.operators.Splits
-    s"""CASE WHEN ${h60(Splits.SplitSeed, x)} % ${Splits.SplitBuckets}
-       |       < ${Splits.TrainMilli} THEN 'train'
-       |     WHEN ${h60(Splits.SplitSeed, x)} % ${Splits.SplitBuckets}
-       |       < ${Splits.ValMilli} THEN 'val'
-       |     ELSE 'test' END""".stripMargin
-  }
-
-  /** The incremental leak-free-split oracle, shared verbatim by the
-    * batch probe and its streaming drain: corpus-side recursive-CTE
-    * components + brute-force cross-boundary probe + the coalesced
-    * split CASE (inherited cluster id, else the arrival's own).
-    */
-  private lazy val leakfreeIncrementalSql: String =
-    s"""WITH RECURSIVE sh AS MATERIALIZED ($shCte),
-       |$ingestSideCtes,
-       |${jaccardPairCtes(out = "cpairs", left = "shc", right = "shc",
-          pfx = "cj")},
-       |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM cpairs
-       |  UNION SELECT doc_b, doc_a FROM cpairs),
-       |reach(id, root) AS (
-       |  SELECT doc_id, doc_id FROM documents, sp WHERE doc_id < sp.split
-       |  UNION
-       |  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id),
-       |labels AS (SELECT id AS doc_id, min(root) AS cluster_id
-       |  FROM reach GROUP BY id),
-       |${jaccardPairCtes(out = "probe", left = "shc", right = "shs",
-          aCol = "corpus_doc", bCol = "shard_doc", sym = false, pfx = "pj")},
-       |inh AS (SELECT p.shard_doc AS doc_id, min(l.cluster_id) AS cluster_id
-       |  FROM probe p JOIN labels l ON p.corpus_doc = l.doc_id
-       |  GROUP BY p.shard_doc),
-       |shard AS (SELECT doc_id FROM documents, sp WHERE doc_id >= sp.split)
-       |SELECT s.doc_id, coalesce(i.cluster_id, s.doc_id) AS cluster_id,
-       |  ${splitCaseSql("coalesce(i.cluster_id, s.doc_id)")} AS split,
-       |  i.cluster_id IS NOT NULL AS inherited
-       |FROM shard s LEFT JOIN inh i USING (doc_id)""".stripMargin
-
-  /** The Stupid-Backoff train-side CTEs (token frame + the three n-gram
-    * tables + the 1-row total) shared verbatim by the doc-level
-    * (`q_lm_backoff`) and line-level (`q_line_surprisal`) oracles —
-    * mirrors `TextAnalysis.backoffLmTables` so both engines consult one
-    * LM.
-    */
-  private def backoffLmCtes: String = {
-    val m = graft.operators.TextAnalysis.EvalHoldoutMod
-    s"""ts AS (SELECT doc_id, regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-       |  FROM documents),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS n1 FROM (
-       |    SELECT unnest(ts) AS w FROM ts WHERE doc_id % $m <> 0) u
-       |  WHERE w <> '' GROUP BY w),
-       |bi AS (SELECT ts[i] AS w1, ts[i + 1] AS w2, CAST(count(*) AS BIGINT) AS n12
-       |  FROM (SELECT ts, unnest(range(1, len(ts))) AS i FROM ts
-       |        WHERE doc_id % $m <> 0 AND len(ts) >= 2) b
-       |  GROUP BY w1, w2),
-       |tri AS (SELECT ts[i] AS w1, ts[i + 1] AS w2, ts[i + 2] AS w3,
-       |    CAST(count(*) AS BIGINT) AS n123
-       |  FROM (SELECT ts, unnest(range(1, len(ts) - 1)) AS i FROM ts
-       |        WHERE doc_id % $m <> 0 AND len(ts) >= 3) t
-       |  GROUP BY w1, w2, w3),
-       |nn AS (SELECT CAST(sum(n1) AS BIGINT) AS n_train FROM uni)""".stripMargin
-  }
-
-  /** The five-join + level/surprisal CTEs over an `ev(keys..., w1, w2,
-    * w3, c)` frame — mirrors `TextAnalysis.backoffScoreTris`. `keys` are
-    * the pass-through grouping columns ("doc_id" or "doc_id, pos").
-    */
-  private def backoffScoreCtes(keys: String): String = {
-    import graft.functions.FixedPointLn.lnFSql
-    val pen = graft.operators.TextAnalysis.BackoffPenaltyF
-    val evKeys = keys.split(",").map(k => s"ev.${k.trim}").mkString(", ")
-    s"""j AS (SELECT $evKeys, ev.c, tri.n123, b1.n12, b2.n12 AS n23,
-       |    u2.n1 AS n2, u3.n1 AS n3, nn.n_train
-       |  FROM ev LEFT JOIN tri USING (w1, w2, w3)
-       |  LEFT JOIN bi b1 ON ev.w1 = b1.w1 AND ev.w2 = b1.w2
-       |  LEFT JOIN bi b2 ON ev.w2 = b2.w1 AND ev.w3 = b2.w2
-       |  LEFT JOIN uni u2 ON ev.w2 = u2.w
-       |  LEFT JOIN uni u3 ON ev.w3 = u3.w
-       |  CROSS JOIN nn),
-       |sc AS (SELECT $keys, c,
-       |  CASE WHEN n123 IS NOT NULL THEN 3 WHEN n23 IS NOT NULL THEN 2
-       |       WHEN n3 IS NOT NULL THEN 1 ELSE 0 END AS level,
-       |  ${lnFSql("n12", "l12")},
-       |  ${lnFSql("n123", "l123")},
-       |  ${lnFSql("n2", "l2")},
-       |  ${lnFSql("n23", "l23")},
-       |  ${lnFSql("n3", "l3")},
-       |  ${lnFSql("n_train", "ln_")},
-       |  ${lnFSql("n_train + 1", "ln1")},
-       |  CASE level WHEN 3 THEN l12 - l123
-       |             WHEN 2 THEN l2 - l23 + $pen
-       |             WHEN 1 THEN ln_ - l3 + ${2 * pen}
-       |             ELSE ln1 + ${2 * pen} END AS s_f
-       |  FROM j)""".stripMargin
-  }
-
-  /** Shared CTE chain of the three Naive Bayes oracles: weak label from
-    * RAW tokens (the docStats rule), lowercase empty-filtered train
-    * tokens, class-conditional counts, 1-row totals, and the per-token
-    * llr through four integer-ln lateral chains — so train/score/eval
-    * replay one model and cannot drift.
-    */
-  private def nbCtes: String = {
-    import graft.functions.FixedPointLn.lnFSql
-    s"""t AS ($tokCte),
-       |lab AS (SELECT doc_id, (len(toks) >= 10
-       |    AND len(list_filter(toks, w -> list_contains($stopList, w))) > 0) AS y
-       |  FROM t),
-       |lt AS (SELECT doc_id, unnest(list_filter(
-       |    regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'), x -> x <> '')) AS tok
-       |  FROM documents WHERE doc_id % ${graft.operators.TextAnalysis.EvalHoldoutMod} <> 0),
-       |cnt AS (SELECT tok,
-       |    CAST(sum(CASE WHEN lab.y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-       |    CAST(sum(CASE WHEN lab.y THEN 0 ELSE 1 END) AS BIGINT) AS n_neg
-       |  FROM lt JOIN lab ON lt.doc_id = lab.doc_id GROUP BY tok),
-       |tot AS (SELECT CAST(sum(n_pos) AS BIGINT) AS bign1,
-       |    CAST(sum(n_neg) AS BIGINT) AS bign0,
-       |    CAST(count(*) AS BIGINT) AS v FROM cnt),
-       |mchain AS (SELECT tok, n_pos, n_neg,
-       |  ${lnFSql("n_pos + 1", "la")},
-       |  ${lnFSql("bign1 + v", "lb")},
-       |  ${lnFSql("n_neg + 1", "lc")},
-       |  ${lnFSql("bign0 + v", "ld")}
-       |  FROM cnt, tot),
-       |model AS (SELECT tok, n_pos, n_neg, la - lb - lc + ld AS llr_f FROM mchain)""".stripMargin
-  }
-
-  /** The scoring tail shared by the nb score/eval oracles (appends to
-    * [[nbCtes]]): prior/floor constants and the per-doc posterior fold.
-    */
-  private def nbScoreCtes: String = {
-    import graft.functions.FixedPointLn.lnFSql
-    s"""pri AS (SELECT CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS d1,
-       |    CAST(sum(CASE WHEN y THEN 0 ELSE 1 END) AS BIGINT) AS d0
-       |  FROM lab WHERE doc_id % ${graft.operators.TextAnalysis.EvalHoldoutMod} <> 0),
-       |cchain AS (SELECT
-       |  ${lnFSql("d1", "pa")},
-       |  ${lnFSql("d0", "pb")},
-       |  ${lnFSql("bign0 + v", "pc")},
-       |  ${lnFSql("bign1 + v", "pd")}
-       |  FROM pri, tot),
-       |consts AS (SELECT pa - pb AS prior_f, pc - pd AS unseen_f FROM cchain),
-       |sc AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
-       |  FROM (SELECT doc_id, unnest(list_filter(
-       |      regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'), x -> x <> '')) AS tok
-       |    FROM documents) u
-       |  GROUP BY doc_id, tok),
-       |scored AS (SELECT sc.doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-       |    CAST(max(prior_f) + sum(c * coalesce(model.llr_f, unseen_f)) AS BIGINT)
-       |      AS score_f
-       |  FROM sc LEFT JOIN model ON sc.tok = model.tok, consts
-       |  GROUP BY sc.doc_id)""".stripMargin
-  }
-  // shingling is over the first MaxShingleTokens tokens (the operator's
-  // bounded-row-size cap) — DuckDB list slicing clamps like Spark's slice
-  private val shCte =
-    s"""SELECT doc_id,
-       |  CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform(
-       |    range(0, len(toks) - 2), i -> array_to_string(toks[i+1:i+3], ' ')))
-       |  ELSE CAST([] AS VARCHAR[]) END AS sh
-       |FROM (SELECT doc_id,
-       |  toks[1:${graft.functions.TextFunctions.MaxShingleTokens}] AS toks
-       |FROM (""".stripMargin + tokCte + "))"
-  private def h60(seed: Int, x: String): String =
-    s"CAST(('0x' || substr(md5('$seed:' || $x), 1, 15)) AS BIGINT)"
-
-  /** The `u, x` CTE pair of the domain-curation oracles: DuckDB replay of
-    * `Domains.withUrl`'s deterministic URL grammar (same md5 draws, same
-    * exact `//` power-law integer div) FOLLOWED by the same two-regexp
-    * host / registered-domain extraction the engine runs — the oracle
-    * re-parses the string it just built, so the extraction itself is
-    * what's being checked, not assumed.
-    */
-  /** DuckDB replay of `Domains.hostOf(id, source)` — the
-    * `[www.]<source>.d<N>.com` host of page `id` (`id` is any SQL
-    * expression over a frame with a `source` column). ONE definition
-    * feeds both the URL-grammar oracles and the link-graph oracles'
-    * absolute-anchor rebuild, so the two can't drift.
-    */
-  private def hostOfSql(id: String): String = {
-    import graft.operators.Domains.{DomainBuckets, DomainSeed, SubSeed}
-    s"CASE WHEN ${h60(SubSeed, id)} % 2 = 0 THEN '' ELSE 'www.' END || " +
-      s"source || '.d' || " +
-      s"($DomainBuckets // (${h60(DomainSeed, id)} % $DomainBuckets + 1)) || '.com'"
-  }
-
-  private def domainUrlCtes: String = {
-    val hostRe = "'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)'"
-    s"""u AS (SELECT doc_id, text,
-       |    'https://' || ${hostOfSql("doc_id")} || '/p/' || doc_id AS url
-       |  FROM documents),
-       |x AS (SELECT doc_id, text, url,
-       |    regexp_extract(url, $hostRe, 1) AS host,
-       |    regexp_extract(regexp_extract(url, $hostRe, 1),
-       |      '([^.]+\\.[^.]+)$$', 1) AS domain,
-       |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok
-       |  FROM u)""".stripMargin
-  }
-
-  /** DuckDB replay of `Dedup.substringExactnessGap`: exact 50-char spans
-    * and 8-token window spans rebuilt from literal window text, token
-    * spans converted to char offsets through the identical
-    * split-on-space arithmetic (token i starts at Σ_{j<i}(len+1)), then
-    * per-method and union coverage via three gaps-and-islands merges.
-    */
-  private def substringGapOracle: String = {
-    val k = graft.operators.Dedup.CharSpanLen
-    def islands(src: String, s: String, e: String, pre: String): String =
-      s"""${pre}fl AS (SELECT doc_id, $s, $e,
-         |    CASE WHEN $s > COALESCE(max($e) OVER (PARTITION BY doc_id ORDER BY $s
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS opens
-         |  FROM $src),
-         |${pre}is AS (SELECT doc_id, $s, $e,
-         |    sum(opens) OVER (PARTITION BY doc_id ORDER BY $s) AS island
-         |  FROM ${pre}fl),
-         |${pre}m AS (SELECT doc_id, min($s) AS s, max($e) AS e
-         |  FROM ${pre}is GROUP BY doc_id, island)""".stripMargin
-    s"""WITH cgr AS (SELECT doc_id, i - 1 AS start, substr(text, i, $k) AS g
-       |  FROM documents, unnest(range(1, len(text) - ${k - 2})) AS t(i)),
-       |cdup AS (SELECT g FROM cgr GROUP BY g HAVING count(*) >= 2),
-       |cspan AS (SELECT doc_id, start AS s, start + $k AS e
-       |  FROM cgr WHERE g IN (SELECT g FROM cdup)),
-       |${islands("cspan", "s", "e", "c")},
-       |toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-       |wgr AS (SELECT doc_id, i - 1 AS start, array_to_string(tk[i:i+7], ' ') AS g
-       |  FROM toks, unnest(range(1, len(tk) - 6)) AS t(i)),
-       |wdup AS (SELECT g FROM wgr GROUP BY g HAVING count(*) >= 2),
-       |wspan AS (SELECT doc_id, start AS s, start + 8 AS e
-       |  FROM wgr WHERE g IN (SELECT g FROM wdup)),
-       |${islands("wspan", "s", "e", "w")},
-       |pos AS (SELECT doc_id, i - 1 AS pos, len(tk[i]) AS tlen
-       |  FROM toks, unnest(range(1, len(tk) + 1)) AS t(i)),
-       |offs AS (SELECT doc_id, pos, tlen,
-       |    CAST(coalesce(sum(tlen + 1) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cstart
-       |  FROM pos),
-       |wchar AS (SELECT wm.doc_id, o1.cstart AS s, o2.cstart + o2.tlen AS e
-       |  FROM wm JOIN offs o1 ON wm.doc_id = o1.doc_id AND o1.pos = wm.s
-       |          JOIN offs o2 ON wm.doc_id = o2.doc_id AND o2.pos = wm.e - 1),
-       |ua AS (SELECT doc_id, s, e FROM cm UNION ALL SELECT doc_id, s, e FROM wchar),
-       |${islands("ua", "s", "e", "u")},
-       |ec AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS exact_chars
-       |  FROM cm GROUP BY doc_id),
-       |wc AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS window_chars
-       |  FROM wchar GROUP BY doc_id),
-       |uc AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS union_chars
-       |  FROM um GROUP BY doc_id)
-       |SELECT uc.doc_id, coalesce(ec.exact_chars, 0) AS exact_chars,
-       |  coalesce(wc.window_chars, 0) AS window_chars, uc.union_chars,
-       |  uc.union_chars - coalesce(wc.window_chars, 0) AS only_exact_chars,
-       |  uc.union_chars - coalesce(ec.exact_chars, 0) AS only_window_chars
-       |FROM uc LEFT JOIN ec ON uc.doc_id = ec.doc_id
-       |        LEFT JOIN wc ON uc.doc_id = wc.doc_id""".stripMargin
-  }
-
-  /** Shared oracle of the batch + streaming contamination scan: literal
-    * 8-token window text (the fingerprint-vs-text grouping-key identity
-    * of the q_dedup_substring precedent), distinct per doc on both
-    * sides, eval side selected by the same content-hash draw.
-    */
-  private def benchmarkContaminationOracle: String = {
-    import graft.operators.Dedup.{ContamMinShared, EvalSampleMod, EvalSampleSeed}
-    s"""WITH cr AS (SELECT md5(text) AS fp, min(doc_id) AS rep_id,
-       |    min_by(text, doc_id) AS text FROM documents GROUP BY md5(text)),
-       |cg AS (SELECT DISTINCT rep_id, array_to_string(tk[i:i+7], ' ') AS g
-       |  FROM (SELECT rep_id, string_split(text, ' ') AS tk FROM cr) t0,
-       |       unnest(range(1, len(tk) - 6)) AS t(i)),
-       |er AS (SELECT min(doc_id) AS eval_id, min_by(text, doc_id) AS text
-       |  FROM documents
-       |  WHERE ${h60(EvalSampleSeed, "doc_id")} % $EvalSampleMod = 0
-       |  GROUP BY md5(text)),
-       |eg AS (SELECT DISTINCT eval_id, array_to_string(tk[i:i+7], ' ') AS g
-       |  FROM (SELECT eval_id, string_split(text, ' ') AS tk FROM er) t0,
-       |       unnest(range(1, len(tk) - 6)) AS t(i)),
-       |hot AS (SELECT g FROM cg GROUP BY g
-       |  HAVING count(*) > ${graft.operators.Dedup.ContamHotCap}),
-       |eg2 AS (SELECT * FROM eg WHERE g NOT IN (SELECT g FROM hot)),
-       |v AS (SELECT rep_id, eval_id, CAST(count(*) AS BIGINT) AS shared_ngrams
-       |  FROM cg JOIN eg2 USING (g)
-       |  GROUP BY 1, 2 HAVING count(*) >= $ContamMinShared)
-       |SELECT d.doc_id, v.eval_id, v.shared_ngrams
-       |FROM documents d
-       |JOIN cr ON md5(d.text) = cr.fp
-       |JOIN v USING (rep_id)""".stripMargin
-  }
-
-  /** DuckDB replay of `Domains.temperedDomainBudget`: per-domain token
-    * totals through the same fixed-point ln/exp tempering chain as
-    * `temperedWeightCtes` (domain-keyed), integer share → budget, then
-    * the q_domain_budget window-cumsum contract with per-domain budgets.
-    */
-  private def domainBudgetTemperedOracle: String = {
-    import graft.operators.Domains.DomainBudgetSeed
-    import graft.operators.Sampling.{MixShareScale, TempDen, TempNum}
-    s"""WITH $domainUrlCtes,
-       |t AS MATERIALIZED (SELECT domain, doc_id, tok,
-       |    ${h60(DomainBudgetSeed, "doc_id")} % ${1L << 20} AS h FROM x),
-       |s AS MATERIALIZED (SELECT domain, CAST(sum(tok) AS BIGINT) AS src_tokens
-       |  FROM t GROUP BY domain),
-       |${temperChainCtes("s", "domain")},
-       |g AS MATERIALIZED (SELECT CAST(sum(src_tokens) AS BIGINT) AS total_tokens,
-       |    CAST(sum(w_f) AS BIGINT) AS sum_w FROM w),
-       |r AS MATERIALIZED (SELECT domain,
-       |    ((total_tokens * ((w_f * $MixShareScale) // sum_w))
-       |      // $MixShareScale) AS budget
-       |  FROM w, g),
-       |c AS (SELECT t.domain, t.doc_id, t.tok, r.budget,
-       |    CAST(coalesce(sum(t.tok) OVER (PARTITION BY t.domain
-       |      ORDER BY t.h, t.doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |      AS BIGINT) AS cum_before
-       |  FROM t JOIN r USING (domain))
-       |SELECT domain, doc_id, tok, CAST(budget AS BIGINT) AS dom_budget
-       |FROM c WHERE cum_before < budget""".stripMargin
-  }
-
-  /** Shared oracle of the incremental + streaming domain budget: the
-    * frozen corpus side below the 4/5 ingest split, arrivals admitted by
-    * a correlated corpus-mass sum replaying the (h, doc_id) order rule.
-    */
-  private def domainBudgetIncrementalOracle: String = {
-    import graft.operators.Domains.{DomainBudgetSeed, DomainBudgetTokens}
-    s"""WITH $domainUrlCtes,
-       |t AS (SELECT domain, doc_id, tok,
-       |    ${h60(DomainBudgetSeed, "doc_id")} % ${1L << 20} AS h FROM x),
-       |sp AS (SELECT (max(doc_id) + 1) * 4 // 5 AS split FROM documents),
-       |co AS (SELECT t.* FROM t, sp WHERE t.doc_id < sp.split),
-       |sh2 AS (SELECT t.* FROM t, sp WHERE t.doc_id >= sp.split)
-       |SELECT s.domain, s.doc_id, s.tok,
-       |  (SELECT CAST(coalesce(sum(c.tok), 0) AS BIGINT) FROM co c
-       |     WHERE c.domain = s.domain
-       |       AND (c.h < s.h OR (c.h = s.h AND c.doc_id < s.doc_id)))
-       |    < $DomainBudgetTokens AS admitted
-       |FROM sh2 s""".stripMargin
-  }
-
-  /** The t/l/h line-frame CTE chain of the line-dedup oracles — raw
-    * single-space tokens chopped into non-overlapping LineLen windows,
-    * each with position, token count, and the seeded 60-bit hash
-    * (mirrors `Dedup.linesOf`).
-    */
-  private def lineCtes: String = {
-    val (ll, sd) = (graft.operators.Dedup.LineLen, graft.operators.Dedup.LineSeed)
-    s"""t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |l AS (SELECT doc_id, i AS pos,
-       |    array_to_string(toks[i*$ll+1:(i+1)*$ll], ' ') AS line,
-       |    least($ll, len(toks) - i*$ll) AS n_tok
-       |  FROM (SELECT doc_id, toks,
-       |      unnest(range(0, (len(toks) - 1) // $ll + 1)) AS i FROM t) u),
-       |h AS (SELECT doc_id, pos, line, n_tok, ${h60(sd, "line")} AS lh FROM l)""".stripMargin
-  }
-
-  /** The per-document excision report over a lines relation `src`
-    * left-joined to the verdict CTE `f` (mirrors `Dedup.excisionReport`).
-    */
-  private def lineReportSql(src: String): String =
-    s"""SELECT $src.doc_id,
-       |  CAST(count(*) AS BIGINT) AS n_lines,
-       |  CAST(sum(CASE WHEN f.lh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_lines_dropped,
-       |  CAST(sum(CASE WHEN f.lh IS NOT NULL THEN n_tok ELSE 0 END) AS BIGINT)
-       |    AS n_tokens_dropped,
-       |  md5(coalesce(
-       |    string_agg(CASE WHEN f.lh IS NULL THEN line END, ' ' ORDER BY pos),
-       |    '')) AS kept_md5
-       |FROM $src LEFT JOIN f ON $src.lh = f.lh
-       |GROUP BY $src.doc_id""".stripMargin
-
-  /** Incremental ingestion novelty, shared by the batch and streaming
-    * twins: frozen below-split distinct-shingle vocabulary, per-shard-doc
-    * probe counts (every shard doc present, shingle-less ones as zeros).
-    */
-  private def ngramNoveltyIncrementalOracle: String =
-    s"""WITH sh AS MATERIALIZED ($shCte),
-       |sp AS (SELECT (max(doc_id) + 1) * 4 // 5 AS split FROM documents),
-       |idx AS (SELECT DISTINCT sg FROM (
-       |    SELECT unnest(sh) AS sg FROM sh, sp WHERE sh.doc_id < sp.split) u),
-       |e AS (SELECT doc_id, unnest(sh) AS sg FROM sh, sp
-       |  WHERE sh.doc_id >= sp.split),
-       |c AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_ngrams,
-       |    CAST(sum(CASE WHEN i.sg IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_novel
-       |  FROM e LEFT JOIN idx i ON e.sg = i.sg GROUP BY 1)
-       |SELECT d.doc_id,
-       |  coalesce(c.n_ngrams, 0) AS n_ngrams,
-       |  coalesce(c.n_novel, 0) AS n_novel,
-       |  CASE WHEN coalesce(c.n_ngrams, 0) > 0
-       |       THEN c.n_novel * 1000 // c.n_ngrams ELSE 0 END AS novelty_milli
-       |FROM (SELECT doc_id FROM documents, sp
-       |      WHERE documents.doc_id >= sp.split) d
-       |LEFT JOIN c ON d.doc_id = c.doc_id""".stripMargin
-
-  /** Within-document repetition excision (the Gopher keep-first rule) —
-    * shared verbatim by the batch and streaming registrations: the same
-    * line CTEs, a per-(doc, line-hash) min(pos) verdict, the same report
-    * fold as the line-dedup family.
-    */
-  private def repetitionExciseOracle: String =
-    s"""WITH $lineCtes,
-       |fp AS (SELECT doc_id, lh, min(pos) AS first_pos FROM h
-       |  GROUP BY doc_id, lh)
-       |SELECT h.doc_id,
-       |  CAST(count(*) AS BIGINT) AS n_lines,
-       |  CAST(sum(CASE WHEN h.pos > fp.first_pos THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_lines_dropped,
-       |  CAST(sum(CASE WHEN h.pos > fp.first_pos THEN h.n_tok ELSE 0 END) AS BIGINT)
-       |    AS n_tokens_dropped,
-       |  md5(coalesce(
-       |    string_agg(CASE WHEN h.pos = fp.first_pos THEN h.line END,
-       |      ' ' ORDER BY h.pos), '')) AS kept_md5
-       |FROM h JOIN fp ON h.doc_id = fp.doc_id AND h.lh = fp.lh
-       |GROUP BY h.doc_id""".stripMargin
-
-  private val WinnowScale: Long = 1L << graft.operators.TextAnalysis.WinnowPosBits
-  private val WinnowMask: Long = WinnowScale - 1
-
-  /** The winnowing selection CTE chain ending in `sel(doc_id, wcomp)` —
-    * ONE definition shared by the fingerprint and overlap oracles
-    * (mirrors `TextAnalysis.winnowFingerprints`): 40-bit gram hashes in
-    * the h·2^20+(2^20−1−pos) argmin encoding, per-window min over valid
-    * starts 0..max(0, n_grams − w), DISTINCT selections.
-    */
-  private def winnowSelCtes: String = {
-    import graft.operators.TextAnalysis.{WinnowK, WinnowW, WinnowSeed}
-    s"""t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-       |g AS (SELECT doc_id, i AS pos, len(ts) - ${WinnowK - 1} AS n_grams,
-       |    CAST(('0x' || substr(md5('$WinnowSeed:' ||
-       |      array_to_string(ts[i+1:i+$WinnowK], ' ')), 1, 10)) AS BIGINT)
-       |      * $WinnowScale + ($WinnowMask - i) AS comp
-       |  FROM (SELECT doc_id, ts, unnest(range(0, len(ts) - ${WinnowK - 1})) AS i
-       |        FROM t WHERE len(ts) >= $WinnowK) u),
-       |wm AS (SELECT doc_id, pos, n_grams,
-       |    min(comp) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING) AS wcomp
-       |  FROM g),
-       |sel AS MATERIALIZED (SELECT DISTINCT doc_id, wcomp FROM wm
-       |  WHERE pos <= greatest(0, n_grams - $WinnowW))""".stripMargin
-  }
-
-  /** Ingestion-time winnow overlap, shared by the batch and streaming
-    * twins: the shared winnow selection CTEs, corpus-frozen hot set and
-    * capped index below the split, shard-vs-corpus pairs only.
-    */
-  private def incrementalWinnowOverlapOracle: String = {
-    import graft.operators.Dedup.{WinnowBucketCap, WinnowMinShared}
-    s"""WITH $winnowSelCtes,
-       |fps AS MATERIALIZED (SELECT DISTINCT doc_id,
-       |    wcomp // $WinnowScale AS fp_hash FROM sel),
-       |sp AS (SELECT (max(doc_id) + 1) * 4 // 5 AS split FROM documents),
-       |cfps AS MATERIALIZED (SELECT f.* FROM fps f, sp
-       |  WHERE f.doc_id < sp.split),
-       |hot AS MATERIALIZED (SELECT fp_hash FROM cfps GROUP BY fp_hash
-       |  HAVING count(*) > $WinnowBucketCap),
-       |idx AS MATERIALIZED (SELECT * FROM cfps
-       |  WHERE fp_hash NOT IN (SELECT fp_hash FROM hot)),
-       |nc AS (SELECT doc_id AS corpus_doc, CAST(count(*) AS BIGINT) AS n_corpus
-       |  FROM idx GROUP BY 1),
-       |sfps AS MATERIALIZED (SELECT f.* FROM fps f, sp
-       |  WHERE f.doc_id >= sp.split
-       |    AND f.fp_hash NOT IN (SELECT fp_hash FROM hot)),
-       |ns AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_doc
-       |  FROM sfps GROUP BY doc_id),
-       |p AS (SELECT s.doc_id, i.doc_id AS corpus_doc,
-       |    CAST(count(*) AS BIGINT) AS n_shared
-       |  FROM sfps s JOIN idx i ON s.fp_hash = i.fp_hash
-       |  GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared)
-       |SELECT p.doc_id, p.corpus_doc, p.n_shared, ns.n_doc, nc.n_corpus,
-       |  p.n_shared * 1000 // least(ns.n_doc, nc.n_corpus) AS overlap_milli
-       |FROM p JOIN ns ON p.doc_id = ns.doc_id
-       |       JOIN nc ON p.corpus_doc = nc.corpus_doc""".stripMargin
-  }
-
-  /** Incremental line dedup, shared by the batch and streaming twins:
-    * frozen corpus index at freq ≥ minOcc−1, shard-side excision only.
-    */
-  private def lineDedupIncrementalOracle: String = {
-    val mo = graft.operators.Dedup.LineMinOccurrences
-    s"""WITH $lineCtes,
-       |sp AS (SELECT (max(doc_id) + 1) * 4 // 5 AS split FROM documents),
-       |f AS (SELECT lh FROM h, sp WHERE h.doc_id < sp.split
-       |  GROUP BY lh HAVING count(*) >= ${mo - 1}),
-       |s AS (SELECT h.* FROM h, sp WHERE h.doc_id >= sp.split)
-       |${lineReportSql("s")}""".stripMargin
-  }
-
-  /** DuckDB mirror of `Dsir.importanceScores` as a CTE chain ending in
-    * `scores(doc_id, source, n_feats, logw_f)`: hashed unigram+bigram
-    * buckets (same 60-bit md5, same modulus), target/raw histograms with
-    * add-1 smoothing, and the per-bucket λ as four portable fixed-point
-    * ln_f chains ([[graft.functions.FixedPointLn.lnFSql]]) — so the
-    * summed log-likelihood ratios are exact BIGINTs on both engines.
-    */
-  /** The add-1 bigram-surprisal CTE chain ending in `<p>lmdoc(doc_id,
-    * n_bigrams, nll_f, avg_nll_f)` over all documents — shared by the
-    * q_lm_surprisal oracle and (prefixed) the quality-agreement oracle.
-    */
-  private def lmSurprisalCtes(p: String): String = {
-    import graft.functions.FixedPointLn.lnFSql
-    s"""${p}ts AS (SELECT doc_id, regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-       |  FROM documents),
-       |${p}bg AS (SELECT doc_id, ts[i] AS w1, ts[i + 1] AS w2
-       |  FROM (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
-       |        FROM ${p}ts WHERE len(ts) >= 2)),
-       |${p}dbc AS (SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS c
-       |  FROM ${p}bg GROUP BY doc_id, w1, w2),
-       |${p}lm AS (SELECT w1, w2, CAST(sum(c) AS BIGINT) AS n_pair
-       |  FROM ${p}dbc GROUP BY w1, w2),
-       |${p}lmt AS (SELECT w1, CAST(sum(n_pair) AS BIGINT) AS n_w1
-       |  FROM ${p}lm GROUP BY w1),
-       |${p}v AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS v
-       |  FROM (SELECT unnest(ts) AS w FROM ${p}ts) WHERE w <> ''),
-       |${p}sc AS (SELECT doc_id, c,
-       |  ${lnFSql("n_w1 + v", "la")},
-       |  ${lnFSql("n_pair + 1", "lb")}
-       |  FROM ${p}dbc JOIN ${p}lm USING (w1, w2) JOIN ${p}lmt USING (w1)
-       |  CROSS JOIN ${p}v),
-       |${p}perdoc AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-       |    CAST(sum(c * (la - lb)) AS BIGINT) AS nll_f
-       |  FROM ${p}sc GROUP BY doc_id),
-       |${p}lmdoc AS (SELECT d.doc_id, coalesce(pp.n_bigrams, 0) AS n_bigrams,
-       |  coalesce(pp.nll_f, 0) AS nll_f,
-       |  CASE WHEN coalesce(pp.n_bigrams, 0) > 0
-       |       THEN coalesce(pp.nll_f, 0) // pp.n_bigrams ELSE 0 END AS avg_nll_f
-       |  FROM documents d LEFT JOIN ${p}perdoc pp USING (doc_id))""".stripMargin
-  }
-
-  /** The rare-bigram CTE chain ending in `<p>raredoc(doc_id, n_bigrams,
-    * n_rare, flagged)` — shared like [[lmSurprisalCtes]].
-    */
-  private def rareBigramCtes(p: String): String =
-    s"""${p}rts AS (SELECT doc_id, regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-       |  FROM documents),
-       |${p}rbgidx AS (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
-       |  FROM ${p}rts WHERE len(ts) >= 2),
-       |${p}rbg AS (SELECT doc_id, ts[i] AS w1, ts[i + 1] AS w2 FROM ${p}rbgidx),
-       |${p}rc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_corpus
-       |  FROM ${p}rbg GROUP BY w1, w2),
-       |${p}rtot AS (SELECT CAST(sum(n_corpus) AS BIGINT) AS t FROM ${p}rc),
-       |${p}rperdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       |    CAST(count(*) FILTER (WHERE rc.n_corpus * ${TextAnalysis.RareDen} < rtot.t)
-       |      AS BIGINT) AS n_rare
-       |  FROM ${p}rbg rbg JOIN ${p}rc rc USING (w1, w2)
-       |  CROSS JOIN ${p}rtot rtot GROUP BY doc_id),
-       |${p}raredoc AS (SELECT d.doc_id, coalesce(pp.n_bigrams, 0) AS n_bigrams,
-       |  coalesce(pp.n_rare, 0) AS n_rare,
-       |  coalesce(pp.n_rare, 0) * 100 > ${TextAnalysis.RareFlagPct} * coalesce(pp.n_bigrams, 0)
-       |    AS flagged
-       |  FROM documents d LEFT JOIN ${p}rperdoc pp USING (doc_id))""".stripMargin
-
-  /** DuckDB mirror of `Pipeline.qualityAgreement`: the classifier fold,
-    * the (prefixed) LM-surprisal chain, and the (prefixed) rare-bigram
-    * chain joined per doc, corpus-relative LM flag, 2³-cell rollup.
-    */
-  private def qualityAgreementOracle: String = {
-    import graft.operators.TextAnalysis.{ClsSeed, ClsWeightMod, ClsWeightShift}
-    s"""WITH cls AS (SELECT doc_id,
-       |    CAST(coalesce(list_sum(list_transform(
-       |      list_filter(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'),
-       |        x -> x <> ''),
-       |      tok -> ${h60(ClsSeed, "tok")} % $ClsWeightMod - $ClsWeightShift)), 0)
-       |      AS BIGINT) > 0 AS cls_keep
-       |  FROM documents),
-       |${lmSurprisalCtes("l_")},
-       |${rareBigramCtes("r_")},
-       |lt AS (SELECT CAST(count(*) AS BIGINT) AS n_scored,
-       |    CAST(sum(avg_nll_f) AS BIGINT) AS sum_avg
-       |  FROM l_lmdoc WHERE n_bigrams > 0)
-       |SELECT c.cls_keep,
-       |  l.n_bigrams > 0 AND l.avg_nll_f * lt.n_scored > lt.sum_avg AS lm_flag,
-       |  r.flagged AS rare_flag, CAST(count(*) AS BIGINT) AS n
-       |FROM cls c JOIN l_lmdoc l USING (doc_id)
-       |JOIN r_raredoc r USING (doc_id) CROSS JOIN lt
-       |GROUP BY 1, 2, 3""".stripMargin
-  }
-
-  /** The hashed-feature CTEs shared by every DSIR oracle: filtered token
-    * arrays, unigram+bigram features, and the per-(doc, bucket) counts
-    * `fb` — the SQL mirror of `Dsir.featureBuckets`.
-    */
-  private def dsirFeatureCtes: String = {
-    val b = graft.operators.Dsir.NumBuckets
-    s"""ts AS (SELECT doc_id, source,
-       |    list_filter(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'),
-       |      t -> t <> '') AS ts
-       |  FROM documents),
-       |uni AS (SELECT doc_id, source, unnest(ts) AS f FROM ts),
-       |bi AS (SELECT doc_id, source, ts[i] || ' ' || ts[i + 1] AS f
-       |  FROM (SELECT doc_id, source, ts, unnest(range(1, len(ts))) AS i
-       |        FROM ts WHERE len(ts) >= 2)),
-       |fb AS (SELECT doc_id, source,
-       |    ${h60(graft.operators.Dsir.FeatureSeed, "f")} % $b AS b,
-       |    CAST(count(*) AS BIGINT) AS c
-       |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
-       |  GROUP BY doc_id, source, b)""".stripMargin
-  }
-
-  private def dsirScoreCtes: String = {
-    import graft.functions.FixedPointLn.lnFSql
-    val b = graft.operators.Dsir.NumBuckets
-    val targets = graft.operators.Dsir.TargetSources
-      .map(s => s"'$s'").mkString(", ")
-    s"""$dsirFeatureCtes,
-       |raw AS (SELECT b, CAST(sum(c) AS BIGINT) AS r FROM fb GROUP BY b),
-       |tgt AS (SELECT b, CAST(sum(c) AS BIGINT) AS t FROM fb
-       |  WHERE source IN ($targets) GROUP BY b),
-       |tot AS (SELECT (SELECT CAST(sum(r) AS BIGINT) FROM raw) AS bigr,
-       |               (SELECT CAST(sum(t) AS BIGINT) FROM tgt) AS bigt),
-       |lam AS (SELECT raw.b,
-       |  ${lnFSql("coalesce(tgt.t, 0) + 1", "lt")},
-       |  ${lnFSql("tot.bigt + " + b, "lbt")},
-       |  ${lnFSql("raw.r + 1", "lr")},
-       |  ${lnFSql("tot.bigr + " + b, "lbr")},
-       |  lt - lbt - lr + lbr AS lam_f
-       |  FROM raw LEFT JOIN tgt USING (b) CROSS JOIN tot),
-       |docw AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats,
-       |    CAST(sum(c * lam_f) AS BIGINT) AS logw_f
-       |  FROM fb JOIN lam USING (b) GROUP BY doc_id),
-       |scores AS (SELECT d.doc_id, d.source,
-       |    coalesce(w.n_feats, 0) AS n_feats, coalesce(w.logw_f, 0) AS logw_f
-       |  FROM documents d LEFT JOIN docw w USING (doc_id))""".stripMargin
-  }
-
-  /** DuckDB mirror of `Dsir.gumbelTopK`'s key: the 20-bit content hash
-    * draw, −ln u and the Gumbel both through ln_f, then the obvious global
-    * window rank the engine's counting selection must reproduce.
-    */
-  /** The Gumbel-key CTEs (`g0`..`keyed`) plus the ranked-selection CTEs
-    * (`nk`, `sel` with its global rank) over the `scores` CTE — shared by
-    * the selection oracle and the steering-report oracle.
-    */
-  private def dsirKeyedCtes: String = {
-    import graft.functions.FixedPointLn.{lnFSql, Ln2F}
-    s"""g0 AS (SELECT doc_id, source, logw_f,
-       |    ${h60(graft.operators.Dsir.GumbelSeed, "CAST(doc_id AS VARCHAR)")}
-       |      % 1048576 AS h
-       |  FROM scores),
-       |g1 AS (SELECT doc_id, source, logw_f,
-       |  ${lnFSql("h * 2 + 1", "lh")},
-       |  greatest(21 * $Ln2F - lh, 1) AS nl
-       |  FROM g0),
-       |g2 AS (SELECT doc_id, source, logw_f,
-       |  ${lnFSql("nl", "lnl")},
-       |  20 * $Ln2F - lnl AS g_f
-       |  FROM g1),
-       |keyed AS (SELECT doc_id, source, logw_f, g_f, logw_f + g_f AS key_f
-       |  FROM g2),
-       |nk AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-       |sel AS (SELECT k.*, row_number()
-       |    OVER (ORDER BY key_f DESC, doc_id ASC) AS rn FROM keyed k)""".stripMargin
-  }
-
-  private def dsirSelectSql: String = {
-    val d = graft.operators.Dsir.SelectDenom
-    s"""WITH $dsirScoreCtes,
-       |$dsirKeyedCtes
-       |SELECT doc_id, source, logw_f, g_f, key_f
-       |FROM sel CROSS JOIN nk WHERE rn <= (n + ${d - 1}) // $d""".stripMargin
-  }
-
-  /** DuckDB mirror of `Dsir.steeringReport`: per-source score rollup plus
-    * selected counts from the SAME selection CTEs as `q_dsir_select`.
-    */
-  private def dsirReportSql: String = {
-    val d = graft.operators.Dsir.SelectDenom
-    s"""WITH $dsirScoreCtes,
-       |$dsirKeyedCtes,
-       |selc AS (SELECT source, CAST(count(*) AS BIGINT) AS n_selected
-       |  FROM sel CROSS JOIN nk WHERE rn <= (n + ${d - 1}) // $d
-       |  GROUP BY source),
-       |agg AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(logw_f) AS BIGINT) AS sum_logw_f
-       |  FROM scores GROUP BY source)
-       |SELECT a.source, a.n_docs, a.sum_logw_f,
-       |  a.sum_logw_f // a.n_docs AS mean_logw_f,
-       |  coalesce(s.n_selected, 0) AS n_selected,
-       |  (coalesce(s.n_selected, 0) * 1000) // a.n_docs AS sel_share_milli
-       |FROM agg a LEFT JOIN selc s USING (source)""".stripMargin
-  }
-
-  /** DuckDB mirror of `Dsir.incrementalScores` (and, verbatim, of the
-    * streaming twin's full drain): weights train on the corpus BELOW the
-    * ⌊4·(max+1)/5⌋ ingest split only; shard buckets left-join them with
-    * the smoothing-floor fallback for never-seen features.
-    */
-  private def dsirIncrementalSql: String = {
-    import graft.functions.FixedPointLn.lnFSql
-    val b = graft.operators.Dsir.NumBuckets
-    val targets = graft.operators.Dsir.TargetSources
-      .map(s => s"'$s'").mkString(", ")
-    s"""WITH $dsirFeatureCtes,
-       |sp AS (SELECT (max(doc_id) + 1) * 4 // 5 AS split FROM documents),
-       |cfb AS (SELECT fb.* FROM fb CROSS JOIN sp WHERE fb.doc_id < sp.split),
-       |raw AS (SELECT b, CAST(sum(c) AS BIGINT) AS r FROM cfb GROUP BY b),
-       |tgt AS (SELECT b, CAST(sum(c) AS BIGINT) AS t FROM cfb
-       |  WHERE source IN ($targets) GROUP BY b),
-       |tot AS (SELECT (SELECT CAST(sum(r) AS BIGINT) FROM raw) AS bigr,
-       |               (SELECT CAST(sum(t) AS BIGINT) FROM tgt) AS bigt),
-       |lam AS (SELECT raw.b,
-       |  ${lnFSql("coalesce(tgt.t, 0) + 1", "lt")},
-       |  ${lnFSql("tot.bigt + " + b, "lbt")},
-       |  ${lnFSql("raw.r + 1", "lr")},
-       |  ${lnFSql("tot.bigr + " + b, "lbr")},
-       |  lt - lbt - lr + lbr AS lam_f
-       |  FROM raw LEFT JOIN tgt USING (b) CROSS JOIN tot),
-       |dflt AS (SELECT
-       |  ${lnFSql("tot.bigr + " + b, "ldr")},
-       |  ${lnFSql("tot.bigt + " + b, "ldt")},
-       |  ldr - ldt AS lam_default
-       |  FROM tot),
-       |sfb AS (SELECT fb.* FROM fb CROSS JOIN sp WHERE fb.doc_id >= sp.split),
-       |docw AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats,
-       |    CAST(sum(c * coalesce(lam.lam_f, dflt.lam_default)) AS BIGINT) AS logw_f
-       |  FROM sfb LEFT JOIN lam USING (b) CROSS JOIN dflt GROUP BY doc_id),
-       |shard AS (SELECT d.doc_id, d.source FROM documents d CROSS JOIN sp
-       |  WHERE d.doc_id >= sp.split)
-       |SELECT s.doc_id, s.source, coalesce(w.n_feats, 0) AS n_feats,
-       |  coalesce(w.logw_f, 0) AS logw_f
-       |FROM shard s LEFT JOIN docw w USING (doc_id)""".stripMargin
-  }
-
-  /** Exploded-intersection near-dup pair CTEs — the same pairs and the
-    * same inter/uni/jaccard VALUES as the brute-force
-    * `sh a JOIN sh b ON a.doc_id < b.doc_id` + `list_intersect` form,
-    * but linear in SHARED shingles instead of quadratic doc pairs each
-    * allocating intersection/union lists. Equivalence: the sh lists are
-    * list_distinct'd, so the shingle equi-join's per-pair match count IS
-    * |A∩B|, and |A∪B| = |A|+|B|−|A∩B|; the jaccard division sees the
-    * same two exact integers, so the DOUBLE compares and prints
-    * bit-identically. Docs with empty sh produce no exploded rows —
-    * exactly the original `len(a.sh) > 0 AND len(b.sh) > 0` guard — and
-    * only inter ≥ 1 pairs can reach the ≥ 0.5 threshold, so dropping
-    * zero-intersection pairs loses nothing.
-    *
-    * WHY: the r17 driver's DuckDB oracle OOM'd a contiguous 20-query
-    * window; the all-pairs list-op sites were the heaviest allocations
-    * in the run (measured sf0.01, pragma-free DuckDB: q_dedup_neardup
-    * 9.9 → 0.2 s bit-equal, q_pipeline_trust_funnel peak 2.5 GB). This
-    * form keeps every oracle within a plain default-memory process.
-    *
-    * Emits working CTEs `<pfx>ea/<pfx>na` (+ `eb/nb` when `right` is a
-    * different frame) and `<pfx>i`, then `<out>` with columns
-    * ($aCol, $bCol, n_a, n_b, inter, uni, jaccard). `left`/`right` name
-    * (doc_id, sh) frames; left==right with sym=true is the
-    * upper-triangular self-pair set, sym=false the full left×right
-    * probe set.
-    */
-  private def jaccardPairCtes(
-      out: String, left: String, right: String,
-      aCol: String = "doc_a", bCol: String = "doc_b",
-      sym: Boolean = true, pfx: String = "jp"): String = {
-    val sameSide = left == right
-    val ea = s"${pfx}ea"
-    val eb = if (sameSide) ea else s"${pfx}eb"
-    val na = s"${pfx}na"
-    val nb = if (sameSide) na else s"${pfx}nb"
-    val cond = if (sym) " AND a.doc_id < b.doc_id" else ""
-    // MATERIALIZED throughout: DuckDB inlines (re-executes) a plain CTE
-    // per reference — and per RECURSION STEP when a recursive CTE's
-    // term reaches it. The funnel oracle measured 108.9 → 0.54 s at
-    // sf0.01 from materializing this chain + the CTEs it feeds, output
-    // bit-equal. Every frame here is bounded (docs × shingles exploded,
-    // then pair-bounded), so materialization is a few MB at oracle SFs.
-    val rightCtes =
-      if (sameSide) ""
-      else s"""$eb AS MATERIALIZED (SELECT doc_id, unnest(sh) AS sg FROM $right),
-              |$nb AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM $right),
-              |""".stripMargin
-    s"""$ea AS MATERIALIZED (SELECT doc_id, unnest(sh) AS sg FROM $left),
-       |$na AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM $left),
-       |$rightCtes${pfx}i AS MATERIALIZED (SELECT a.doc_id AS da, b.doc_id AS db,
-       |    CAST(count(*) AS BIGINT) AS inter
-       |  FROM $ea a JOIN $eb b ON a.sg = b.sg$cond
-       |  GROUP BY 1, 2),
-       |$out AS MATERIALIZED (SELECT i.da AS $aCol, i.db AS $bCol,
-       |    na.n AS n_a, nb.n AS n_b, i.inter,
-       |    na.n + nb.n - i.inter AS uni,
-       |    CAST(i.inter AS DOUBLE) / (na.n + nb.n - i.inter) AS jaccard
-       |  FROM ${pfx}i i JOIN $na na ON na.doc_id = i.da
-       |    JOIN $nb nb ON nb.doc_id = i.db
-       |  WHERE CAST(i.inter AS DOUBLE) / (na.n + nb.n - i.inter) >= 0.5)""".stripMargin
-  }
-
-  /** Near-dup pair CTE (named `pairs`, expects `sh` in scope) — the same
-    * banding-vs-brute-force equivalence as `q_dedup_neardup`, shared by
-    * the split-leakage and source-overlap oracles so the pair semantics
-    * cannot drift between them (now the [[jaccardPairCtes]] exploded
-    * form, value-identical to the r17 all-pairs text).
-    */
-  private val neardupPairsCte: String =
-    jaccardPairCtes(out = "pairs", left = "sh", right = "sh")
-
-  /** Corpus-side / shard-side (doc_id, sh) frames under the shared
-    * ⌊4·(max+1)/5⌋ ingest boundary — the common prefix of every
-    * incremental-dedup oracle (expects `sh` and defines `sp`).
-    */
-  private val ingestSideCtes: String =
-    s"""sp AS (SELECT (max(doc_id) + 1) * 4 // 5 AS split FROM documents),
-       |shc AS (SELECT s.doc_id, s.sh FROM sh s, sp WHERE s.doc_id < sp.split),
-       |shs AS (SELECT s.doc_id, s.sh FROM sh s, sp WHERE s.doc_id >= sp.split)""".stripMargin
-
-  /** Asymmetric shard-vs-corpus near-dup pair SQL, shared verbatim by
-    * `q_dedup_incremental` and its streaming twin (same banding-vs-brute
-    * force equivalence as `q_dedup_neardup`, exploded form).
-    */
-  private lazy val dedupIncrementalSql: String =
-    s"""WITH sh AS MATERIALIZED ($shCte),
-       |$ingestSideCtes,
-       |${jaccardPairCtes(out = "ipairs", left = "shc", right = "shs",
-            aCol = "corpus_doc", bCol = "shard_doc", sym = false)}
-       |SELECT corpus_doc, shard_doc, inter, uni, jaccard FROM ipairs""".stripMargin
-
-  /** The train/val/test CASE over a doc-id expression — interpolates the
-    * [[Splits]] constants, mirroring [[Splits.splitOf]] bit for bit.
-    */
-  private def splitSql(id: String): String = {
-    import graft.operators.Splits._
-    s"""CASE WHEN ${h60(SplitSeed, id)} % $SplitBuckets < $TrainMilli THEN 'train'
-       |  WHEN ${h60(SplitSeed, id)} % $SplitBuckets < $ValMilli THEN 'val'
-       |  ELSE 'test' END""".stripMargin
-  }
-
-  /** The q_mixture_schedule oracle body — also the CTE the packed
-    * composition (`q_mixture_packed`) wraps, so the two can never drift.
-    */
-  private def mixtureScheduleSql: String =
-    s"""WITH t AS MATERIALIZED (SELECT doc_id, source,
-       |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_toks
-       |  FROM documents),
-       |s AS MATERIALIZED (SELECT source, CAST(sum(n_toks) AS BIGINT) AS src_tokens
-       |  FROM t GROUP BY source),
-       |g AS MATERIALIZED (SELECT CAST(sum(src_tokens) AS BIGINT) AS total_tokens,
-       |    CAST(count(*) AS BIGINT) AS n_sources FROM s),
-       |r AS MATERIALIZED (SELECT source, src_tokens,
-       |    ((total_tokens * (${Sampling.MixShareScale} // n_sources))
-       |      // ${Sampling.MixShareScale}) AS want
-       |  FROM s, g)
-       |SELECT t.doc_id, t.source, t.n_toks,
-       |  (r.want // r.src_tokens) +
-       |  CASE WHEN ${h60(Sampling.MixtureSeed, "t.doc_id")} % ${Sampling.Buckets}
-       |    < (((r.want % r.src_tokens) * ${Sampling.Buckets}) // r.src_tokens)
-       |    THEN 1 ELSE 0 END AS n_repeats
-       |FROM t JOIN r USING (source)
-       |WHERE (r.want // r.src_tokens) +
-       |  CASE WHEN ${h60(Sampling.MixtureSeed, "t.doc_id")} % ${Sampling.Buckets}
-       |    < (((r.want % r.src_tokens) * ${Sampling.Buckets}) // r.src_tokens)
-       |    THEN 1 ELSE 0 END > 0""".stripMargin
-
-  /** The q_mixture_temperature oracle body (T = 2/1) — also the CTE the
-    * packed composition (`q_mixture_temperature_packed`) wraps, so the
-    * two can never drift (the q_mixture_schedule arrangement).
-    */
-  /** The tempered-weight CTE chain `t, s, w, g` (doc tokens → per-source
-    * totals → fixed-point n^(1/T) weights → corpus scalars) — ONE
-    * definition shared by the temperature-schedule and epoch-allocation
-    * oracles (mirrors `Sampling.temperedWeights` at T = tNum/tDen = 2).
-    */
-  /** The ln→temper→exp fixed-point chain over a (key, src_tokens) frame
-    * `$src`, STAGED as three materialized CTEs ending in
-    * `w($key, src_tokens, w_f)`. The r17 form was one lateral-alias
-    * column chain; DuckDB expands lateral aliases by SUBSTITUTION, so
-    * the exp chain's ~40 references to its argument each inlined the
-    * whole ln chain — a several-thousand-node expression tree costing
-    * ~4 s of OPTIMIZER time per tempered oracle at any SF (measured
-    * sf0.01: q_mixture_temperature 6.8 → sub-second once staged). Real
-    * column boundaries stop the substitution; the integer arithmetic —
-    * and therefore every value — is unchanged.
-    */
-  private def temperChainCtes(src: String, key: String): String = {
-    val (tNum, tDen) = (graft.operators.Sampling.TempNum,
-      graft.operators.Sampling.TempDen)
-    s"""wl AS MATERIALIZED (SELECT $key, src_tokens,
-       |  ${graft.functions.FixedPointLn.lnFSql("src_tokens", "y")}
-       |  FROM $src),
-       |wy AS MATERIALIZED (SELECT $key, src_tokens,
-       |  (y * $tDen) // $tNum AS y_t FROM wl),
-       |w AS MATERIALIZED (SELECT $key, src_tokens,
-       |  ${graft.functions.FixedPointExp.expFSql("y_t", "w_f")}
-       |  FROM wy)""".stripMargin
-  }
-
-  private def temperedWeightCtes: String =
-    s"""t AS MATERIALIZED (SELECT doc_id, source,
-       |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_toks
-       |  FROM documents),
-       |s AS MATERIALIZED (SELECT source, CAST(sum(n_toks) AS BIGINT) AS src_tokens
-       |  FROM t GROUP BY source),
-       |${temperChainCtes("s", "source")},
-       |g AS MATERIALIZED (SELECT CAST(sum(src_tokens) AS BIGINT) AS total_tokens,
-       |    CAST(sum(w_f) AS BIGINT) AS sum_w FROM w)""".stripMargin
-
-  private def temperatureScheduleSql: String = {
-    s"""WITH $temperedWeightCtes,
-       |r AS MATERIALIZED (SELECT source, src_tokens,
-       |    ((total_tokens * ((w_f * ${Sampling.MixShareScale}) // sum_w))
-       |      // ${Sampling.MixShareScale}) AS want
-       |  FROM w, g)
-       |SELECT t.doc_id, t.source, t.n_toks,
-       |  (r.want // r.src_tokens) +
-       |  CASE WHEN ${h60(Sampling.MixtureSeed, "t.doc_id")} % ${Sampling.Buckets}
-       |    < (((r.want % r.src_tokens) * ${Sampling.Buckets}) // r.src_tokens)
-       |    THEN 1 ELSE 0 END AS n_repeats
-       |FROM t JOIN r USING (source)
-       |WHERE (r.want // r.src_tokens) +
-       |  CASE WHEN ${h60(Sampling.MixtureSeed, "t.doc_id")} % ${Sampling.Buckets}
-       |    < (((r.want % r.src_tokens) * ${Sampling.Buckets}) // r.src_tokens)
-       |    THEN 1 ELSE 0 END > 0""".stripMargin
-  }
-
-  /** DuckDB replay of `Sampling.epochAllocation`: the shared tempered-
-    * weight CTEs, then [[graft.operators.Sampling.EpochRounds]] unrolled
-    * waterfilling rounds (each a 1-row aggregate `a<t>` over the previous
-    * state + the cap/allocate projection `r<t>`) — identical integer ops,
-    * so allocations, epoch ratios, and the leftover are exact on both
-    * engines.
-    */
-  private def epochAllocationOracle: String = {
-    import graft.operators.Sampling._
-    val rounds = (1 to EpochRounds).map { i =>
-      val prev = s"r${i - 1}"
-      s"""a$i AS MATERIALIZED (SELECT
-         |    CAST(sum(CASE WHEN capped THEN alloc ELSE 0 END) AS BIGINT)
-         |      AS capped_sum,
-         |    CAST(sum(CASE WHEN NOT capped THEN sm ELSE 0 END) AS BIGINT)
-         |      AS u_sm
-         |  FROM $prev),
-         |r$i AS MATERIALIZED (SELECT source, src_tokens, sm, budget, cap_tokens,
-         |    (capped OR tent >= cap_tokens) AS capped,
-         |    CAST(CASE WHEN capped OR tent >= cap_tokens
-         |         THEN cap_tokens ELSE tent END AS BIGINT) AS alloc
-         |  FROM (SELECT r.*,
-         |      CASE WHEN r.capped THEN r.alloc
-         |           WHEN a.u_sm > 0
-         |             THEN ((r.budget - a.capped_sum) * r.sm) // a.u_sm
-         |           ELSE 0 END AS tent
-         |    FROM $prev r, a$i a) q$i)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $temperedWeightCtes,
-       |base AS MATERIALIZED (SELECT source, src_tokens,
-       |    (w_f * ${Sampling.MixShareScale}) // sum_w AS sm,
-       |    (total_tokens * $EpochBudgetNum) // $EpochBudgetDen AS budget,
-       |    src_tokens * $EpochCap AS cap_tokens
-       |  FROM w, g),
-       |r0 AS MATERIALIZED (SELECT source, src_tokens, sm, budget, cap_tokens,
-       |    FALSE AS capped, CAST(0 AS BIGINT) AS alloc FROM base),
-       |$rounds,
-       |sp AS (SELECT CAST(sum(alloc) AS BIGINT) AS alloc_sum
-       |  FROM r$EpochRounds)
-       |SELECT source, src_tokens, sm AS share_milli, cap_tokens,
-       |  alloc AS alloc_tokens, capped,
-       |  alloc * 1000 // src_tokens AS epochs_milli, budget,
-       |  budget - sp.alloc_sum AS leftover_tokens
-       |FROM r$EpochRounds, sp""".stripMargin
-  }
-
-  /** The k-round BPE training replay (see [[bpeChainCtes]] for the
-    * one-row-state recursion): merge table `m` (rank, a, b, n), final
-    * segmentation `s<k>` — ties (count DESC, a ASC, b ASC), folds
-    * bit-equal to the [[graft.functions.BpeSegments]] kernel rule.
-    */
-  private def bpeRoundCtes(k: Int): String =
-    "WITH RECURSIVE " + bpeChainCtes(k, w = "w", s = "s", m = "m", docWhere = "")
-
-  /** DuckDB membership test of the engine's deterministic BPE doc
-    * sample (`TextAnalysis.bpeSampledDocs`).
-    */
-  private def bpeSampleWhere: String =
-    s" WHERE ${h60(TextAnalysis.BpeSampleSeed, "CAST(doc_id AS VARCHAR)")}" +
-      s" % ${TextAnalysis.BpeSampleMod} = 0"
-
-  /** DuckDB REBUILD of `Html.withHtml`'s page grammar followed by the
-    * SAME two-regexp extraction (`Html.mainContent`) — the oracle
-    * re-parses the page it just built, so the extractor is what's
-    * checked, not assumed (the `q_domain_urls` pattern). DuckDB list
-    * slices are inclusive-clamped like Spark's `slice`; `regexp_replace`
-    * needs the 'g' flag (Spark's replaces all by default); the
-    * boilerplate pattern is RE2-safe by construction.
-    */
-  private def htmlCtes: String = htmlCtesOver()
-
-  /** [[htmlCtes]] parameterized for multi-chain oracles (the rank
-    * staleness card needs the base crawl AND a drifted one in ONE
-    * query): `x` suffixes every CTE name (`hd$x` … `hm$x`); `docs` is
-    * the FROM source of the document rows (default the base table; a
-    * drifted caller passes a derived-table subquery). The fixture union
-    * stays in every chain — fixtures are "stable pages" of any crawl.
-    */
-  private def htmlCtesOver(sfx: String = "", docs: String = "documents"): String = {
-    import graft.operators.Html
-    val p = Html.ParaTokens
-    // fixture rows as SQL VALUES (single quotes doubled); pm() emulates
-    // Spark's pmod for the fixtures' NEGATIVE doc_ids (DuckDB's % keeps
-    // the dividend sign)
-    val fixtures = Html.MarkupFixtures.map { case (i, src, t) =>
-      s"(CAST($i AS BIGINT), '$src', '${t.replace("'", "''")}')"
-    }.mkString(", ")
-    def pm(k: Int) = s"CAST(((doc_id % $k) + $k) % $k AS VARCHAR)"
-    // Domains.hostOf(doc_id + 1, source): the r15 absolute anchor's host
-    val nextHostSql = hostOfSql("(doc_id + 1)")
-    val esc = "replace(replace(replace(replace(replace(text," +
-      " '&', '&amp;'), '<', '&lt;'), '>', '&gt;')," +
-      " '\"', '&quot;'), CHR(39), '&#39;')"
-    def unesc(x: String) = "replace(replace(replace(replace(replace(" + x +
-      ", '&#39;', CHR(39)), '&quot;', '\"'), '&gt;', '>'), '&lt;', '<')," +
-      " '&amp;', '&')"
-    s"""hd$sfx AS MATERIALIZED (SELECT doc_id, source, text FROM $docs
-       |    UNION ALL SELECT * FROM (VALUES $fixtures) fx$sfx(doc_id, source, text)),
-       |h$sfx AS MATERIALIZED (SELECT doc_id, source, text,
-       |    '<html><head><title>Page ' || CAST(doc_id AS VARCHAR) ||
-       |      '</title><style>.ad{display:none}.x{color:#c00}</style></head><body>' ||
-       |      '<nav id="n' || ${pm(5)} || '">home | about | ' || source || ' | login</nav>' ||
-       |      '<script type="text/javascript">var p=' || CAST(doc_id AS VARCHAR) ||
-       |      ';if(p&&p>0){trackPageView("p"+p);}</script>' ||
-       |      '<div class="ad" data-cid="' || ${pm(7)} ||
-       |      '">SPONSORED: best ' || source || ' deals' ||
-       |      '<div class="inner">deal of the day ' || ${pm(3)} || '</div>' ||
-       |      '<p>buy ' || source || ' premium today</p>' ||
-       |      '<img src="/b' || ${pm(7)} || '.png"></div>' ||
-       |      array_to_string(list_transform(
-       |           range(0, (len(toks) - 1) // $p + 1),
-       |           i -> '<p class="c' || CAST(i AS VARCHAR) || '">' || array_to_string(
-       |             toks[i*$p+1 : i*$p+$p], ' ') || '</p>'), '') ||
-       |      '<div class="related" data-rel="' || ${pm(5)} ||
-       |      '">see also <a href="/p' || CAST(doc_id + 1 AS VARCHAR) ||
-       |      '">p' || CAST(doc_id + 1 AS VARCHAR) ||
-       |      '</a> <a href="/p' || CAST(doc_id + 2 AS VARCHAR) ||
-       |      '">p' || CAST(doc_id + 2 AS VARCHAR) || '</a>' ||
-       |      ' <a href="https://' || $nextHostSql || '/p/' ||
-       |      CAST(doc_id + 1 AS VARCHAR) || '">next ' ||
-       |      array_to_string(toks[1:${Html.AnchorTeaserTokens}], ' ') || '</a>' ||
-       |      '<p>related reading for page ' || CAST(doc_id AS VARCHAR) || '</p></div>' ||
-       |      '<div class="promo">limited offer ' || ${pm(11)} ||
-       |      ' <footer>copyright 2026 ' || source || ' | privacy | terms</footer>' ||
-       |      '</body></html>' AS html
-       |  FROM (SELECT doc_id, source, text,
-       |    regexp_split_to_array(trim($esc), '\\s+') AS toks FROM hd$sfx)),
-       |hs$sfx AS (SELECT doc_id, source, text, html,
-       |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(html,
-       |      '${Html.ScriptStylePattern}', ' ', 'g'),
-       |      '${Html.TextOnlyDivPattern}', ' ', 'g'),
-       |      '${Html.TextOnlyDivPattern}', ' ', 'g'),
-       |      '${Html.BoilerplatePattern}', ' ', 'g') AS stripped
-       |  FROM h$sfx),
-       |hm$sfx AS (SELECT doc_id, source, text, html, stripped,
-       |    ${unesc(s"array_to_string(regexp_extract_all(stripped, '${Html.ParagraphPattern}', 1), ' ')")} AS main
-       |  FROM hs$sfx)""".stripMargin
-  }
-
-  /** Unrolled DuckDB replay of `GraphAnalytics.pageRank` over an
-    * edge CTE `$e(src, dst, w)`: per-source integer weight
-    * normalization, [[graft.operators.GraphAnalytics.PrIters]] rounds of
-    * floored contributions + damped update, every constant interpolated
-    * from the operator. The final rank frame is `pr<PrIters>(id, pr)`.
-    * ONE definition shared by the word-graph (`q_pagerank_words`) and
-    * host-graph (`q_link_rank`/`q_link_authority`) oracles.
-    */
-  private def pageRankCtes(e: String, sfx: String = ""): String = {
-    import graft.operators.GraphAnalytics.{PrQ, WQ, DampNum, DampDen, PrIters}
-    val iterCtes = (0 until PrIters).map { t =>
-      s"""c${t + 1}$sfx AS MATERIALIZED (SELECT en$sfx.dst, CAST(sum((p.pr * en$sfx.wq) // $WQ) AS BIGINT) AS c
-         |  FROM en$sfx JOIN pr$t$sfx p ON p.id = en$sfx.src GROUP BY en$sfx.dst),
-         |pr${t + 1}$sfx AS MATERIALIZED (SELECT nodes$sfx.id,
-         |    (${DampDen - DampNum} * $PrQ) // ($DampDen * nn$sfx.n)
-         |      + ($DampNum * coalesce(c${t + 1}$sfx.c, 0)) // $DampDen AS pr
-         |  FROM nodes$sfx CROSS JOIN nn$sfx
-         |  LEFT JOIN c${t + 1}$sfx ON c${t + 1}$sfx.dst = nodes$sfx.id)""".stripMargin
-    }.mkString(",\n")
-    s"""ws$sfx AS MATERIALIZED (SELECT src, CAST(sum(w) AS BIGINT) AS wsum FROM $e GROUP BY src),
-       |en$sfx AS MATERIALIZED (SELECT $e.src, $e.dst, ($e.w * $WQ) // ws$sfx.wsum AS wq
-       |  FROM $e JOIN ws$sfx USING (src)),
-       |nodes$sfx AS MATERIALIZED (SELECT DISTINCT id FROM
-       |  (SELECT src AS id FROM $e UNION ALL SELECT dst AS id FROM $e) u$sfx),
-       |nn$sfx AS MATERIALIZED (SELECT count(*) AS n FROM nodes$sfx),
-       |pr0$sfx AS MATERIALIZED (SELECT id, $PrQ // nn$sfx.n AS pr FROM nodes$sfx CROSS JOIN nn$sfx),
-       |$iterCtes""".stripMargin
-  }
-
-  /** Personalized variant of [[pageRankCtes]] — DuckDB replay of
-    * `GraphAnalytics.personalizedPageRank` over edge CTE `$e(src, dst,
-    * w)` with seed CTE `$seeds(id)`: teleport mass and initial mass
-    * restricted to the seed ∩ node set, 0 elsewhere. Final frame
-    * `pr<PrIters>(id, seed, pr)`.
-    */
-  private def personalizedPageRankCtes(
-      e: String, seeds: String, sfx: String = ""): String = {
-    import graft.operators.GraphAnalytics.{PrQ, WQ, DampNum, DampDen, PrIters}
-    val iterCtes = (0 until PrIters).map { t =>
-      s"""c${t + 1}$sfx AS MATERIALIZED (SELECT en$sfx.dst, CAST(sum((p.pr * en$sfx.wq) // $WQ) AS BIGINT) AS c
-         |  FROM en$sfx JOIN pr$t$sfx p ON p.id = en$sfx.src GROUP BY en$sfx.dst),
-         |pr${t + 1}$sfx AS MATERIALIZED (SELECT fl$sfx.id, fl$sfx.seed,
-         |    (CASE WHEN fl$sfx.seed
-         |       THEN (${DampDen - DampNum} * $PrQ) // ($DampDen * sn$sfx.s)
-         |       ELSE 0 END)
-         |      + ($DampNum * coalesce(c${t + 1}$sfx.c, 0)) // $DampDen AS pr
-         |  FROM fl$sfx CROSS JOIN sn$sfx
-         |  LEFT JOIN c${t + 1}$sfx ON c${t + 1}$sfx.dst = fl$sfx.id)""".stripMargin
-    }.mkString(",\n")
-    s"""ws$sfx AS MATERIALIZED (SELECT src, CAST(sum(w) AS BIGINT) AS wsum FROM $e GROUP BY src),
-       |en$sfx AS MATERIALIZED (SELECT $e.src, $e.dst, ($e.w * $WQ) // ws$sfx.wsum AS wq
-       |  FROM $e JOIN ws$sfx USING (src)),
-       |nodes$sfx AS MATERIALIZED (SELECT DISTINCT id FROM
-       |  (SELECT src AS id FROM $e UNION ALL SELECT dst AS id FROM $e) u$sfx),
-       |fl$sfx AS MATERIALIZED (SELECT nodes$sfx.id, ($seeds.id IS NOT NULL) AS seed
-       |  FROM nodes$sfx LEFT JOIN $seeds ON $seeds.id = nodes$sfx.id),
-       |sn$sfx AS MATERIALIZED (SELECT count(*) AS s FROM fl$sfx WHERE seed),
-       |pr0$sfx AS MATERIALIZED (SELECT id, seed, CASE WHEN seed THEN $PrQ // sn$sfx.s ELSE 0 END AS pr
-       |  FROM fl$sfx CROSS JOIN sn$sfx),
-       |$iterCtes""".stripMargin
-  }
-
-  /** Link-extraction CTE chain (r15) on top of [[htmlCtes]]: anchors
-    * parsed back out of the REBUILT pages with the engine's own patterns
-    * (interpolated from [[graft.operators.LinkGraph]]), absolute URLs
-    * resolved through the same two-regexp host extraction, relative
-    * anchors resolved to the page's own [[hostOfSql]] host. `lall` keeps
-    * every anchor (frontier card); `le` is the cross-host weighted edge
-    * list.
-    */
-  private def linkCtes: String = linkCtesOver()
-
-  /** [[linkCtes]] parameterized like [[htmlCtesOver]] (same `sfx`/`docs`
-    * contract) — the anchor-ELEMENT extraction (r16): one pass captures
-    * whole `<a …>…</a>` elements, from which the href AND the anchor
-    * text derive (the engine's `LinkGraph.linksRaw` shape), so `lall`
-    * carries `atext` for the anchor-text index oracles.
-    */
-  private def linkCtesOver(sfx: String = "", docs: String = "documents"): String = {
-    import graft.operators.LinkGraph.{
-      AnchorElemPattern, AnyHrefPattern, AnchorTextPattern, AbsPagePattern, RelPagePattern}
-    val hostRe = "'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)'"
-    // Html.unescapeHtml replayed (structural entities first, &amp; last)
-    def unesc(x: String) = "replace(replace(replace(replace(replace(" + x +
-      ", '&#39;', CHR(39)), '&quot;', '\"'), '&gt;', '>'), '&lt;', '<')," +
-      " '&amp;', '&')"
-    s"""${htmlCtesOver(sfx, docs)},
-       |lx$sfx AS (SELECT doc_id,
-       |    ${hostOfSql("doc_id")} AS src_host,
-       |    unnest(regexp_extract_all(html, '$AnchorElemPattern', 0)) AS el
-       |  FROM h$sfx),
-       |lu$sfx AS (SELECT doc_id, src_host,
-       |    regexp_extract(el, '$AnyHrefPattern', 1) AS u,
-       |    ${unesc(s"regexp_extract(el, '$AnchorTextPattern', 1)")} AS atext
-       |  FROM lx$sfx),
-       |lall$sfx AS MATERIALIZED (SELECT doc_id, src_host,
-       |    CASE WHEN u LIKE 'https://%' THEN regexp_extract(u, $hostRe, 1)
-       |      ELSE src_host END AS dst_host,
-       |    TRY_CAST(CASE WHEN u LIKE 'https://%'
-       |      THEN regexp_extract(u, '$AbsPagePattern', 1)
-       |      ELSE regexp_extract(u, '$RelPagePattern', 1) END AS BIGINT)
-       |      AS dst_page,
-       |    atext
-       |  FROM lu$sfx),
-       |le$sfx AS MATERIALIZED (SELECT src_host, dst_host, CAST(count(*) AS BIGINT) AS n_links
-       |  FROM lall$sfx WHERE dst_host <> src_host GROUP BY 1, 2)""".stripMargin
-  }
-
-  /** Shared by `q_link_authority` and its stored-rank twin (integer
-    * ranks round-trip parquet exactly, so the two are hash-identical).
-    */
-  private def linkAuthorityOracle: String = {
-    import graft.operators.GraphAnalytics.PrIters
-    s"""WITH $linkCtes,
-       |e AS (SELECT src_host AS src, dst_host AS dst, n_links AS w FROM le),
-       |${pageRankCtes("e")},
-       |ph AS (SELECT doc_id, source, ${hostOfSql("doc_id")} AS host FROM hd)
-       |SELECT ph.source, CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(count(DISTINCT ph.host) AS BIGINT) AS n_hosts,
-       |  CAST(sum(coalesce(p.pr, 0)) AS BIGINT) AS sum_pr,
-       |  CAST(sum(coalesce(p.pr, 0)) AS BIGINT)
-       |    // CAST(count(*) AS BIGINT) AS avg_pr
-       |FROM ph LEFT JOIN pr$PrIters p ON p.id = ph.host
-       |GROUP BY ph.source""".stripMargin
-  }
-
-  /** DuckDB replay of `LinkGraph.rankStalenessCard` (r16): the base link
-    * chain + integer PageRank (this IS the stored-rank replay — integer
-    * pr round-trips parquet exactly, the `q_link_authority_stored`
-    * argument), a second `d`-suffixed chain over the GROWN re-crawl
-    * (even/odd page-id replica, the `q_ann_stale` idiom), FULL-joined
-    * per host into status buckets, plus both crawls' frontier totals
-    * and the mass-based rebuild verdict.
-    */
-  private def linkRankStaleOracle: String = {
-    import graft.operators.GraphAnalytics.PrIters
-    import graft.operators.LinkGraph.{StaleShiftDenom, StaleRebuildDenom}
-    val driftedDocs = "(SELECT doc_id * 2 AS doc_id, source, text FROM documents" +
-      " UNION ALL SELECT doc_id * 2 + 1, source, text FROM documents)"
-    def frontier(sfx: String, name: String) =
-      s"""SELECT CAST(count(DISTINCT dst_host || '|' || CAST(dst_page AS VARCHAR)) AS BIGINT) AS $name
-         |  FROM lall$sfx LEFT JOIN (SELECT DISTINCT doc_id AS t FROM hd$sfx) i$sfx
-         |    ON lall$sfx.dst_page = i$sfx.t
-         |  WHERE i$sfx.t IS NULL AND lall$sfx.dst_page IS NOT NULL""".stripMargin
-    s"""WITH $linkCtes,
-       |e AS (SELECT src_host AS src, dst_host AS dst, n_links AS w FROM le),
-       |${pageRankCtes("e")},
-       |${linkCtesOver("_d", driftedDocs)},
-       |e_d AS (SELECT src_host AS src, dst_host AS dst, n_links AS w FROM le_d),
-       |${pageRankCtes("e_d", "_d")},
-       |fs AS (${frontier("", "n_frontier_stored")}),
-       |fd AS (${frontier("_d", "n_frontier_fresh")}),
-       |j AS (SELECT coalesce(s.id, f.id) AS host, s.pr AS prs, f.pr AS prf
-       |  FROM pr$PrIters s FULL JOIN pr${PrIters}_d f ON s.id = f.id),
-       |sb AS (SELECT CASE WHEN prs IS NULL THEN 'new_host'
-       |      WHEN prf IS NULL THEN 'vanished'
-       |      WHEN abs(prf - prs) * $StaleShiftDenom > prs THEN 'shifted'
-       |      ELSE 'stable' END AS status,
-       |    coalesce(prs, 0) AS prs, coalesce(prf, 0) AS prf,
-       |    CASE WHEN prs IS NULL THEN prf WHEN prf IS NULL THEN prs
-       |      ELSE abs(prf - prs) END AS sh
-       |  FROM j),
-       |g AS (SELECT status, CAST(count(*) AS BIGINT) AS n_hosts,
-       |    CAST(sum(prs) AS BIGINT) AS sum_pr_stored,
-       |    CAST(sum(prf) AS BIGINT) AS sum_pr_fresh,
-       |    CAST(sum(sh) AS BIGINT) AS shift_abs
-       |  FROM sb GROUP BY status),
-       |tt AS (SELECT CAST(sum(shift_abs) AS BIGINT) AS ts,
-       |    CAST(sum(sum_pr_stored) AS BIGINT) AS tm FROM g)
-       |SELECT g.status, g.n_hosts, g.sum_pr_stored, g.sum_pr_fresh, g.shift_abs,
-       |  fs.n_frontier_stored, fd.n_frontier_fresh,
-       |  (tt.ts * $StaleRebuildDenom > tt.tm) AS rebuild
-       |FROM g CROSS JOIN fs CROSS JOIN fd CROSS JOIN tt""".stripMargin
-  }
-
-  /** DuckDB replay of `Pipeline.anchorHybridTopK` (r16): the shared
-    * content-BM25 CTE, the anchor-text index rebuilt from `lall`'s
-    * cross-host anchors (tokens of the unescaped anchor text keyed by
-    * TARGET host), the identical integer-ratio BM25 over it at host
-    * granularity, host→doc pool expansion, and the `q_hybrid_rrf`
-    * integer fusion tail.
-    */
-  private def anchorBm25Oracle: String = {
-    import graft.operators.TextAnalysis._
-    import graft.operators.LinkGraph.AnchorHostK
-    import graft.operators.Pipeline.{RrfC, RrfK}
-    val poolK = Bm25K
-    val numF = (Bm25K1Num + Bm25K1Den) * Bm25BDen
-    val denTf = Bm25K1Den * Bm25BDen
-    val denS = Bm25K1Num * (Bm25BDen - Bm25BNum)
-    val denDl = Bm25K1Num * Bm25BNum
-    val inList = Bm25Query.map(t => s"'$t'").mkString(", ")
-    val pivot = Bm25Query
-      .map(t => s"COALESCE(max(CASE WHEN tok = '$t' THEN ts END), 0)")
-      .mkString(" + ")
-    s"""WITH $linkCtes,
-       |bm AS ($bm25TopKOracle),
-       |txt AS (SELECT doc_id,
-       |    row_number() OVER (ORDER BY score DESC, doc_id ASC) AS text_rank
-       |  FROM bm),
-       |at AS (SELECT dst_host AS host,
-       |    unnest(list_filter(regexp_split_to_array(
-       |      trim(lower(nfc_normalize(atext))), '\\s+'), x -> x <> '')) AS tok
-       |  FROM lall WHERE dst_host <> src_host),
-       |adl AS (SELECT host, CAST(count(*) AS BIGINT) AS dl FROM at GROUP BY host),
-       |asc2 AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(dl) AS BIGINT) AS s_tok FROM adl),
-       |atf AS (SELECT host, tok, CAST(count(*) AS BIGINT) AS tf FROM at
-       |  WHERE tok IN ($inList) GROUP BY host, tok),
-       |adf AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM atf GROUP BY tok),
-       |aper AS (SELECT t.host, t.tok,
-       |    (CAST(t.tf * $numF * sc.s_tok AS DOUBLE)
-       |      / CAST(t.tf * $denTf * sc.s_tok + $denS * sc.s_tok
-       |             + $denDl * d.dl * sc.n_docs AS DOUBLE))
-       |    * (CAST(sc.n_docs AS DOUBLE) / CAST(q.df + 1 AS DOUBLE)) AS ts
-       |  FROM atf t JOIN adl d USING (host) JOIN adf q USING (tok) CROSS JOIN asc2 sc),
-       |ah AS (SELECT host, $pivot AS score FROM aper GROUP BY host
-       |  ORDER BY score DESC, host ASC LIMIT $AnchorHostK),
-       |ahr AS (SELECT host,
-       |    row_number() OVER (ORDER BY score DESC, host ASC) AS host_rank
-       |  FROM ah),
-       |ad AS (SELECT d.doc_id, ahr.host_rank FROM documents d
-       |  JOIN ahr ON ${hostOfSql("doc_id")} = ahr.host
-       |  ORDER BY ahr.host_rank ASC, d.doc_id ASC LIMIT $poolK),
-       |adr AS (SELECT doc_id,
-       |    row_number() OVER (ORDER BY host_rank ASC, doc_id ASC) AS anchor_rank
-       |  FROM ad)
-       |SELECT COALESCE(txt.doc_id, adr.doc_id) AS doc_id, text_rank, anchor_rank,
-       |  COALESCE(1000000 // ($RrfC + text_rank), 0)
-       |    + COALESCE(1000000 // ($RrfC + anchor_rank), 0) AS rrf_micro
-       |FROM txt FULL OUTER JOIN adr ON txt.doc_id = adr.doc_id
-       |ORDER BY rrf_micro DESC, doc_id ASC LIMIT $RrfK""".stripMargin
-  }
-
-  /** DuckDB replay of `LinkGraph.anchorContexts` (r17): pages rebuilt by
-    * [[htmlCtesOver]], anchor elements re-extracted, the page split at
-    * each element's first occurrence (strpos — elements are unique per
-    * page under the grammar), both halves script/style- then tag-
-    * stripped, entity-unescaped, lowToks'd, and the last / first
-    * [[graft.operators.LinkGraph.AnchorContextTokens]] non-empty tokens
-    * kept. Ends with frame `acw(doc_id, src_host, dst_host, absolute,
-    * atext, atoks, ctx_b, ctx_a)`.
-    */
-  private def anchorContextCtes: String = {
-    import graft.operators.LinkGraph.{
-      AnchorElemPattern, AnyHrefPattern, AnchorTextPattern, AnchorContextTokens}
-    import graft.operators.Html.ScriptStylePattern
-    val hostRe = "'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)'"
-    def unesc(x: String) = "replace(replace(replace(replace(replace(" + x +
-      ", '&#39;', CHR(39)), '&quot;', '\"'), '&gt;', '>'), '&lt;', '<')," +
-      " '&amp;', '&')"
-    def vis(x: String) =
-      "list_filter(regexp_split_to_array(trim(lower(nfc_normalize(" +
-        unesc(s"regexp_replace(regexp_replace($x, '$ScriptStylePattern', ' ', 'g')," +
-          " '<[^>]*>', ' ', 'g')") +
-        "))), '\\s+'), t -> t <> '')"
-    s"""${htmlCtesOver()},
-       |acx AS (SELECT doc_id, source, html, ${hostOfSql("doc_id")} AS src_host,
-       |    unnest(regexp_extract_all(html, '$AnchorElemPattern', 0)) AS el
-       |  FROM h),
-       |acp AS (SELECT doc_id, src_host,
-       |    regexp_extract(el, '$AnyHrefPattern', 1) AS u,
-       |    ${unesc(s"regexp_extract(el, '$AnchorTextPattern', 1)")} AS atext,
-       |    ${vis("substr(html, 1, strpos(html, el) - 1)")} AS tb,
-       |    ${vis("substr(html, strpos(html, el) + length(el))")} AS ta
-       |  FROM acx),
-       |acw AS (SELECT doc_id, src_host,
-       |    CASE WHEN u LIKE 'https://%' THEN regexp_extract(u, $hostRe, 1)
-       |      ELSE src_host END AS dst_host,
-       |    (u LIKE 'https://%') AS absolute,
-       |    atext,
-       |    list_filter(regexp_split_to_array(trim(lower(nfc_normalize(atext))),
-       |      '\\s+'), t -> t <> '') AS atoks,
-       |    tb[greatest(len(tb) - $AnchorContextTokens + 1, 1):len(tb)] AS ctx_b,
-       |    ta[1:$AnchorContextTokens] AS ctx_a
-       |  FROM acp)""".stripMargin
-  }
-
-  /** The context-extended anchor BM25 oracle (r17): [[anchorContextCtes]]
-    * feeding the SAME integer-ratio BM25 tail as [[anchorBm25Oracle]]'s
-    * anchor side, each cross-host anchor contributing anchor + window
-    * tokens to the TARGET host's bag. Serves the STORED-index query too —
-    * tf/dl are exact longs, so the parquet round-trip is bit-exact (the
-    * RankStore argument).
-    */
-  private def anchorCtxBm25Oracle: String =
-    s"""WITH $anchorContextCtes,
-       |$anchorCtxScoreCtes
-       |SELECT host, score FROM ah2""".stripMargin
-
-  /** The scoring CTEs over [[anchorContextCtes]]'s `acw` frame — the
-    * context-extended (host, tok, tf) bag and the anchor BM25 math,
-    * ending in `ah2(host, score)` (the top-k host ranking). Shared by
-    * the stored-index ranking oracle and the fused-retrieval oracle.
-    */
-  private def anchorCtxScoreCtes: String = {
-    import graft.operators.TextAnalysis._
-    import graft.operators.LinkGraph.AnchorHostK
-    val numF = (Bm25K1Num + Bm25K1Den) * Bm25BDen
-    val denTf = Bm25K1Den * Bm25BDen
-    val denS = Bm25K1Num * (Bm25BDen - Bm25BNum)
-    val denDl = Bm25K1Num * Bm25BNum
-    val inList = Bm25Query.map(t => s"'$t'").mkString(", ")
-    val pivot = Bm25Query
-      .map(t => s"COALESCE(max(CASE WHEN tok = '$t' THEN ts END), 0)")
-      .mkString(" + ")
-    s"""ct AS (SELECT dst_host AS host, unnest(atoks || ctx_b || ctx_a) AS tok
-       |  FROM acw WHERE dst_host <> src_host),
-       |cdl AS (SELECT host, CAST(count(*) AS BIGINT) AS dl FROM ct GROUP BY host),
-       |csc AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(dl) AS BIGINT) AS s_tok FROM cdl),
-       |ctf AS (SELECT host, tok, CAST(count(*) AS BIGINT) AS tf FROM ct
-       |  WHERE tok IN ($inList) GROUP BY host, tok),
-       |cdf AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM ctf GROUP BY tok),
-       |cper AS (SELECT t.host, t.tok,
-       |    (CAST(t.tf * $numF * sc.s_tok AS DOUBLE)
-       |      / CAST(t.tf * $denTf * sc.s_tok + $denS * sc.s_tok
-       |             + $denDl * d.dl * sc.n_docs AS DOUBLE))
-       |    * (CAST(sc.n_docs AS DOUBLE) / CAST(q.df + 1 AS DOUBLE)) AS ts
-       |  FROM ctf t JOIN cdl d USING (host) JOIN cdf q USING (tok) CROSS JOIN csc sc),
-       |ah2 AS (SELECT host, $pivot AS score FROM cper GROUP BY host
-       |  ORDER BY score DESC, host ASC LIMIT $AnchorHostK)""".stripMargin
-  }
-
-  /** The fused retrieval over the CONTEXT index (r17): content BM25 +
-    * the context-anchor host ranking expanded to docs, fused through the
-    * same integer RRF tail as [[anchorBm25Oracle]] — the stored-path
-    * query `q_anchor_ctx_fused`'s replay.
-    */
-  private def anchorCtxFusedOracle: String = {
-    import graft.operators.TextAnalysis.Bm25K
-    import graft.operators.Pipeline.{RrfC, RrfK}
-    s"""WITH $anchorContextCtes,
-       |$anchorCtxScoreCtes,
-       |bm AS ($bm25TopKOracle),
-       |txt AS (SELECT doc_id,
-       |    row_number() OVER (ORDER BY score DESC, doc_id ASC) AS text_rank
-       |  FROM bm),
-       |ahr AS (SELECT host,
-       |    row_number() OVER (ORDER BY score DESC, host ASC) AS host_rank
-       |  FROM ah2),
-       |ad AS (SELECT d.doc_id, ahr.host_rank FROM documents d
-       |  JOIN ahr ON ${hostOfSql("doc_id")} = ahr.host
-       |  ORDER BY ahr.host_rank ASC, d.doc_id ASC LIMIT $Bm25K),
-       |adr AS (SELECT doc_id,
-       |    row_number() OVER (ORDER BY host_rank ASC, doc_id ASC) AS anchor_rank
-       |  FROM ad)
-       |SELECT COALESCE(txt.doc_id, adr.doc_id) AS doc_id, text_rank, anchor_rank,
-       |  COALESCE(1000000 // ($RrfC + text_rank), 0)
-       |    + COALESCE(1000000 // ($RrfC + anchor_rank), 0) AS rrf_micro
-       |FROM txt FULL OUTER JOIN adr ON txt.doc_id = adr.doc_id
-       |ORDER BY rrf_micro DESC, doc_id ASC LIMIT $RrfK""".stripMargin
-  }
-
-  /** DuckDB replay of `Pipeline.retentionFunnel` (r16): the link chain
-    * feeds integer PageRank AND `t`-suffixed personalized PageRank from
-    * the min-document-source seed hosts; the spam set is the
-    * high-rank/low-trust rule; then the `q_pipeline_retained` stages
-    * re-expressed as a first-reject CASE — quality, spam host, exact
-    * keeper, near-dup cluster rep (recursive CC over the reachers' pair
-    * graph) — rolled up per (source, verdict).
-    */
-  private def trustFunnelOracle: String = {
-    import graft.operators.GraphAnalytics.{PrIters, PrQ}
-    import graft.operators.LinkGraph.{SpamRankMult, SpamTrustMult}
-    s"""WITH RECURSIVE $linkCtes,
-       |e AS (SELECT src_host AS src, dst_host AS dst, n_links AS w FROM le),
-       |${pageRankCtes("e")},
-       |ms AS (SELECT min(source) AS s FROM documents),
-       |sd AS (SELECT DISTINCT ${hostOfSql("doc_id")} AS id
-       |  FROM documents CROSS JOIN ms WHERE source = ms.s),
-       |${personalizedPageRankCtes("e", "sd", "t")},
-       |nnr AS (SELECT CAST(count(*) AS BIGINT) AS n FROM pr$PrIters),
-       |spam AS MATERIALIZED (SELECT p.id AS host FROM pr$PrIters p CROSS JOIN nnr
-       |  LEFT JOIN pr${PrIters}t t2 ON t2.id = p.id
-       |  WHERE p.pr * nnr.n > $SpamRankMult * $PrQ
-       |    AND coalesce(t2.pr, 0) * $SpamTrustMult < p.pr),
-       |tk AS MATERIALIZED ($tokCte),
-       |bse AS MATERIALIZED (SELECT d.doc_id, d.source,
-       |    CAST(len(tk.toks) AS BIGINT) AS n_toks,
-       |    (len(tk.toks) >= 10 AND len(list_filter(tk.toks,
-       |      w -> list_contains($stopList, w))) > 0) AS q_ok,
-       |    (sp.host IS NOT NULL) AS spam,
-       |    md5(regexp_replace(lower(trim(nfc_normalize(d.text))), '\\s+', ' ', 'g')) AS fp
-       |  FROM documents d JOIN tk ON d.doc_id = tk.doc_id
-       |  LEFT JOIN spam sp ON sp.host = ${hostOfSql("d.doc_id")}),
-       |kk AS MATERIALIZED (SELECT fp, min(doc_id) AS keeper FROM bse
-       |  WHERE q_ok AND NOT spam GROUP BY fp),
-       |stg AS MATERIALIZED (SELECT bse.*, (bse.doc_id = kk.keeper) AS is_keeper
-       |  FROM bse LEFT JOIN kk USING (fp)),
-       |r4 AS MATERIALIZED (SELECT doc_id FROM stg WHERE q_ok AND NOT spam AND is_keeper),
-       |st AS (SELECT d.doc_id,
-       |    regexp_split_to_array(trim(nfc_normalize(d.text)), '\\s+')[1:${graft.functions.TextFunctions.MaxShingleTokens}] AS toks
-       |  FROM documents d JOIN r4 USING (doc_id)),
-       |shf AS MATERIALIZED (SELECT doc_id,
-       |    CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform(
-       |      range(0, len(toks) - 2), i -> array_to_string(toks[i+1:i+3], ' ')))
-       |    ELSE CAST([] AS VARCHAR[]) END AS sh
-       |  FROM st),
-       |${jaccardPairCtes(out = "pairs", left = "shf", right = "shf",
-          pfx = "fj")},
-       |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |reach(id, root) AS (
-       |  SELECT doc_id, doc_id FROM r4
-       |  UNION
-       |  SELECT e2.dst, r.root FROM reach r JOIN edges e2 ON e2.src = r.id),
-       |labels AS MATERIALIZED (SELECT id AS doc_id, min(root) AS cluster_id FROM reach GROUP BY id),
-       |v AS (SELECT stg.source,
-       |    CASE WHEN NOT q_ok THEN 'low_quality'
-       |      WHEN spam THEN 'spam_host'
-       |      WHEN NOT is_keeper THEN 'exact_dup'
-       |      WHEN l.cluster_id <> stg.doc_id THEN 'near_dup'
-       |      ELSE 'kept' END AS verdict,
-       |    n_toks
-       |  FROM stg LEFT JOIN labels l ON l.doc_id = stg.doc_id)
-       |SELECT source, verdict, CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(n_toks) AS BIGINT) AS n_tokens
-       |FROM v GROUP BY source, verdict""".stripMargin
-  }
-
-  /** DuckDB replay of `Pipeline.incrementalTrustFunnel` (r17): every
-    * frozen artifact recomposed from the EXISTING sub-corpus (doc_id
-    * below the ⌊4·(max+1)/5⌋ ingest boundary) — the link chain, integer
-    * PageRank, `t`-suffixed TrustRank and the spam rule over existing
-    * docs only; keepers among existing reachers — then the ARRIVING
-    * shard scored first-reject against them: quality (per-doc), frozen
-    * spam set, fp ∈ existing keepers, brute-force shingle Jaccard vs the
-    * existing keeper set (probe-only — no shard-internal pairs, the
-    * incremental dedup contract). Rolled up per (source, verdict) over
-    * arrivals only.
-    */
-  private def trustFunnelIncrementalOracle: String = {
-    import graft.operators.GraphAnalytics.{PrIters, PrQ}
-    import graft.operators.LinkGraph.{SpamRankMult, SpamTrustMult}
-    val existingDocs = "(SELECT d.doc_id, d.source, d.text FROM documents d," +
-      " esplit WHERE d.doc_id < esplit.b)"
-    s"""WITH esplit AS (SELECT (max(doc_id) + 1) * 4 // 5 AS b FROM documents),
-       |${linkCtesOver("", existingDocs)},
-       |e AS (SELECT src_host AS src, dst_host AS dst, n_links AS w FROM le),
-       |${pageRankCtes("e")},
-       |ms AS (SELECT min(source) AS s FROM documents, esplit
-       |  WHERE doc_id < esplit.b),
-       |sd AS (SELECT DISTINCT ${hostOfSql("doc_id")} AS id
-       |  FROM documents CROSS JOIN ms CROSS JOIN esplit
-       |  WHERE source = ms.s AND doc_id < esplit.b),
-       |${personalizedPageRankCtes("e", "sd", "t")},
-       |nnr AS (SELECT CAST(count(*) AS BIGINT) AS n FROM pr$PrIters),
-       |spam AS MATERIALIZED (SELECT p.id AS host FROM pr$PrIters p CROSS JOIN nnr
-       |  LEFT JOIN pr${PrIters}t t2 ON t2.id = p.id
-       |  WHERE p.pr * nnr.n > $SpamRankMult * $PrQ
-       |    AND coalesce(t2.pr, 0) * $SpamTrustMult < p.pr),
-       |tk AS MATERIALIZED ($tokCte),
-       |bse AS MATERIALIZED (SELECT d.doc_id, d.source,
-       |    CAST(len(tk.toks) AS BIGINT) AS n_toks,
-       |    (len(tk.toks) >= 10 AND len(list_filter(tk.toks,
-       |      w -> list_contains($stopList, w))) > 0) AS q_ok,
-       |    (sp.host IS NOT NULL) AS spam,
-       |    md5(regexp_replace(lower(trim(nfc_normalize(d.text))), '\\s+', ' ', 'g')) AS fp
-       |  FROM documents d JOIN tk ON d.doc_id = tk.doc_id
-       |  LEFT JOIN spam sp ON sp.host = ${hostOfSql("d.doc_id")}),
-       |kk AS MATERIALIZED (SELECT fp, min(bse.doc_id) AS keeper FROM bse, esplit
-       |  WHERE bse.doc_id < esplit.b AND q_ok AND NOT spam GROUP BY fp),
-       |r4e AS MATERIALIZED (SELECT bse.doc_id FROM bse JOIN kk USING (fp), esplit
-       |  WHERE bse.doc_id < esplit.b AND q_ok AND NOT spam
-       |    AND bse.doc_id = kk.keeper),
-       |arr AS MATERIALIZED (SELECT bse.*, (kk.fp IS NOT NULL) AS exact_dup
-       |  FROM bse LEFT JOIN kk USING (fp), esplit
-       |  WHERE bse.doc_id >= esplit.b),
-       |st AS (SELECT d.doc_id,
-       |    regexp_split_to_array(trim(nfc_normalize(d.text)), '\\s+')[1:${graft.functions.TextFunctions.MaxShingleTokens}] AS toks
-       |  FROM documents d),
-       |shf AS MATERIALIZED (SELECT doc_id,
-       |    CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform(
-       |      range(0, len(toks) - 2), i -> array_to_string(toks[i+1:i+3], ' ')))
-       |    ELSE CAST([] AS VARCHAR[]) END AS sh
-       |  FROM st),
-       |sa AS MATERIALIZED (SELECT shf.doc_id, sh FROM shf JOIN arr USING (doc_id)
-       |  WHERE arr.q_ok AND NOT arr.spam AND NOT arr.exact_dup),
-       |se AS MATERIALIZED (SELECT shf.doc_id, sh FROM shf JOIN r4e USING (doc_id)),
-       |${jaccardPairCtes(out = "ndp", left = "sa", right = "se",
-          aCol = "arr_doc", bCol = "ex_doc", sym = false, pfx = "nj")},
-       |nd AS (SELECT DISTINCT arr_doc AS doc_id FROM ndp),
-       |v AS (SELECT arr.source,
-       |    CASE WHEN NOT q_ok THEN 'low_quality'
-       |      WHEN spam THEN 'spam_host'
-       |      WHEN exact_dup THEN 'exact_dup'
-       |      WHEN nd.doc_id IS NOT NULL THEN 'near_dup'
-       |      ELSE 'kept' END AS verdict,
-       |    n_toks
-       |  FROM arr LEFT JOIN nd ON nd.doc_id = arr.doc_id)
-       |SELECT source, verdict, CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(n_toks) AS BIGINT) AS n_tokens
-       |FROM v GROUP BY source, verdict""".stripMargin
-  }
-
-  /** DuckDB replay of `Similarity.ivfFilteredTopK` (r16): the trained
-    * centroids (the stored index trains on the corpus as it is — the
-    * `ann_ivf_stored` argument), the shared probe CTEs, then the label
-    * class composed into the candidate join exactly like the engine's
-    * (cell, fl) key, and the shared exact rerank.
-    */
-  private def annFilteredOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    val m = graft.operators.Similarity.FilteredLabelMod
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings),
-       |lab AS (SELECT vec_id, label FROM embeddings),
-       |${ivfTrainCtes(nLists, iters)},
-       |${ivfProbeCtes(s"cent$iters", "c.cn")},
-       |cand AS MATERIALIZED (SELECT p.query_id, a.neighbor_id
-       |  FROM probes p JOIN assigned a USING (cell)
-       |  JOIN lab ql ON ql.vec_id = p.query_id
-       |  JOIN lab al ON al.vec_id = a.neighbor_id
-       |  WHERE a.neighbor_id <> p.query_id AND ql.label % $m = al.label % $m),
-       |$exactRerankSql""".stripMargin
-  }
-
-  /** DuckDB replay of `Similarity.annFilteredRecallCard` (r16): ONE
-    * labeled query×corpus cosine frame and ONE unfiltered probe pair
-    * set, then per [[graft.operators.Similarity.FilterMods]] tier the
-    * filtered truth, filtered candidates, filtered top-k, and the
-    * integer recall/pool/candidate counts, unioned.
-    */
-  private def annFilteredRecallOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    val (nq, k) = (10, 5)
-    val mods = graft.operators.Similarity.FilterMods
-    def tier(m: Int): String =
-      s"""t$m AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cs DESC, neighbor_id ASC) AS rank
-         |    FROM cosf WHERE q_label % $m = n_label % $m) x WHERE rank <= $k),
-         |f$m AS (SELECT c.query_id, c.neighbor_id, c.cs FROM cp
-         |  JOIN cosf c USING (query_id, neighbor_id)
-         |  WHERE c.q_label % $m = c.n_label % $m),
-         |k$m AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cs DESC, neighbor_id ASC) AS rank FROM f$m) x WHERE rank <= $k),
-         |r$m AS (SELECT $m AS filter_mod,
-         |    (SELECT CAST(count(*) AS BIGINT) FROM cosf
-         |       WHERE q_label % $m = n_label % $m) AS n_pool,
-         |    (SELECT CAST(count(*) AS BIGINT) FROM t$m) AS n_possible,
-         |    (SELECT CAST(count(*) AS BIGINT) FROM t$m
-         |       JOIN k$m USING (query_id, neighbor_id)) AS n_hits,
-         |    (SELECT CAST(count(*) AS BIGINT) FROM f$m) AS n_cand)""".stripMargin
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings),
-       |lab AS (SELECT vec_id, label FROM embeddings),
-       |${ivfTrainCtes(nLists, iters)},
-       |${ivfProbeCtes(s"cent$iters", "c.cn", nq)},
-       |cp AS (SELECT p.query_id, a.neighbor_id
-       |  FROM probes p JOIN assigned a USING (cell)
-       |  WHERE a.neighbor_id <> p.query_id),
-       |cosf AS (SELECT q.vec_id AS query_id, ql.label AS q_label,
-       |    n.vec_id AS neighbor_id, nl.label AS n_label,
-       |    ${dotSql("q.v", "n.v")} / (q.nrm * n.nrm) AS cs
-       |  FROM e q JOIN e n ON n.vec_id <> q.vec_id
-       |  JOIN lab ql ON ql.vec_id = q.vec_id
-       |  JOIN lab nl ON nl.vec_id = n.vec_id
-       |  WHERE q.vec_id < $nq),
-       |${mods.map(tier).mkString(",\n")}
-       |SELECT filter_mod, n_pool, n_possible, n_hits,
-       |  CASE WHEN n_possible > 0 THEN n_hits * 1000 // n_possible ELSE 0 END AS recall_milli,
-       |  n_cand
-       |FROM (${mods.map(m => s"SELECT * FROM r$m").mkString(" UNION ALL ")})""".stripMargin
-  }
-
-  /** Shared by `q_html_extract` and its streaming twin. */
-  private def htmlExtractOracle: String =
-    s"""WITH $htmlCtes
-       |SELECT doc_id,
-       |  CAST(len(regexp_extract_all(stripped, '${graft.operators.Html.ParagraphPattern}', 1)) AS BIGINT) AS n_paras,
-       |  CAST(length(main) AS BIGINT) AS main_chars,
-       |  main = array_to_string(
-       |    regexp_split_to_array(trim(text), '\\s+'), ' ') AS roundtrip_ok
-       |FROM hm""".stripMargin
-
-  /** One named BPE training chain — parameterized so the sample-
-    * agreement oracle can run TWO trainings (full corpus vs the
-    * deterministic doc sample) side by side without CTE-name collisions.
-    *
-    * ONE-ROW-STATE RECURSION (the caller's WITH must say RECURSIVE). The
-    * r15/r16 driver artifacts lost the agreement card to host-pressure
-    * OOMs: the per-round materialized chain held 3 chains × 20 vocab-size
-    * CTEs ≈ 300 plan operators, each allocating 32 KB+ buffer blocks per
-    * thread — the single heaviest-allocating oracle of the 266. The
-    * recursion keeps ONE copy of the round body and one row of state
-    * (round, seg LIST, rules LIST), cutting peak RSS ~2× and making plan
-    * size independent of k. One-row list state is fine here: the oracle
-    * replays at sf0.01 (and the engine now trains bounded-local too —
-    * [[graft.operators.TextAnalysis]] trainBpeRules).
-    *
-    * Defines: `<s>r` (seed: char-segmentation list), `<m>tr` (the
-    * recursion), `<m>f` (final state), `<m>` (merge table rank,a,b,n),
-    * `<s><k>` (final segmentation rows: word, freq, pieces).
-    *
-    * Per round: the state row's seg list UNNESTs into rows and the
-    * weighted pair counts + argmax (n DESC, a ASC, b ASC) run as a
-    * plain GROUP BY + ORDER BY LIMIT 1 scalar subquery — streaming
-    * relational operators, no giant pair list, no list_sort, none of
-    * the r17 run-length list_reduce whose accumulator copies made the
-    * round quadratic in allocations (the r17 verdict's oracle-OOM
-    * item). The seg fold stays the kernel's leftmost-first merge
-    * (per-word, bounded). Early stop: no pairs left → best NULL →
-    * recursion ends with fewer than k rules.
-    */
-  /** The one-row-state SEED alone — the whole weighted vocabulary as a
-    * single LIST<STRUCT> row with per-char `pieces` (round 0 of the
-    * training recursion; also the apply-side seed for encoding a corpus
-    * under rules trained elsewhere, e.g. the byte-fallback card).
-    */
-  private def bpeSeedCte(name: String, w: String, docWhere: String): String =
-    s"""$name AS (SELECT list({'word': word, 'freq': freq,
-       |    'pieces': list_transform(range(1, length(word) + 1),
-       |      i -> substr(word, CAST(i AS INTEGER), 1))} ORDER BY word) AS seg
-       |  FROM (SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
-       |    SELECT unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS word
-       |    FROM documents$docWhere) t
-       |    WHERE length(word) >= 1 GROUP BY word) $w)""".stripMargin
-
-  private def bpeChainCtes(
-      k: Int, w: String, s: String, m: String, docWhere: String): String =
-    s"""${bpeSeedCte(s"${s}r", w, docWhere)},
-       |${m}tr AS (
-       |  SELECT 0 AS round, ${s}r.seg AS seg,
-       |    CAST([] AS STRUCT(rank BIGINT, a VARCHAR, b VARCHAR, n BIGINT)[]) AS rules
-       |  FROM ${s}r
-       |  UNION ALL
-       |  SELECT round + 1,
-       |    list_transform(seg, s -> {'word': s.word, 'freq': s.freq,
-       |      'pieces': list_reduce(list_transform(s.pieces, p -> [p]),
-       |        (acc, x) -> CASE WHEN acc[-1] = best.a AND x[1] = best.b
-       |          THEN acc[1:len(acc)-1] || [best.a || best.b] ELSE acc || x END)}),
-       |    rules || [{'rank': round + 1, 'a': best.a, 'b': best.b, 'n': best.n}]
-       |  FROM (
-       |    SELECT round, seg, rules,
-       |      (SELECT {'a': q1.a, 'b': q1.b, 'n': q1.n} FROM (
-       |        SELECT pr.a AS a, pr.b AS b, CAST(sum(pr.f) AS BIGINT) AS n
-       |        FROM (SELECT s.freq AS f, pp.a AS a, pp.b AS b
-       |              FROM unnest(p0.seg) AS u(s),
-       |                   LATERAL unnest(list_transform(range(1, len(s.pieces)),
-       |                     j -> {'a': s.pieces[j], 'b': s.pieces[j+1]})) AS lp(pp)) pr
-       |        GROUP BY pr.a, pr.b
-       |        ORDER BY n DESC, a ASC, b ASC LIMIT 1) q1) AS best
-       |    FROM (SELECT round, seg, rules FROM ${m}tr WHERE round < $k) p0
-       |  ) q WHERE best IS NOT NULL),
-       |${m}f AS (SELECT seg, rules FROM ${m}tr ORDER BY round DESC LIMIT 1),
-       |$m AS (SELECT r.rank, r.a, r.b, r.n FROM ${m}f, unnest(${m}f.rules) AS t(r)),
-       |$s$k AS (SELECT s.word, s.freq, s.pieces FROM ${m}f, unnest(${m}f.seg) AS t(s))""".stripMargin
-
-  /** APPLY-ONLY twin: ONE nested-fold CTE `$u` applying chain `$m`'s
-    * trained rules in rank order over chain seed `$seedRow`'s char
-    * segmentation — how the agreement oracle applies the sample-trained
-    * rules to the FULL vocabulary. The outer reduce walks the rules (the
-    * accumulator is the pieces list, seeded by list_prepend); the inner
-    * reduce is the kernel's leftmost-first single-rule merge pass.
-    */
-  private def bpeApplyCtes(u: String, m: String, seedRow: String): String =
-    s"""$u AS (SELECT s.word, s.freq,
-       |  list_reduce(list_prepend(s.pieces,
-       |      list_transform(${m}f.rules, r0 -> [r0.a, r0.b])),
-       |    (acc, r) -> list_reduce(list_transform(acc, p -> [p]),
-       |      (a2, x2) -> CASE WHEN a2[-1] = r[1] AND x2[1] = r[2]
-       |        THEN a2[1:len(a2)-1] || [r[1] || r[2]] ELSE a2 || x2 END))
-       |    AS pieces
-       |  FROM $seedRow, ${m}f, unnest($seedRow.seg) AS t(s))""".stripMargin
-
-  /** Embedding dimensionality of the driver's testdata (all SFs). The
-    * engine reads the dim dynamically; the static oracle SQL is generated
-    * for this one.
-    */
-  private val EmbDim = 64
-
-  /** Fails loudly if the testdata's embedding dim ever drifts from the dim
-    * the static ann oracle SQL is generated for — otherwise out-of-range
-    * DuckDB list indexes would NULL out every bucket/cosine and surface as
-    * a baffling hash mismatch instead of an error. One-row bounded action.
-    */
-  private def requireOracleDim(emb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, size}
-    emb.select(size(col("embedding"))).head(1).foreach { r =>
-      val dim = r.getInt(0)
-      require(dim == EmbDim,
-        s"ann_* oracle SQL is generated for dim=$EmbDim but the embeddings " +
-          s"table has dim=$dim — regenerate the oracle for the new dim")
+  def select(only: Option[String]): Either[Seq[String], Map[String, (SparkSession, String) => DataFrame]] =
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
+      case None => Right(queries)
+      case Some(names) =>
+        val unknown = names.filterNot(queries.contains)
+        if (unknown.nonEmpty) Left(unknown)
+        else Right(queries.filter { case (name, _) => names.contains(name) })
     }
-    emb
-  }
 
-  /** Σ_d a[d]·b[d] as a left-associated double sum — mirrors
-    * [[graft.functions.FloatVecDot]]'s left-to-right accumulation
-    * bit-for-bit (callers pass DOUBLE[]-cast list expressions, matching the
-    * expression's float→double element reads).
+  /** [[select]] over `SPARK_GRAFT_ONLY` (a dev affordance; unset, it
+    * selects every query). Exits with status 2 naming the entries no query
+    * answers to, so a typo cannot pass as an empty run.
     */
-  private def dotSql(a: String, b: String): String =
-    (1 to EmbDim).map(d => s"$a[$d]*$b[$d]").mkString("(", " + ", ")")
-  private def selfDotSql(a: String): String = dotSql(a, a)
-
-  /** ±v[d] signed sum for one md5 hyperplane's ±1 pattern (same
-    * left-to-right order; x·(±1.0) is an exact sign flip in IEEE double, so
-    * +/− mirrors the engine's multiply-accumulate exactly).
-    */
-  private def signedSumSql(v: String, hp: Array[Double]): String =
-    hp.zipWithIndex.map { case (s, d) =>
-      (if (s > 0) "+" else "-") + s"$v[${d + 1}]"
-    }.mkString("(", " ", ")")
-
-  /** One LSH table's sign-pattern bucket id — mirrors
-    * `Similarity.bucketId` over `Similarity.hyperplanes(table, planes, _)`.
-    */
-  private def bucketSql(v: String, table: Int, planes: Int): String = {
-    val hps = graft.operators.Similarity.hyperplanes(table, planes, EmbDim)
-    (0 until planes).map { p =>
-      s"(CASE WHEN ${signedSumSql(v, hps(p))} > 0.0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-  }
-
-  /** DuckDB mirror of `Similarity.lshTopK(planes=4, tables=8)`: same md5
-    * hyperplane signs (embedded as ±v[d] sums), same union-of-tables
-    * candidate set, same exact-cosine rerank with the same (cos DESC,
-    * neighbor ASC) tie-break. All arithmetic is double with the engine's
-    * evaluation order, so bucket bits — sign comparisons — agree exactly.
-    */
-  /** DuckDB mirror of `TextAnalysis.bm25TopK` — standalone query AND the
-    * lexical side of the hybrid-RRF oracle (ONE definition, so a scoring
-    * fix cannot desync the two).
-    */
-  private def bm25TopKOracle: String = {
-    import graft.operators.TextAnalysis._
-    val numF = (Bm25K1Num + Bm25K1Den) * Bm25BDen
-    val denTf = Bm25K1Den * Bm25BDen
-    val denS = Bm25K1Num * (Bm25BDen - Bm25BNum)
-    val denDl = Bm25K1Num * Bm25BNum
-    val inList = Bm25Query.map(t => s"'$t'").mkString(", ")
-    val pivot = Bm25Query
-      .map(t => s"COALESCE(max(CASE WHEN tok = '$t' THEN ts END), 0)")
-      .mkString(" + ")
-    s"""WITH dl AS (SELECT doc_id,
-       |    CAST(len(regexp_split_to_array(trim(nfc_normalize(text)), '\\s+')) AS BIGINT) AS dl
-       |  FROM documents),
-       |sc AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(dl) AS BIGINT) AS s_tok FROM dl),
-       |tk AS (SELECT doc_id,
-       |    unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS tok
-       |  FROM documents),
-       |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM tk
-       |  WHERE tok IN ($inList) GROUP BY doc_id, tok),
-       |dfq AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok),
-       |per AS (SELECT t.doc_id, t.tok,
-       |    (CAST(t.tf * $numF * sc.s_tok AS DOUBLE)
-       |      / CAST(t.tf * $denTf * sc.s_tok + $denS * sc.s_tok
-       |             + $denDl * d.dl * sc.n_docs AS DOUBLE))
-       |    * (CAST(sc.n_docs AS DOUBLE) / CAST(q.df + 1 AS DOUBLE)) AS ts
-       |  FROM tf t JOIN dl d USING (doc_id) JOIN dfq q USING (tok) CROSS JOIN sc)
-       |SELECT doc_id, $pivot AS score
-       |FROM per GROUP BY doc_id
-       |ORDER BY score DESC, doc_id ASC LIMIT $Bm25K""".stripMargin
-  }
-
-  /** Exact brute-force top-k oracle — standalone query AND the `exact`
-    * side of the recall report.
-    */
-  private def annBruteforceOracle: String =
-    """SELECT query_id, neighbor_id, rank FROM (
-      |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-      |    row_number() OVER (PARTITION BY a.vec_id
-      |      ORDER BY list_cosine_similarity(a.embedding, b.embedding) DESC,
-      |               b.vec_id ASC) AS rank
-      |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-      |  WHERE a.vec_id < 10) t
-      |WHERE rank <= 5""".stripMargin
-
-  private def annLshOracle: String = {
-    val tables = 8
-    val bucketCols = (0 until tables)
-      .map(t => s"${bucketSql("v", t, 4)} AS b$t").mkString(",\n    ")
-    val orCond = (0 until tables).map(t => s"q.b$t = c.b$t").mkString(" OR ")
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings),
-       |b AS (SELECT vec_id, v, nrm,
-       |    $bucketCols
-       |  FROM e),
-       |cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-       |  FROM b q JOIN b c ON q.vec_id <> c.vec_id AND ($orCond)
-       |  WHERE q.vec_id < 10),
-       |ranked AS (SELECT cand.query_id, cand.neighbor_id,
-       |    row_number() OVER (PARTITION BY cand.query_id
-       |      ORDER BY ${dotSql("q.v", "c.v")} / (q.nrm * c.nrm) DESC,
-       |               cand.neighbor_id ASC) AS rank
-       |  FROM cand JOIN b q ON q.vec_id = cand.query_id
-       |            JOIN b c ON c.vec_id = cand.neighbor_id)
-       |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5""".stripMargin
-  }
-
-  /** The IVF cell-assignment + probe CTEs: score every vector against
-    * `centCte` (a CTE named (i, c[, cn])), rank cells by (cosine DESC,
-    * cell-id DESC) like the engine, emit `assigned` (every vector's one
-    * cell) and `probes` (each query's nProbe cells) — ONE definition for
-    * the first-n, trained, and IVF-PQ oracles, so a tie-rule fix cannot
-    * silently apply to only one of them. `cn` is the centroid norm; pass
-    * an expression when the CTE doesn't precompute it.
-    */
-  private def ivfProbeCtes(centCte: String, cnExpr: String, nQueries: Int = 10,
-      pfx: String = "", src: String = "e"): String =
-    s"""${pfx}scores AS MATERIALIZED (SELECT e.vec_id, c.i,
-       |    ${dotSql("e.v", "c.c")} / (e.nrm * $cnExpr) AS cs
-       |  FROM $src e CROSS JOIN $centCte c),
-       |${pfx}ranked_cells AS MATERIALIZED (SELECT vec_id, i,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, i DESC) AS rn
-       |  FROM ${pfx}scores),
-       |${pfx}assigned AS (SELECT vec_id AS neighbor_id, i AS cell FROM ${pfx}ranked_cells WHERE rn = 1),
-       |${pfx}probes AS (SELECT vec_id AS query_id, i AS cell FROM ${pfx}ranked_cells
-       |  WHERE rn <= 3 AND vec_id < $nQueries)""".stripMargin
-
-  /** Shared exact-rerank tail over a `cand(query_id, neighbor_id)` CTE. */
-  private def exactRerankSql: String =
-    s"""ranked AS (SELECT cand.query_id, cand.neighbor_id,
-       |    row_number() OVER (PARTITION BY cand.query_id
-       |      ORDER BY ${dotSql("q.v", "n.v")}
-       |                 / (q.nrm * n.nrm) DESC,
-       |               cand.neighbor_id ASC) AS rank
-       |  FROM cand JOIN e q ON q.vec_id = cand.query_id
-       |            JOIN e n ON n.vec_id = cand.neighbor_id)
-       |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5""".stripMargin
-
-  /** IVF candidate-generation + rerank tail (probe CTEs, then every vector
-    * in a probed cell reranked exactly) — the first-n / trained oracles.
-    */
-  private def annIvfTailSql(centCte: String, cnExpr: String): String =
-    s"""${ivfProbeCtes(centCte, cnExpr)},
-       |cand AS MATERIALIZED (SELECT p.query_id, a.neighbor_id
-       |  FROM probes p JOIN assigned a USING (cell) WHERE a.neighbor_id <> p.query_id),
-       |$exactRerankSql""".stripMargin
-
-  /** DuckDB mirror of `Similarity.ivfTopK(nLists=8, nProbe=3)`: centroids
-    * are the first 8 vectors by vec_id; assignment/probing rank cells by
-    * (cosine DESC, cell-id DESC) exactly like the engine; rerank as in
-    * [[annLshOracle]]. Candidate/rerank tail shared via [[annIvfTailSql]].
-    */
-  private def annIvfOracle: String =
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings),
-       |cent AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS i, v AS c,
-       |    nrm AS cn
-       |  FROM e ORDER BY vec_id ASC LIMIT 8),
-       |${annIvfTailSql("cent", "c.cn")}""".stripMargin
-  /** DuckDB mirror of `Similarity.ivfTopK(trainIters = 2)` — the k-means
-    * loop itself is replayed in SQL: cent0 = first-8 seeds, then per round
-    * an assignment CTE (same cosine, same (cs DESC, i DESC) tie-break) and
-    * a mean CTE. The mean is portable because the engine quantizes it:
-    * per-dimension sums are integers of x·2²⁰ (order-independent), divided
-    * CAST-to-DOUBLE / n / 2²⁰ in that pinned order, rounded back to FLOAT —
-    * so DuckDB recomputes the exact same centroid bits and every
-    * downstream cosine/rank agrees at hash level. Empty cells keep the
-    * previous round's centroid (COALESCE over a LEFT JOIN).
-    */
-  /** The k-means training-loop CTEs against a vector CTE `e`: `cent0` =
-    * first-`nLists` seeds, then per round an assignment CTE (same cosine,
-    * same (cs DESC, i DESC) tie-break as the engine) and a quantized-mean
-    * CTE — yielding `cent<iters>` as the trained centroids. Shared by the
-    * trained-IVF and IVF-PQ oracles.
-    */
-  private def ivfTrainCtes(nLists: Int, iters: Int, src: String = "e",
-      pfx: String = ""): String = {
-    val q = graft.operators.Similarity.MeanQuantum
-    val sumCols = (1 to EmbDim)
-      .map(d => s"sum(CAST(round(e.v[$d]*$q) AS BIGINT)) AS s$d")
-      .mkString(",\n    ")
-    val meanList = (1 to EmbDim)
-      .map(d => s"CAST(CAST(CAST(s$d AS DOUBLE)/n/$q.0 AS FLOAT) AS DOUBLE)")
-      .mkString("[", ", ", "]")
-    def iterCtes(t: Int): String =
-      s"""${pfx}s$t AS MATERIALIZED (SELECT e.vec_id, c.i,
-         |    ${dotSql("e.v", "c.c")} / (e.nrm * c.cn) AS cs
-         |  FROM $src e CROSS JOIN ${pfx}cent$t c),
-         |${pfx}a$t AS MATERIALIZED (SELECT vec_id, i AS cell FROM (
-         |    SELECT vec_id, i, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, i DESC) AS rn
-         |    FROM ${pfx}s$t) r WHERE rn = 1),
-         |${pfx}m$t AS MATERIALIZED (SELECT a.cell, count(*) AS n, $sumCols
-         |  FROM ${pfx}a$t a JOIN $src e USING (vec_id) GROUP BY a.cell),
-         |${pfx}cent${t + 1} AS MATERIALIZED (SELECT i, c, sqrt(${selfDotSql("c")}) AS cn
-         |  FROM (SELECT c0.i, COALESCE(m.c, c0.c) AS c
-         |  FROM ${pfx}cent$t c0 LEFT JOIN
-         |    (SELECT cell AS i, $meanList AS c FROM ${pfx}m$t) m USING (i)) cc)""".stripMargin
-    s"""${pfx}cent0 AS MATERIALIZED (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS i, v AS c,
-       |    nrm AS cn
-       |  FROM $src ORDER BY vec_id ASC LIMIT $nLists),
-       |${(0 until iters).map(iterCtes).mkString(",\n")}""".stripMargin
-  }
-
-  private def annIvfTrainedOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings),
-       |${ivfTrainCtes(nLists, iters)},
-       |${annIvfTailSql(s"cent$iters", "c.cn")}""".stripMargin
-  }
-
-  /** Hybrid RRF with the dense pool from the TRAINED IVF probe: the
-    * shared bm25 CTE, the shared k-means/probe CTEs at nQueries = 1, the
-    * exact rerank cut at the fusion pool size, then the same integer
-    * fusion tail as `q_hybrid_rrf`.
-    */
-  private def hybridRrfIvfOracle: String = {
-    import graft.operators.Pipeline.{RrfC, RrfK}
-    val poolK = graft.operators.TextAnalysis.Bm25K
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    s"""WITH bm AS ($bm25TopKOracle),
-       |txt AS (SELECT doc_id,
-       |    row_number() OVER (ORDER BY score DESC, doc_id ASC) AS text_rank
-       |  FROM bm),
-       |e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings),
-       |${ivfTrainCtes(nLists, iters)},
-       |${ivfProbeCtes(s"cent$iters", "c.cn", nQueries = 1)},
-       |cand AS MATERIALIZED (SELECT p.query_id, a.neighbor_id
-       |  FROM probes p JOIN assigned a USING (cell)
-       |  WHERE a.neighbor_id <> p.query_id),
-       |dn AS (SELECT neighbor_id AS doc_id, rank AS vec_rank FROM (
-       |    SELECT cand.neighbor_id,
-       |      row_number() OVER (
-       |        ORDER BY ${dotSql("q.v", "n.v")}
-       |                   / (q.nrm * n.nrm) DESC,
-       |                 cand.neighbor_id ASC) AS rank
-       |    FROM cand JOIN e q ON q.vec_id = cand.query_id
-       |              JOIN e n ON n.vec_id = cand.neighbor_id) t
-       |  WHERE rank <= $poolK)
-       |SELECT COALESCE(txt.doc_id, dn.doc_id) AS doc_id, text_rank, vec_rank,
-       |  COALESCE(1000000 // ($RrfC + text_rank), 0)
-       |    + COALESCE(1000000 // ($RrfC + vec_rank), 0) AS rrf_micro
-       |FROM txt FULL OUTER JOIN dn ON txt.doc_id = dn.doc_id
-       |ORDER BY rrf_micro DESC, doc_id ASC LIMIT $RrfK""".stripMargin
-  }
-
-  /** DuckDB mirror of `Similarity.semDeDup` — the `ann_ivf_trained`
-    * k-means/assignment CTEs verbatim (same centroids, same (cosine DESC,
-    * cell DESC) argmax), then brute-force in-cell pairs at the
-    * margin-protected 0.45 threshold (the `q_embed_neardup` idiom — the
-    * oracle needs no rep collapse because the collapse is a pure
-    * optimization: identical vectors pair at cosine ≈ 1) and the
-    * smaller-id drop rule as a NOT IN.
-    */
-  private def semDeDupOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${ivfTrainCtes(nLists, iters)},
-       |${ivfProbeCtes(s"cent$iters", "c.cn")},
-       |pairs AS (SELECT a.neighbor_id AS i, b.neighbor_id AS j
-       |  FROM assigned a JOIN assigned b
-       |    ON a.cell = b.cell AND a.neighbor_id < b.neighbor_id
-       |  JOIN embeddings ea ON ea.vec_id = a.neighbor_id
-       |  JOIN embeddings eb ON eb.vec_id = b.neighbor_id
-       |  WHERE list_cosine_similarity(ea.embedding, eb.embedding) >= 0.45)
-       |SELECT a.neighbor_id AS vec_id, a.cell AS cell,
-       |  a.neighbor_id NOT IN (SELECT j FROM pairs) AS kept
-       |FROM assigned a""".stripMargin
-  }
-
-  /** DuckDB mirror of `Similarity.cellBalancedSample` — the
-    * `ann_ivf_trained` k-means/assignment CTEs verbatim, then the
-    * √cell-size budget allocation (floor(sqrt) over an IEEE sqrt — exact
-    * for n < 2^52) and the 20-bit content-hash Bernoulli draw as integer
-    * cross-multiplication, per-cell kept counts left-joined back onto the
-    * budget card.
-    */
-  private def cellBalancedSampleOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    val denom = graft.operators.Similarity.DiverseSampleDenom
-    val seed = graft.operators.Similarity.DiverseSampleSeed
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${ivfTrainCtes(nLists, iters)},
-       |${ivfProbeCtes(s"cent$iters", "c.cn")},
-       |sizes AS (SELECT cell, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS isq
-       |  FROM assigned GROUP BY cell),
-       |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total,
-       |    CAST(sum(isq) AS BIGINT) AS isq_total FROM sizes),
-       |budgets AS (SELECT cell, n, isq,
-       |    ((n_total // $denom) * isq) // isq_total AS budget
-       |  FROM sizes CROSS JOIN tot),
-       |kept AS (SELECT a.cell, CAST(count(*) AS BIGINT) AS n_kept
-       |  FROM assigned a JOIN budgets b USING (cell)
-       |  WHERE (${h60(seed, "CAST(a.neighbor_id AS VARCHAR)")} % 1048576) * b.n
-       |        < b.budget * 1048576
-       |  GROUP BY a.cell)
-       |SELECT b.cell, b.n, b.isq, b.budget, coalesce(k.n_kept, 0) AS n_kept
-       |FROM budgets b LEFT JOIN kept k USING (cell)""".stripMargin
-  }
-
-  /** DuckDB mirror of `Similarity.cellKnnLabel` — the `ann_ivf_trained`
-    * k-means/assignment CTEs verbatim, then the in-cell query×seed cosine
-    * join (seeds: vec_id ≡ 0 mod LabelSeedMod, zero-norm rows excluded on
-    * both sides) and the portable two-agg argmax: max cosine per query,
-    * min seed id among the rows achieving it. The cosine is the same
-    * left-assoc [[dotSql]] chain the engine's kernel evaluates, so the
-    * equality join on `cos = best_cos` — and the emitted `best_cos`
-    * itself — are bit-exact.
-    */
-  private def knnLabelOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    val mod = graft.operators.Similarity.LabelSeedMod
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${ivfTrainCtes(nLists, iters)},
-       |${ivfProbeCtes(s"cent$iters", "c.cn")},
-       |nz AS (SELECT a.neighbor_id AS vec_id, a.cell, emb.label, e.v,
-       |    e.nrm AS nrm
-       |  FROM assigned a JOIN e ON e.vec_id = a.neighbor_id
-       |  JOIN embeddings emb ON emb.vec_id = a.neighbor_id
-       |  WHERE e.nrm > 0.0),
-       |scored AS (SELECT q.vec_id, q.cell, q.label AS true_label,
-       |    s.vec_id AS nb_id, s.label AS nb_label,
-       |    ${dotSql("q.v", "s.v")} / (q.nrm * s.nrm) AS cos
-       |  FROM nz q JOIN nz s ON q.cell = s.cell
-       |  WHERE q.vec_id % $mod <> 0 AND s.vec_id % $mod = 0),
-       |best AS (SELECT vec_id, max(cos) AS best_cos FROM scored GROUP BY vec_id),
-       |pick AS (SELECT sc.vec_id, sc.cell, sc.true_label, b.best_cos,
-       |    min(sc.nb_id) AS nb_id
-       |  FROM scored sc JOIN best b ON sc.vec_id = b.vec_id AND sc.cos = b.best_cos
-       |  GROUP BY 1, 2, 3, 4)
-       |SELECT p.vec_id, p.cell, p.true_label, s.label AS pred_label, p.best_cos,
-       |  s.label = p.true_label AS correct
-       |FROM pick p JOIN embeddings s ON s.vec_id = p.nb_id""".stripMargin
-  }
-
-  /** DuckDB mirror of `Similarity.cellOutlierReport` — the
-    * `ann_ivf_trained` k-means/assignment CTEs verbatim, then each
-    * vector's cosine to its OWN cell's centroid (the same left-assoc
-    * [[dotSql]] chain, zero-norm rows excluded as in [[knnLabelOracle]])
-    * and the per-cell rollup with the integer-milli outlier rate.
-    */
-  private def embedOutliersOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    val thr = graft.operators.Similarity.OutlierCos
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${ivfTrainCtes(nLists, iters)},
-       |${ivfProbeCtes(s"cent$iters", "c.cn")},
-       |cs AS (SELECT a.cell,
-       |    ${dotSql("e.v", "c.c")}
-       |      / (e.nrm * c.cn) AS cos
-       |  FROM assigned a JOIN e ON e.vec_id = a.neighbor_id
-       |  JOIN cent$iters c ON c.i = a.cell
-       |  WHERE e.nrm > 0.0)
-       |SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs,
-       |  CAST(count(*) FILTER (WHERE cos < $thr) AS BIGINT) AS n_outliers,
-       |  CAST(count(*) FILTER (WHERE cos < $thr) AS BIGINT) * 1000
-       |    // CAST(count(*) AS BIGINT) AS outlier_rate_milli,
-       |  min(cos) AS min_cos
-       |FROM cs GROUP BY cell""".stripMargin
-  }
-
-  /** DuckDB mirror of `Similarity.semDeDupIncremental` — the same
-    * training CTEs restricted to the corpus below the ⌊4·(max+1)/5⌋
-    * ingest boundary (centroids are the persisted artifact; a batch must
-    * not shift them), ONE assignment pass over everything (corpus and
-    * shard score against identical centroids), then the asymmetric
-    * corpus→shard drop rule.
-    */
-  private def semDeDupIncrementalOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |sp AS (SELECT (max(vec_id) + 1) * 4 // 5 AS s FROM embeddings),
-       |ec AS (SELECT e.* FROM e, sp WHERE e.vec_id < sp.s),
-       |${ivfTrainCtes(nLists, iters, src = "ec")},
-       |${ivfProbeCtes(s"cent$iters", "c.cn")},
-       |dropped AS (SELECT DISTINCT b.neighbor_id AS j
-       |  FROM assigned a
-       |  JOIN assigned b ON a.cell = b.cell
-       |  JOIN embeddings ea ON ea.vec_id = a.neighbor_id
-       |  JOIN embeddings eb ON eb.vec_id = b.neighbor_id
-       |  CROSS JOIN sp
-       |  WHERE a.neighbor_id < sp.s AND b.neighbor_id >= sp.s
-       |    AND list_cosine_similarity(ea.embedding, eb.embedding) >= 0.45)
-       |SELECT b.neighbor_id AS vec_id, b.cell AS cell,
-       |  b.neighbor_id NOT IN (SELECT j FROM dropped) AS kept
-       |FROM assigned b CROSS JOIN sp WHERE b.neighbor_id >= sp.s""".stripMargin
-  }
-
-  /** DuckDB mirror of `Similarity.semanticLeakage`: k-means on the
-    * train side only (vec_id % 10 ≠ 0), both sides assigned under those
-    * centroids, brute-force train×eval in-cell pairs at 0.8.
-    */
-  private def semanticLeakageOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    val t = graft.operators.Similarity.SemanticLeakThreshold
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |ec AS (SELECT e.* FROM e WHERE e.vec_id % 10 <> 0),
-       |${ivfTrainCtes(nLists, iters, src = "ec")},
-       |${ivfProbeCtes(s"cent$iters", "c.cn")},
-       |leaked AS (SELECT DISTINCT b.neighbor_id AS j
-       |  FROM assigned a
-       |  JOIN assigned b ON a.cell = b.cell
-       |  JOIN embeddings ea ON ea.vec_id = a.neighbor_id
-       |  JOIN embeddings eb ON eb.vec_id = b.neighbor_id
-       |  WHERE a.neighbor_id % 10 <> 0 AND b.neighbor_id % 10 = 0
-       |    AND list_cosine_similarity(ea.embedding, eb.embedding) >= $t)
-       |SELECT b.neighbor_id AS vec_id, b.cell AS cell,
-       |  b.neighbor_id IN (SELECT j FROM leaked) AS leaked
-       |FROM assigned b WHERE b.neighbor_id % 10 = 0""".stripMargin
-  }
-
-  /** DuckDB mirror of `Similarity.embeddingDrift`: corpus-trained cells,
-    * per-side occupancy histograms, milli shares over a full-outer join.
-    */
-  private def embeddingDriftOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |sp AS (SELECT (max(vec_id) + 1) * 4 // 5 AS s FROM embeddings),
-       |ec AS (SELECT e.* FROM e, sp WHERE e.vec_id < sp.s),
-       |${ivfTrainCtes(nLists, iters, src = "ec")},
-       |${ivfProbeCtes(s"cent$iters", "c.cn")},
-       |ch AS (SELECT a.cell, CAST(count(*) AS BIGINT) AS n_corpus
-       |  FROM assigned a CROSS JOIN sp WHERE a.neighbor_id < sp.s
-       |  GROUP BY a.cell),
-       |shh AS (SELECT a.cell, CAST(count(*) AS BIGINT) AS n_shard
-       |  FROM assigned a CROSS JOIN sp WHERE a.neighbor_id >= sp.s
-       |  GROUP BY a.cell),
-       |tot AS (SELECT (SELECT CAST(sum(n_corpus) AS BIGINT) FROM ch) AS t_corpus,
-       |               (SELECT CAST(sum(n_shard) AS BIGINT) FROM shh) AS t_shard)
-       |SELECT cell, coalesce(n_corpus, 0) AS n_corpus,
-       |  coalesce(n_shard, 0) AS n_shard,
-       |  CASE WHEN t_corpus > 0
-       |       THEN (coalesce(n_corpus, 0) * 1000) // t_corpus ELSE 0 END
-       |    AS corpus_milli,
-       |  CASE WHEN t_shard > 0
-       |       THEN (coalesce(n_shard, 0) * 1000) // t_shard ELSE 0 END
-       |    AS shard_milli,
-       |  abs(CASE WHEN t_shard > 0
-       |           THEN (coalesce(n_shard, 0) * 1000) // t_shard ELSE 0 END
-       |    - CASE WHEN t_corpus > 0
-       |           THEN (coalesce(n_corpus, 0) * 1000) // t_corpus ELSE 0 END)
-       |    AS delta_milli
-       |FROM ch FULL OUTER JOIN shh USING (cell) CROSS JOIN tot""".stripMargin
-  }
-
-  /** DuckDB replay of `Similarity.annStalenessCard`: the drifted corpus
-    * (even ids original, odd ids dimension-reversed), the STORED
-    * centroid chain (k-means over the original corpus — bit-identical to
-    * CentroidStore's artifact, as `ann_ivf_stored` proves), a FRESH
-    * chain over the drifted corpus, both probes + candidate masses +
-    * brute-force truth, and the per-region milli-recall/retrain fold.
-    */
-  private def annStaleOracle: String = {
-    val (nLists, iters) = (graft.operators.Similarity.IvfLists,
-      graft.operators.Similarity.IvfTrainIters)
-    val nq = 20
-    val k = 5
-    val margin = graft.operators.Similarity.DriftRetrainMarginMilli
-    def tail(pfx: String): String =
-      s"""${pfx}cand AS (SELECT p.query_id, a.neighbor_id
-         |  FROM ${pfx}probes p JOIN ${pfx}assigned a USING (cell)
-         |  WHERE a.neighbor_id <> p.query_id),
-         |${pfx}topk AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT c.query_id, c.neighbor_id,
-         |      row_number() OVER (PARTITION BY c.query_id
-         |        ORDER BY ${dotSql("q.v", "n.v")}
-         |                   / (q.nrm * n.nrm) DESC,
-         |                 c.neighbor_id ASC) AS rank
-         |    FROM ${pfx}cand c JOIN d q ON q.vec_id = c.query_id
-         |                      JOIN d n ON n.vec_id = c.neighbor_id) x
-         |  WHERE rank <= $k)""".stripMargin
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |d AS MATERIALIZED (SELECT vec_id, v, sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM (SELECT vec_id * 2 AS vec_id, v FROM e
-       |    UNION ALL SELECT vec_id * 2 + 1, list_reverse(v) FROM e) d0),
-       |${ivfTrainCtes(nLists, iters)},
-       |${ivfTrainCtes(nLists, iters, src = "d", pfx = "f")},
-       |${ivfProbeCtes(s"cent$iters", "c.cn", nq, pfx = "st", src = "d")},
-       |${tail("st")},
-       |${ivfProbeCtes(s"fcent$iters", "c.cn", nq, pfx = "fr", src = "d")},
-       |${tail("fr")},
-       |truth AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${dotSql("q.v", "n.v")}
-       |                   / (q.nrm * n.nrm) DESC,
-       |                 n.vec_id ASC) AS rank
-       |    FROM d q JOIN d n ON n.vec_id <> q.vec_id WHERE q.vec_id < $nq) x
-       |  WHERE rank <= $k),
-       |poss AS (SELECT query_id % 2 AS r, CAST(count(*) AS BIGINT) AS n_possible
-       |  FROM truth GROUP BY 1),
-       |hs AS (SELECT t.query_id % 2 AS r, CAST(count(*) AS BIGINT) AS hits_stored
-       |  FROM truth t JOIN sttopk USING (query_id, neighbor_id) GROUP BY 1),
-       |hf AS (SELECT t.query_id % 2 AS r, CAST(count(*) AS BIGINT) AS hits_fresh
-       |  FROM truth t JOIN frtopk USING (query_id, neighbor_id) GROUP BY 1),
-       |cs AS (SELECT query_id % 2 AS r, CAST(count(*) AS BIGINT) AS cand_stored
-       |  FROM stcand GROUP BY 1),
-       |cf AS (SELECT query_id % 2 AS r, CAST(count(*) AS BIGINT) AS cand_fresh
-       |  FROM frcand GROUP BY 1)
-       |SELECT CASE WHEN r = 0 THEN 'base' ELSE 'drifted' END AS region,
-       |  n_possible,
-       |  coalesce(hits_stored, 0) AS hits_stored,
-       |  coalesce(hits_fresh, 0) AS hits_fresh,
-       |  coalesce(hits_stored, 0) * 1000 // n_possible AS recall_stored_milli,
-       |  coalesce(hits_fresh, 0) * 1000 // n_possible AS recall_fresh_milli,
-       |  coalesce(cand_stored, 0) AS cand_stored,
-       |  coalesce(cand_fresh, 0) AS cand_fresh,
-       |  (coalesce(hits_fresh, 0) * 1000 // n_possible
-       |     - coalesce(hits_stored, 0) * 1000 // n_possible) > $margin AS retrain
-       |FROM poss LEFT JOIN hs USING (r) LEFT JOIN hf USING (r)
-       |  LEFT JOIN cs USING (r) LEFT JOIN cf USING (r)""".stripMargin
-  }
-
-  /** The PQ pipeline CTEs (per-subspace codebook training, encoding,
-    * codeword-norm lookups) plus the ADC scoring fragments that reference
-    * them — shared by the flat-PQ and IVF-PQ oracles.
-    * `ctes` defines `cb<TrainIters>_m`, `codes(vec_id, c0..cM-1)` and
-    * `rn_m(k, ns)`; `scoreSql` is the ADC score for query alias `qq` with
-    * codeword aliases `w<m>`; `nsSql` the reconstruction norm²; `cwJoins`
-    * the codeword/norm joins keyed on a codes alias `x`.
-    */
-  private case class PqSqlParts(
-      ctes: String, scoreSql: String, nsSql: String, cwJoins: String)
-
-  private def pqSqlParts(trainSrc: String = "e"): PqSqlParts = {
-    import graft.operators.ProductQuantization.{NumSubspaces => M, NumCodes => K, TrainIters}
-    val q = graft.operators.ProductQuantization.MeanQuantum
-    val sub = EmbDim / M
-    def vIdx(m: Int, d: Int) = m * sub + d // 1-based SQL index of dim d (1..sub)
-    def subList(m: Int, v: String) =
-      (1 to sub).map(d => s"$v[${vIdx(m, d)}]").mkString("[", ", ", "]")
-    def l2Sql(m: Int, v: String, c: String) =
-      (1 to sub).map(d => s"($v[${vIdx(m, d)}]-$c[$d])*($v[${vIdx(m, d)}]-$c[$d])")
-        .mkString("(", " + ", ")")
-    val sumCols = (1 to sub)
-      .map(d => s"sum(CAST(round(e.v[__I$d]*$q) AS BIGINT)) AS s$d").mkString(", ")
-    val meanList = (1 to sub)
-      .map(d => s"CAST(CAST(CAST(s$d AS DOUBLE)/n/$q.0 AS FLOAT) AS DOUBLE)")
-      .mkString("[", ", ", "]")
-    def assignCte(name: String, cbName: String, m: Int, src: String): String =
-      s"""$name AS MATERIALIZED (SELECT vec_id, k AS code FROM (
-         |    SELECT e.vec_id, c.k,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${l2Sql(m, "e.v", "c.c")} ASC, c.k ASC) AS rn
-         |    FROM $src e CROSS JOIN $cbName c) r WHERE rn = 1)""".stripMargin
-    def roundCtes(t: Int, m: Int): String = {
-      val subSums = (1 to sub).foldLeft(sumCols) { (acc, d) =>
-        acc.replace(s"__I$d", vIdx(m, d).toString)
-      }
-      s"""${assignCte(s"a${t}_$m", s"cb${t}_$m", m, trainSrc)},
-         |m${t}_$m AS MATERIALIZED (SELECT a.code, count(*) AS n, $subSums
-         |  FROM a${t}_$m a JOIN $trainSrc e USING (vec_id) GROUP BY a.code),
-         |cb${t + 1}_$m AS MATERIALIZED (SELECT c0.k, COALESCE(mm.c, c0.c) AS c
-         |  FROM cb${t}_$m c0 LEFT JOIN
-         |    (SELECT code AS k, $meanList AS c FROM m${t}_$m) mm USING (k))""".stripMargin
+  def selectFromEnv(tag: String): Map[String, (SparkSession, String) => DataFrame] =
+    select(sys.env.get("SPARK_GRAFT_ONLY")) match {
+      case Right(selected) => selected
+      case Left(unknown) =>
+        System.err.println(
+          s"[$tag] SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
+        sys.exit(2)
     }
-    val seedCtes = (0 until M).map(m =>
-      s"""cb0_$m AS MATERIALIZED (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS k,
-         |    ${subList(m, "v")} AS c
-         |  FROM $trainSrc ORDER BY vec_id ASC LIMIT $K)""".stripMargin).mkString(",\n")
-    val trainCtes = (for (t <- 0 until TrainIters; m <- 0 until M)
-      yield roundCtes(t, m)).mkString(",\n")
-    // the final ENCODE pass always covers the full corpus CTE `e`
-    val encCtes = (0 until M)
-      .map(m => assignCte(s"enc_$m", s"cb${TrainIters}_$m", m, "e")).mkString(",\n")
-    val codesCte =
-      s"""codes AS MATERIALIZED (SELECT e.vec_id, ${(0 until M).map(m => s"enc_$m.code AS c$m").mkString(", ")}
-         |  FROM e ${(0 until M).map(m => s"JOIN enc_$m USING (vec_id)").mkString(" ")})""".stripMargin
-    val rnormCtes = (0 until M).map(m =>
-      s"""rn_$m AS MATERIALIZED (SELECT k, ${(1 to sub).map(d => s"c[$d]*c[$d]").mkString("(", " + ", ")")} AS ns
-         |  FROM cb${TrainIters}_$m)""".stripMargin).mkString(",\n")
-    // score: per-subspace dot(q_m, codeword) chained left-associatively,
-    // matching the engine's reduceLeft over subspaces then dims
-    val scoreSql = (0 until M).map { m =>
-      (1 to sub).map(d => s"qq.v[${vIdx(m, d)}]*w$m.c[$d]").mkString("(", " + ", ")")
-    }.mkString(" + ")
-    val nsSql = (0 until M).map(m => s"w${m}ns.ns").mkString("(", " + ", ")")
-    val cwJoins = (0 until M).map(m =>
-      s"JOIN cb${TrainIters}_$m w$m ON w$m.k = x.c$m " +
-        s"JOIN rn_$m w${m}ns ON w${m}ns.k = x.c$m").mkString(" ")
-    PqSqlParts(
-      s"""$seedCtes,
-         |$trainCtes,
-         |$encCtes,
-         |$codesCte,
-         |$rnormCtes""".stripMargin,
-      scoreSql, nsSql, cwJoins)
-  }
-
-  /** DuckDB mirror of `ProductQuantization.pqTopK()` — the ENTIRE pipeline
-    * replayed: per-subspace k-means (same quantized-mean portability trick
-    * as [[annIvfTrainedOracle]], same (distance ASC, code ASC) assignment
-    * tie-break), final encoding, exhaustive ADC scoring through the
-    * trained codebooks, top-RerankDepth recall, exact-cosine rerank. Every
-    * double chain (+, left-assoc) mirrors the engine's reduceLeft order,
-    * so the ranking agrees bit-for-bit.
-    */
-  private def annPqOracle: String = {
-    import graft.operators.ProductQuantization.{RerankDepth, TrainSampleN, NumQueries}
-    val p = pqSqlParts(trainSrc = "et")
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |et AS (SELECT * FROM e WHERE vec_id < $TrainSampleN),
-       |${p.ctes},
-       |adc AS (SELECT qq.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY qq.vec_id
-       |      ORDER BY (${p.scoreSql}) / (qq.nrm * sqrt(${p.nsSql})) DESC,
-       |               x.vec_id ASC) AS rn
-       |  FROM e qq JOIN codes x ON qq.vec_id <> x.vec_id ${p.cwJoins}
-       |  WHERE qq.vec_id < $NumQueries),
-       |cand AS (SELECT query_id, neighbor_id FROM adc WHERE rn <= $RerankDepth),
-       |$exactRerankSql""".stripMargin
-  }
-
-  /** DuckDB mirror of `ProductQuantization.ivfPqTopK()` — IVF-ADC, the
-    * composed production shape, with BOTH training loops replayed: the
-    * k-means centroid CTEs ([[ivfTrainCtes]], the exact loop of
-    * `ann_ivf_trained`) give every vector its one cell and every query its
-    * 3 probe cells; the PQ CTEs ([[pqSqlParts]], the exact loop of
-    * `ann_pq`) give every vector its codes; the ADC scan then scores ONLY
-    * (probe cell ∩ assigned cell) pairs — the candidate equi-join on cell
-    * id that replaces `ann_pq`'s exhaustive corpus×queries join — and the
-    * shared exact rerank finishes.
-    */
-  private def annIvfPqOracle: String = {
-    import graft.operators.ProductQuantization.{RerankDepth, IvfLists, IvfIters, TrainSampleN, NumQueries}
-    val p = pqSqlParts(trainSrc = "et")
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |et AS (SELECT * FROM e WHERE vec_id < $TrainSampleN),
-       |${ivfTrainCtes(IvfLists, IvfIters, src = "et")},
-       |${ivfProbeCtes(s"cent$IvfIters", "c.cn", NumQueries)},
-       |${p.ctes},
-       |adc AS (SELECT pr.query_id, a.neighbor_id,
-       |    row_number() OVER (PARTITION BY pr.query_id
-       |      ORDER BY (${p.scoreSql}) / (qq.nrm * sqrt(${p.nsSql})) DESC,
-       |               a.neighbor_id ASC) AS rn
-       |  FROM probes pr
-       |    JOIN assigned a USING (cell)
-       |    JOIN e qq ON qq.vec_id = pr.query_id
-       |    JOIN codes x ON x.vec_id = a.neighbor_id
-       |    ${p.cwJoins}
-       |  WHERE a.neighbor_id <> pr.query_id),
-       |cand AS (SELECT query_id, neighbor_id FROM adc WHERE rn <= $RerankDepth),
-       |$exactRerankSql""".stripMargin
-  }
-
-  /** DuckDB mirror of `Sketches.quantileSketch` — the dyadic node build
-    * (one (level, bucket) count per kept level), the per-probe canonical
-    * prefix decompositions (node lists generated by the same
-    * [[graft.operators.Sketches.prefixNodes]] and embedded as literals —
-    * the hyperplane pattern), the cumulative-sum quantile extraction with
-    * the integer ceil target (pct·n+99)//100, and the exact-rank /
-    * exact-value columns. All integers; hash-exact.
-    */
-  /** DuckDB mirror of `Sketches.kllQuantile` — the deterministic
-    * level-sampling sketch replayed in CLOSED FORM: the aggregator's
-    * invariance contract says the final state is exactly (n, lMin =
-    * min{l : count(level ≥ l) ≤ cap}, {rows with level ≥ lMin}), so the
-    * oracle computes that characterization directly (same 60-bit md5 row
-    * hash via the `conv` mirror, trailing-zero level as a CASE chain,
-    * cutoff by level counts, sample probe at ceil(target/2^lMin) clamped
-    * to the sample top, exact value at the integer target rank under the
-    * same (v, h) total order). A hash match here PROVES the merge-order
-    * invariance the engine claims.
-    */
-  private def kllQuantileOracle: String = {
-    import graft.operators.Sketches.{KllCap, KllMaxLevel, KllPcts}
-    val h60 = "CAST(('0x' || substr(md5('0:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT)"
-    val levelCase = "CASE " +
-      (0 until KllMaxLevel).map(l => s"WHEN (h >> $l) % 2 = 1 THEN $l").mkString(" ") +
-      s" ELSE $KllMaxLevel END"
-    val perPct = KllPcts.map { pct =>
-      s"""SELECT CAST($pct AS BIGINT) AS key,
-         |  (SELECT s.v FROM samp s, params pr
-         |   WHERE s.p = least(((($pct * pr.n + 99) // 100) + pr.w - 1) // pr.w, pr.m)) AS est,
-         |  (SELECT e.v FROM exact e, params pr
-         |   WHERE e.rn = ($pct * pr.n + 99) // 100) AS exact""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH src AS (SELECT $h60 AS h, o_totalprice AS v FROM orders),
-       |lv AS (SELECT h, v, $levelCase AS l FROM src),
-       |lm AS (SELECT min(l0) AS lm FROM (
-       |    SELECT g.l0 AS l0, count(*) FILTER (WHERE lv.l >= g.l0) AS c
-       |    FROM (SELECT unnest(range(0, ${KllMaxLevel + 2})) AS l0) g CROSS JOIN lv
-       |    GROUP BY g.l0) t
-       |  WHERE c <= $KllCap),
-       |samp0 AS (SELECT v, h FROM lv, lm WHERE lv.l >= lm.lm),
-       |samp AS (SELECT v, h, row_number() OVER (ORDER BY v, h) AS p FROM samp0),
-       |params AS (SELECT (SELECT count(*) FROM src) AS n, lm.lm AS lm,
-       |    (CAST(1 AS BIGINT) << lm.lm) AS w,
-       |    (SELECT count(*) FROM samp0) AS m FROM lm),
-       |exact AS (SELECT v, row_number() OVER (ORDER BY v, h) AS rn FROM src)
-       |SELECT key, est, exact FROM (
-       |$perPct
-       |) q WHERE (SELECT n FROM params) > 0 AND (SELECT m FROM params) > 0""".stripMargin
-  }
-
-  /** DuckDB mirror of `Sketches.kllQuantileBySegment` — the grouped
-    * closed form: every CTE of [[kllQuantileOracle]] gains the segment
-    * key (per-(seg, level) survivor counts, per-seg cutoff/width/total,
-    * seg-partitioned sample and exact rank windows), and the probe
-    * targets join per segment. Segments with no rows or an empty sample
-    * emit nothing, matching the engine.
-    */
-  private def kllSegmentOracle: String = {
-    import graft.operators.Sketches.{KllCap, KllMaxLevel, KllPcts}
-    val h60o = "CAST(('0x' || substr(md5('0:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT)"
-    val levelCase = "CASE " +
-      (0 until KllMaxLevel).map(l => s"WHEN (h >> $l) % 2 = 1 THEN $l").mkString(" ") +
-      s" ELSE $KllMaxLevel END"
-    val pctValues = KllPcts.map(p => s"($p)").mkString(", ")
-    s"""WITH src AS (SELECT c.c_mktsegment AS seg, $h60o AS h, o.o_totalprice AS v
-       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
-       |lv AS (SELECT seg, h, v, $levelCase AS l FROM src),
-       |lm AS (SELECT seg, min(l0) AS lm FROM (
-       |    SELECT lv.seg, g.l0 AS l0, count(*) FILTER (WHERE lv.l >= g.l0) AS c
-       |    FROM (SELECT unnest(range(0, ${KllMaxLevel + 2})) AS l0) g CROSS JOIN lv
-       |    GROUP BY lv.seg, g.l0) t
-       |  WHERE c <= $KllCap GROUP BY seg),
-       |samp0 AS (SELECT lv.seg, v, h FROM lv JOIN lm USING (seg) WHERE lv.l >= lm.lm),
-       |samp AS (SELECT seg, v, h,
-       |    row_number() OVER (PARTITION BY seg ORDER BY v, h) AS p FROM samp0),
-       |params AS (SELECT n.seg, n.n, lm.lm, (CAST(1 AS BIGINT) << lm.lm) AS w, m.m
-       |  FROM (SELECT seg, count(*) AS n FROM src GROUP BY seg) n
-       |  JOIN lm USING (seg)
-       |  JOIN (SELECT seg, count(*) AS m FROM samp0 GROUP BY seg) m USING (seg)),
-       |tgt AS (SELECT pr.seg, k.pct,
-       |    (k.pct * pr.n + 99) // 100 AS target,
-       |    least(((k.pct * pr.n + 99) // 100 + pr.w - 1) // pr.w, pr.m) AS p_t
-       |  FROM params pr CROSS JOIN (VALUES $pctValues) k(pct)),
-       |est AS (SELECT t.seg, t.pct, t.target, s.v AS est
-       |  FROM tgt t JOIN samp s ON s.seg = t.seg AND s.p = t.p_t),
-       |exact AS (SELECT seg, v,
-       |    row_number() OVER (PARTITION BY seg ORDER BY v, h) AS rn FROM src)
-       |SELECT e.seg, CAST(e.pct AS BIGINT) AS key, e.est, x.v AS exact
-       |FROM est e JOIN exact x ON x.seg = e.seg AND x.rn = e.target""".stripMargin
-  }
-
-  private def quantileSketchOracle: String = {
-    import graft.operators.Sketches._
-    val decompVals = QsProbeCents.flatMap(p =>
-      prefixNodes(p).map { case (l, b) =>
-        s"(CAST($p AS BIGINT), $l, CAST($b AS BIGINT))"
-      }).mkString(", ")
-    val res = 1L << QsLMin
-    s"""WITH cents AS (SELECT greatest(least(CAST(round(o_totalprice * 100) AS BIGINT), $QsMax), 0) AS c
-       |  FROM orders),
-       |lv AS (SELECT unnest(range($QsLMin, ${QsU + 1})) AS l),
-       |nodes AS (SELECT l, c >> l AS b, CAST(count(*) AS BIGINT) AS cnt
-       |  FROM cents CROSS JOIN lv GROUP BY l, c >> l),
-       |decomp AS (SELECT * FROM (VALUES $decompVals) AS d(key, l, b)),
-       |ranks AS (SELECT d.key, CAST(COALESCE(sum(n.cnt), 0) AS BIGINT) AS est
-       |  FROM decomp d LEFT JOIN nodes n ON n.l = d.l AND n.b = d.b GROUP BY d.key),
-       |exact_ranks AS (SELECT p.key,
-       |    CAST(count(*) FILTER (WHERE s.c < p.key) AS BIGINT) AS exact
-       |  FROM (SELECT DISTINCT key FROM decomp) p CROSS JOIN cents s GROUP BY p.key),
-       |rank_rows AS (SELECT 'rank' AS kind, r.key, r.est, e.exact
-       |  FROM ranks r JOIN exact_ranks e USING (key)),
-       |nt AS (SELECT cnt AS n FROM nodes WHERE l = $QsU AND b = 0),
-       |cum AS (SELECT b, sum(cnt) OVER (ORDER BY b) AS cum FROM nodes WHERE l = $QsLMin),
-       |targets AS (SELECT unnest([${QsTargetPct.mkString(", ")}]) AS pct),
-       |qb AS (SELECT t.pct,
-       |    min(CASE WHEN cu.cum >= (t.pct * nt.n + 99) // 100 THEN cu.b END) AS qb
-       |  FROM targets t CROSS JOIN nt CROSS JOIN cum cu GROUP BY t.pct),
-       |rc AS (SELECT c, row_number() OVER (ORDER BY c) AS rn FROM cents),
-       |eq AS (SELECT t.pct,
-       |    min(CASE WHEN rc.rn = (t.pct * nt.n + 99) // 100 THEN rc.c END) AS exact
-       |  FROM targets t CROSS JOIN nt CROSS JOIN rc GROUP BY t.pct),
-       |quant_rows AS (SELECT 'quantile' AS kind, CAST(q.pct AS BIGINT) AS key,
-       |    CAST(q.qb * $res AS BIGINT) AS est, e.exact FROM qb q JOIN eq e USING (pct))
-       |SELECT kind, CAST(key AS BIGINT) AS key, est, exact FROM rank_rows
-       |UNION ALL SELECT kind, key, est, exact FROM quant_rows""".stripMargin
-  }
-
-  /** Shared CTEs of the sequence-packing oracles — the two-level prefix
-    * sum (block cumsum + intra-block cumsum) replayed with the same
-    * exclusive ROWS frames, then the span arithmetic. All integers.
-    */
-  private def packCtes: String = {
-    import graft.operators.Packing.{SeqLen, OffsetBucket}
-    s"""perdoc AS (SELECT doc_id, doc_id // $OffsetBucket AS bkt,
-       |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tok
-       |  FROM documents),
-       |bsum AS (SELECT bkt, CAST(sum(n_tok) AS BIGINT) AS b_tok FROM perdoc GROUP BY bkt),
-       |boff AS (SELECT bkt, CAST(COALESCE(sum(b_tok) OVER (ORDER BY bkt
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS b_off
-       |  FROM bsum),
-       |offs AS (SELECT p.doc_id, p.n_tok,
-       |    b.b_off + CAST(COALESCE(sum(p.n_tok) OVER (PARTITION BY p.bkt ORDER BY p.doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_start
-       |  FROM perdoc p JOIN boff b USING (bkt)),
-       |spans AS (SELECT doc_id, n_tok, tok_start,
-       |    tok_start // $SeqLen AS first_chunk,
-       |    (tok_start + n_tok - 1) // $SeqLen AS last_chunk
-       |  FROM offs)""".stripMargin
-  }
-
-  // mh(2i)/mh(2i+1) are the two independent 60-bit halves of digest i
-  // (hex chars [1,15] and [17,31]) — mirrors HashFunctions.md5LongHalves
-  private val minhashCols = (0 until Dedup.NumHashes)
-    .map { i =>
-      val (seed, from) = (i / 2, if (i % 2 == 0) 1 else 17)
-      val h = s"CAST(('0x' || substr(md5('$seed:' || s), $from, 15)) AS BIGINT)"
-      s"CASE WHEN len(sh) > 0 THEN list_min(list_transform(sh, s -> $h)) END AS mh$i"
-    }
-    .mkString(",\n  ")
-  private val simhashCte = {
-    val bitSums = (0 until 32)
-      .map(b => s"sum(((h32 >> $b) & 1) * 2 - 1) AS b$b").mkString(", ")
-    val recombine = (0 until 32)
-      .map(b => s"CASE WHEN b$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END")
-      .mkString(" + ")
-    s"""toks AS (SELECT doc_id, unnest(regexp_split_to_array(trim(nfc_normalize(text)), '\\s+')) AS tok
-       |         FROM documents),
-       |th AS (SELECT doc_id, ${h60(99, "tok")} & 4294967295 AS h32 FROM toks),
-       |bits AS (SELECT doc_id, $bitSums FROM th GROUP BY doc_id),
-       |sig AS (SELECT doc_id, $recombine AS simhash FROM bits)""".stripMargin
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "wordcount_topk" ->
-      """SELECT word, count(*) AS cnt FROM (
-        |  SELECT regexp_replace(lower(unnest(string_split_regex(nfc_normalize(text), '\s+'))),
-        |                        '^[.,!?:;"'']+|[.,!?:;"'']+$', '', 'g') AS word
-        |  FROM documents) t
-        |WHERE word <> '' GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 50""".stripMargin,
-    "mr_wordcount" ->
-      """SELECT word, count(*) AS cnt FROM (
-        |  SELECT regexp_replace(lower(unnest(string_split_regex(nfc_normalize(text), '\s+'))),
-        |                        '^[.,!?:;"'']+|[.,!?:;"'']+$', '', 'g') AS word
-        |  FROM documents) t
-        |WHERE word <> '' GROUP BY word""".stripMargin,
-    // doc ids sort lexicographically as strings (the job's contract — its
-    // ids may be file paths), so the oracle sorts the VARCHAR form
-    "mr_inverted_index" ->
-      """SELECT word, array_to_string(
-        |    list_sort(list_distinct(list(doc_id)), 'ASC'), ',') AS doc_ids
-        |FROM (
-        |  SELECT DISTINCT CAST(doc_id AS VARCHAR) AS doc_id,
-        |    regexp_replace(lower(unnest(string_split_regex(nfc_normalize(text), '\s+'))),
-        |                        '^[.,!?:;"'']+|[.,!?:;"'']+$', '', 'g') AS word
-        |  FROM documents) t
-        |WHERE word <> '' GROUP BY word""".stripMargin,
-    // Money math in the oracles mirrors the engine exactly: integer-cents
-    // sums (order-independent), one double division at the end, no round()
-    // — see Relational.cents for why.
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_base_price,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0 AS sum_disc_price,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / count(*) / 100.0 AS avg_qty,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / count(*) / 100.0 AS avg_price,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |               * CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    // Tolerance band made hashable: the engine emits exact counts plus one
-    // boolean per approximation asserting it sits inside its published
-    // error band; the oracle replays the exact side and literal TRUEs —
-    // the hash match IS the bounds check (the raw HLL++/quantile-sketch
-    // estimates themselves are not engine-portable).
-    "sketch_summary" ->
-      s"""SELECT l_returnflag,
-         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
-         |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  TRUE AS hll_orders_in_band, TRUE AS hll_parts_in_band,
-         |  TRUE AS p50_in_band, TRUE AS p99_in_band,
-         |  sum(CASE WHEN ${h60(Relational.SketchSampleSeed,
-             "CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)")}
-         |        % ${Relational.SketchSampleMod} = 0 THEN 1 ELSE 0 END)
-         |    >= ${Relational.SketchRailMinN} AS pct_rail_checked
-         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q3_shipping_priority" ->
-      """SELECT o_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0 AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND o_orderkey = l_orderkey AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q5_local_supplier" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0 AS revenue
-        |FROM region, nation, customer, orders, lineitem, supplier
-        |WHERE r_name = 'ASIA' AND r_regionkey = n_regionkey
-        |  AND n_nationkey = c_nationkey AND c_custkey = o_custkey
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND o_orderkey = l_orderkey
-        |  AND l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "q14_promo_revenue" ->
-      """SELECT CAST(year(l_shipdate) AS INTEGER) AS yr,
-        |  CAST(sum(CASE WHEN p_type = 'PROMO' THEN u ELSE 0 END) AS DOUBLE) / 10000.0 AS promo_revenue,
-        |  CAST(sum(u) AS DOUBLE) / 10000.0 AS total_revenue,
-        |  CAST(sum(CASE WHEN p_type = 'PROMO' THEN u ELSE 0 END) AS DOUBLE) / sum(u) AS promo_share
-        |FROM (
-        |  SELECT l_shipdate, p_type,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT)
-        |      * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS u
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey) t
-        |GROUP BY CAST(year(l_shipdate) AS INTEGER)""".stripMargin,
-    // OR-of-ANDs disjunction, money in integer cents like q14/q6.
-    "q19_disjunctive" ->
-      """SELECT
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE)
-        |    / 10000.0 AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-        |       AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-        |       AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q10_returned_item" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0 AS revenue
-        |FROM lineitem, orders, customer, nation
-        |WHERE l_returnflag = 'R' AND l_orderkey = o_orderkey
-        |  AND o_orderdate >= TIMESTAMP '1996-07-01' AND o_orderdate < TIMESTAMP '1996-10-01'
-        |  AND o_custkey = c_custkey AND c_nationkey = n_nationkey
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
-    // total_qty is an exact integer-cents sum / 100, so the > 250 threshold
-    // and the top-100 cut agree across engines (ties broken by o_orderkey).
-    "q18_large_volume" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 > 250.0)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-        |FROM big JOIN orders ON o_orderkey = l_orderkey
-        |         JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""".stripMargin,
-    "q_distinct_agg" ->
-      """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_cust, count(*) AS n_orders
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS n_orders FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-        |GROUP BY o_orderpriority""".stripMargin,
-    // count(o_orderkey) skips the left join's null rows → the N=0 bucket.
-    "q13_order_distribution" ->
-      """SELECT n_orders, count(*) AS n_customers FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS n_orders
-        |  FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-        |  GROUP BY c_custkey) t
-        |GROUP BY n_orders""".stripMargin,
-    // The correlated-average threshold is cross-multiplied into exact
-    // integers (qty·den·n < num·Σqty) — brand/fraction interpolated from
-    // the operator's defaults.
-    "q17_small_qty_revenue" -> {
-      import graft.operators.Relational.{SmallQtyBrand, SmallQtyNum, SmallQtyDen}
-      s"""WITH bl AS (
-         |  SELECT l_partkey, CAST(round(l_quantity * 100) AS BIGINT) AS qc,
-         |    CAST(round(l_extendedprice * 100) AS BIGINT) AS pc
-         |  FROM lineitem
-         |  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_brand = '$SmallQtyBrand')),
-         |a AS (SELECT l_partkey, CAST(sum(qc) AS BIGINT) AS sum_qc, count(*) AS n_li
-         |  FROM bl GROUP BY l_partkey)
-         |SELECT CAST(sum(bl.pc) AS DOUBLE) / 100.0 AS revenue, count(*) AS n_items
-         |FROM bl JOIN a USING (l_partkey)
-         |WHERE bl.qc * $SmallQtyDen * a.n_li < $SmallQtyNum * a.sum_qc""".stripMargin
-    },
-    // Global avg positive balance compared by integer cross-multiplication
-    // (bal·n > Σbal); dormancy = no order within the interpolated window of
-    // the corpus max date, all in exact epoch micros.
-    "q22_dormant_rich" ->
-      s"""WITH ap AS (
-         |  SELECT CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS sum_bal,
-         |    count(*) AS n_pos
-         |  FROM customer WHERE c_acctbal > 0),
-         |cut AS (SELECT max(epoch_us(o_orderdate))
-         |    - ${Relational.DormantDays.toLong * 86400000000L} AS cutoff_us FROM orders),
-         |recent AS (SELECT DISTINCT o_custkey FROM orders, cut
-         |  WHERE epoch_us(o_orderdate) >= cut.cutoff_us)
-         |SELECT c_nationkey, count(*) AS n_customers,
-         |  CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_bal
-         |FROM customer, ap
-         |WHERE CAST(round(c_acctbal * 100) AS BIGINT) * ap.n_pos > ap.sum_bal
-         |  AND NOT EXISTS (SELECT 1 FROM recent WHERE recent.o_custkey = c_custkey)
-         |GROUP BY c_nationkey""".stripMargin,
-    "q_correlated_min" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice
-        |FROM orders o
-        |WHERE o_totalprice = (SELECT min(o2.o_totalprice) FROM orders o2
-        |                      WHERE o2.o_custkey = o.o_custkey)""".stripMargin,
-    // Symmetric nation-pair disjunction over the 5-way join; revenue in
-    // exact integer units.
-    "q7_volume_shipping" -> {
-      import graft.operators.Relational._
-      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         |  year(l.l_shipdate) AS l_year,
-         |  CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-         |         * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0 AS revenue
-         |FROM lineitem l
-         |JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |JOIN customer c ON o.o_custkey = c.c_custkey
-         |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         |JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-         |JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-         |WHERE l.l_shipdate >= TIMESTAMP '$VolShipStart'
-         |  AND l.l_shipdate < TIMESTAMP '$VolShipEnd'
-         |  AND ((n1.n_name = '$VolShipNationA' AND n2.n_name = '$VolShipNationB')
-         |    OR (n1.n_name = '$VolShipNationB' AND n2.n_name = '$VolShipNationA'))
-         |GROUP BY 1, 2, 3""".stripMargin
-    },
-    // Conditional-sum ratio: one nation's share of typed-part revenue to
-    // region customers per order year — one double division of int sums.
-    "q8_market_share" -> {
-      import graft.operators.Relational._
-      s"""WITH f AS (
-         |  SELECT year(o.o_orderdate) AS o_year, sn.n_name AS supp_nation,
-         |    CAST(round(l.l_extendedprice * 100) AS BIGINT)
-         |      * (100 - CAST(round(l.l_discount * 100) AS BIGINT)) AS units
-         |  FROM lineitem l
-         |  JOIN part p ON l.l_partkey = p.p_partkey AND p.p_type = '$MktType'
-         |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  JOIN customer c ON o.o_custkey = c.c_custkey
-         |  JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-         |  JOIN region r ON cn.n_regionkey = r.r_regionkey AND r.r_name = '$MktRegion'
-         |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey)
-         |SELECT o_year,
-         |  CAST(sum(CASE WHEN supp_nation = '$MktNation' THEN units ELSE 0 END) AS DOUBLE)
-         |    / CAST(sum(units) AS DOUBLE) AS mkt_share,
-         |  CAST(sum(units) AS DOUBLE) / 10000.0 AS total_revenue
-         |FROM f GROUP BY o_year""".stripMargin
-    },
-    // EXISTS + NOT EXISTS over the same fact with the suppkey inequality —
-    // written as the textbook correlated form here; the engine runs the
-    // decorrelated semi/anti joins. Lateness in exact epoch micros.
-    "q21_waiting_supplier" ->
-      s"""WITH late AS (
-         |  SELECT l.l_orderkey, l.l_suppkey
-         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  WHERE o.o_orderstatus = 'F'
-         |    AND epoch_us(l.l_shipdate) > epoch_us(o.o_orderdate)
-         |      + ${Relational.WaitingLateDays.toLong * 86400000000L})
-         |SELECT s.s_name, count(*) AS numwait
-         |FROM late l1 JOIN supplier s ON l1.l_suppkey = s.s_suppkey
-         |WHERE EXISTS (SELECT 1 FROM lineitem l2
-         |              WHERE l2.l_orderkey = l1.l_orderkey
-         |                AND l2.l_suppkey <> l1.l_suppkey)
-         |  AND NOT EXISTS (SELECT 1 FROM late l3
-         |                  WHERE l3.l_orderkey = l1.l_orderkey
-         |                    AND l3.l_suppkey <> l1.l_suppkey)
-         |GROUP BY s.s_name
-         |ORDER BY numwait DESC, s.s_name ASC LIMIT 100""".stripMargin,
-    // Aggregate view + global-max scalar subquery; revenue compared in
-    // exact integer units, divided to dollars only in the projection.
-    "q15_top_supplier" ->
-      s"""WITH revenue AS (
-         |  SELECT l_suppkey AS supplier_no,
-         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-         |             * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS rev_units
-         |  FROM lineitem
-         |  WHERE l_shipdate >= TIMESTAMP '${Relational.TopRevStart}'
-         |    AND l_shipdate < TIMESTAMP '${Relational.TopRevEnd}'
-         |  GROUP BY l_suppkey)
-         |SELECT s.s_suppkey, s.s_name, CAST(r.rev_units AS DOUBLE) / 10000.0 AS total_revenue
-         |FROM revenue r JOIN supplier s ON r.supplier_no = s.s_suppkey
-         |WHERE r.rev_units = (SELECT max(rev_units) FROM revenue)""".stripMargin,
-    // Correlated MIN across the region-restricted offer join; the per-unit
-    // cost is ONE double division of two exact integers, so the min and
-    // the equality probe agree bit-for-bit.
-    "q2_min_cost_supplier" ->
-      s"""WITH regsup AS (
-         |  SELECT s.s_suppkey, s.s_name, n.n_name
-         |  FROM region r JOIN nation n ON r.r_regionkey = n.n_regionkey
-         |                JOIN supplier s ON n.n_nationkey = s.s_nationkey
-         |  WHERE r.r_name = '${Relational.MinCostRegion}'),
-         |offers AS (
-         |  SELECT p.p_partkey, rs.s_suppkey, rs.s_name, rs.n_name,
-         |    CAST(CAST(round(l.l_extendedprice * 100) AS BIGINT) AS DOUBLE)
-         |      / CAST(CAST(round(l.l_quantity * 100) AS BIGINT) AS DOUBLE) AS unit_cost
-         |  FROM lineitem l
-         |  JOIN part p ON l.l_partkey = p.p_partkey AND p.p_size = ${Relational.MinCostSize}
-         |  JOIN regsup rs ON l.l_suppkey = rs.s_suppkey)
-         |SELECT DISTINCT o.p_partkey, o.s_suppkey, o.s_name, o.n_name, o.unit_cost
-         |FROM offers o
-         |WHERE o.unit_cost = (SELECT min(o2.unit_cost) FROM offers o2
-         |                     WHERE o2.p_partkey = o.p_partkey)""".stripMargin,
-    // Profit = Σ(disc price − retailprice·qty) in exact 1e-4 units over the
-    // widest star join, per (supplier nation, order year).
-    "q9_product_profit" -> {
-      import graft.operators.Relational.ProfitNamePrefix
-      s"""SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
-         |  CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-         |         * (100 - CAST(round(l.l_discount * 100) AS BIGINT))
-         |       - CAST(round(p.p_retailprice * 100) AS BIGINT)
-         |         * CAST(round(l.l_quantity * 100) AS BIGINT)) AS DOUBLE) / 10000.0 AS sum_profit
-         |FROM lineitem l
-         |JOIN part p ON l.l_partkey = p.p_partkey AND p.p_name LIKE '$ProfitNamePrefix%'
-         |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         |JOIN nation n ON s.s_nationkey = n.n_nationkey
-         |JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |GROUP BY 1, 2""".stripMargin
-    },
-    // Per-part value vs 1/den of the global total, cross-multiplied into
-    // exact integer cents (the q17/q22 trick).
-    "q11_important_parts" -> {
-      import graft.operators.Relational.{ImportantNation, ImportantDen}
-      s"""WITH vals AS (
-         |  SELECT l.l_partkey,
-         |    CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS value_c
-         |  FROM lineitem l
-         |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         |  JOIN nation n ON s.s_nationkey = n.n_nationkey AND n.n_name = '$ImportantNation'
-         |  GROUP BY l.l_partkey),
-         |tot AS (SELECT CAST(sum(value_c) AS BIGINT) AS total_c FROM vals)
-         |SELECT v.l_partkey AS p_partkey, CAST(v.value_c AS DOUBLE) / 100.0 AS value
-         |FROM vals v, tot
-         |WHERE v.value_c * $ImportantDen > tot.total_c""".stripMargin
-    },
-    // Ship-lag band in exact epoch micros; high/low priority split as
-    // conditional counts.
-    "q12_ship_lag_priority" -> {
-      import graft.operators.Relational.{LagStart, LagEnd, LagMinDays, LagMaxDays}
-      s"""SELECT l.l_returnflag,
-         |  CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-         |  CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-         |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |WHERE l.l_shipdate >= TIMESTAMP '$LagStart'
-         |  AND l.l_shipdate < TIMESTAMP '$LagEnd'
-         |  AND epoch_us(l.l_shipdate) - epoch_us(o.o_orderdate)
-         |    >= ${LagMinDays.toLong * 86400000000L}
-         |  AND epoch_us(l.l_shipdate) - epoch_us(o.o_orderdate)
-         |    < ${LagMaxDays.toLong * 86400000000L}
-         |GROUP BY 1""".stripMargin
-    },
-    // DISTINCT supplier count per part slice with the literal NOT IN form
-    // (the engine plans the equivalent broadcast anti join).
-    "q16_part_supplier_counts" -> {
-      import graft.operators.Relational.{PscExcludeBrand, PscExcludeType, PscSizes}
-      s"""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-         |SELECT p.p_brand, p.p_type, p.p_size,
-         |  count(DISTINCT pr.l_suppkey) AS supplier_cnt
-         |FROM pairs pr JOIN part p ON pr.l_partkey = p.p_partkey
-         |WHERE p.p_brand <> '$PscExcludeBrand'
-         |  AND p.p_type NOT LIKE '$PscExcludeType%'
-         |  AND p.p_size IN (${PscSizes.mkString(", ")})
-         |  AND pr.l_suppkey NOT IN
-         |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-         |GROUP BY 1, 2, 3""".stripMargin
-    },
-    // The correlated year-sum vs lifetime-sum comparison written as the
-    // textbook IN + grouped HAVING-style subquery; the engine runs the
-    // single-pass conditional-agg decorrelation.
-    "q20_excess_stock" -> {
-      import graft.operators.Relational.{ExcessNation, ExcessNamePrefix, ExcessYearStart, ExcessYearEnd}
-      s"""WITH movers AS (
-         |  SELECT l.l_suppkey, l.l_partkey,
-         |    CAST(sum(CASE WHEN l.l_shipdate >= TIMESTAMP '$ExcessYearStart'
-         |        AND l.l_shipdate < TIMESTAMP '$ExcessYearEnd'
-         |      THEN CAST(round(l.l_quantity * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS year_qc,
-         |    CAST(sum(CAST(round(l.l_quantity * 100) AS BIGINT)) AS BIGINT) AS total_qc
-         |  FROM lineitem l
-         |  JOIN part p ON l.l_partkey = p.p_partkey AND p.p_name LIKE '$ExcessNamePrefix%'
-         |  GROUP BY l.l_suppkey, l.l_partkey)
-         |SELECT s.s_suppkey, s.s_name
-         |FROM supplier s
-         |JOIN nation n ON s.s_nationkey = n.n_nationkey AND n.n_name = '$ExcessNation'
-         |WHERE s.s_suppkey IN
-         |  (SELECT l_suppkey FROM movers WHERE year_qc * 2 > total_qc)
-         |ORDER BY s.s_name ASC""".stripMargin
-    },
-    // lag/lead/ntile/cume_dist share one total-ordered window; cume_dist
-    // is rank/n — a double division of exact ints, portable.
-    "q_window_profile" ->
-      """SELECT o_custkey, o_orderkey,
-        |  lag(o_orderkey) OVER w AS prev_orderkey,
-        |  lead(o_orderkey) OVER w AS next_orderkey,
-        |  ntile(4) OVER w AS quartile,
-        |  cume_dist() OVER w AS cdist
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)""".stripMargin,
-    // Interpolated median of integer cents: the midpoint of two ints is an
-    // exact half in double on both engines (raw-double percentiles are not
-    // portable; integer cents make them so).
-    "q_median" ->
-      """SELECT o_orderpriority,
-        |  quantile_cont(CAST(round(o_totalprice * 100) AS BIGINT), 0.5) / 100.0 AS median_price
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    // Histogram percentile sketch: all-integer bucket/rank arithmetic
-    // (DIV == //), estimate = first bucket reaching ceil(pct*n/100).
-    // Buckets/pcts interpolated from the operator's constants.
-    "q_histogram_quantile" -> {
-      import graft.operators.Relational.{HistogramBuckets => HB, HistogramPcts}
-      val pctList = HistogramPcts.mkString(", ")
-      s"""WITH base AS (SELECT o_orderpriority AS grp,
-         |    CAST(round(o_totalprice * 100) AS BIGINT) AS x FROM orders),
-         |r AS (SELECT grp, min(x) AS mn, max(x) AS mx, count(*) AS n
-         |  FROM base GROUP BY grp),
-         |bk AS (SELECT base.grp, r.n, r.mn, r.mx,
-         |    ((base.x - r.mn) * $HB) // (r.mx - r.mn + 1) AS b
-         |  FROM base JOIN r ON base.grp = r.grp),
-         |c AS (SELECT grp, n, mn, mx, b, count(*) AS c
-         |  FROM bk GROUP BY grp, n, mn, mx, b),
-         |cum AS (SELECT grp, n, mn, mx, b,
-         |    CAST(sum(c) OVER (PARTITION BY grp ORDER BY b
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM c),
-         |px AS (SELECT cum.*, p.pct FROM cum
-         |  CROSS JOIN (SELECT unnest([$pctList]) AS pct) p),
-         |sel AS (SELECT grp, pct, n, mn, mx, min(b) AS qb
-         |  FROM px WHERE cum >= (pct * n + 99) // 100
-         |  GROUP BY grp, pct, n, mn, mx)
-         |SELECT grp AS o_orderpriority, pct, n, qb,
-         |  mn + (qb * (mx - mn + 1) + ${HB - 1}) // $HB AS est_cents,
-         |  CAST(mn + (qb * (mx - mn + 1) + ${HB - 1}) // $HB AS DOUBLE) / 100.0
-         |    AS est
-         |FROM sel""".stripMargin
-    },
-    // Declared-values pivot == one pass of conditional aggregation. Each
-    // count is CAST to BIGINT: DuckDB types a bare integer sum() as HUGEINT,
-    // which the driver's dataframe fetch materializes as float64 and the
-    // hash compare then sees 1000.0 vs Spark's int64 1000.
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    // Bucketing changes the plan (no exchanges), never the answer — the
-    // oracle is the plain join. Money sums in integer cents (see q_rollup).
-    "q_bucketed_join" ->
-      """SELECT c_custkey, count(*) AS n_orders,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0
-        |    AS total_spend
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_custkey""".stripMargin,
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin,
-    // count(column) skips the outer join's null order rows, so orderless
-    // customers report 0 orders / 0.0 spend on both engines.
-    "q_outer_join" ->
-      """SELECT c_custkey, count(o_orderkey) AS n_orders,
-        |  CAST(sum(coalesce(CAST(round(o_totalprice * 100) AS BIGINT), 0)) AS DOUBLE)
-        |    / 100.0 AS total_spend
-        |FROM customer FULL OUTER JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey""".stripMargin,
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3""".stripMargin,
-    "q_window_moving" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w AS DOUBLE)
-        |    / count(*) OVER w / 100.0 AS mavg
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey
-        |  ORDER BY o_orderdate ASC, o_orderkey ASC
-        |  ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)""".stripMargin,
-    // RANGE frame bounds in exact epoch micros; same-timestamp rows are
-    // peers (included in each other's frame) on both engines.
-    "q_window_range" ->
-      s"""SELECT o_custkey, o_orderkey,
-         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w AS DOUBLE)
-         |    / 100.0 AS trailing_spend
-         |FROM orders
-         |WINDOW w AS (PARTITION BY o_custkey ORDER BY epoch_us(o_orderdate)
-         |  RANGE BETWEEN ${Relational.TrailingDays.toLong * 86400000000L} PRECEDING
-         |            AND CURRENT ROW)""".stripMargin,
-    // XOR of 60-bit canonical-row hashes: same md5 axis, same '|' join;
-    // bit_xor == the engine's XorDigest fold (order-independent both ways).
-    "q_table_digest" ->
-      s"""SELECT source, bit_xor(h) AS digest, count(*) AS n_rows FROM (
-         |  SELECT source,
-         |    ${h60(0, "concat_ws('|', doc_id, lang, source, md5(text))")} AS h
-         |  FROM documents) t
-         |GROUP BY source""".stripMargin,
-    "q_setops" ->
-      """SELECT 'both' AS tag, custkey FROM (
-        |  SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |  INTERSECT SELECT o_custkey AS custkey FROM orders)
-        |UNION ALL
-        |SELECT 'cust_only' AS tag, custkey FROM (
-        |  SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |  EXCEPT SELECT o_custkey AS custkey FROM orders)""".stripMargin,
-    "q_semijoin" ->
-      """SELECT c_mktsegment, count(*) AS n_customers FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q_antijoin" ->
-      """SELECT c_mktsegment, count(*) AS n_customers FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q_scalar_funcs" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |  CAST(month(o_orderdate) AS INTEGER) AS mo,
-        |  CAST(day(o_orderdate) AS INTEGER) AS dom,
-        |  substr(o_orderpriority, 1, 1) AS pri,
-        |  o_orderstatus || '-' || upper(o_orderpriority) AS tag,
-        |  sqrt(o_totalprice) AS sqrt_price,
-        |  ln(o_totalprice + 1) AS ln_price,
-        |  o_orderkey % 7 AS mod7
-        |FROM orders""".stripMargin,
-    "q_topk_global" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |       * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue
-        |FROM lineitem
-        |ORDER BY revenue DESC, l_orderkey ASC, l_linenumber ASC LIMIT 20""".stripMargin,
-    "q_events_json" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS DOUBLE)
-        |    / count(json_extract_string(props, '$.k')) AS avg_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type""".stripMargin,
-    // Partitioning changes the layout, never the answer: the oracle is the
-    // plain date-filtered aggregate (UTC on both engines).
-    "q_partition_pruning" ->
-      s"""SELECT event_type, count(*) AS n,
-         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value
-         |FROM events WHERE CAST(ts AS DATE) = DATE '${graft.sources.PartitionedLayout.ProbeDate}'
-         |GROUP BY event_type""".stripMargin,
-    // Morton interleave replayed bit-for-bit: same clamp, same 32
-    // shift/mask terms (DuckDB >> & == Spark shiftright/bitwiseAND on
-    // BIGINT).
-    "q_zorder" -> {
-      import graft.sources.ZOrderLayout.ZBits
-      val terms = (0 until ZBits).flatMap(b => Seq(
-        s"((zx >> $b) & 1) * ${1L << (2 * b)}",
-        s"((zy >> $b) & 1) * ${1L << (2 * b + 1)}")).mkString(" + ")
-      s"""WITH c AS (SELECT event_id,
-         |    greatest(0, least(user_id, ${(1L << ZBits) - 1})) AS zx,
-         |    greatest(0, least(CAST(round(value * 100) AS BIGINT), ${(1L << ZBits) - 1})) AS zy
-         |  FROM events)
-         |SELECT event_id, zx, zy, $terms AS z FROM c""".stripMargin
-    },
-    // The Bloom runtime filter is a pass-through optimization: the oracle
-    // is the plain selective join (threshold interpolated).
-    "q_bloom_join" ->
-      s"""SELECT count(*) AS n_items,
-         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0
-         |    AS revenue
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |WHERE o_orderpriority = '1-URGENT'
-         |  AND o_totalprice > ${graft.operators.RuntimeFilter.UrgentMinPrice}""".stripMargin,
-    // The range join's answer is the plain theta join; bucketing only
-    // changes the plan. Window constants interpolated from the operator.
-    "q_range_join" ->
-      s"""WITH b AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-         |w AS (SELECT i AS campaign_id,
-         |    t0 + i * ${EventAnalytics.CampaignStepUs} AS start_us,
-         |    t0 + i * ${EventAnalytics.CampaignStepUs} + ${EventAnalytics.CampaignLenUs} AS end_us
-         |  FROM range(0, ${EventAnalytics.NCampaigns}) t(i), b)
-         |SELECT w.campaign_id, w.start_us, w.end_us, count(*) AS n_events,
-         |  count(DISTINCT e.user_id) AS n_users
-         |FROM w JOIN events e
-         |  ON epoch_us(e.ts) >= w.start_us AND epoch_us(e.ts) < w.end_us
-         |GROUP BY w.campaign_id, w.start_us, w.end_us""".stripMargin,
-    "q_events_sessions" ->
-      """SELECT user_id,
-        |  CAST(1 + sum(CASE WHEN prev_ms IS NOT NULL AND ms - prev_ms >= 1800000
-        |                    THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-        |  count(*) AS n_events
-        |FROM (
-        |  SELECT user_id, epoch_ms(ts) AS ms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_ms
-        |  FROM events) t
-        |GROUP BY user_id""".stripMargin,
-    // As-of join oracle mirrors the engine's union+carry-forward shape
-    // (DuckDB's native ASOF JOIN leaves equal-ts ties unspecified; the
-    // window form pins them): ties at equal ts prefer the click, then the
-    // largest event_id.
-    "q_asof_attribution" ->
-      """WITH u AS (
-        |  SELECT user_id, ts, event_id, 1 AS is_left,
-        |    CAST(NULL AS BIGINT) AS c_id, CAST(NULL AS DOUBLE) AS c_value
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT user_id, ts, event_id, 0, event_id, value
-        |  FROM events WHERE event_type = 'click'),
-        |f AS (SELECT user_id, ts, event_id, is_left,
-        |    last_value(c_id IGNORE NULLS) OVER w AS click_id,
-        |    last_value(c_value IGNORE NULLS) OVER w AS click_value
-        |  FROM u
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, is_left ASC, event_id ASC
-        |               ROWS UNBOUNDED PRECEDING))
-        |SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS ts_us,
-        |  click_id, click_value
-        |FROM f WHERE is_left = 1""".stripMargin,
-    // Session paths: same gaps-and-islands sessionization as
-    // q_events_sessions, paths joined in (ms, event_id) order — a total
-    // order on both engines; top-k cut is (count DESC, path ASC), total.
-    "q_session_paths" ->
-      s"""WITH o AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms,
-         |    CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-         |           OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w >= 1800000
-         |         THEN 1 ELSE 0 END AS new_s
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-         |s AS (SELECT user_id, event_id, event_type, ms,
-         |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ms ASC, event_id ASC
-         |                     ROWS UNBOUNDED PRECEDING) AS sid
-         |  FROM o),
-         |p AS (SELECT user_id, sid,
-         |    string_agg(event_type, '>' ORDER BY ms ASC, event_id ASC) AS path
-         |  FROM s GROUP BY user_id, sid)
-         |SELECT path, count(*) AS n_sessions FROM p GROUP BY path
-         |ORDER BY n_sessions DESC, path ASC LIMIT ${EventAnalytics.SessionPathsK}""".stripMargin,
-    // Ordered funnel: each step's first time strictly after the previous
-    // step's — step names interpolated from the operator's constant; all
-    // comparisons in exact epoch micros.
-    "q_funnel" -> {
-      val steps = EventAnalytics.FunnelSteps
-      val stepCtes = steps.zipWithIndex.map { case (step, i) =>
-        val name = s"s${i + 1}"
-        if (i == 0)
-          s"""$name AS (SELECT user_id, min(epoch_us(ts)) AS step1_us
-             |  FROM events WHERE event_type = '$step' GROUP BY user_id)""".stripMargin
-        else
-          s"""$name AS (SELECT e.user_id, min(epoch_us(e.ts)) AS step${i + 1}_us
-             |  FROM events e JOIN s$i ON e.user_id = s$i.user_id
-             |  WHERE e.event_type = '$step' AND epoch_us(e.ts) > s$i.step${i}_us
-             |  GROUP BY e.user_id)""".stripMargin
-      }.mkString(",\n")
-      val joins = steps.indices
-        .map(i => s"LEFT JOIN s${i + 1} USING (user_id)").mkString(" ")
-      val cols = steps.indices.map(i => s"s${i + 1}.step${i + 1}_us").mkString(", ")
-      s"""WITH u AS (SELECT DISTINCT user_id FROM events),
-         |$stepCtes
-         |SELECT u.user_id, $cols
-         |FROM u $joins""".stripMargin
-    },
-    // Cohort cells are exact integer epoch-week floor-divisions (Spark
-    // `div` == DuckDB `//` on non-negative longs).
-    "q_cohort_retention" ->
-      s"""WITH f AS (SELECT user_id,
-         |    min(epoch_us(ts) // ${EventAnalytics.WeekUs}) AS cohort_week
-         |  FROM events GROUP BY user_id)
-         |SELECT f.cohort_week,
-         |  (epoch_us(e.ts) // ${EventAnalytics.WeekUs}) - f.cohort_week AS week_offset,
-         |  count(DISTINCT e.user_id) AS n_active
-         |FROM events e JOIN f USING (user_id)
-         |GROUP BY 1, 2""".stripMargin,
-    "q_text_stats" ->
-      s"""WITH t AS ($tokCte)
-         |SELECT d.doc_id, length(d.text) AS n_chars_txt, len(t.toks) AS n_tokens,
-         |  len(list_filter(t.toks, w -> regexp_full_match(w, '[.,!?:;"'']+'))) AS n_punct_tokens,
-         |  len(list_filter(t.toks, w -> list_contains($stopList, w))) AS n_stopwords,
-         |  CAST(len(list_filter(t.toks, w -> list_contains($stopList, w))) AS DOUBLE)
-         |    / len(t.toks) AS stopword_ratio,
-         |  (len(t.toks) >= 10 AND len(list_filter(t.toks, w -> list_contains($stopList, w))) > 0)
-         |    AS is_quality
-         |FROM documents d JOIN t ON d.doc_id = t.doc_id""".stripMargin,
-    "q_lang_id" ->
-      s"""WITH $langIdCtes
-         |SELECT doc_id, lang, hits_en, hits_de, hits_es, hits_fr, pred_lang
-         |FROM li""".stripMargin,
-    // Confusion rollup over the SAME per-doc prediction CTEs (shared via
-    // langIdCtes so the two oracles cannot drift)
-    "q_langid_confusion" ->
-      s"""WITH $langIdCtes,
-         |cells AS (SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n
-         |  FROM li GROUP BY lang, pred_lang),
-         |tot AS (SELECT lang, CAST(sum(n) AS BIGINT) AS n_true
-         |  FROM cells GROUP BY lang)
-         |SELECT c.lang, c.pred_lang, c.n, t2.n_true,
-         |  (c.n * 1000) // t2.n_true AS share_milli,
-         |  c.lang = c.pred_lang AS correct
-         |FROM cells c JOIN tot t2 USING (lang)""".stripMargin,
-    "q_token_counts" ->
-      """SELECT doc_id,
-        |  len(regexp_split_to_array(trim(nfc_normalize(text)), '\s+')) AS ws_tokens,
-        |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS bpeish_tokens
-        |FROM documents""".stripMargin,
-    // Scaled-PMI collocations: same bigram axis as q_bigram_lm, unigram
-    // counts over the full token stream, two floor divisions, LIMIT k
-    // under a total (score, w1, w2) order. Constants interpolated.
-    "q_collocations" ->
-      s"""WITH ts AS (SELECT regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-         |  FROM documents),
-         |bgidx AS (SELECT ts, unnest(range(1, len(ts))) AS i
-         |  FROM ts WHERE len(ts) >= 2),
-         |bg AS (SELECT ts[i] AS w1, ts[i + 1] AS w2 FROM bgidx),
-         |c AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_pair FROM bg
-         |  GROUP BY w1, w2 HAVING count(*) >= ${TextAnalysis.CollocationMinCount}),
-         |uni AS (SELECT unnest(ts) AS tok FROM ts),
-         |u AS (SELECT tok, CAST(count(*) AS BIGINT) AS n_tok FROM uni
-         |  WHERE tok <> '' GROUP BY tok)
-         |SELECT c.w1, c.w2, c.n_pair, a.n_tok AS n_w1, b.n_tok AS n_w2,
-         |  (((c.n_pair * ${TextAnalysis.PmiScale}) // a.n_tok)
-         |    * ${TextAnalysis.PmiScale}) // b.n_tok AS pmi_scaled
-         |FROM c JOIN u a ON c.w1 = a.tok JOIN u b ON c.w2 = b.tok
-         |ORDER BY pmi_scaled DESC, c.w1 ASC, c.w2 ASC
-         |LIMIT ${TextAnalysis.CollocationK}""".stripMargin,
-    // Frequency-of-frequencies: two group-bys over the exploded lowercase
-    // whitespace tokens; all-integer.
-    "q_token_spectrum" ->
-      """WITH tk AS (SELECT unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\s+')) AS tok
-        |  FROM documents),
-        |c AS (SELECT tok, CAST(count(*) AS BIGINT) AS tf FROM tk
-        |  WHERE tok <> '' GROUP BY tok)
-        |SELECT tf, CAST(count(*) AS BIGINT) AS n_types FROM c GROUP BY tf""".stripMargin,
-    "q_fingerprint" ->
-      s"""WITH sh AS MATERIALIZED ($shCte)
-         |SELECT d.doc_id,
-         |  md5(regexp_replace(lower(trim(nfc_normalize(d.text))), '\\s+', ' ', 'g')) AS fp_md5,
-         |  ${h60(0, "regexp_replace(lower(trim(nfc_normalize(d.text))), '\\s+', ' ', 'g')")} AS fp60,
-         |  CASE WHEN len(sh.sh) > 0
-         |       THEN list_min(list_transform(sh.sh, s -> ${h60(1, "s")})) END AS fp_min_shingle
-         |FROM documents d JOIN sh ON d.doc_id = sh.doc_id""".stripMargin,
-    "q_dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(trim(nfc_normalize(text))), '\s+', ' ', 'g')) AS fp_md5,
-        |  count(*) AS n_copies, min(doc_id) AS keeper_id
-        |FROM documents GROUP BY 1""".stripMargin,
-    // Exact-substring dedup replay: the oracle carries the literal 8-token
-    // window text where the engine carries a 128-bit fingerprint — the
-    // grouping key differs, the grouped SETS are identical (fingerprint
-    // collisions aside, ~1e-20/pair), so positions and merged spans match.
-    // Same gaps-and-islands interval merge, 0-based starts, exclusive ends.
-    "q_dedup_substring" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        |grams AS (SELECT doc_id, i - 1 AS start, array_to_string(tk[i:i+7], ' ') AS g
-        |  FROM toks, unnest(range(1, len(tk) - 6)) AS t(i)),
-        |dup AS (SELECT g FROM grams GROUP BY g HAVING count(*) >= 2),
-        |spans AS (SELECT doc_id, start, start + 8 AS "end"
-        |  FROM grams WHERE g IN (SELECT g FROM dup)),
-        |flagged AS (SELECT doc_id, start, "end",
-        |    CASE WHEN start > COALESCE(max("end") OVER (PARTITION BY doc_id ORDER BY start
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS opens
-        |  FROM spans),
-        |islands AS (SELECT doc_id, start, "end",
-        |    sum(opens) OVER (PARTITION BY doc_id ORDER BY start) AS island
-        |  FROM flagged)
-        |SELECT doc_id, min(start) AS span_start, max("end") AS span_end,
-        |  max("end") - min(start) AS span_tokens
-        |FROM islands GROUP BY doc_id, island""".stripMargin,
-    // Contamination scan (batch + streaming twins share it): literal
-    // 8-token windows where the engine carries fingerprints; distinct
-    // per side, so shared_ngrams counts distinct shared windows.
-    "q_benchmark_contamination" -> benchmarkContaminationOracle,
-    "q_stream_benchmark_contamination" -> benchmarkContaminationOracle,
-    // the rollup replayed at rep level, expanded to members afterwards
-    "q_contamination_verdict" -> {
-      import graft.operators.Dedup.{ContamMinShared, EvalSampleMod, EvalSampleSeed}
-      s"""WITH cr AS (SELECT md5(text) AS fp, min(doc_id) AS rep_id,
-         |    min_by(text, doc_id) AS text FROM documents GROUP BY md5(text)),
-         |cg AS (SELECT DISTINCT rep_id, array_to_string(tk[i:i+7], ' ') AS g
-         |  FROM (SELECT rep_id, string_split(text, ' ') AS tk FROM cr) t0,
-         |       unnest(range(1, len(tk) - 6)) AS t(i)),
-         |er AS (SELECT min(doc_id) AS eval_id, min_by(text, doc_id) AS text
-         |  FROM documents
-         |  WHERE ${h60(EvalSampleSeed, "doc_id")} % $EvalSampleMod = 0
-         |  GROUP BY md5(text)),
-         |eg AS (SELECT DISTINCT eval_id, array_to_string(tk[i:i+7], ' ') AS g
-         |  FROM (SELECT eval_id, string_split(text, ' ') AS tk FROM er) t0,
-         |       unnest(range(1, len(tk) - 6)) AS t(i)),
-         |hot AS (SELECT g FROM cg GROUP BY g
-         |  HAVING count(*) > ${graft.operators.Dedup.ContamHotCap}),
-         |eg2 AS (SELECT * FROM eg WHERE g NOT IN (SELECT g FROM hot)),
-         |v AS (SELECT rep_id, eval_id, CAST(count(*) AS BIGINT) AS shared_ngrams
-         |  FROM cg JOIN eg2 USING (g)
-         |  GROUP BY 1, 2 HAVING count(*) >= $ContamMinShared),
-         |r AS (SELECT rep_id, CAST(count(*) AS BIGINT) AS n_eval_items,
-         |    CAST(max(shared_ngrams) AS BIGINT) AS max_shared,
-         |    min(eval_id) AS first_eval
-         |  FROM v GROUP BY rep_id)
-         |SELECT d.doc_id, r.n_eval_items, r.max_shared, r.first_eval
-         |FROM documents d
-         |JOIN cr ON md5(d.text) = cr.fp
-         |JOIN r USING (rep_id)""".stripMargin
-    },
-    // Exact char-window replay: literal 50-char substrings where the
-    // engine carries 128-bit fingerprints; same gaps-and-islands merge.
-    "q_dedup_substring_exact" -> {
-      val k = graft.operators.Dedup.CharSpanLen
-      s"""WITH grams AS (SELECT doc_id, i - 1 AS start, substr(text, i, $k) AS g
-         |  FROM documents, unnest(range(1, len(text) - ${k - 2})) AS t(i)),
-         |dup AS (SELECT g FROM grams GROUP BY g HAVING count(*) >= 2),
-         |spans AS (SELECT doc_id, start, start + $k AS "end"
-         |  FROM grams WHERE g IN (SELECT g FROM dup)),
-         |flagged AS (SELECT doc_id, start, "end",
-         |    CASE WHEN start > COALESCE(max("end") OVER (PARTITION BY doc_id ORDER BY start
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS opens
-         |  FROM spans),
-         |islands AS (SELECT doc_id, start, "end",
-         |    sum(opens) OVER (PARTITION BY doc_id ORDER BY start) AS island
-         |  FROM flagged)
-         |SELECT doc_id, min(start) AS span_start, max("end") AS span_end,
-         |  max("end") - min(start) AS span_chars
-         |FROM islands GROUP BY doc_id, island""".stripMargin
-    },
-    // Exactness-gap card: both span sets rebuilt literally (50-char and
-    // 8-token windows), token spans converted through the same
-    // split-on-space offsets, three gaps-and-islands merges, char sums.
-    "q_substring_gap" -> substringGapOracle,
-    // Line-level dedup: same non-overlapping token windows, same seeded
-    // 60-bit line hash, same frequency threshold; kept text re-joined in
-    // position order (string_agg skips dropped-line NULLs like Spark's
-    // collect_list; all-dropped coalesces to the empty string both sides).
-    "q_line_dedup" -> {
-      val mo = graft.operators.Dedup.LineMinOccurrences
-      s"""WITH $lineCtes,
-         |f AS (SELECT lh FROM h GROUP BY lh HAVING count(*) >= $mo)
-         |${lineReportSql("h")}""".stripMargin
-    },
-    // Incremental twin (shared verbatim by the streaming drain): corpus
-    // lines below the split form the frozen index at freq >= minOcc-1;
-    // the shard side excises against it only.
-    "q_line_dedup_incremental" -> lineDedupIncrementalOracle,
-    // Within-document repetition excision: same line frame, verdict is
-    // per (doc, line-hash) — keep min(pos), drop the rest; same report
-    // fold (kept text re-joined in position order).
-    "q_repetition_excised" -> repetitionExciseOracle,
-    // The streaming twin shares the batch oracle VERBATIM: per-document
-    // verdicts are document-local, so any micro-batch partitioning
-    // unions to the identical report.
-    "q_stream_repetition_excised" -> repetitionExciseOracle,
-    // Winnowing: same 40-bit gram hash and h·2^20+(2^20−1−pos) argmin
-    // encoding; the window min replays the slice min, valid starts are
-    // 0..max(0, n_grams − w), selections decoded after DISTINCT.
-    "q_winnow_fingerprints" ->
-      s"""WITH $winnowSelCtes
-         |SELECT doc_id, $WinnowMask - (wcomp % $WinnowScale) AS fp_pos,
-         |  wcomp // $WinnowScale AS fp_hash
-         |FROM sel""".stripMargin,
-    // Overlap pairs over the SAME winnow selection CTEs: per-doc distinct
-    // hashes, hot hashes (> cap docs) excluded, pair counts by self-join.
-    "q_winnow_overlap" -> {
-      import graft.operators.Dedup.{WinnowBucketCap, WinnowMinShared}
-      s"""WITH $winnowSelCtes,
-         |fps AS MATERIALIZED (SELECT DISTINCT doc_id, wcomp // $WinnowScale AS fp_hash
-         |  FROM sel),
-         |hot AS (SELECT fp_hash FROM fps GROUP BY fp_hash
-         |  HAVING count(*) > $WinnowBucketCap),
-         |cold AS MATERIALIZED (SELECT * FROM fps
-         |  WHERE fp_hash NOT IN (SELECT fp_hash FROM hot)),
-         |na AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM cold
-         |  GROUP BY doc_id),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(count(*) AS BIGINT) AS n_shared
-         |  FROM cold a JOIN cold b
-         |    ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared)
-         |SELECT p.doc_a, p.doc_b, p.n_shared, na1.n AS n_a, na2.n AS n_b,
-         |  p.n_shared * 1000 // least(na1.n, na2.n) AS overlap_milli
-         |FROM p JOIN na na1 ON p.doc_a = na1.doc_id
-         |       JOIN na na2 ON p.doc_b = na2.doc_id""".stripMargin
-    },
-    // Hybrid RRF: the shared BM25 oracle ranks the lexical pool, the
-    // brute-cosine subquery (query vector 0) ranks the dense pool, and
-    // the fusion is exact integer millionths over a full outer join.
-    // The IVF-dense hybrid shares the bm25 + k-means/probe CTEs.
-    "q_hybrid_rrf_ivf" -> hybridRrfIvfOracle,
-    // INT8 quantization: codes/reconstruction replayed on identical
-    // doubles, errors floored to integer 2^20ths before summing.
-    "q_embed_quant" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |x AS (SELECT vec_id, i AS d, v[i] AS x
-        |  FROM e, unnest(range(1, len(v) + 1)) AS t(i)),
-        |s AS (SELECT d, min(x) AS mn, max(x) AS mx FROM x GROUP BY d),
-        |q AS (SELECT x.d, s.mn, s.mx,
-        |    abs(CASE WHEN s.mx = s.mn THEN s.mn
-        |         ELSE s.mn + (least(255, CAST(floor((x.x - s.mn) * 256
-        |                / (s.mx - s.mn)) AS BIGINT)) + 0.5)
-        |              * (s.mx - s.mn) / 256 END - x.x) AS err
-        |  FROM x JOIN s USING (d))
-        |SELECT d, mn, mx, CAST(count(*) AS BIGINT) AS n_vals,
-        |  CAST(sum(CAST(floor(err * 1048576) AS BIGINT)) AS BIGINT) AS sum_err_q,
-        |  CAST(max(CAST(floor(err * 1048576) AS BIGINT)) AS BIGINT) AS max_err_q
-        |FROM q GROUP BY d, mn, mx""".stripMargin,
-    "q_hybrid_rrf" -> {
-      import graft.operators.Pipeline.{RrfC, RrfK}
-      val poolK = graft.operators.TextAnalysis.Bm25K
-      s"""WITH bm AS ($bm25TopKOracle),
-         |txt AS (SELECT doc_id,
-         |    row_number() OVER (ORDER BY score DESC, doc_id ASC) AS text_rank
-         |  FROM bm),
-         |dn AS (SELECT neighbor_id AS doc_id, rank AS vec_rank FROM (
-         |    SELECT b.vec_id AS neighbor_id,
-         |      row_number() OVER (
-         |        ORDER BY list_cosine_similarity(a.embedding, b.embedding) DESC,
-         |                 b.vec_id ASC) AS rank
-         |    FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-         |    WHERE a.vec_id = 0) t
-         |  WHERE rank <= $poolK)
-         |SELECT COALESCE(txt.doc_id, dn.doc_id) AS doc_id, text_rank, vec_rank,
-         |  COALESCE(1000000 // ($RrfC + text_rank), 0)
-         |    + COALESCE(1000000 // ($RrfC + vec_rank), 0) AS rrf_micro
-         |FROM txt FULL OUTER JOIN dn ON txt.doc_id = dn.doc_id
-         |ORDER BY rrf_micro DESC, doc_id ASC LIMIT $RrfK""".stripMargin
-    },
-    "q_stream_line_dedup_incremental" -> lineDedupIncrementalOracle,
-    "q_ngram_novelty_incremental" -> ngramNoveltyIncrementalOracle,
-    "q_stream_ngram_novelty" -> ngramNoveltyIncrementalOracle,
-    // Excision transform: the same filter lambda replayed 1-based; the
-    // surviving token list re-joined and md5'd both sides
-    "q_blocklist_excised" -> {
-      val blArr =
-        TextAnalysis.BlockedPhrases.map(p => s"'$p'").mkString("[", ", ", "]")
-      s"""WITH t AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-         |  FROM documents),
-         |k AS (SELECT doc_id, ts,
-         |    list_filter(range(1, len(ts) + 1), i ->
-         |      NOT ( (i > 1 AND list_contains($blArr,
-         |                ts[i-1] || ' ' || ts[i]))
-         |         OR (i < len(ts) AND list_contains($blArr,
-         |                ts[i] || ' ' || ts[i+1])) )) AS ki
-         |  FROM t)
-         |SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
-         |  CAST(len(ts) - len(ki) AS BIGINT) AS n_removed,
-         |  md5(array_to_string(list_transform(ki, i -> ts[i]), ' '))
-         |    AS kept_md5
-         |FROM k""".stripMargin
-    },
-    // Per-source curation rollup: corpus-wide fp counts joined back, then
-    // per-source aggregation; avg is one division of exact BIGINTs.
-    "q_source_stats" ->
-      """WITH f AS (SELECT doc_id, source, lang,
-        |    md5(regexp_replace(lower(trim(nfc_normalize(text))), '\s+', ' ', 'g')) AS fp,
-        |    len(regexp_split_to_array(trim(text), '\s+')) AS n_toks
-        |  FROM documents),
-        |c AS (SELECT fp, count(*) AS n_copies FROM f GROUP BY fp)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN n_copies > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs,
-        |  count(DISTINCT lang) AS n_langs,
-        |  CAST(sum(n_toks) AS BIGINT) AS total_tokens,
-        |  CAST(sum(n_toks) AS DOUBLE) / count(*) AS avg_tokens
-        |FROM f JOIN c ON f.fp = c.fp
-        |GROUP BY source""".stripMargin,
-    // From-scratch HLL, replayed register-exactly: same 60-bit seeded
-    // hash, same bit-length ranks (Spark bin == DuckDB bin), same exact
-    // BIGINT denominator; the estimate is one double division of the
-    // interpolated numerator constant by that integer — bit-portable.
-    // The UDAF twin produces the identical frame, so ONE oracle serves
-    // both registrations.
-    "q_hll_vocab" -> hllVocabOracle,
-    "q_hll_vocab_agg" -> hllVocabOracle,
-    // HLL vocabulary-growth curve: same shingles, same seeded registers;
-    // "cumulative at bucket b" replays as a per-register running min over
-    // the densified bucket grid (merge = idempotent min), then the same
-    // exact-integer denominator and one constant/integer division.
-    "q_vocab_growth_hll" -> {
-      import graft.operators.Sketches._
-      import graft.operators.TextAnalysis.NoveltyBuckets
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |mx AS (SELECT max(doc_id) AS m FROM documents),
-         |e AS (SELECT (sh.doc_id * $NoveltyBuckets) // (mx.m + 1) AS bucket,
-         |    unnest(sh.sh) AS g FROM sh, mx),
-         |gg AS (SELECT bucket, ${h60(HllHashSeed, "g")} AS gh FROM e),
-         |r AS (SELECT bucket, gh % $HllM AS j,
-         |    CASE WHEN (gh // $HllM) = 0 THEN 0
-         |         ELSE length(bin(gh // $HllM)) END AS bl
-         |  FROM gg),
-         |rb AS (SELECT bucket, j, min(bl) AS minb FROM r GROUP BY bucket, j),
-         |grid AS (SELECT gb.bucket, gj.j
-         |  FROM (SELECT unnest(range(0, $NoveltyBuckets)) AS bucket) gb
-         |  CROSS JOIN (SELECT DISTINCT j FROM rb) gj),
-         |dense AS (SELECT grid.bucket, grid.j, rb.minb
-         |  FROM grid LEFT JOIN rb ON grid.bucket = rb.bucket AND grid.j = rb.j),
-         |cum AS (SELECT bucket, j,
-         |    min(minb) OVER (PARTITION BY j ORDER BY bucket
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS minb_cum
-         |  FROM dense),
-         |p AS (SELECT bucket,
-         |    CAST(sum(CAST(1 AS BIGINT) << minb_cum) AS BIGINT) AS denom_present,
-         |    count(minb_cum) AS n_present
-         |  FROM cum GROUP BY bucket)
-         |SELECT bucket,
-         |  CAST($HllM - n_present AS INTEGER) AS n_zero_registers,
-         |  CAST(coalesce(denom_present, 0)
-         |    + ($HllM - n_present) * (CAST(1 AS BIGINT) << ${HllW + 1})
-         |    AS BIGINT) AS denom,
-         |  $HllNumerator / (coalesce(denom_present, 0)
-         |    + ($HllM - n_present) * (CAST(1 AS BIGINT) << ${HllW + 1}))
-         |    AS hll_vocab_estimate
-         |FROM p""".stripMargin
-    },
-    // the streaming register store reconstructs the batch registers
-    // exactly (monotone min + latest-batch-wins), so the oracle is shared
-    "q_stream_hll_update" -> hllVocabOracle,
-    "q_quantile_sketch" -> quantileSketchOracle,
-    "q_kll_quantile" -> kllQuantileOracle,
-    "q_kll_segment" -> kllSegmentOracle,
-    // the streaming keyed-store twin drains to the identical node frame,
-    // so it shares the batch sketch's oracle verbatim
-    "q_stream_quantile_update" -> quantileSketchOracle,
-    // Per-bucket XOR digests of both sides, null-safe full-join diff.
-    "q_digest_diff" -> {
-      import graft.operators.Sketches.{DiffBucket, TamperedDocId}
-      val h = h60(0, "concat_ws('|', doc_id, lang, source, md5(text))")
-      s"""WITH a AS (SELECT doc_id // $DiffBucket AS bkt, bit_xor($h) AS digest,
-         |    count(*) AS n_rows FROM documents GROUP BY 1),
-         |rep AS (SELECT doc_id, lang, source,
-         |    CASE WHEN doc_id = $TamperedDocId THEN text || ' tampered' ELSE text END AS text
-         |  FROM documents),
-         |b AS (SELECT doc_id // $DiffBucket AS bkt, bit_xor($h) AS digest,
-         |    count(*) AS n_rows FROM rep GROUP BY 1)
-         |SELECT COALESCE(a.bkt, b.bkt) AS bkt,
-         |  a.digest AS digest_a, a.n_rows AS n_a,
-         |  b.digest AS digest_b, b.n_rows AS n_b
-         |FROM a FULL JOIN b ON a.bkt = b.bkt
-         |WHERE a.digest IS DISTINCT FROM b.digest
-         |   OR a.n_rows IS DISTINCT FROM b.n_rows""".stripMargin
-    },
-    "q_row_diff" -> {
-      import graft.operators.Sketches.{TamperedDocId, DroppedDocId}
-      val h = h60(0, "concat_ws('|', doc_id, lang, source, md5(text))")
-      s"""WITH a AS (SELECT doc_id, $h AS ha FROM documents),
-         |rep AS (SELECT doc_id, lang, source,
-         |    CASE WHEN doc_id = $TamperedDocId THEN text || ' tampered' ELSE text END AS text
-         |  FROM documents WHERE doc_id <> $DroppedDocId),
-         |b AS (SELECT doc_id, $h AS hb FROM rep)
-         |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-         |  CASE WHEN b.hb IS NULL THEN 'removed'
-         |       WHEN a.ha IS NULL THEN 'added'
-         |       ELSE 'changed' END AS change
-         |FROM a FULL JOIN b ON a.doc_id = b.doc_id
-         |WHERE a.ha IS DISTINCT FROM b.hb""".stripMargin
-    },
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  GROUPING(l_returnflag, l_linestatus) AS gid,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-    // The gate's negation with first-failing-rule reasons (same check
-    // order as the engine's when-chain; ELSE is provably pii_digit_run).
-    "q_stream_dlq" -> {
-      val stopFilter = s"len(list_filter(t.toks, w -> list_contains($stopList, w)))"
-      s"""WITH t AS ($tokCte)
-         |SELECT d.doc_id, d.lang, d.source,
-         |  CASE WHEN len(t.toks) < 10 THEN 'too_short'
-         |       WHEN $stopFilter = 0 THEN 'no_stopwords'
-         |       WHEN len(regexp_extract_all(d.text, '${TextAnalysis.EmailPattern}')) > 0 THEN 'pii_email'
-         |       WHEN len(regexp_extract_all(d.text, '${TextAnalysis.Ipv4Pattern}')) > 0 THEN 'pii_ipv4'
-         |       ELSE 'pii_digit_run' END AS reason
-         |FROM documents d JOIN t ON d.doc_id = t.doc_id
-         |WHERE NOT (len(t.toks) >= 10
-         |  AND $stopFilter > 0
-         |  AND len(regexp_extract_all(d.text, '${TextAnalysis.EmailPattern}')) = 0
-         |  AND len(regexp_extract_all(d.text, '${TextAnalysis.Ipv4Pattern}')) = 0
-         |  AND len(regexp_extract_all(d.text, '${TextAnalysis.DigitRunPattern}')) = 0)""".stripMargin
-    },
-    // KMV sketches replayed: same 60-bit seeded hash, same per-lang k
-    // smallest, same k-smallest-of-union estimator, exact Jaccard beside.
-    "q_kmv_overlap" -> {
-      import graft.operators.Sketches.{KmvK, KmvSeed}
-      s"""WITH t AS (SELECT lang,
-         |    unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS tok
-         |  FROM documents),
-         |lt AS (SELECT DISTINCT lang, tok FROM t WHERE length(tok) > 0),
-         |lh AS (SELECT DISTINCT lang, ${h60(KmvSeed, "tok")} AS h FROM lt),
-         |sk AS (SELECT lang, h FROM (
-         |    SELECT lang, h, row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
-         |    FROM lh) r WHERE rn <= $KmvK),
-         |langs AS (SELECT DISTINCT lang FROM sk),
-         |pairs AS (SELECT a.lang AS la, b.lang AS lb
-         |  FROM langs a JOIN langs b ON a.lang < b.lang),
-         |sides AS (SELECT la, lb, la AS lang FROM pairs
-         |  UNION ALL SELECT la, lb, lb AS lang FROM pairs),
-         |u AS (SELECT s.la, s.lb, k.h,
-         |    max(CASE WHEN k.lang = s.la THEN 1 ELSE 0 END) AS in_a,
-         |    max(CASE WHEN k.lang = s.lb THEN 1 ELSE 0 END) AS in_b
-         |  FROM sides s JOIN sk k USING (lang) GROUP BY s.la, s.lb, k.h),
-         |uk AS (SELECT * FROM (
-         |    SELECT u.*, row_number() OVER (PARTITION BY la, lb ORDER BY h) AS rn
-         |    FROM u) r WHERE rn <= $KmvK),
-         |est AS (SELECT la, lb,
-         |    CAST(sum(CASE WHEN in_a = 1 AND in_b = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
-         |    CAST(count(*) AS BIGINT) AS n_union_k
-         |  FROM uk GROUP BY la, lb),
-         |inter AS (SELECT a.lang AS la, b.lang AS lb,
-         |    CAST(count(*) AS BIGINT) AS exact_inter
-         |  FROM lt a JOIN lt b ON a.tok = b.tok AND a.lang < b.lang GROUP BY 1, 2),
-         |sizes AS (SELECT lang, CAST(count(*) AS BIGINT) AS nv FROM lt GROUP BY lang)
-         |SELECT e.la, e.lb, e.n_both, e.n_union_k,
-         |  CAST(e.n_both AS DOUBLE) / CAST(e.n_union_k AS DOUBLE) AS est_jaccard,
-         |  CAST(COALESCE(i.exact_inter, 0) AS DOUBLE)
-         |    / CAST(sa.nv + sb.nv - COALESCE(i.exact_inter, 0) AS DOUBLE) AS exact_jaccard
-         |FROM est e
-         |LEFT JOIN inter i ON i.la = e.la AND i.lb = e.lb
-         |JOIN sizes sa ON sa.lang = e.la
-         |JOIN sizes sb ON sb.lang = e.lb""".stripMargin
-    },
-    "q_pack_offsets" ->
-      s"""WITH $packCtes
-         |SELECT doc_id, n_tok, tok_start, first_chunk, last_chunk FROM spans""".stripMargin,
-    // Curriculum order: same shift-banded buckets as the drift histogram,
-    // per-bucket (h, doc_id) windows, exclusive bucket-size cumsum
-    "q_curriculum_order" -> {
-      import graft.operators.Sampling.{CurriculumBuckets, CurriculumShift, CurriculumSeed}
-      s"""WITH d AS (SELECT doc_id,
-         |    ${h60(CurriculumSeed, "doc_id")} AS h,
-         |    CAST(least(len(regexp_split_to_array(trim(text), '\\s+')) >> $CurriculumShift,
-         |      ${CurriculumBuckets - 1}) AS INTEGER) AS bucket
-         |  FROM documents),
-         |r AS (SELECT doc_id, bucket, h,
-         |    CAST(row_number() OVER (PARTITION BY bucket ORDER BY h, doc_id) - 1
-         |      AS BIGINT) AS rank
-         |  FROM d),
-         |sz AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY bucket),
-         |off AS (SELECT bucket, CAST(coalesce(sum(n) OVER (ORDER BY bucket
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS boff
-         |  FROM sz)
-         |SELECT r.doc_id, r.bucket, r.rank,
-         |  o.boff + r.rank AS pos_curriculum,
-         |  r.rank * $CurriculumBuckets + r.bucket AS pos_interleaved
-         |FROM r JOIN off o USING (bucket)""".stripMargin
-    },
-    // DSIR importance scores: the CTE chain in dsirScoreCtes (hashed
-    // features, smoothed target/raw histograms, fixed-point λ)
-    "q_dsir_score" -> s"WITH $dsirScoreCtes SELECT * FROM scores",
-    // DSIR resampling: the same scores + hash-Gumbel keys, pinned as the
-    // obvious global rank (the engine computes the set by counting)
-    "q_dsir_select" -> dsirSelectSql,
-    // ingestion DSIR: corpus-restricted weight training, smoothing-floor
-    // fallback for novel shard buckets
-    "q_dsir_incremental" -> dsirIncrementalSql,
-    // the streaming drain scores the same shard against the same frozen
-    // weights — oracle shared verbatim with the batch twin
-    "q_stream_dsir_score" -> dsirIncrementalSql,
-    // per-source steering rollup over the same score/selection CTEs
-    "q_dsir_report" -> dsirReportSql,
-    // Shard manifest: same keyed-hash shard + within-shard (h, doc_id)
-    // order, row digests XOR-folded per shard (the q_table_digest idiom)
-    // Padding waste: per-L naive padding sum + tail-only packed padding,
-    // integer milli shares; Ls interpolated from Packing.PackWasteLens
-    // Padding-waste card with the harmonic bestfit column: same per-(L,
-    // class) histogram as the engine (class -1 = oversize), ceil(cnt/m)
-    // bins per class, lateral aliases for the pad_packed reuse.
-    "q_pack_waste" -> {
-      val lensList = graft.operators.Packing.PackWasteLens.mkString(", ")
-      s"""WITH d AS (SELECT CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-         |    AS n_tok FROM documents),
-         |e AS (SELECT seq_len, n_tok,
-         |    CASE WHEN n_tok <= seq_len THEN seq_len // n_tok ELSE -1 END AS m,
-         |    ((n_tok + seq_len - 1) // seq_len) * seq_len - n_tok AS pad_doc
-         |  FROM d, (SELECT unnest(CAST([$lensList] AS BIGINT[])) AS seq_len) ls),
-         |c AS (SELECT seq_len, m, CAST(count(*) AS BIGINT) AS cnt,
-         |    CAST(sum(n_tok) AS BIGINT) AS toks,
-         |    CAST(sum(pad_doc) AS BIGINT) AS pad_naive_cls
-         |  FROM e GROUP BY 1, 2),
-         |p AS (SELECT seq_len,
-         |    CAST(sum(cnt) AS BIGINT) AS n_docs,
-         |    CAST(sum(toks) AS BIGINT) AS n_tokens,
-         |    CAST(sum(pad_naive_cls) AS BIGINT) AS pad_naive,
-         |    CAST(sum(CASE WHEN m >= 1
-         |        THEN ((cnt - 1) // m + 1) * seq_len - toks ELSE 0 END)
-         |      + sum(CASE WHEN m = -1 THEN pad_naive_cls ELSE 0 END) AS BIGINT)
-         |      AS pad_bestfit
-         |  FROM c GROUP BY seq_len)
-         |SELECT seq_len, n_docs, n_tokens, pad_naive, pad_bestfit,
-         |  CASE WHEN n_tokens > 0
-         |       THEN ((n_tokens + seq_len - 1) // seq_len) * seq_len - n_tokens
-         |       ELSE 0 END AS pad_packed,
-         |  CASE WHEN n_tokens + pad_naive > 0
-         |       THEN (pad_naive * 1000) // (n_tokens + pad_naive) ELSE 0 END
-         |    AS waste_naive_milli,
-         |  CASE WHEN n_tokens + pad_bestfit > 0
-         |       THEN (pad_bestfit * 1000) // (n_tokens + pad_bestfit) ELSE 0 END
-         |    AS waste_bestfit_milli,
-         |  CASE WHEN n_tokens + pad_packed > 0
-         |       THEN (pad_packed * 1000) // (n_tokens + pad_packed) ELSE 0 END
-         |    AS waste_packed_milli
-         |FROM p""".stripMargin
-    },
-    // No-split harmonic packing: same two-level within-class rank (the
-    // block decomposition is replayed, not shortcut, so the placement is
-    // bit-identical), bounded bin-offset windows, class-cumsum bin bases.
-    "q_pack_bestfit" -> {
-      val (sl, bk) = (graft.operators.Packing.SeqLen,
-        graft.operators.Packing.OffsetBucket)
-      s"""WITH t AS (SELECT doc_id,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |f AS (SELECT doc_id, n_tok, $sl // n_tok AS m, doc_id // $bk AS bkt
-         |  FROM t WHERE n_tok <= $sl),
-         |ir AS (SELECT doc_id, n_tok, m, bkt,
-         |    CAST(row_number() OVER (PARTITION BY m, bkt ORDER BY doc_id) - 1
-         |      AS BIGINT) AS ir
-         |  FROM f),
-         |bc AS (SELECT m, bkt, CAST(count(*) AS BIGINT) AS c FROM f GROUP BY m, bkt),
-         |bo AS (SELECT m, bkt, CAST(coalesce(sum(c) OVER (PARTITION BY m
-         |      ORDER BY bkt ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |      0) AS BIGINT) AS c_off
-         |  FROM bc),
-         |r AS (SELECT ir.doc_id, ir.n_tok, ir.m,
-         |    (bo.c_off + ir.ir) // ir.m AS b,
-         |    (bo.c_off + ir.ir) % ir.m AS slot
-         |  FROM ir JOIN bo ON ir.m = bo.m AND ir.bkt = bo.bkt),
-         |o AS (SELECT doc_id, n_tok, m, b, slot,
-         |    CAST(coalesce(sum(n_tok) OVER (PARTITION BY m, b ORDER BY slot
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         |      AS tok_offset
-         |  FROM r),
-         |cb AS (SELECT m, (CAST(count(*) AS BIGINT) - 1) // m + 1 AS n_bins
-         |  FROM f GROUP BY m),
-         |co AS (SELECT m, CAST(coalesce(sum(n_bins) OVER (ORDER BY m
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         |      AS bin_base
-         |  FROM cb)
-         |SELECT o.doc_id, o.n_tok, TRUE AS fits, o.m AS m_class,
-         |  (co.bin_base + o.b) AS bin_id, o.slot AS bin_slot, o.tok_offset
-         |FROM o JOIN co ON o.m = co.m
-         |UNION ALL
-         |SELECT doc_id, n_tok, FALSE AS fits, CAST(NULL AS BIGINT) AS m_class,
-         |  CAST(NULL AS BIGINT) AS bin_id, CAST(NULL AS BIGINT) AS bin_slot,
-         |  CAST(NULL AS BIGINT) AS tok_offset
-         |FROM t WHERE n_tok > $sl""".stripMargin
-    },
-    // Zipf slope: vocabulary top-k rank window, milli-nat ln_f axes,
-    // closed-form integer least squares
-    "q_zipf_fit" -> {
-      import graft.functions.FixedPointLn.lnFSql
-      s"""WITH c AS (SELECT tok, CAST(count(*) AS BIGINT) AS freq FROM (
-         |    SELECT unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS tok
-         |    FROM documents) u
-         |  WHERE tok <> '' GROUP BY tok),
-         |r AS (SELECT freq,
-         |    row_number() OVER (ORDER BY freq DESC, tok ASC) AS rank
-         |  FROM c ORDER BY freq DESC, tok ASC LIMIT ${TextAnalysis.ZipfTopK}),
-         |xy AS (SELECT
-         |  ${lnFSql("rank", "lx")},
-         |  ${lnFSql("freq", "ly")},
-         |  lx // 1000 AS x, ly // 1000 AS y
-         |  FROM r),
-         |s AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
-         |    CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * y) AS BIGINT) AS sxy,
-         |    CAST(sum(x * x) AS BIGINT) AS sxx FROM xy)
-         |SELECT n AS n_terms,
-         |  CASE WHEN n * sxx - sx * sx <> 0
-         |       THEN ((n * sxy - sx * sy) * 1000) // (n * sxx - sx * sx)
-         |       ELSE 0 END AS slope_milli
-         |FROM s""".stripMargin
-    },
-    // Novelty curve: the bucket/min-bucket aggregation chain replayed
-    // verbatim; every count cast to BIGINT and the cumulative window
-    // cast back down from DuckDB's HUGEINT
-    "q_ngram_novelty" -> {
-      val b = TextAnalysis.NoveltyBuckets
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |mx AS (SELECT max(doc_id) AS m FROM documents),
-         |e AS (SELECT (doc_id * $b) // ((SELECT m FROM mx) + 1) AS bucket,
-         |    unnest(sh) AS sg FROM sh),
-         |bg AS (SELECT bucket, sg, CAST(count(*) AS BIGINT) AS n_inst
-         |  FROM e GROUP BY 1, 2),
-         |nb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_ngrams,
-         |    CAST(sum(n_inst) AS BIGINT) AS n_ngram_rows FROM bg GROUP BY 1),
-         |nn AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_new FROM (
-         |    SELECT sg, min(bucket) AS bucket FROM bg GROUP BY 1) f GROUP BY 1),
-         |nd AS (SELECT (doc_id * $b) // ((SELECT m FROM mx) + 1) AS bucket,
-         |    CAST(count(*) AS BIGINT) AS n_docs FROM documents GROUP BY 1)
-         |SELECT nd.bucket, nd.n_docs,
-         |  coalesce(nb.n_ngrams, 0) AS n_ngrams,
-         |  coalesce(nb.n_ngram_rows, 0) AS n_ngram_rows,
-         |  coalesce(nn.n_new, 0) AS n_new,
-         |  CAST(sum(coalesce(nn.n_new, 0)) OVER (ORDER BY nd.bucket)
-         |    AS BIGINT) AS cum_vocab,
-         |  CASE WHEN coalesce(nb.n_ngrams, 0) > 0
-         |       THEN coalesce(nn.n_new, 0) * 1000 // nb.n_ngrams
-         |       ELSE 0 END AS novelty_milli
-         |FROM nd LEFT JOIN nb ON nd.bucket = nb.bucket
-         |        LEFT JOIN nn ON nd.bucket = nn.bucket""".stripMargin
-    },
-    // Heaps exponent: the novelty chain's cumulative points on milli-nat
-    // ln_f axes, the q_zipf_fit least-squares tail
-    "q_heaps_fit" -> {
-      import graft.functions.FixedPointLn.lnFSql
-      val b = TextAnalysis.NoveltyBuckets
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |mx AS (SELECT max(doc_id) AS m FROM documents),
-         |e AS (SELECT (doc_id * $b) // ((SELECT m FROM mx) + 1) AS bucket,
-         |    unnest(sh) AS sg FROM sh),
-         |bg AS (SELECT bucket, sg, CAST(count(*) AS BIGINT) AS n_inst
-         |  FROM e GROUP BY 1, 2),
-         |nb AS (SELECT bucket, CAST(sum(n_inst) AS BIGINT) AS n_ngram_rows
-         |  FROM bg GROUP BY 1),
-         |nn AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_new FROM (
-         |    SELECT sg, min(bucket) AS bucket FROM bg GROUP BY 1) f GROUP BY 1),
-         |nd AS (SELECT (doc_id * $b) // ((SELECT m FROM mx) + 1) AS bucket
-         |  FROM documents GROUP BY 1),
-         |pts AS (SELECT
-         |    CAST(sum(coalesce(nb.n_ngram_rows, 0)) OVER (ORDER BY nd.bucket)
-         |      AS BIGINT) AS cum_rows,
-         |    CAST(sum(coalesce(nn.n_new, 0)) OVER (ORDER BY nd.bucket)
-         |      AS BIGINT) AS cum_vocab
-         |  FROM nd LEFT JOIN nb ON nd.bucket = nb.bucket
-         |          LEFT JOIN nn ON nd.bucket = nn.bucket),
-         |xy AS (SELECT
-         |  ${lnFSql("cum_rows", "lx")},
-         |  ${lnFSql("cum_vocab", "ly")},
-         |  lx // 1000 AS x, ly // 1000 AS y
-         |  FROM pts WHERE cum_rows > 0 AND cum_vocab > 0),
-         |s AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
-         |    CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * y) AS BIGINT) AS sxy,
-         |    CAST(sum(x * x) AS BIGINT) AS sxx FROM xy)
-         |SELECT n AS n_points,
-         |  CASE WHEN n * sxx - sx * sx <> 0
-         |       THEN ((n * sxy - sx * sy) * 1000) // (n * sxx - sx * sx)
-         |       ELSE 0 END AS slope_milli
-         |FROM s""".stripMargin
-    },
-    // Denylist-phrase card: positional bigrams against the literal list
-    "q_phrase_blocklist" -> {
-      val phrases =
-        TextAnalysis.BlockedPhrases.map(p => s"'$p'").mkString(", ")
-      s"""WITH t AS (SELECT source, doc_id,
-         |    regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-         |  FROM documents),
-         |b AS (SELECT source, doc_id,
-         |    unnest(list_transform(range(1, len(ts)),
-         |      i -> ts[i] || ' ' || ts[i+1])) AS bg
-         |  FROM t WHERE len(ts) >= 2),
-         |f AS (SELECT source, CAST(count(*) AS BIGINT) AS n_occurrences,
-         |    CAST(count(DISTINCT doc_id) AS BIGINT) AS n_flagged
-         |  FROM b WHERE bg IN ($phrases) GROUP BY 1),
-         |d AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-         |  FROM documents GROUP BY 1)
-         |SELECT d.source, d.n_docs,
-         |  coalesce(f.n_occurrences, 0) AS n_occurrences,
-         |  coalesce(f.n_flagged, 0) AS n_flagged,
-         |  coalesce(f.n_flagged, 0) * 1000 // d.n_docs AS flagged_milli
-         |FROM d LEFT JOIN f ON d.source = f.source""".stripMargin
-    },
-    // Token-budget source cap: the counting selection collapses to its
-    // sort-order CONTRACT in SQL — kept iff the token mass hashed
-    // strictly before the doc (within its source) is under budget
-    "q_source_budget" -> {
-      import graft.operators.Sampling.{SourceBudgetSeed, SourceBudgetTokens}
-      s"""WITH t AS (SELECT source, doc_id,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok,
-         |    ${h60(SourceBudgetSeed, "doc_id")} % ${1L << 20} AS h
-         |  FROM documents),
-         |c AS (SELECT source, doc_id, tok,
-         |    CAST(coalesce(sum(tok) OVER (PARTITION BY source
-         |      ORDER BY h, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS cum_before
-         |  FROM t)
-         |SELECT source, doc_id, tok FROM c
-         |WHERE cum_before < $SourceBudgetTokens""".stripMargin
-    },
-    // Domain curation family: every oracle rebuilds the deterministic URL
-    // string and RE-PARSES it with the same two regexps the engine uses —
-    // extraction is checked end to end, not assumed.
-    "q_domain_urls" ->
-      s"""WITH $domainUrlCtes
-         |SELECT doc_id, url, host, domain, tok FROM x""".stripMargin,
-    // per-domain rollup; dup fingerprints counted WITHIN the domain
-    "q_domain_stats" ->
-      s"""WITH $domainUrlCtes,
-         |f AS (SELECT domain, host,
-         |    md5(regexp_replace(lower(trim(nfc_normalize(text))), '\\s+', ' ', 'g')) AS fp,
-         |    tok
-         |  FROM x),
-         |c AS (SELECT domain, fp, count(*) AS n_copies
-         |  FROM f GROUP BY domain, fp)
-         |SELECT f.domain, count(*) AS n_docs,
-         |  count(DISTINCT f.host) AS n_hosts,
-         |  CAST(sum(CASE WHEN c.n_copies > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_dup_docs,
-         |  CAST(sum(f.tok) AS BIGINT) AS total_tokens,
-         |  CAST(sum(f.tok) AS DOUBLE) / count(*) AS avg_tokens
-         |FROM f JOIN c ON f.domain = c.domain AND f.fp = c.fp
-         |GROUP BY f.domain""".stripMargin,
-    // frequency cap: counting selection collapses to its rank CONTRACT
-    "q_domain_cap" -> {
-      import graft.operators.Domains.{DomainCapDocs, DomainCapSeed}
-      s"""WITH $domainUrlCtes,
-         |h AS (SELECT domain, doc_id,
-         |    ${h60(DomainCapSeed, "doc_id")} % ${1L << 20} AS h FROM x),
-         |r AS (SELECT domain, doc_id, h,
-         |    row_number() OVER (PARTITION BY domain ORDER BY h, doc_id) AS rn
-         |  FROM h)
-         |SELECT domain, doc_id, h FROM r WHERE rn <= $DomainCapDocs""".stripMargin
-    },
-    // token budget per domain: the q_source_budget contract on the
-    // registered-domain key
-    "q_domain_budget" -> {
-      import graft.operators.Domains.{DomainBudgetSeed, DomainBudgetTokens}
-      s"""WITH $domainUrlCtes,
-         |t AS (SELECT domain, doc_id, tok,
-         |    ${h60(DomainBudgetSeed, "doc_id")} % ${1L << 20} AS h FROM x),
-         |c AS (SELECT domain, doc_id, tok,
-         |    CAST(coalesce(sum(tok) OVER (PARTITION BY domain
-         |      ORDER BY h, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS cum_before
-         |  FROM t)
-         |SELECT domain, doc_id, tok FROM c
-         |WHERE cum_before < $DomainBudgetTokens""".stripMargin
-    },
-    // Domain-level temperature: per-domain budget = tempered n^(1/T)
-    // share, same fixed-point ln/exp chains as the mixture oracles, then
-    // the q_domain_budget window-cumsum contract with per-domain budgets.
-    "q_domain_budget_tempered" -> domainBudgetTemperedOracle,
-    // Incremental + streaming twins share one oracle: an arrival is
-    // admitted iff the CORPUS token mass hashed strictly before it
-    // (within its domain) is under budget — a correlated sum over the
-    // frozen side, replaying the probe's (h, doc_id) order rule.
-    "q_domain_budget_incremental" -> domainBudgetIncrementalOracle,
-    "q_stream_domain_budget" -> domainBudgetIncrementalOracle,
-    // Per-domain quality card: same classifier fold as q_classifier_score
-    // and a lowercase stopword prose rule, rolled up in exact milli.
-    "q_domain_quality" -> {
-      import graft.operators.Domains.DomainKeepMilli
-      import graft.operators.TextAnalysis.{ClsSeed, ClsWeightMod, ClsWeightShift}
-      s"""WITH $domainUrlCtes,
-         |f AS (SELECT domain, tok,
-         |    CAST(coalesce(list_sum(list_transform(
-         |      list_filter(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'),
-         |        z -> z <> ''),
-         |      t2 -> ${h60(ClsSeed, "t2")} % $ClsWeightMod - $ClsWeightShift)), 0)
-         |      AS BIGINT) AS score,
-         |    len(list_filter(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'),
-         |      z -> list_contains($stopList, z))) AS n_stop
-         |  FROM x),
-         |a AS (SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(score) AS BIGINT) AS sum_score,
-         |    CAST(sum(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-         |    CAST(sum(CASE WHEN tok >= 10 AND n_stop > 0 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_quality
-         |  FROM f GROUP BY domain)
-         |SELECT domain, n_docs, sum_score, n_keep,
-         |  n_keep * 1000 // n_docs AS keep_milli,
-         |  n_quality, n_quality * 1000 // n_docs AS quality_milli,
-         |  (n_keep * 1000 // n_docs >= $DomainKeepMilli
-         |    AND n_quality * 1000 // n_docs >= $DomainKeepMilli) AS domain_keep
-         |FROM a""".stripMargin
-    },
-    // HTML extraction family (r14): the page is REBUILT and RE-PARSED by
-    // the same two RE2-safe regexps the engine runs — extractor checked,
-    // not assumed.
-    "q_html_extract" -> htmlExtractOracle,
-    // the streaming twin unions doc-local per-batch reports — same rows
-    "q_stream_html_extract" -> htmlExtractOracle,
-    "q_html_boilerplate" ->
-      s"""WITH $htmlCtes
-         |SELECT source, CAST(count(*) AS BIGINT) AS pages,
-         |  CAST(sum(length(html)) AS BIGINT) AS html_chars,
-         |  CAST(sum(length(main)) AS BIGINT) AS main_chars,
-         |  (CAST(sum(length(html)) AS BIGINT) - CAST(sum(length(main)) AS BIGINT))
-         |    * 1000 // CAST(sum(length(html)) AS BIGINT) AS boilerplate_milli
-         |FROM hm GROUP BY source""".stripMargin,
-    "q_html_dedup_lift" ->
-      s"""WITH $htmlCtes,
-         |r AS (SELECT md5(lower(html)) AS f, count(*) AS n FROM hm GROUP BY 1),
-         |m AS (SELECT md5(lower(main)) AS f, count(*) AS n FROM hm GROUP BY 1)
-         |SELECT CAST((SELECT count(*) FROM hm) AS BIGINT) AS n_docs,
-         |  CAST(coalesce((SELECT sum(n) FROM r WHERE n > 1), 0) AS BIGINT)
-         |    AS raw_dup_docs,
-         |  CAST(coalesce((SELECT sum(n) FROM m WHERE n > 1), 0) AS BIGINT)
-         |    AS main_dup_docs""".stripMargin,
-    // Host-level link graph (r15): pages rebuilt, anchors re-parsed with
-    // the engine's own patterns, resolved and aggregated to the
-    // cross-host edge list — the parse is what's checked, not assumed.
-    "q_link_hosts" ->
-      s"""WITH $linkCtes
-         |SELECT src_host, dst_host, n_links FROM le""".stripMargin,
-    // streaming twin: doc-local parse + shared post-drain rollup == batch
-    "q_stream_link_hosts" ->
-      s"""WITH $linkCtes
-         |SELECT src_host, dst_host, n_links FROM le""".stripMargin,
-    // Host authority: the shared all-integer PageRank unroll over the
-    // parsed host graph, plus distinct in/out counterparty counts.
-    "q_link_rank" -> {
-      import graft.operators.GraphAnalytics.PrIters
-      s"""WITH $linkCtes,
-         |e AS (SELECT src_host AS src, dst_host AS dst, n_links AS w FROM le),
-         |${pageRankCtes("e")},
-         |ind AS (SELECT dst_host, CAST(count(DISTINCT src_host) AS BIGINT) AS n_in
-         |  FROM le GROUP BY 1),
-         |outd AS (SELECT src_host, CAST(count(DISTINCT dst_host) AS BIGINT) AS n_out
-         |  FROM le GROUP BY 1)
-         |SELECT p.id AS host, p.pr,
-         |  CAST(coalesce(i.n_in, 0) AS BIGINT) AS n_in,
-         |  CAST(coalesce(o.n_out, 0) AS BIGINT) AS n_out
-         |FROM pr$PrIters p
-         |LEFT JOIN ind i ON i.dst_host = p.id
-         |LEFT JOIN outd o ON o.src_host = p.id""".stripMargin
-    },
-    // Crawl frontier: every anchor (absolute AND relative), targets
-    // anti-checked against the corpus id set per target host.
-    "q_link_frontier" ->
-      s"""WITH $linkCtes,
-         |k AS (SELECT DISTINCT doc_id FROM hd)
-         |SELECT dst_host,
-         |  CAST(count(*) AS BIGINT) AS n_links,
-         |  CAST(count(DISTINCT dst_page) AS BIGINT) AS n_targets,
-         |  CAST(count(DISTINCT CASE WHEN k.doc_id IS NULL THEN dst_page END)
-         |    AS BIGINT) AS n_frontier
-         |FROM lall LEFT JOIN k ON lall.dst_page = k.doc_id
-         |GROUP BY dst_host""".stripMargin,
-    // Authority-as-curation-prior: per source, the summed/avg host rank
-    // of its pages (isolated hosts count 0 — the honest floor).
-    "q_link_authority" -> linkAuthorityOracle,
-    // stored-rank twin: integer ranks round-trip parquet exactly, so the
-    // card is hash-identical and shares the fresh oracle verbatim
-    "q_link_authority_stored" -> linkAuthorityOracle,
-    // Pivot-sampled harmonic centrality: same seeded-md5 pivot draw,
-    // HcRounds unrolled min-relaxation rounds (MATERIALIZED — each round
-    // references the previous twice), radius-truncated 1000//d scoring.
-    "q_link_harmonic" -> {
-      import graft.operators.LinkGraph.{HcPivots, HcRounds, HcSeed}
-      // `pivot` is a DuckDB keyword (PIVOT statement) — the replay
-      // names the column `piv`
-      val roundCtes = (0 until HcRounds).map { t =>
-        s"""d${t + 1} AS MATERIALIZED (SELECT piv, host, CAST(min(d) AS INTEGER) AS d FROM (
-           |  SELECT piv, host, d FROM d$t
-           |  UNION ALL
-           |  SELECT d$t.piv, e2.dst AS host, d$t.d + 1 AS d
-           |  FROM d$t JOIN e2 ON d$t.host = e2.src) t GROUP BY 1, 2)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $linkCtes,
-         |e2 AS (SELECT src_host AS src, dst_host AS dst FROM le),
-         |hn AS (SELECT src AS host FROM e2 UNION SELECT dst FROM e2),
-         |pv AS (SELECT host AS piv FROM hn
-         |  ORDER BY ${h60(HcSeed, "host")} ASC, host ASC LIMIT $HcPivots),
-         |d0 AS MATERIALIZED (SELECT piv, piv AS host, 0 AS d FROM pv),
-         |$roundCtes,
-         |hc AS (SELECT host, CAST(sum(1000 // d) AS BIGINT) AS h,
-         |    CAST(count(*) AS BIGINT) AS r, CAST(min(d) AS INTEGER) AS m
-         |  FROM d$HcRounds WHERE d >= 1 GROUP BY host)
-         |SELECT hn.host,
-         |  CAST(coalesce(hc.h, 0) AS BIGINT) AS h_milli,
-         |  CAST(coalesce(hc.r, 0) AS BIGINT) AS n_pivots_reached,
-         |  CAST(coalesce(hc.m, 0) AS INTEGER) AS min_d
-         |FROM hn LEFT JOIN hc ON hc.host = hn.host""".stripMargin
-    },
-    // TrustRank: the personalized unroll with the deterministic seed
-    // rule (hosts of the lexicographically first source) replayed.
-    "q_link_trustrank" -> {
-      import graft.operators.GraphAnalytics.PrIters
-      s"""WITH $linkCtes,
-         |ss AS (SELECT min(source) AS ssrc FROM hd),
-         |sd AS (SELECT DISTINCT ${hostOfSql("doc_id")} AS id
-         |  FROM hd, ss WHERE hd.source = ss.ssrc),
-         |e AS (SELECT src_host AS src, dst_host AS dst, n_links AS w FROM le),
-         |${personalizedPageRankCtes("e", "sd")}
-         |SELECT id AS host, pr AS trust, seed AS is_seed
-         |FROM pr$PrIters""".stripMargin
-    },
-    // Stored-rank staleness: base chain (= the stored ranks, integers
-    // round-trip parquet) vs a d-suffixed grown-re-crawl chain, per-host
-    // FULL join into status buckets + frontier totals + rebuild verdict.
-    "q_link_rank_stale" -> linkRankStaleOracle,
-    // Anchor-text hybrid: anchor index from lall's cross-host anchors,
-    // host-level integer-ratio BM25, doc expansion, RRF fusion.
-    "q_anchor_bm25" -> anchorBm25Oracle,
-    // stored-index twin: exact (host, tok, tf) longs round-trip parquet,
-    // so the fused card is hash-identical and shares the fresh oracle
-    "q_anchor_bm25_stored" -> anchorBm25Oracle,
-    "q_anchor_context" -> (s"WITH $anchorContextCtes\n" +
-      """SELECT doc_id, src_host, dst_host, absolute, atext AS anchor_text,
-        |  array_to_string(ctx_b, ' ') AS ctx_before,
-        |  array_to_string(ctx_a, ' ') AS ctx_after
-        |FROM acw""".stripMargin),
-    "q_anchor_ctx_bm25_stored" -> anchorCtxBm25Oracle,
-    // incremental twin: base ⊎ shard term counts ≡ the full index (tf is
-    // per-page additive), so the merged ranking replays the fresh oracle
-    "q_anchor_ctx_incremental" -> anchorCtxBm25Oracle,
-    // streaming twin: micro-batches partition the shard and tf partials
-    // sum in the post-drain rollup — same additive argument, same oracle
-    "q_stream_anchor_ctx" -> anchorCtxBm25Oracle,
-    // publish/compaction: the published artifact must equal the full
-    // rebuild, so the oracle replays the full context bag and rolls it
-    // up per host (n_terms = distinct tokens, dl = total occurrences)
-    "q_anchor_ctx_publish" -> (s"""WITH $anchorContextCtes,
-       |ct AS (SELECT dst_host AS host, unnest(atoks || ctx_b || ctx_a) AS tok
-       |  FROM acw WHERE dst_host <> src_host)
-       |SELECT host, CAST(count(DISTINCT tok) AS BIGINT) AS n_terms,
-       |  CAST(count(*) AS BIGINT) AS dl
-       |FROM ct GROUP BY host""".stripMargin),
-    "q_anchor_ctx_fused" -> anchorCtxFusedOracle,
-    // Retention funnel with the TrustRank spam gate: PR + personalized
-    // PR over the link chain, then first-reject CASE per document.
-    "q_pipeline_trust_funnel" -> trustFunnelOracle,
-    "q_trust_funnel_incremental" -> trustFunnelIncrementalOracle,
-    "q_stream_trust_funnel" -> trustFunnelIncrementalOracle,
-    "q_trust_funnel_stored" -> trustFunnelIncrementalOracle,
-    // Web communities: recursive-CTE transitive closure over the parsed
-    // host graph (the q_dedup_clusters oracle shape on string keys).
-    "q_link_components" ->
-      s"""WITH RECURSIVE $linkCtes,
-         |eu AS MATERIALIZED (SELECT src_host AS src, dst_host AS dst FROM le
-         |  UNION SELECT dst_host, src_host FROM le),
-         |hn AS (SELECT src AS host FROM eu UNION SELECT dst FROM eu),
-         |reach(id, root) AS (
-         |  SELECT host, host FROM hn
-         |  UNION
-         |  SELECT e.dst, r.root FROM reach r JOIN eu e ON e.src = r.id),
-         |labels AS (SELECT id AS host, min(root) AS component_id
-         |  FROM reach GROUP BY id),
-         |sizes AS (SELECT component_id, CAST(count(*) AS BIGINT) AS component_n
-         |  FROM labels GROUP BY 1)
-         |SELECT l.host, l.component_id, s.component_n
-         |FROM labels l JOIN sizes s USING (component_id)""".stripMargin,
-    // Domain x domain contamination: the brute-force pair set joined to
-    // the rebuilt-and-reparsed domain of each endpoint.
-    "q_domain_overlap" ->
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte,
-         |$domainUrlCtes
-         |SELECT least(da.domain, db.domain) AS dom_a,
-         |  greatest(da.domain, db.domain) AS dom_b,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM pairs p
-         |JOIN x da ON da.doc_id = p.doc_a
-         |JOIN x db ON db.doc_id = p.doc_b
-         |GROUP BY 1, 2""".stripMargin,
-    "q_shard_manifest" -> {
-      import graft.operators.Packing.{ShardCount, ShardSeed}
-      s"""WITH d AS (SELECT doc_id,
-         |    ${h60(ShardSeed, "doc_id")} AS h,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-         |    ${h60(0, "concat_ws('|', doc_id, lang, source, md5(text))")} AS rh
-         |  FROM documents),
-         |s AS (SELECT h % $ShardCount AS shard, h, doc_id, n_tok, rh FROM d),
-         |m AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(n_tok) AS BIGINT) AS n_tokens, bit_xor(rh) AS digest
-         |  FROM s GROUP BY shard),
-         |hd AS (SELECT shard, doc_id AS first_doc FROM (
-         |    SELECT shard, doc_id,
-         |      row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) AS rn
-         |    FROM s) t
-         |  WHERE rn = 1)
-         |SELECT m.shard, m.n_docs, m.n_tokens, m.digest, hd.first_doc
-         |FROM m JOIN hd USING (shard)""".stripMargin
-    },
-    "q_token_ids" -> {
-      import graft.operators.TextAnalysis.{VocabSize, UnkId}
-      s"""WITH t AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts FROM documents),
-         |pos AS (SELECT doc_id, i - 1 AS pos, ts[i] AS tok FROM (
-         |    SELECT doc_id, ts, unnest(range(1, len(ts) + 1)) AS i FROM t) x),
-         |vocab AS (SELECT tok, row_number() OVER (ORDER BY n DESC, tok ASC) AS token_id
-         |  FROM (SELECT tok, count(*) AS n FROM pos GROUP BY tok
-         |        ORDER BY n DESC, tok ASC LIMIT $VocabSize) f)
-         |SELECT p.doc_id, p.pos, COALESCE(v.token_id, $UnkId) AS token_id
-         |FROM pos p LEFT JOIN vocab v USING (tok)""".stripMargin
-    },
-    // k-core peel replayed round by round: same canonical edges, same
-    // simultaneous degree-< k drop per round, degrees of the survivor set.
-    "q_kcore_words" -> {
-      import graft.operators.GraphAnalytics.{KCoreK, KCoreRounds}
-      val roundCtes = (1 to KCoreRounds).map { r =>
-        s"""d$r AS MATERIALIZED (SELECT w, count(*) AS d FROM (
-           |    SELECT a AS w FROM e${r - 1} UNION ALL SELECT b FROM e${r - 1}) u
-           |  GROUP BY w),
-           |k$r AS MATERIALIZED (SELECT w FROM d$r WHERE d >= $KCoreK),
-           |e$r AS MATERIALIZED (SELECT a, b FROM e${r - 1}
-           |  WHERE a IN (SELECT w FROM k$r) AND b IN (SELECT w FROM k$r))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ts AS (SELECT regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-         |  FROM documents),
-         |bgidx AS (SELECT ts, unnest(range(1, len(ts))) AS i
-         |  FROM ts WHERE len(ts) >= 2),
-         |e0 AS MATERIALIZED (SELECT DISTINCT least(ts[i], ts[i+1]) AS a, greatest(ts[i], ts[i+1]) AS b
-         |  FROM bgidx WHERE ts[i] <> ts[i+1]),
-         |$roundCtes
-         |SELECT w AS word, CAST(count(*) AS BIGINT) AS degree FROM (
-         |  SELECT a AS w FROM e$KCoreRounds UNION ALL SELECT b FROM e$KCoreRounds) u
-         |GROUP BY w""".stripMargin
-    },
-    // Degree-ordered triangle enumeration replayed: same canonical edges,
-    // same (degree, id) orientation rule, same wedge-close join.
-    "q_word_triangles" -> {
-      import graft.operators.GraphAnalytics.TriangleK
-      s"""WITH ts AS (SELECT regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-         |  FROM documents),
-         |bgidx AS (SELECT ts, unnest(range(1, len(ts))) AS i
-         |  FROM ts WHERE len(ts) >= 2),
-         |edges AS MATERIALIZED (SELECT DISTINCT least(ts[i], ts[i+1]) AS a, greatest(ts[i], ts[i+1]) AS b
-         |  FROM bgidx WHERE ts[i] <> ts[i+1]),
-         |deg AS (SELECT w, count(*) AS d FROM (
-         |    SELECT a AS w FROM edges UNION ALL SELECT b FROM edges) GROUP BY w),
-         |orient AS (SELECT
-         |    CASE WHEN da.d < db.d OR (da.d = db.d AND e.a < e.b) THEN e.a ELSE e.b END AS u,
-         |    CASE WHEN da.d < db.d OR (da.d = db.d AND e.a < e.b) THEN e.b ELSE e.a END AS v
-         |  FROM edges e JOIN deg da ON da.w = e.a JOIN deg db ON db.w = e.b),
-         |tri AS (SELECT x.u, x.v AS vv, y.v AS ww
-         |  FROM orient x JOIN orient y ON x.u = y.u AND x.v < y.v
-         |  JOIN edges ed ON ed.a = x.v AND ed.b = y.v)
-         |SELECT word, count(*) AS n_triangles FROM (
-         |  SELECT u AS word FROM tri
-         |  UNION ALL SELECT vv FROM tri
-         |  UNION ALL SELECT ww FROM tri) t
-         |GROUP BY word ORDER BY n_triangles DESC, word ASC LIMIT $TriangleK""".stripMargin
-    },
-    "q_bm25_topk" -> bm25TopKOracle,
-    "q_pack_chunks" -> {
-      val L = graft.operators.Packing.SeqLen
-      s"""WITH $packCtes,
-         |ex AS (SELECT doc_id, n_tok, tok_start,
-         |    unnest(range(first_chunk, last_chunk + 1)) AS chunk_id FROM spans)
-         |SELECT chunk_id, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN tok_start >= chunk_id * $L THEN 1 ELSE 0 END) AS BIGINT) AS n_starts,
-         |  CAST(sum(least(tok_start + n_tok, (chunk_id + 1) * $L)
-         |         - greatest(tok_start, chunk_id * $L)) AS BIGINT) AS n_tokens
-         |FROM ex GROUP BY chunk_id""".stripMargin
-    },
-    "q_stream_enriched" ->
-      """SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us,
-        |  CAST(round(e.value * 100) AS BIGINT) AS value_cents,
-        |  c.c_mktsegment, c.c_nationkey
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |WHERE e.event_type = 'purchase'""".stripMargin,
-    // The append-mode funnel's full semantic replay: per-step first-after
-    // minima confined to the 24h conversion window AND the final watermark
-    // (resolution ≡ presence under `us <= wm`), then the three-way
-    // emission rule (complete | window closed | never-started GC). The
-    // watermark mirrors Spark's ms floor: ((max_us // 1000) - 3600000) * 1000.
-    "q_stream_funnel_append" -> {
-      import graft.streaming.EventStreams.FunnelWindowUs
-      val steps = graft.operators.EventAnalytics.FunnelSteps
-      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events),
-         |wm AS (SELECT ((max(us) // 1000) - 3600000) * 1000 AS wm_us FROM e),
-         |mx AS (SELECT user_id, max(us) AS max_us FROM e GROUP BY user_id),
-         |s1 AS (SELECT user_id, min(us) AS t1 FROM e, wm
-         |  WHERE event_type = '${steps(0)}' AND us <= wm.wm_us GROUP BY user_id),
-         |s2 AS (SELECT e.user_id, min(us) AS t2 FROM e JOIN s1 USING (user_id), wm
-         |  WHERE event_type = '${steps(1)}' AND us > s1.t1
-         |    AND us <= s1.t1 + $FunnelWindowUs AND us <= wm.wm_us
-         |  GROUP BY e.user_id),
-         |s3 AS (SELECT e.user_id, min(us) AS t3
-         |  FROM e JOIN s1 USING (user_id) JOIN s2 USING (user_id), wm
-         |  WHERE event_type = '${steps(2)}' AND us > s2.t2
-         |    AND us <= s1.t1 + $FunnelWindowUs AND us <= wm.wm_us
-         |  GROUP BY e.user_id)
-         |SELECT u.user_id, s1.t1 AS step1_us, s2.t2 AS step2_us, s3.t3 AS step3_us
-         |FROM (SELECT DISTINCT user_id FROM e) u
-         |LEFT JOIN s1 USING (user_id)
-         |LEFT JOIN s2 USING (user_id)
-         |LEFT JOIN s3 USING (user_id)
-         |JOIN mx USING (user_id) CROSS JOIN wm
-         |WHERE s3.t3 IS NOT NULL
-         |   OR (s1.t1 IS NOT NULL AND s1.t1 + $FunnelWindowUs <= wm.wm_us)
-         |   OR (s1.t1 IS NULL AND mx.max_us + $FunnelWindowUs <= wm.wm_us)""".stripMargin
-    },
-    // Count-min: counters are exact integer sums per (row, bucket); the
-    // point estimate is a min over 4 rows. Per-row seeds mirror
-    // md5Long(tok, CmsSeedBase + row).
-    "q_countmin_probe" -> {
-      import graft.operators.Sketches._
-      val probeList = CmsProbes.map(w => s"'$w'").mkString(", ")
-      def bucketSql(x: String): String =
-        s"CAST(('0x' || substr(md5(CAST($CmsSeedBase + r.i AS VARCHAR) || ':' || $x), 1, 15)) AS BIGINT) % $CmsWidth"
-      s"""WITH t AS (SELECT
-         |    unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS tok
-         |  FROM documents),
-         |tt AS (SELECT tok FROM t WHERE length(tok) > 0),
-         |c AS (SELECT r.i AS row, ${bucketSql("tok")} AS bucket, count(*) AS c
-         |  FROM tt CROSS JOIN range(0, $CmsDepth) r(i) GROUP BY 1, 2),
-         |w AS (SELECT unnest([$probeList]) AS word),
-         |pb AS (SELECT w.word, r.i AS row, ${bucketSql("w.word")} AS bucket
-         |  FROM w CROSS JOIN range(0, $CmsDepth) r(i)),
-         |est AS (SELECT word, min(coalesce(c.c, 0)) AS est_count
-         |  FROM pb LEFT JOIN c ON pb.row = c.row AND pb.bucket = c.bucket
-         |  GROUP BY word),
-         |ex AS (SELECT tok AS word, count(*) AS exact_count FROM tt GROUP BY tok)
-         |SELECT est.word, est.est_count,
-         |  coalesce(ex.exact_count, 0) AS exact_count
-         |FROM est LEFT JOIN ex ON est.word = ex.word""".stripMargin
-    },
-    // Repetition signals: trigram-window counts over the capped RAW token
-    // axis (mirrors shingles), token histogram over lowercase tokens.
-    // Thresholds interpolated from the operator's constants.
-    "q_repetition" ->
-      s"""WITH t AS ($tokCte),
-         |c AS (SELECT doc_id,
-         |  toks[1:${graft.functions.TextFunctions.MaxShingleTokens}] AS toks FROM t),
-         |tri AS (SELECT doc_id,
-         |    CAST(greatest(len(toks) - 2, 0) AS INTEGER) AS n_trigrams,
-         |    CAST(CASE WHEN len(toks) >= 3 THEN len(list_distinct(list_transform(
-         |      range(0, len(toks) - 2), i -> array_to_string(toks[i+1:i+3], ' '))))
-         |      ELSE 0 END AS INTEGER) AS n_distinct_trigrams
-         |  FROM c),
-         |tok AS (SELECT doc_id, CAST(max(n) AS INTEGER) AS top_tok_n,
-         |    CAST(sum(n) AS INTEGER) AS n_tokens
-         |  FROM (SELECT doc_id, tok, count(*) AS n FROM (
-         |      SELECT doc_id,
-         |        unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS tok
-         |      FROM documents) u GROUP BY doc_id, tok) cnts
-         |  GROUP BY doc_id)
-         |SELECT tri.doc_id, tok.n_tokens, tri.n_trigrams, tri.n_distinct_trigrams,
-         |  CASE WHEN tri.n_trigrams > 0
-         |    THEN CAST(tri.n_trigrams - tri.n_distinct_trigrams AS DOUBLE) / tri.n_trigrams
-         |    ELSE 0.0 END AS dup_trigram_ratio,
-         |  tok.top_tok_n,
-         |  CAST(tok.top_tok_n AS DOUBLE) / tok.n_tokens AS top_token_frac,
-         |  (CASE WHEN tri.n_trigrams > 0
-         |     THEN CAST(tri.n_trigrams - tri.n_distinct_trigrams AS DOUBLE) / tri.n_trigrams
-         |     ELSE 0.0 END > ${TextAnalysis.RepetitionDupTrigramMax}
-         |   OR CAST(tok.top_tok_n AS DOUBLE) / tok.n_tokens
-         |      > ${TextAnalysis.RepetitionTopTokenMax}) AS is_repetitive
-         |FROM tri JOIN tok ON tri.doc_id = tok.doc_id""".stripMargin,
-    // The full k-round BPE training loop replayed: per round a weighted
-    // pair count over the current segmentation (top-1 by count DESC, pair
-    // ASC), the segmentation re-derived from s0 by a streaming nested
-    // list_reduce identical to the kernel's leftmost-first merge — only
-    // the 1-row merge CTEs are MATERIALIZED (see bpeChainCtes).
-    "q_bpe_trained" -> (bpeRoundCtes(TextAnalysis.DefaultBpeK) + "\n" +
-      "SELECT rank, a, b, n FROM m"),
-    // The SAME k-round training replay, but over the deterministic 1/16
-    // doc sample (h60 membership mirrors the engine's md5Long draw)
-    "q_bpe_sampled" -> ("WITH RECURSIVE " +
-      bpeChainCtes(TextAnalysis.DefaultBpeK, w = "wq", s = "t", m = "mm",
-        docWhere = bpeSampleWhere) + "\n" +
-      "SELECT rank, a, b, n FROM mm"),
-    // Agreement card: BOTH trainings side by side (exact chain w/s/m,
-    // sampled chain wq/t/mm), the sampled rules APPLIED to the full
-    // vocabulary (u folding mm's rules over the exact seed sr), and the
-    // freq-weighted segmentation-agreement scalar — all replayed,
-    // nothing asserted. The rank scaffold keeps the output at exactly k
-    // rows with NULL rule columns past an early stop (engine parity).
-    "q_bpe_sample_agreement" -> {
-      val k = TextAnalysis.DefaultBpeK
-      "WITH RECURSIVE " +
-        bpeChainCtes(k, w = "w", s = "s", m = "m", docWhere = "") + ",\n" +
-        bpeChainCtes(k, w = "wq", s = "t", m = "mm", docWhere = bpeSampleWhere) + ",\n" +
-        bpeApplyCtes(u = "u", m = "mm", seedRow = "sr") + ",\n" +
-        s"""agree AS MATERIALIZED (SELECT
-           |    (CAST(sum(CASE WHEN array_to_string(e.pieces, ' ')
-           |                      = array_to_string(u.pieces, ' ')
-           |         THEN e.freq ELSE 0 END) AS BIGINT) * 1000)
-           |      // CAST(sum(e.freq) AS BIGINT) AS seg_agree_milli
-           |  FROM s$k e JOIN u USING (word))
-           |SELECT rk.rank,
-           |  me.a AS exact_a, me.b AS exact_b,
-           |  ms.a AS sample_a, ms.b AS sample_b,
-           |  coalesce(me.a = ms.a AND me.b = ms.b, FALSE) AS rule_match,
-           |  agree.seg_agree_milli
-           |FROM (SELECT unnest(range(1, $k + 1)) AS rank) rk
-           |LEFT JOIN m me ON me.rank = rk.rank
-           |LEFT JOIN mm ms ON ms.rank = rk.rank
-           |CROSS JOIN agree""".stripMargin
-    },
-    "q_bpe_encode" -> (bpeRoundCtes(TextAnalysis.DefaultBpeK) + "\n" +
-      s"""SELECT word, freq, array_to_string(pieces, ' ') AS pieces,
-         |  CAST(len(pieces) AS BIGINT) AS n_pieces
-         |FROM s${TextAnalysis.DefaultBpeK}""".stripMargin),
-    // Fertility rollup: the encode chain above, joined to per-(lang, word)
-    // frequencies, |langs| rows out; fertility in integer thousandths
-    "q_tokenizer_fertility" -> (bpeRoundCtes(TextAnalysis.DefaultBpeK) + ",\n" +
-      s"""lw AS (SELECT lang, word, CAST(count(*) AS BIGINT) AS freq FROM (
-         |    SELECT lang, unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS word
-         |    FROM documents) t
-         |  WHERE length(word) >= 1 GROUP BY lang, word),
-         |p AS (SELECT word, CAST(len(pieces) AS BIGINT) AS n_pieces
-         |  FROM s${TextAnalysis.DefaultBpeK})
-         |SELECT lw.lang,
-         |  CAST(sum(lw.freq * p.n_pieces) AS BIGINT) AS n_bpe_tokens,
-         |  CAST(sum(lw.freq) AS BIGINT) AS n_words,
-         |  CAST(sum(lw.freq * length(lw.word)) AS BIGINT) AS n_chars,
-         |  CAST(sum(lw.freq * p.n_pieces) AS BIGINT) * 1000
-         |    // CAST(sum(lw.freq) AS BIGINT) AS fertility_milli
-         |FROM lw JOIN p USING (word)
-         |GROUP BY lw.lang""".stripMargin),
-    // Per-doc compression under the same persisted-tokenizer CTEs as
-    // fertility; the flag floor is corpus-relative integer milli
-    "q_doc_compression" -> (bpeRoundCtes(TextAnalysis.DefaultBpeK) + ",\n" +
-      s"""dw AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS freq FROM (
-         |    SELECT doc_id, unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS word
-         |    FROM documents) t
-         |  WHERE length(word) >= 1 GROUP BY doc_id, word),
-         |p AS (SELECT word, CAST(len(pieces) AS BIGINT) AS n_pieces
-         |  FROM s${TextAnalysis.DefaultBpeK}),
-         |perdoc AS (SELECT doc_id,
-         |    CAST(sum(freq) AS BIGINT) AS n_words,
-         |    CAST(sum(freq * length(word)) AS BIGINT) AS n_chars,
-         |    CAST(sum(freq * n_pieces) AS BIGINT) AS n_bpe
-         |  FROM dw JOIN p USING (word) GROUP BY doc_id),
-         |tot AS (SELECT CAST(sum(n_chars) AS BIGINT) AS t_chars,
-         |    CAST(sum(n_bpe) AS BIGINT) AS t_bpe FROM perdoc)
-         |SELECT d.doc_id, coalesce(p.n_words, 0) AS n_words,
-         |  coalesce(p.n_chars, 0) AS n_chars, coalesce(p.n_bpe, 0) AS n_bpe,
-         |  CASE WHEN coalesce(p.n_bpe, 0) > 0
-         |       THEN (coalesce(p.n_chars, 0) * 1000) // p.n_bpe ELSE 0 END
-         |    AS compression_milli,
-         |  coalesce(p.n_bpe, 0) > 0 AND
-         |  (CASE WHEN coalesce(p.n_bpe, 0) > 0
-         |        THEN (coalesce(p.n_chars, 0) * 1000) // p.n_bpe ELSE 0 END)
-         |    < (t_chars * ${1000 * TextAnalysis.CompressionFloorNum})
-         |      // (t_bpe * ${TextAnalysis.CompressionFloorDen}) AS flagged
-         |FROM documents d LEFT JOIN perdoc p USING (doc_id) CROSS JOIN tot""".stripMargin),
-    // Vocab-sizing curve: the SAME training recursion's intermediate
-    // round states (round r of mtr = segmentation under the first r
-    // rules — BPE's greedy prefix invariant), aggregated per checkpoint
-    "q_bpe_vocab_curve" -> (bpeRoundCtes(TextAnalysis.DefaultBpeK) + ",\n" +
-      s"""ckpts AS (SELECT round, seg FROM mtr
-         |  WHERE round IN (${TextAnalysis.BpeCurveCheckpoints.mkString(", ")})),
-         |cbase AS (SELECT CAST(sum(s.freq) AS BIGINT) AS n_words,
-         |    CAST(sum(s.freq * length(s.word)) AS BIGINT) AS n_chars
-         |  FROM sr, unnest(sr.seg) AS t0(s)),
-         |cagg AS (SELECT round,
-         |    CAST(sum(freq) AS BIGINT) AS n_bpe_tokens,
-         |    CAST(count(DISTINCT piece) AS BIGINT) AS n_distinct_pieces
-         |  FROM (SELECT round, s.freq AS freq, unnest(s.pieces) AS piece
-         |    FROM (SELECT round, unnest(seg) AS s FROM ckpts) z0) z1
-         |  GROUP BY round)
-         |SELECT CAST(round AS BIGINT) AS vocab_k,
-         |  CAST(round AS BIGINT) AS n_rules,
-         |  n_distinct_pieces, n_words, n_chars, n_bpe_tokens,
-         |  (n_bpe_tokens * 1000) // n_words AS fertility_milli,
-         |  (n_chars * 1000) // n_bpe_tokens AS compression_milli
-         |FROM cagg CROSS JOIN cbase""".stripMargin),
-    // Byte-fallback card: sampled trainer chain (wq/t/mm) + full-corpus
-    // seed (fsr) folded under the sampled rules (u); the kept alphabet
-    // is the minimal coverage prefix (cum_before·den < total·num), the
-    // vocabulary alphabet ∪ merge outputs (DISTINCT over UNION ALL — the
-    // WITH RECURSIVE UNION-dedup pitfall), OOV pieces expand to strlen
-    // bytes (DuckDB strlen = UTF-8 bytes = Spark octet_length)
-    "q_bpe_byte_fallback" -> {
-      val k = TextAnalysis.DefaultBpeK
-      "WITH RECURSIVE " +
-        bpeChainCtes(k, w = "wq", s = "t", m = "mm",
-          docWhere = bpeSampleWhere) + ",\n" +
-        bpeSeedCte("fsr", "fw", "") + ",\n" +
-        bpeApplyCtes(u = "u", m = "mm", seedRow = "fsr") + ",\n" +
-        s"""cfr AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS cf FROM (
-           |    SELECT s.freq AS freq, unnest(s.pieces) AS piece
-           |    FROM tr, unnest(tr.seg) AS t0(s)) z GROUP BY piece),
-           |alpha AS (SELECT piece FROM (
-           |    SELECT piece, cf,
-           |      coalesce(sum(cf) OVER (ORDER BY cf DESC, piece ASC
-           |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |        AS cum_before,
-           |      sum(cf) OVER () AS cf_total
-           |    FROM cfr) a
-           |  WHERE cum_before * ${TextAnalysis.BpeCoverageDen}
-           |      < cf_total * ${TextAnalysis.BpeCoverageNum}),
-           |vocabp AS (SELECT DISTINCT piece FROM (
-           |    SELECT piece FROM alpha
-           |    UNION ALL SELECT a || b AS piece FROM mm) vv),
-           |pstat AS (SELECT p.word AS word, CAST(count(*) AS BIGINT) AS wp,
-           |    CAST(sum(CASE WHEN v.piece IS NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS wo,
-           |    CAST(sum(CASE WHEN v.piece IS NULL THEN strlen(p.piece)
-           |      ELSE 1 END) AS BIGINT) AS wt
-           |  FROM (SELECT u.word AS word, unnest(u.pieces) AS piece FROM u) p
-           |  LEFT JOIN vocabp v ON p.piece = v.piece
-           |  GROUP BY p.word),
-           |lw AS (SELECT lang, word, CAST(count(*) AS BIGINT) AS freq FROM (
-           |    SELECT lang, unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS word
-           |    FROM documents) t
-           |  WHERE length(word) >= 1 GROUP BY lang, word)
-           |SELECT lw.lang,
-           |  CAST(sum(lw.freq) AS BIGINT) AS n_words,
-           |  CAST(sum(lw.freq * ps.wp) AS BIGINT) AS n_pieces,
-           |  CAST(sum(lw.freq * ps.wo) AS BIGINT) AS n_oov_pieces,
-           |  CAST(sum(lw.freq * ps.wt) AS BIGINT) AS n_tokens,
-           |  (CAST(sum(lw.freq * ps.wo) AS BIGINT) * 1000)
-           |    // CAST(sum(lw.freq * ps.wp) AS BIGINT) AS oov_permille
-           |FROM lw JOIN pstat ps USING (word)
-           |GROUP BY lw.lang""".stripMargin
-    },
-    // BPE step-one merge candidates: adjacent character pairs inside
-    // lowercase tokens; substr is character-based in both engines and the
-    // offset axes match (sequence 1..len-1 inclusive == range(1, len)).
-    "q_bpe_merges" ->
-      s"""SELECT pair, count(*) AS n FROM (
-         |  SELECT unnest(list_transform(range(1, length(tok)),
-         |                i -> substr(tok, CAST(i AS INTEGER), 2))) AS pair
-         |  FROM (SELECT unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS tok
-         |        FROM documents) t
-         |  WHERE length(tok) >= 2) p
-         |GROUP BY pair
-         |ORDER BY n DESC, pair ASC LIMIT ${TextAnalysis.DefaultBpeK}""".stripMargin,
-    // Bigram LM: Spark arrays are 0-based (ts[i-1], ts[i]); DuckDB lists
-    // are 1-based (ts[i], ts[i+1]) — both enumerate pairs 1..len-1.
-    "q_bigram_lm" ->
-      s"""WITH ts AS (SELECT regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-         |  FROM documents),
-         |bgidx AS (SELECT ts, unnest(range(1, len(ts))) AS i
-         |  FROM ts WHERE len(ts) >= 2),
-         |bg AS (SELECT ts[i] AS w1, ts[i + 1] AS w2 FROM bgidx),
-         |c AS (SELECT w1, w2, count(*) AS n_pair FROM bg GROUP BY w1, w2),
-         |t AS (SELECT w1, CAST(sum(n_pair) AS BIGINT) AS n_w1 FROM c GROUP BY w1),
-         |r AS (SELECT c.w1, c.w2, c.n_pair, t.n_w1,
-         |    row_number() OVER (PARTITION BY c.w1
-         |      ORDER BY c.n_pair DESC, c.w2 ASC) AS rank
-         |  FROM c JOIN t ON c.w1 = t.w1)
-         |SELECT w1, w2, n_pair, n_w1,
-         |  CAST(n_pair AS DOUBLE) / n_w1 AS p, rank
-         |FROM r WHERE rank <= ${TextAnalysis.DefaultBigramK}""".stripMargin,
-    // Rare-bigram fluency: same bigram axis as q_bigram_lm; rarity and the
-    // flag are integer cross-multiplications (n_corpus·RareDen < total;
-    // n_rare·100 > pct·n_bigrams) — no floats anywhere
-    "q_rare_bigram_rate" ->
-      s"WITH ${rareBigramCtes("")} SELECT * FROM raredoc",
-    // CCNet-style surprisal: same bigram axis as q_bigram_lm (add-1
-    // smoothing over it); both ln's are the portable fixed-point ln_f
-    // chain (FixedPointLn.lnFSql), so nll sums are exact BIGINTs
-    "q_lm_surprisal" ->
-      s"WITH ${lmSurprisalCtes("")} SELECT * FROM lmdoc",
-    // Stupid-Backoff trigram surprisal: train-split n-gram tables, eval
-    // docs scored; every branch's ln is a NULL-safe ln_f chain (ln_f of a
-    // NULL count stays NULL and the level CASE never selects it), the α
-    // penalty the interpolated ln_f(5)−ln_f(2) integer
-    "q_lm_backoff" -> {
-      val m = TextAnalysis.EvalHoldoutMod
-      s"""WITH $backoffLmCtes,
-         |ev AS (SELECT doc_id, ts[i] AS w1, ts[i + 1] AS w2, ts[i + 2] AS w3,
-         |    CAST(count(*) AS BIGINT) AS c
-         |  FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 1)) AS i FROM ts
-         |        WHERE doc_id % $m = 0 AND len(ts) >= 3) e
-         |  GROUP BY doc_id, w1, w2, w3),
-         |${backoffScoreCtes("doc_id")},
-         |perdoc AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_trigrams,
-         |    CAST(sum(CASE WHEN level = 3 THEN c ELSE 0 END) AS BIGINT) AS n_l3,
-         |    CAST(sum(CASE WHEN level = 2 THEN c ELSE 0 END) AS BIGINT) AS n_l2,
-         |    CAST(sum(CASE WHEN level = 1 THEN c ELSE 0 END) AS BIGINT) AS n_l1,
-         |    CAST(sum(CASE WHEN level = 0 THEN c ELSE 0 END) AS BIGINT) AS n_l0,
-         |    CAST(sum(c * s_f) AS BIGINT) AS nll_f
-         |  FROM sc GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(p.n_trigrams, 0) AS n_trigrams,
-         |  coalesce(p.n_l3, 0) AS n_l3, coalesce(p.n_l2, 0) AS n_l2,
-         |  coalesce(p.n_l1, 0) AS n_l1, coalesce(p.n_l0, 0) AS n_l0,
-         |  coalesce(p.nll_f, 0) AS nll_f,
-         |  CASE WHEN coalesce(p.n_trigrams, 0) > 0
-         |       THEN coalesce(p.nll_f, 0) // p.n_trigrams ELSE 0 END AS avg_nll_f
-         |FROM documents d LEFT JOIN perdoc p USING (doc_id)
-         |WHERE d.doc_id % $m = 0""".stripMargin
-    },
-    // Windowed CCNet-style line surprisal: the SAME LM + scoring CTEs as
-    // q_lm_backoff, the eval trigrams windowed per line, the flag the
-    // cross-multiplied above-3/2-of-mean test on milli-nat line averages.
-    "q_line_surprisal" -> {
-      val m = TextAnalysis.EvalHoldoutMod
-      val ll = graft.operators.Dedup.LineLen
-      val scale = graft.functions.FixedPointLn.Scale
-      s"""WITH $backoffLmCtes,
-         |wt AS (SELECT doc_id, i AS pos, ts[i * $ll + 1:(i + 1) * $ll] AS wts
-         |  FROM (SELECT doc_id, ts, unnest(range(0, (len(ts) - 1) // $ll + 1)) AS i
-         |        FROM ts WHERE doc_id % $m = 0) x),
-         |ev AS (SELECT doc_id, pos, wts[j] AS w1, wts[j + 1] AS w2, wts[j + 2] AS w3,
-         |    CAST(count(*) AS BIGINT) AS c
-         |  FROM (SELECT doc_id, pos, wts, unnest(range(1, len(wts) - 1)) AS j
-         |        FROM wt WHERE len(wts) >= 3) e
-         |  GROUP BY doc_id, pos, w1, w2, w3),
-         |${backoffScoreCtes("doc_id, pos")},
-         |perwin AS (SELECT doc_id, pos, CAST(sum(c) AS BIGINT) AS n_trigrams,
-         |    CAST(sum(CASE WHEN level = 0 THEN c ELSE 0 END) AS BIGINT) AS n_l0,
-         |    CAST(sum(c * s_f) AS BIGINT) AS nll_f
-         |  FROM sc GROUP BY doc_id, pos),
-         |pw AS (SELECT *, (nll_f // n_trigrams) * 1000 // $scale AS avg_milli
-         |  FROM perwin),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_lines,
-         |    CAST(sum(avg_milli) AS BIGINT) AS sum_avg FROM pw)
-         |SELECT doc_id, pos, n_trigrams, n_l0, nll_f, avg_milli,
-         |  avg_milli * n_lines * ${TextAnalysis.LineNllDen}
-         |    > ${TextAnalysis.LineNllNum} * sum_avg AS flagged
-         |FROM pw, tot""".stripMargin
-    },
-    // All-integer PageRank, 3 rounds unrolled: same bigram edge axis as
-    // q_bigram_lm, per-source weights normalized to 1/2^20 units, per-edge
-    // contributions floored BEFORE summing (order-independent integers),
-    // damped update base + (17·Σ)//20 — every constant interpolated from
-    // GraphAnalytics, so both engines compute identical BIGINT scores.
-    "q_pagerank_words" -> {
-      import graft.operators.GraphAnalytics.{PrIters, WordRankK}
-      s"""WITH ts AS (SELECT regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-         |  FROM documents),
-         |bgidx AS (SELECT ts, unnest(range(1, len(ts))) AS i
-         |  FROM ts WHERE len(ts) >= 2),
-         |e AS (SELECT ts[i] AS src, ts[i+1] AS dst, count(*) AS w
-         |  FROM bgidx GROUP BY 1, 2),
-         |${pageRankCtes("e")}
-         |SELECT id AS word, pr FROM pr$PrIters
-         |ORDER BY pr DESC, id ASC LIMIT $WordRankK""".stripMargin
-    },
-    // Phrase occurrences on the raw whitespace-split axis: DuckDB's
-    // 1-based toks[p] vs the engine's 0-based posexplode positions differ
-    // by exactly the emitted `p - 1`; out-of-range list indexes are NULL
-    // and fail the equality like the engine's absent posting.
-    "q_phrase_search" -> {
-      val conds = graft.operators.TextAnalysis.PhraseTokens.zipWithIndex
-        .map { case (w, j) => s"toks[p + $j] = '$w'" }.mkString(" AND ")
-      s"""WITH t AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS toks
-         |  FROM documents),
-         |i AS (SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS p FROM t)
-         |SELECT doc_id, CAST(p - 1 AS INTEGER) AS pos
-         |FROM i WHERE $conds""".stripMargin
-    },
-    // Nucleus truncation: cumulative mass in (count DESC, token ASC)
-    // order; keep iff preceding mass is under num/den of the prefix total
-    // (integer cross-multiplication — no float thresholds).
-    "q_bigram_nucleus" ->
-      s"""WITH ts AS (SELECT regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS ts
-         |  FROM documents),
-         |bgidx AS (SELECT ts, unnest(range(1, len(ts))) AS i
-         |  FROM ts WHERE len(ts) >= 2),
-         |c AS (SELECT ts[i] AS w1, ts[i+1] AS w2, count(*) AS n_pair
-         |  FROM bgidx GROUP BY 1, 2),
-         |t AS (SELECT w1, CAST(sum(n_pair) AS BIGINT) AS n_w1 FROM c GROUP BY w1),
-         |r AS (SELECT c.w1, c.w2, c.n_pair, t.n_w1,
-         |    CAST(sum(c.n_pair) OVER (PARTITION BY c.w1
-         |      ORDER BY c.n_pair DESC, c.w2 ASC
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM c JOIN t ON c.w1 = t.w1)
-         |SELECT w1, w2, n_pair, n_w1, cum FROM r
-         |WHERE (cum - n_pair) * ${TextAnalysis.NucleusDen}
-         |      < ${TextAnalysis.NucleusNum} * n_w1""".stripMargin,
-    // PII scan: the pattern strings are interpolated from the operator's
-    // constants (Java-regex ∩ RE2 subset), so both engines compile the
-    // same bytes. DuckDB regexp_replace needs the explicit 'g' flag to
-    // match Spark's replace-all.
-    "q_pii_scan" ->
-      s"""SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '${TextAnalysis.EmailPattern}')) AS INTEGER) AS n_emails,
-         |  CAST(len(regexp_extract_all(text, '${TextAnalysis.Ipv4Pattern}')) AS INTEGER) AS n_ipv4,
-         |  CAST(len(regexp_extract_all(text, '${TextAnalysis.UrlPattern}')) AS INTEGER) AS n_urls,
-         |  CAST(len(regexp_extract_all(text, '${TextAnalysis.DigitRunPattern}')) AS INTEGER) AS n_digit_runs,
-         |  md5(regexp_replace(regexp_replace(regexp_replace(text,
-         |    '${TextAnalysis.EmailPattern}', '<EMAIL>', 'g'),
-         |    '${TextAnalysis.Ipv4Pattern}', '<IP>', 'g'),
-         |    '${TextAnalysis.DigitRunPattern}', '<NUM>', 'g')) AS redacted_md5,
-         |  (len(regexp_extract_all(text, '${TextAnalysis.EmailPattern}')) > 0
-         |   OR len(regexp_extract_all(text, '${TextAnalysis.Ipv4Pattern}')) > 0
-         |   OR len(regexp_extract_all(text, '${TextAnalysis.DigitRunPattern}')) > 0) AS has_pii
-         |FROM documents""".stripMargin,
-    // The redaction TRANSFORM: identical replace chain, emitting the
-    // redacted text itself (the hash gate then pins the exact bytes).
-    "q_pii_redacted" ->
-      s"""SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '${TextAnalysis.EmailPattern}')) AS INTEGER) AS n_emails,
-         |  CAST(len(regexp_extract_all(text, '${TextAnalysis.Ipv4Pattern}')) AS INTEGER) AS n_ipv4,
-         |  CAST(len(regexp_extract_all(text, '${TextAnalysis.DigitRunPattern}')) AS INTEGER) AS n_digit_runs,
-         |  regexp_replace(regexp_replace(regexp_replace(text,
-         |    '${TextAnalysis.EmailPattern}', '<EMAIL>', 'g'),
-         |    '${TextAnalysis.Ipv4Pattern}', '<IP>', 'g'),
-         |    '${TextAnalysis.DigitRunPattern}', '<NUM>', 'g') AS redacted_text
-         |FROM documents""".stripMargin,
-    // Decontamination: distinct 13-gram hashes per doc (same capped shingle
-    // axis and 60-bit seeded hash as the engine), eval side collapsed to
-    // DISTINCT hashes, per-train-doc left-join stats. n/mod interpolated.
-    "q_decontam" ->
-      s"""WITH t AS ($tokCte),
-         |c AS (SELECT doc_id,
-         |  toks[1:${graft.functions.TextFunctions.MaxShingleTokens}] AS toks FROM t),
-         |g AS (SELECT doc_id, ${h60(TextAnalysis.DecontamNgram, "g")} AS gh FROM (
-         |  SELECT doc_id, unnest(CASE WHEN len(toks) >= ${TextAnalysis.DecontamNgram}
-         |    THEN list_distinct(list_transform(
-         |      range(0, len(toks) - ${TextAnalysis.DecontamNgram - 1}),
-         |      i -> array_to_string(toks[i+1:i+${TextAnalysis.DecontamNgram}], ' ')))
-         |    ELSE CAST([] AS VARCHAR[]) END) AS g
-         |  FROM c) u),
-         |e AS (SELECT DISTINCT gh FROM g WHERE doc_id % ${TextAnalysis.EvalHoldoutMod} = 0),
-         |s AS (SELECT g.doc_id, count(*) AS n_grams,
-         |    CAST(sum(CASE WHEN e.gh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_shared
-         |  FROM g LEFT JOIN e ON g.gh = e.gh
-         |  WHERE g.doc_id % ${TextAnalysis.EvalHoldoutMod} <> 0
-         |  GROUP BY g.doc_id)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(s.n_grams, 0) AS INTEGER) AS n_grams,
-         |  CAST(coalesce(s.n_shared, 0) AS INTEGER) AS n_shared_ngrams,
-         |  CASE WHEN s.n_grams IS NOT NULL
-         |    THEN CAST(s.n_shared AS DOUBLE) / s.n_grams ELSE 0.0 END
-         |    AS contamination_ratio,
-         |  coalesce(s.n_shared, 0) > 0 AS contaminated
-         |FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
-         |WHERE d.doc_id % ${TextAnalysis.EvalHoldoutMod} <> 0""".stripMargin,
-    // Span decontam: positional 13-gram windows (same token/hash axes as
-    // q_decontam), eval hashes collapsed before the join, gaps-and-islands
-    // span merge — lag NULL on the first hit opens an island in both
-    // engines (NULL < n is NULL -> the ELSE/otherwise branch)
-    "q_span_decontam" -> {
-      val n = TextAnalysis.DecontamNgram
-      s"""WITH t AS ($tokCte),
-         |c AS (SELECT doc_id,
-         |  toks[1:${graft.functions.TextFunctions.MaxShingleTokens}] AS toks FROM t),
-         |win AS (SELECT doc_id, CAST(i AS BIGINT) AS s,
-         |    ${h60(n, s"array_to_string(toks[i+1:i+$n], ' ')")} AS gh
-         |  FROM (SELECT doc_id, toks, unnest(range(0, len(toks) - ${n - 1})) AS i
-         |        FROM c WHERE len(toks) >= $n) u),
-         |ev AS (SELECT DISTINCT gh FROM win
-         |  WHERE doc_id % ${TextAnalysis.EvalHoldoutMod} = 0),
-         |hits AS (SELECT w.doc_id, w.s FROM win w JOIN ev USING (gh)
-         |  WHERE w.doc_id % ${TextAnalysis.EvalHoldoutMod} <> 0),
-         |fl AS (SELECT doc_id, s,
-         |    CASE WHEN s - lag(s) OVER (PARTITION BY doc_id ORDER BY s) < $n
-         |         THEN 0 ELSE 1 END AS newisl
-         |  FROM hits),
-         |isl AS (SELECT doc_id, s, sum(newisl)
-         |    OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS isl
-         |  FROM fl)
-         |SELECT doc_id, CAST(min(s) AS BIGINT) AS span_start,
-         |  CAST(max(s) + ${n - 1} AS BIGINT) AS span_end,
-         |  CAST(count(*) AS BIGINT) AS n_windows
-         |FROM isl GROUP BY doc_id, isl""".stripMargin
-    },
-    // The Bloom prefilter is pass-through (false positives die in the
-    // exact semi-join, false negatives are structurally impossible), so
-    // the bloom-prefiltered form answers the same SQL as q_span_decontam.
-    "q_decontam_bloom" -> {
-      val n = TextAnalysis.DecontamNgram
-      s"""WITH t AS ($tokCte),
-         |c AS (SELECT doc_id,
-         |  toks[1:${graft.functions.TextFunctions.MaxShingleTokens}] AS toks FROM t),
-         |win AS (SELECT doc_id, CAST(i AS BIGINT) AS s,
-         |    ${h60(n, s"array_to_string(toks[i+1:i+$n], ' ')")} AS gh
-         |  FROM (SELECT doc_id, toks, unnest(range(0, len(toks) - ${n - 1})) AS i
-         |        FROM c WHERE len(toks) >= $n) u),
-         |ev AS (SELECT DISTINCT gh FROM win
-         |  WHERE doc_id % ${TextAnalysis.EvalHoldoutMod} = 0),
-         |hits AS (SELECT w.doc_id, w.s FROM win w JOIN ev USING (gh)
-         |  WHERE w.doc_id % ${TextAnalysis.EvalHoldoutMod} <> 0),
-         |fl AS (SELECT doc_id, s,
-         |    CASE WHEN s - lag(s) OVER (PARTITION BY doc_id ORDER BY s) < $n
-         |         THEN 0 ELSE 1 END AS newisl
-         |  FROM hits),
-         |isl AS (SELECT doc_id, s, sum(newisl)
-         |    OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS isl
-         |  FROM fl)
-         |SELECT doc_id, CAST(min(s) AS BIGINT) AS span_start,
-         |  CAST(max(s) + ${n - 1} AS BIGINT) AS span_end,
-         |  CAST(count(*) AS BIGINT) AS n_windows
-         |FROM isl GROUP BY doc_id, isl""".stripMargin
-    },
-    // The batch mirror of the streaming interval join: all same-user
-    // (purchase, click) pairs with the click in [p_ts - 1h, p_ts]. Epoch
-    // micros on both sides = exact integer comparisons.
-    "q_stream_attribution" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id,
-        |  epoch_us(p.ts) AS p_ts_us, epoch_us(c.ts) AS c_ts_us
-        |FROM events p JOIN events c ON p.user_id = c.user_id
-        |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        |  AND epoch_us(c.ts) >= epoch_us(p.ts) - 3600000000
-        |  AND epoch_us(c.ts) <= epoch_us(p.ts)""".stripMargin,
-    // Streaming twin of mr_wordcount — same tokenize/normalize/count
-    // expressions, so the same oracle.
-    "q_stream_wordcount_complete_oracle" ->
-      """SELECT word, count(*) AS cnt FROM (
-        |  SELECT regexp_replace(lower(unnest(string_split_regex(nfc_normalize(text), '\s+'))),
-        |                        '^[.,!?:;"'']+|[.,!?:;"'']+$', '', 'g') AS word
-        |  FROM documents) t
-        |WHERE word <> '' GROUP BY word""".stripMargin,
-    // The update-mode keyed-store twin drains the same stream, so a full
-    // drain's merged store equals the same batch counts.
-    "q_stream_wordcount_update" ->
-      """SELECT word, count(*) AS cnt FROM (
-        |  SELECT regexp_replace(lower(unnest(string_split_regex(nfc_normalize(text), '\s+'))),
-        |                        '^[.,!?:;"'']+|[.,!?:;"'']+$', '', 'g') AS word
-        |  FROM documents) t
-        |WHERE word <> '' GROUP BY word""".stripMargin,
-    // One surviving row per distinct fingerprint — the batch twin's keys.
-    "q_stream_dedup_docs" ->
-      """SELECT md5(regexp_replace(lower(trim(nfc_normalize(text))), '\s+', ' ', 'g')) AS fp_md5
-        |FROM documents GROUP BY 1""".stripMargin,
-    // The stateless gate's full drain equals the batch filter row for row;
-    // token/stopword rule mirrors docStats' is_quality, PII patterns are
-    // the operator's constants.
-    "q_stream_quality" ->
-      s"""WITH t AS ($tokCte)
-         |SELECT d.doc_id, d.lang, d.source
-         |FROM documents d JOIN t ON d.doc_id = t.doc_id
-         |WHERE len(t.toks) >= 10
-         |  AND len(list_filter(t.toks, w -> list_contains($stopList, w))) > 0
-         |  AND len(regexp_extract_all(d.text, '${TextAnalysis.EmailPattern}')) = 0
-         |  AND len(regexp_extract_all(d.text, '${TextAnalysis.Ipv4Pattern}')) = 0
-         |  AND len(regexp_extract_all(d.text, '${TextAnalysis.DigitRunPattern}')) = 0""".stripMargin,
-    // The linear-idf score is a single division of exact integers — see
-    // TextAnalysis.tfIdfTopTerms for why ln() is not hash-portable.
-    "q_tfidf_topterms" ->
-      """WITH t AS (SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM t
-        |  WHERE len(term) > 0 GROUP BY doc_id, term),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |ranked AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
-        |    CAST(tf.tf * n.n_docs AS DOUBLE) / (df.df + 1) AS tfidf,
-        |    row_number() OVER (PARTITION BY tf.doc_id
-        |      ORDER BY CAST(tf.tf * n.n_docs AS DOUBLE) / (df.df + 1) DESC,
-        |               tf.term ASC) AS rank
-        |  FROM tf JOIN df USING (term) CROSS JOIN n)
-        |SELECT doc_id, term, tf, df, tfidf, rank FROM ranked WHERE rank <= 5""".stripMargin,
-    // Chunk starts: every multiple of stride below n_tokens (n >= 1 for
-    // any string). Spark's sequence(0, n-1, stride) == DuckDB's
-    // range(0, n, stride); 1-based inclusive list slices match Spark's
-    // slice(pos, len). Stride/width interpolate the operator's constants.
-    "q_chunked" -> {
-      val (st, ct) = (TextAnalysis.DefaultStride, TextAnalysis.DefaultChunkTokens)
-      s"""WITH t AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
-         |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), $st)) AS start FROM t)
-         |SELECT doc_id, CAST(start // $st AS INT) AS chunk_id,
-         |  array_to_string(toks[start+1 : start+$ct], ' ') AS chunk_text,
-         |  len(toks[start+1 : start+$ct]) AS n_tokens
-         |FROM s""".stripMargin
-    },
-    "q_top_terms_per_lang" ->
-      s"""WITH t AS (SELECT lang,
-         |    unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS term
-         |  FROM documents),
-         |c AS (SELECT lang, term, count(*) AS n FROM t
-         |  WHERE len(term) > 0 GROUP BY lang, term)
-         |SELECT lang, term, n, rank FROM (
-         |  SELECT lang, term, n,
-         |    row_number() OVER (PARTITION BY lang ORDER BY n DESC, term ASC) AS rank
-         |  FROM c) r
-         |WHERE rank <= ${TextAnalysis.DefaultTopTermsK}""".stripMargin,
-    // The TakeOrdered twin computes the identical ranking, so it shares
-    // the window form's oracle.
-    "q_top_terms_per_lang_scalable" ->
-      s"""WITH t AS (SELECT lang,
-         |    unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS term
-         |  FROM documents),
-         |c AS (SELECT lang, term, count(*) AS n FROM t
-         |  WHERE len(term) > 0 GROUP BY lang, term)
-         |SELECT lang, term, n, rank FROM (
-         |  SELECT lang, term, n,
-         |    row_number() OVER (PARTITION BY lang ORDER BY n DESC, term ASC) AS rank
-         |  FROM c) r
-         |WHERE rank <= ${TextAnalysis.DefaultTopTermsK}""".stripMargin,
-    // Latest-wins upsert: the oracle resolves "latest" with the same total
-    // (date DESC, orderkey DESC) order via a window instead of max_by.
-    "q_merge_upsert" ->
-      """WITH r AS (SELECT o_custkey, o_orderpriority, o_orderstatus,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn,
-        |    count(*) OVER (PARTITION BY o_custkey) AS n
-        |  FROM orders),
-        |l AS (SELECT * FROM r WHERE rn = 1)
-        |SELECT c_custkey, c_mktsegment,
-        |  coalesce(l.o_orderpriority, 'NONE') AS cur_priority,
-        |  coalesce(l.o_orderstatus, 'NONE') AS cur_status,
-        |  CAST(coalesce(l.n, 0) AS BIGINT) AS n_changes
-        |FROM customer LEFT JOIN l ON l.o_custkey = c_custkey""".stripMargin,
-    // SCD2 validity intervals in exact epoch micros; (date, orderkey) is a
-    // total order so version numbering is deterministic.
-    "q_scd2_history" ->
-      """SELECT o_custkey, o_orderpriority AS attr,
-        |  epoch_us(o_orderdate) AS valid_from_us,
-        |  lead(epoch_us(o_orderdate)) OVER w AS valid_to_us,
-        |  row_number() OVER w AS version,
-        |  lead(epoch_us(o_orderdate)) OVER w IS NULL AS is_current
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)""".stripMargin,
-    // Threshold is integer floor division on both engines (Spark `div`,
-    // DuckDB `//`) — the kept set is bit-reproducible.
-    "q_sample_stratified" ->
-      s"""WITH c AS (SELECT lang, count(*) AS n_lang FROM documents GROUP BY lang)
-         |SELECT d.doc_id, d.lang,
-         |  ${h60(Sampling.DefaultSeed, "d.doc_id")} % ${Sampling.Buckets} AS bucket
-         |FROM documents d JOIN c USING (lang)
-         |WHERE ${h60(Sampling.DefaultSeed, "d.doc_id")} % ${Sampling.Buckets}
-         |  < (${Sampling.DefaultTargetPerStratum * Sampling.Buckets} // c.n_lang)""".stripMargin,
-    // Exact-k stratified: the obvious per-stratum (h, doc_id) rank pins
-    // the semantics; the engine computes the same set by counting
-    "q_sample_exact" ->
-      s"""WITH hashed AS (SELECT doc_id, lang,
-         |    ${h60(Sampling.ExactSeed, "doc_id")} % 1048576 AS h FROM documents),
-         |r AS (SELECT doc_id, lang, h,
-         |    row_number() OVER (PARTITION BY lang ORDER BY h ASC, doc_id ASC) AS rn
-         |  FROM hashed)
-         |SELECT doc_id, lang, h FROM r
-         |WHERE rn <= ${Sampling.DefaultTargetPerStratum}""".stripMargin,
-    // Weighted Bernoulli: keep iff md5-draw mod cap < min(weight, cap);
-    // seed/cap interpolated from the operator's constants.
-    "q_sample_weighted" ->
-      s"""SELECT doc_id, lang, weight, draw FROM (
-         |  SELECT doc_id, lang,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS weight,
-         |    ${h60(Sampling.WeightedSeed, "doc_id")} % ${Sampling.WeightCap} AS draw
-         |  FROM documents) t
-         |WHERE draw < least(weight, ${Sampling.WeightCap})""".stripMargin,
-    // A-ES keys replayed through the identical integer-ln chain (lateral
-    // aliases), bottom-k by (key_f, doc_id).
-    "q_sample_aes" -> {
-      import graft.functions.FixedPointLn.{lnFSql, Scale}
-      val lnS = graft.functions.FixedPointLn.lnFRef(Scale)
-      s"""WITH d AS (SELECT doc_id,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS weight,
-         |    ${h60(Sampling.AesSeed, "doc_id")} % $Scale + 1 AS hp1
-         |  FROM documents),
-         |l AS (SELECT doc_id, weight,
-         |  ${lnFSql("hp1", "lh")}
-         |  FROM d WHERE weight > 0)
-         |SELECT doc_id, weight, ($lnS - lh) * $Scale // weight AS key_f
-         |FROM l ORDER BY key_f, doc_id LIMIT ${Sampling.AesTarget}""".stripMargin
-    },
-    // The monoid merge of per-batch bottom-ks equals the batch bottom-k,
-    // so a full drain answers the same SQL as q_sample_aes.
-    "q_stream_sample_aes" -> {
-      import graft.functions.FixedPointLn.{lnFSql, Scale}
-      val lnS = graft.functions.FixedPointLn.lnFRef(Scale)
-      s"""WITH d AS (SELECT doc_id,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS weight,
-         |    ${h60(Sampling.AesSeed, "doc_id")} % $Scale + 1 AS hp1
-         |  FROM documents),
-         |l AS (SELECT doc_id, weight,
-         |  ${lnFSql("hp1", "lh")}
-         |  FROM d WHERE weight > 0)
-         |SELECT doc_id, weight, ($lnS - lh) * $Scale // weight AS key_f
-         |FROM l ORDER BY key_f, doc_id LIMIT ${Sampling.AesTarget}""".stripMargin
-    },
-    // Mixture schedule: all-integer epochs+fraction per source (uniform
-    // thousandth-shares, budget = corpus total), md5 Bernoulli on the
-    // fractional arm. Every constant interpolated from the operator.
-    "q_mixture_schedule" -> mixtureScheduleSql,
-    // Temperature mixture: the same CTE skeleton with shares derived from
-    // n_s^(1/T) via the ln_f → scale-by-tDen/tNum → exp_f integer chains
-    // (lateral aliases replay the engine kernels bit-for-bit), then the
-    // identical epoch/Bernoulli tail. T = 2/1 interpolated.
-    "q_mixture_temperature" -> temperatureScheduleSql,
-    // Waterfilled epoch allocation over the same tempered-weight CTEs.
-    "q_epoch_allocation" -> epochAllocationOracle,
-    // Soft dedup: same normalized-text groups as q_dedup_exact, keep
-    // verdict = seeded 60-bit hash residue mod group size.
-    "q_dedup_soft" -> {
-      val sd = graft.operators.Dedup.SoftDedupSeed
-      s"""WITH fp AS (SELECT doc_id,
-         |    md5(regexp_replace(lower(trim(nfc_normalize(text))), '\\s+', ' ', 'g')) AS fp_md5
-         |  FROM documents),
-         |g AS (SELECT fp_md5, CAST(count(*) AS BIGINT) AS n_copies
-         |  FROM fp GROUP BY fp_md5)
-         |SELECT doc_id, n_copies,
-         |  (${h60(sd, "CAST(doc_id AS VARCHAR)")} % n_copies) = 0 AS kept
-         |FROM fp JOIN g USING (fp_md5)""".stripMargin
-    },
-    // Gopher rules: one token-metric agg + the repetition chain's
-    // dropped-token count; every share a floor division, rules replayed
-    // with the interpolated thresholds.
-    "q_gopher_rules" -> {
-      import graft.operators.TextAnalysis._
-      val inList = Stopwords.map(w => s"'$w'").mkString(", ")
-      s"""WITH tk AS (SELECT doc_id,
-         |    unnest(regexp_split_to_array(trim(nfc_normalize(text)), '\\s+')) AS tok
-         |  FROM documents),
-         |m AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |    CAST(sum(length(tok)) AS BIGINT) AS n_tok_chars,
-         |    CAST(sum(CASE WHEN regexp_full_match(tok, '[.,!?:;"'']+')
-         |        THEN 1 ELSE 0 END) AS BIGINT) AS n_punct,
-         |    CAST(sum(CASE WHEN regexp_matches(tok, '[a-z]')
-         |        THEN 1 ELSE 0 END) AS BIGINT) AS n_alpha,
-         |    CAST(count(DISTINCT CASE WHEN tok IN ($inList) THEN tok END)
-         |      AS BIGINT) AS n_stop_distinct
-         |  FROM tk GROUP BY doc_id),
-         |$lineCtes,
-         |rp AS (SELECT doc_id, lh, min(pos) AS first_pos FROM h
-         |  GROUP BY doc_id, lh),
-         |dup AS (SELECT h.doc_id,
-         |    CAST(sum(CASE WHEN h.pos > rp.first_pos THEN h.n_tok ELSE 0 END)
-         |      AS BIGINT) AS n_dup_toks
-         |  FROM h JOIN rp ON h.doc_id = rp.doc_id AND h.lh = rp.lh
-         |  GROUP BY h.doc_id),
-         |c AS (SELECT m.doc_id, m.n_tokens,
-         |    n_tok_chars * 1000 // n_tokens AS mean_len_milli,
-         |    n_punct * 1000 // n_tokens AS punct_milli,
-         |    n_alpha * 1000 // n_tokens AS alpha_milli,
-         |    m.n_stop_distinct,
-         |    d.n_dup_toks * 1000 // n_tokens AS dup_line_milli
-         |  FROM m JOIN dup d ON m.doc_id = d.doc_id)
-         |SELECT c.*,
-         |  (n_tokens >= $GopherMinTokens AND n_tokens <= $GopherMaxTokens)
-         |    AS r_len,
-         |  (mean_len_milli >= $GopherMeanLenLoMilli
-         |    AND mean_len_milli <= $GopherMeanLenHiMilli) AS r_mean_len,
-         |  punct_milli <= $GopherMaxPunctMilli AS r_punct,
-         |  alpha_milli >= $GopherMinAlphaMilli AS r_alpha,
-         |  n_stop_distinct >= $GopherMinDistinctStopwords AS r_stop,
-         |  dup_line_milli <= $GopherMaxDupLineMilli AS r_dup,
-         |  ((n_tokens >= $GopherMinTokens AND n_tokens <= $GopherMaxTokens)
-         |    AND (mean_len_milli >= $GopherMeanLenLoMilli
-         |      AND mean_len_milli <= $GopherMeanLenHiMilli)
-         |    AND punct_milli <= $GopherMaxPunctMilli
-         |    AND alpha_milli >= $GopherMinAlphaMilli
-         |    AND n_stop_distinct >= $GopherMinDistinctStopwords
-         |    AND dup_line_milli <= $GopherMaxDupLineMilli) AS keep
-         |FROM c""".stripMargin
-    },
-    // Ingestion-time winnow overlap (shared verbatim by the streaming
-    // drain): corpus fingerprints below the split freeze into the capped
-    // index; shard fingerprints drop corpus-hot hashes and probe it.
-    "q_winnow_overlap_incremental" -> incrementalWinnowOverlapOracle,
-    "q_stream_winnow_overlap" -> incrementalWinnowOverlapOracle,
-    // Temperature schedule composed with the packing prefix sum — the
-    // same wrapper q_mixture_packed puts on the default schedule.
-    "q_mixture_temperature_packed" ->
-      s"""WITH sched AS ($temperatureScheduleSql)
-         |SELECT doc_id,
-         |  CAST(n_toks * n_repeats AS BIGINT) AS n_tok,
-         |  CAST(COALESCE(SUM(n_toks * n_repeats) OVER (ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         |    AS tok_start
-         |FROM sched""".stripMargin,
-    // Mixture ∘ packing: exclusive prefix sum of n_toks×n_repeats in
-    // doc_id order over the schedule CTE (shared verbatim above).
-    "q_mixture_packed" ->
-      s"""WITH sched AS ($mixtureScheduleSql)
-         |SELECT doc_id,
-         |  CAST(n_toks * n_repeats AS BIGINT) AS n_tok,
-         |  CAST(COALESCE(SUM(n_toks * n_repeats) OVER (ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         |    AS tok_start
-         |FROM sched""".stripMargin,
-    "q_minhash_sig" ->
-      s"""WITH sh AS MATERIALIZED ($shCte)
-         |SELECT doc_id,
-         |  $minhashCols
-         |FROM sh""".stripMargin,
-    // Oracle brute-forces all pairs; the engine uses MinHash+LSH banding.
-    // With 8 bands x 2 rows a jaccard>=0.5 pair is missed with prob
-    // <= (1-0.25)^8 = 10% in the worst case at exactly 0.5 — but the data's
-    // near-dup pairs all sit at ~0.99 (miss prob ~6e-15), with the next
-    // pair below 0.14, so banding and brute force agree deterministically.
-    "q_dedup_neardup" ->
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte
-         |SELECT doc_a, doc_b, inter, uni, jaccard FROM pairs""".stripMargin,
-    // The prefix-filtered EXACT miner emits the jaccard>=0.5 pair set BY
-    // THEOREM (no banding probability, no bucket cap), so the brute-force
-    // pair SQL is its oracle with no equivalence argument needed.
-    "q_neardup_exact" ->
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte
-         |SELECT doc_a, doc_b, inter, uni, jaccard FROM pairs""".stripMargin,
-    // The CAPPED exact miner has no brute-force shortcut: its contract
-    // is the prefix construction itself (content-group collapse, df-asc
-    // prefix, doc-weighted group cap, length filter, verify, member
-    // expansion), so the oracle replays every step with window functions
-    // over the same integer arithmetic. r15: the registered cap
-    // (ExercisedPrefixCap) sits BELOW this corpus's max prefix-group
-    // mass, so keys are genuinely dropped under the gate and the result
-    // observably differs from q_neardup_exact — the valve itself is what
-    // this row verifies.
-    "q_neardup_exact_capped" -> {
-      val cap = graft.operators.Dedup.ExercisedPrefixCap
-      s"""WITH sh0 AS MATERIALIZED ($shCte),
-         |ne AS (SELECT doc_id, sh FROM sh0 WHERE len(sh) > 0),
-         |g AS (SELECT doc_id, sh,
-         |    min(doc_id) OVER (PARTITION BY sh) AS rep_id,
-         |    count(*) OVER (PARTITION BY sh) AS members
-         |  FROM ne),
-         |reps AS (SELECT rep_id, sh, members FROM g WHERE doc_id = rep_id),
-         |e AS (SELECT rep_id, members, unnest(sh) AS sg FROM reps),
-         |d AS (SELECT sg, count(*) AS df FROM e GROUP BY 1),
-         |o AS (SELECT e.rep_id, e.members, e.sg,
-         |    row_number() OVER (PARTITION BY e.rep_id ORDER BY d.df, e.sg) AS rk,
-         |    count(*) OVER (PARTITION BY e.rep_id) AS n
-         |  FROM e JOIN d USING (sg)),
-         |p AS (SELECT rep_id, members, n, sg FROM o
-         |  WHERE rk <= n - (500 * n + 999) // 1000 + 1),
-         |ov AS (SELECT sg FROM p GROUP BY sg HAVING sum(members) > $cap),
-         |k AS (SELECT * FROM p WHERE sg NOT IN (SELECT sg FROM ov)),
-         |c AS (SELECT DISTINCT l.rep_id AS rep_a, r.rep_id AS rep_b
-         |  FROM k l JOIN k r ON l.sg = r.sg AND l.rep_id < r.rep_id
-         |    AND 1000 * l.n >= 500 * r.n AND 1000 * r.n >= 500 * l.n),
-         |v AS (SELECT c.rep_a, c.rep_b,
-         |    len(list_intersect(a.sh, b.sh)) AS inter,
-         |    len(list_distinct(a.sh || b.sh)) AS uni
-         |  FROM c JOIN reps a ON c.rep_a = a.rep_id
-         |         JOIN reps b ON c.rep_b = b.rep_id),
-         |vf AS (SELECT rep_a, rep_b, inter, uni FROM v
-         |  WHERE 1000 * inter >= 500 * uni),
-         |sp AS (SELECT rep_id AS rep_a, rep_id AS rep_b,
-         |    len(sh) AS inter, len(sh) AS uni
-         |  FROM reps WHERE members > 1),
-         |u AS (SELECT * FROM vf UNION ALL SELECT * FROM sp),
-         |m AS (SELECT rep_id, doc_id FROM g)
-         |SELECT least(ma.doc_id, mb.doc_id) AS doc_a,
-         |  greatest(ma.doc_id, mb.doc_id) AS doc_b,
-         |  u.inter, u.uni,
-         |  CAST(u.inter AS DOUBLE) / u.uni AS jaccard
-         |FROM u JOIN m ma ON u.rep_a = ma.rep_id
-         |       JOIN m mb ON u.rep_b = mb.rep_id
-         |WHERE u.rep_a <> u.rep_b OR ma.doc_id < mb.doc_id""".stripMargin
-    },
-    // S-curve card: brute-force verified pairs (the q_dedup_neardup
-    // equivalence) bucketed by exact integer milli-jaccard, left-joined
-    // onto the constant grid whose p_band/p_detect chains replay the
-    // engine's stepwise `·x div 1000` folds via lateral aliases.
-    "q_lsh_curve" -> {
-      import graft.operators.Dedup.{Bands, RowsPerBand, CurveBucketMilli}
-      val pbChain = (1 to RowsPerBand).map { k =>
-        val prev = if (k == 1) "1000" else s"pb${k - 1}"
-        s"($prev * j_mid) // 1000 AS pb$k"
-      }.mkString(",\n  ")
-      val missChain = (1 to Bands).map { k =>
-        val prev = if (k == 1) "1000" else s"miss${k - 1}"
-        s"($prev * (1000 - pb$RowsPerBand)) // 1000 AS miss$k"
-      }.mkString(",\n  ")
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |${jaccardPairCtes(out = "p", left = "sh", right = "sh")},
-         |h AS (SELECT (((inter * 1000) // uni) // $CurveBucketMilli)
-         |      * $CurveBucketMilli AS jaccard_lo,
-         |    CAST(count(*) AS BIGINT) AS n_pairs
-         |  FROM p GROUP BY 1),
-         |g AS (SELECT CAST(i * $CurveBucketMilli AS BIGINT) AS jaccard_lo,
-         |    CAST(CASE WHEN i * $CurveBucketMilli = 1000 THEN 1000
-         |      ELSE i * $CurveBucketMilli + ${CurveBucketMilli / 2} END AS BIGINT)
-         |      AS j_mid
-         |  FROM (SELECT unnest(range(0, ${1000 / CurveBucketMilli + 1})) AS i) u),
-         |c AS (SELECT jaccard_lo, j_mid,
-         |  $pbChain,
-         |  $missChain
-         |  FROM g)
-         |SELECT c.jaccard_lo, c.j_mid, c.pb$RowsPerBand AS p_band_milli,
-         |  1000 - c.miss$Bands AS p_detect_milli,
-         |  coalesce(h.n_pairs, 0) AS n_pairs
-         |FROM c LEFT JOIN h ON c.jaccard_lo = h.jaccard_lo""".stripMargin
-    },
-    // Per-(source, split) allocation rollup; the split CASE is the shared
-    // splitSql helper, interpolating the Splits constants.
-    "q_split_assign" ->
-      s"""SELECT source, ${splitSql("doc_id")} AS split,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(len(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT) AS n_tokens
-         |FROM documents GROUP BY 1, 2""".stripMargin,
-    // Near-dup pairs (shared brute-force CTE) whose endpoints straddle a
-    // split line; each side's split is the same hash CASE as q_split_assign.
-    "q_split_leakage" ->
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte,
-         |sp AS (SELECT doc_a, doc_b, jaccard,
-         |    ${splitSql("doc_a")} AS split_a, ${splitSql("doc_b")} AS split_b
-         |  FROM pairs)
-         |SELECT doc_a, doc_b, jaccard, split_a, split_b,
-         |  (split_a = 'train' OR split_b = 'train') AS train_leak
-         |FROM sp WHERE split_a <> split_b""".stripMargin,
-    // Upper-triangular source x source matrix over the same pair set.
-    "q_source_overlap" ->
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte
-         |SELECT least(da.source, db.source) AS src_a,
-         |  greatest(da.source, db.source) AS src_b,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM pairs p
-         |JOIN documents da ON da.doc_id = p.doc_a
-         |JOIN documents db ON db.doc_id = p.doc_b
-         |GROUP BY 1, 2""".stripMargin,
-    // Hashed linear classifier: list_transform + list_sum replays the
-    // per-row fold; empty token lists coalesce to score 0 like the
-    // engine's aggregate() zero element.
-    "q_classifier_score" -> {
-      import graft.operators.TextAnalysis.{ClsSeed, ClsWeightMod, ClsWeightShift}
-      s"""SELECT doc_id, source, n_toks, score, score > 0 AS keep FROM (
-         |  SELECT doc_id, source, CAST(len(t) AS BIGINT) AS n_toks,
-         |    CAST(coalesce(list_sum(list_transform(t,
-         |      tok -> ${h60(ClsSeed, "tok")} % $ClsWeightMod - $ClsWeightShift)), 0)
-         |      AS BIGINT) AS score
-         |  FROM (SELECT doc_id, source,
-         |      list_filter(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'),
-         |        x -> x <> '') AS t
-         |    FROM documents))""".stripMargin
-    },
-    // The trained NB model table: counting + four integer-ln chains.
-    "q_nb_train" ->
-      s"""WITH $nbCtes
-         |SELECT tok, n_pos, n_neg, llr_f FROM model""".stripMargin,
-    // Per-doc posterior fold under the same model CTEs.
-    "q_nb_score" ->
-      s"""WITH $nbCtes,
-         |$nbScoreCtes
-         |SELECT doc_id, n_tokens, score_f, score_f > 0 AS nb_quality
-         |FROM scored""".stripMargin,
-    // The stored-model twin scores through the persisted artifact — ln_f
-    // integers round-trip parquet exactly, so rows are identical.
-    "q_nb_score_stored" ->
-      s"""WITH $nbCtes,
-         |$nbScoreCtes
-         |SELECT doc_id, n_tokens, score_f, score_f > 0 AS nb_quality
-         |FROM scored""".stripMargin,
-    // A full drain of the frozen-model streaming gate equals the batch
-    // scoring row-for-row — same SQL as q_nb_score.
-    "q_stream_nb_score" ->
-      s"""WITH $nbCtes,
-         |$nbScoreCtes
-         |SELECT doc_id, n_tokens, score_f, score_f > 0 AS nb_quality
-         |FROM scored""".stripMargin,
-    // Calibration card: shifted-floor band of the eval-split scores vs
-    // the weak label, same model CTEs.
-    "q_nb_calibration" -> {
-      import graft.functions.FixedPointLn.Scale
-      val (bands, shift) =
-        (TextAnalysis.CalibrationBands, TextAnalysis.CalibrationShift)
-      s"""WITH $nbCtes,
-         |$nbScoreCtes,
-         |ev AS (SELECT greatest(0, least(${bands * Scale - 1},
-         |      s.score_f + ${shift * Scale})) // $Scale - $shift AS band,
-         |    lab.y
-         |  FROM scored s JOIN lab ON s.doc_id = lab.doc_id
-         |  WHERE s.doc_id % ${graft.operators.TextAnalysis.EvalHoldoutMod} = 0)
-         |SELECT band, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         |  CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) * 1000
-         |    // CAST(count(*) AS BIGINT) AS pos_rate_milli
-         |FROM ev GROUP BY band""".stripMargin
-    },
-    // Held-out confusion of the trained filter vs the weak label.
-    "q_nb_eval" ->
-      s"""WITH $nbCtes,
-         |$nbScoreCtes,
-         |ev AS (SELECT s.doc_id, s.score_f > 0 AS p, lab.y
-         |  FROM scored s JOIN lab ON s.doc_id = lab.doc_id
-         |  WHERE s.doc_id % ${graft.operators.TextAnalysis.EvalHoldoutMod} = 0),
-         |cm AS (SELECT
-         |    CAST(sum(CASE WHEN p AND y THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         |    CAST(sum(CASE WHEN p AND NOT y THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         |    CAST(sum(CASE WHEN NOT p AND y THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-         |    CAST(sum(CASE WHEN NOT p AND NOT y THEN 1 ELSE 0 END) AS BIGINT) AS tn
-         |  FROM ev)
-         |SELECT tp, fp, fn, tn,
-         |  (tp + tn) * 1000 // (tp + fp + fn + tn) AS accuracy_milli,
-         |  CASE WHEN tp + fp > 0 THEN tp * 1000 // (tp + fp) END AS precision_milli,
-         |  CASE WHEN tp + fn > 0 THEN tp * 1000 // (tp + fn) END AS recall_milli
-         |FROM cm""".stripMargin,
-    // Directional containment over the brute-forced near-dup pair set:
-    // integer-milli floor divisions and the same verdict CASE order as
-    // Dedup.pairContainment (pairs never include empty shingle sets, so
-    // the divisors are positive).
-    "q_containment" -> {
-      import graft.operators.Dedup.ContainmentMilli
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |${jaccardPairCtes(out = "p", left = "sh", right = "sh")}
-         |SELECT doc_a, doc_b, inter, n_a, n_b,
-         |  inter * 1000 // n_a AS cont_a_milli,
-         |  inter * 1000 // n_b AS cont_b_milli,
-         |  CASE WHEN inter * 1000 // n_a >= $ContainmentMilli
-         |         AND inter * 1000 // n_b >= $ContainmentMilli THEN 'mutual'
-         |    WHEN inter * 1000 // n_a >= $ContainmentMilli THEN 'a_in_b'
-         |    WHEN inter * 1000 // n_b >= $ContainmentMilli THEN 'b_in_a'
-         |    ELSE 'partial' END AS relation
-         |FROM p""".stripMargin
-    },
-    // Quality-signal agreement: the classifier fold + prefixed copies of
-    // the LM-surprisal and rare-bigram chains, 2^3-cell rollup
-    "q_quality_agreement" -> qualityAgreementOracle,
-    // The two brute-forced pair sets (jaccard >= 0.5 via the shared CTE,
-    // simhash hamming <= 3 via the shared simhashCte), full-outer joined
-    // on the pair key and bucketed like Dedup.dedupMethodAgreement.
-    "q_dedup_agreement" ->
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte,
-         |$simhashCte,
-         |sp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |u AS (SELECT p.doc_a IS NOT NULL AS in_mh, sp.doc_a IS NOT NULL AS in_sh
-         |  FROM pairs p FULL JOIN sp
-         |    ON p.doc_a = sp.doc_a AND p.doc_b = sp.doc_b)
-         |SELECT CASE WHEN in_mh AND in_sh THEN 'both'
-         |    WHEN in_mh THEN 'minhash_only'
-         |    ELSE 'simhash_only' END AS method,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM u GROUP BY 1""".stripMargin,
-    // Per-row list replay of the funnel metrics (the top-token count via
-    // list_distinct x list_filter), then the same first-reject CASE order
-    // and (source, verdict) rollup as TextAnalysis.filterFunnel.
-    "q_filter_funnel" -> {
-      import graft.operators.TextAnalysis._
-      s"""WITH t AS (SELECT doc_id, source, CAST(length(text) AS BIGINT) AS n_chars,
-         |    list_filter(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'),
-         |      x -> x <> '') AS tks
-         |  FROM documents),
-         |m AS (SELECT doc_id, source, n_chars,
-         |    CAST(len(tks) AS BIGINT) AS n_toks,
-         |    CAST(len(list_filter(tks,
-         |      w -> regexp_full_match(w, '[.,!?:;"'']+'))) AS BIGINT) AS n_punct,
-         |    CAST(len(list_filter(tks, w -> list_contains($stopList, w)))
-         |      AS BIGINT) AS n_stop,
-         |    CAST(coalesce(list_max(list_transform(list_distinct(tks),
-         |      d -> len(list_filter(tks, x -> x = d)))), 0) AS BIGINT) AS top_tok
-         |  FROM t)
-         |SELECT source,
-         |  CASE WHEN n_toks < $FunnelMinTokens THEN 'too_short'
-         |    WHEN n_chars > $FunnelMaxChars THEN 'too_long'
-         |    WHEN n_punct * $FunnelPunctMult > n_toks THEN 'punct_flood'
-         |    WHEN n_stop = 0 THEN 'no_stopwords'
-         |    WHEN top_tok * $FunnelTopTokMult >= n_toks THEN 'top_token_flood'
-         |    ELSE 'kept' END AS verdict,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_toks) AS BIGINT) AS n_tokens
-         |FROM m GROUP BY 1, 2""".stripMargin
-    },
-    // The classifier-score CTE (shared weight constants), then the same
-    // total-order window rank and ceil(n/10) budget as
-    // Pipeline.selectBestPerSource.
-    "q_select_best" -> {
-      import graft.operators.TextAnalysis.{ClsSeed, ClsWeightMod, ClsWeightShift}
-      import graft.operators.Pipeline.SelectBestDenom
-      s"""WITH s AS (SELECT doc_id, source, CAST(len(t) AS BIGINT) AS n_toks,
-         |    CAST(coalesce(list_sum(list_transform(t,
-         |      tok -> ${h60(ClsSeed, "tok")} % $ClsWeightMod - $ClsWeightShift)), 0)
-         |      AS BIGINT) AS score
-         |  FROM (SELECT doc_id, source,
-         |      list_filter(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'),
-         |        x -> x <> '') AS t
-         |    FROM documents)),
-         |r AS (SELECT source, doc_id, n_toks, score,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY score DESC, doc_id ASC) AS rnk,
-         |    count(*) OVER (PARTITION BY source) AS n_src
-         |  FROM s)
-         |SELECT source, CAST(max(n_src) AS BIGINT) AS n_docs,
-         |  CAST(count(*) AS BIGINT) AS n_selected,
-         |  CAST(min(score) AS BIGINT) AS cutoff_score,
-         |  CAST(sum(n_toks) AS BIGINT) AS n_tokens_selected
-         |FROM r WHERE rnk <= (n_src + ${SelectBestDenom - 1}) // $SelectBestDenom
-         |GROUP BY source""".stripMargin
-    },
-    // One-row datasheet: every per-row column a closed form (token count,
-    // split CASE, classifier fold), aggregated once.
-    "q_corpus_datasheet" -> {
-      import graft.operators.TextAnalysis.{ClsSeed, ClsWeightMod, ClsWeightShift}
-      s"""WITH t AS (SELECT doc_id, source, lang,
-         |    CAST(length(text) AS BIGINT) AS n_chars,
-         |    list_filter(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+'),
-         |      x -> x <> '') AS tks
-         |  FROM documents),
-         |m AS (SELECT source, lang, n_chars,
-         |    CAST(len(tks) AS BIGINT) AS n_toks,
-         |    ${splitSql("doc_id")} AS split,
-         |    CAST(coalesce(list_sum(list_transform(tks,
-         |      tok -> ${h60(ClsSeed, "tok")} % $ClsWeightMod - $ClsWeightShift)), 0)
-         |      AS BIGINT) > 0 AS cls_keep
-         |  FROM t)
-         |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-         |  CAST(sum(n_chars) AS BIGINT) AS n_chars,
-         |  CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-         |  CAST(count(*) FILTER (WHERE split = 'train') AS BIGINT) AS n_train,
-         |  CAST(count(*) FILTER (WHERE split = 'val') AS BIGINT) AS n_val,
-         |  CAST(count(*) FILTER (WHERE split = 'test') AS BIGINT) AS n_test,
-         |  CAST(count(*) FILTER (WHERE cls_keep) AS BIGINT) AS n_cls_keep
-         |FROM m""".stripMargin
-    },
-    // Asymmetric brute force (corpus side x shard side only), same
-    // banding-vs-brute-force equivalence argument as q_dedup_neardup;
-    // split = floor(4*(max_id+1)/5) like the engine's scalar broadcast.
-    "q_dedup_incremental" -> dedupIncrementalSql,
-    // Dup-rate rollup over the same brute-forced shard-vs-corpus pair set
-    // (banding and rate all-integer)
-    "q_ingest_dup_rate" -> {
-      import graft.operators.Dedup.IngestBand
-      s"""WITH sh AS MATERIALIZED ($shCte),
-         |$ingestSideCtes,
-         |${jaccardPairCtes(out = "ip", left = "shc", right = "shs",
-            aCol = "corpus_doc", bCol = "shard_doc", sym = false)},
-         |dup AS (SELECT DISTINCT shard_doc FROM ip)
-         |SELECT doc_id // $IngestBand AS band, CAST(count(*) AS BIGINT) AS n_arrived,
-         |  CAST(count(*) FILTER (WHERE doc_id IN (SELECT shard_doc FROM dup))
-         |    AS BIGINT) AS n_dup,
-         |  CAST(count(*) FILTER (WHERE doc_id IN (SELECT shard_doc FROM dup))
-         |    AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS dup_rate_milli
-         |FROM documents, sp WHERE doc_id >= sp.split
-         |GROUP BY doc_id // $IngestBand""".stripMargin
-    },
-    // Per-micro-batch probe of the static index emits the same pair set
-    // as the batch operator (per-doc signatures, shard-vs-corpus only),
-    // so the oracle is shared verbatim.
-    "q_stream_dedup_incremental" -> dedupIncrementalSql,
-    // Fixed power-of-two-width histogram (shift), exact counts, fractions
-    // as single divisions, TVD contribution without ln.
-    "q_drift_report" -> {
-      import graft.operators.TextAnalysis.{DriftBuckets, DriftBucketShift}
-      s"""WITH sp AS (SELECT (max(doc_id) + 1) * 4 // 5 AS split FROM documents),
-         |b AS (SELECT doc_id >= sp.split AS is_shard,
-         |    least(len(regexp_split_to_array(trim(nfc_normalize(text)), '\\s+')) >> $DriftBucketShift,
-         |      ${DriftBuckets - 1}) AS bucket
-         |  FROM documents, sp),
-         |h AS (SELECT bucket,
-         |    CAST(sum(CASE WHEN is_shard THEN 0 ELSE 1 END) AS BIGINT) AS cnt_corpus,
-         |    CAST(sum(CASE WHEN is_shard THEN 1 ELSE 0 END) AS BIGINT) AS cnt_shard
-         |  FROM b GROUP BY bucket),
-         |t AS (SELECT CAST(sum(cnt_corpus) AS BIGINT) AS n_corpus,
-         |    CAST(sum(cnt_shard) AS BIGINT) AS n_shard FROM h)
-         |SELECT h.bucket, h.cnt_corpus, h.cnt_shard,
-         |  CASE WHEN t.n_corpus > 0
-         |    THEN CAST(h.cnt_corpus AS DOUBLE) / t.n_corpus ELSE 0.0 END AS frac_corpus,
-         |  CASE WHEN t.n_shard > 0
-         |    THEN CAST(h.cnt_shard AS DOUBLE) / t.n_shard ELSE 0.0 END AS frac_shard,
-         |  abs(CASE WHEN t.n_corpus > 0
-         |      THEN CAST(h.cnt_corpus AS DOUBLE) / t.n_corpus ELSE 0.0 END
-         |    - CASE WHEN t.n_shard > 0
-         |      THEN CAST(h.cnt_shard AS DOUBLE) / t.n_shard ELSE 0.0 END) / 2.0 AS tvd_contrib
-         |FROM h, t""".stripMargin
-    },
-    // Connected components via transitive closure: the recursive CTE
-    // computes every (node, reachable-root) pair; min(root) per node is the
-    // component's minimum doc_id — exactly the engine's min-label
-    // propagation fixpoint. UNION (not UNION ALL) dedups per step, so the
-    // recursion terminates.
-    "q_dedup_clusters" ->
-      s"""WITH RECURSIVE sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte,
-         |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(id, root) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id),
-         |labels AS MATERIALIZED (SELECT id AS doc_id, min(root) AS cluster_id FROM reach GROUP BY id),
-         |sizes AS (SELECT cluster_id, count(*) AS cluster_n FROM labels GROUP BY 1)
-         |SELECT l.doc_id, l.cluster_id, s.cluster_n
-         |FROM labels l JOIN sizes s USING (cluster_id)""".stripMargin,
-    // Leak-free split: the clusters CTE (identical to q_dedup_clusters)
-    // plus the splitOf hash CASE on the CLUSTER id — thresholds and seed
-    // interpolated from Splits so the two engines cannot drift.
-    "q_leakfree_split" -> {
-      import graft.operators.Splits
-      s"""WITH RECURSIVE sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte,
-         |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(id, root) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id),
-         |labels AS MATERIALIZED (SELECT id AS doc_id, min(root) AS cluster_id FROM reach GROUP BY id),
-         |sizes AS (SELECT cluster_id, count(*) AS cluster_n FROM labels GROUP BY 1)
-         |SELECT l.doc_id, l.cluster_id, s.cluster_n,
-         |  ${splitCaseSql("l.cluster_id")} AS split
-         |FROM labels l JOIN sizes s USING (cluster_id)""".stripMargin
-    },
-    // Incremental twin: corpus-side clusters + split are the frozen
-    // artifact; a shard doc inherits the split of its minimum matched
-    // corpus cluster, or opens a hash-split singleton.
-    "q_leakfree_split_incremental" -> leakfreeIncrementalSql,
-    // A full drain of the streaming form equals the batch twin
-    // row-for-row — same SQL.
-    "q_stream_leakfree_split" -> leakfreeIncrementalSql,
-    // Keep-best retention: the clusters CTE (identical to q_dedup_clusters)
-    // plus the portable two-agg argmax — per-cluster max token count, then
-    // min doc_id among the members achieving it.
-    "q_dedup_keep_best" ->
-      s"""WITH RECURSIVE sh AS MATERIALIZED ($shCte),
-         |$neardupPairsCte,
-         |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(id, root) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id),
-         |labels AS MATERIALIZED (SELECT id AS doc_id, min(root) AS cluster_id FROM reach GROUP BY id),
-         |q AS (SELECT doc_id,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_toks
-         |  FROM documents),
-         |m AS (SELECT l.cluster_id, l.doc_id, q.n_toks
-         |  FROM labels l JOIN q USING (doc_id)),
-         |s AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-         |    max(n_toks) AS best_toks FROM m GROUP BY cluster_id)
-         |SELECT m.cluster_id, min(m.doc_id) AS keeper_id, s.best_toks, s.n_members
-         |FROM m JOIN s USING (cluster_id)
-         |WHERE m.n_toks = s.best_toks
-         |GROUP BY m.cluster_id, s.best_toks, s.n_members""".stripMargin,
-    // The retention pipeline's oracle chains the same three stages: quality
-    // filter, exact-dedup min-keeper, then the recursive-CTE connected
-    // components over the SURVIVORS' pair graph, keeping representatives.
-    "q_pipeline_retained" ->
-      s"""WITH RECURSIVE t AS ($tokCte),
-         |q AS (SELECT d.doc_id, d.lang, d.text
-         |  FROM documents d JOIN t ON d.doc_id = t.doc_id
-         |  WHERE len(t.toks) >= 10
-         |    AND len(list_filter(t.toks, w -> list_contains($stopList, w))) > 0),
-         |e AS (SELECT min(doc_id) AS doc_id
-         |  FROM q GROUP BY md5(regexp_replace(lower(trim(nfc_normalize(text))), '\\s+', ' ', 'g'))),
-         |s AS (SELECT q.* FROM q JOIN e USING (doc_id)),
-         |st AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(nfc_normalize(text)), '\\s+')[1:${graft.functions.TextFunctions.MaxShingleTokens}] AS toks
-         |  FROM s),
-         |sh AS (SELECT doc_id,
-         |    CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform(
-         |      range(0, len(toks) - 2), i -> array_to_string(toks[i+1:i+3], ' ')))
-         |    ELSE CAST([] AS VARCHAR[]) END AS sh
-         |  FROM st),
-         |$neardupPairsCte,
-         |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(id, root) AS (
-         |  SELECT doc_id, doc_id FROM s
-         |  UNION
-         |  SELECT e2.dst, r.root FROM reach r JOIN edges e2 ON e2.src = r.id),
-         |labels AS MATERIALIZED (SELECT id AS doc_id, min(root) AS cluster_id FROM reach GROUP BY id)
-         |SELECT s.doc_id, s.lang FROM s JOIN labels l ON s.doc_id = l.doc_id
-         |WHERE l.cluster_id = l.doc_id""".stripMargin,
-    "q_simhash_sig" ->
-      s"""WITH $simhashCte
-         |SELECT doc_id, simhash FROM sig""".stripMargin,
-    // Byte-banding over 32 bits is exact for Hamming distance <= 3
-    // (pigeonhole: 3 flipped bits touch at most 3 of the 4 bytes), so the
-    // engine's band join equals this brute-force oracle.
-    "q_simhash_pairs" ->
-      s"""WITH $simhashCte
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  bit_count(xor(a.simhash, b.simhash)) AS dist
-         |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin,
-    // Pairs only (no float column): cosine values are not bit-portable
-    // across engines; the closest pair sits 5.5e-4 from the 0.45 threshold
-    // at sf0.01, far beyond any fp divergence. The oracle brute-forces all
-    // pairs; the engine's grid-blocked join is exact by construction.
-    "q_embed_neardup" ->
-      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.45""".stripMargin,
-    // The LSH variant's candidates + exact verify return the same set on
-    // this data (recall 1 measured with >= 5-table margin at every SF — see
-    // Similarity.NearDupPlanes) — same oracle.
-    "q_embed_neardup_lsh" ->
-      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.45""".stripMargin,
-    // Same transitive-closure shape as q_dedup_clusters, over the exact
-    // cosine pair graph.
-    "q_embed_clusters" ->
-      """WITH RECURSIVE pairs AS (
-        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.45),
-        |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(id, root) AS (
-        |  SELECT vec_id, vec_id FROM embeddings
-        |  UNION
-        |  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id),
-        |labels AS (SELECT id AS vec_id, min(root) AS cluster_id FROM reach GROUP BY id),
-        |sizes AS (SELECT cluster_id, count(*) AS cluster_n FROM labels GROUP BY 1)
-        |SELECT l.vec_id, l.cluster_id, s.cluster_n
-        |FROM labels l JOIN sizes s USING (cluster_id)""".stripMargin,
-    // Scalar quantization replayed exactly: same per-dim ranges, same
-    // pinned double-op order for codes and midpoint error, same 255 clamp.
-    "q_embed_sq8" ->
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings),
-         |c AS (SELECT vec_id, CAST(i - 1 AS INTEGER) AS d, v[i] AS v
-         |  FROM e CROSS JOIN range(1, ${EmbDim + 1}) t(i)),
-         |r AS (SELECT d, min(v) AS mn, max(v) AS mx FROM c GROUP BY d),
-         |qt AS (SELECT c.vec_id, c.d, c.v, r.mn, r.mx,
-         |    CASE WHEN r.mx = r.mn THEN 0
-         |         ELSE least(CAST(floor(((c.v - r.mn) * 255.0) / (r.mx - r.mn)) AS BIGINT),
-         |                    255) END AS q
-         |  FROM c JOIN r USING (d))
-         |SELECT vec_id, d, q,
-         |  abs(v - (mn + ((q + 0.5) * (mx - mn)) / 255.0)) AS err
-         |FROM qt""".stripMargin,
-    // Label prototypes: the k-means quantized-mean portability trick
-    // (integer sums, pinned division order, FLOAT round-trip).
-    "q_label_centroids" -> {
-      val q = graft.operators.Similarity.MeanQuantum
-      s"""WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |c AS (SELECT label, CAST(i - 1 AS INTEGER) AS d, v[i] AS v
-         |  FROM e CROSS JOIN range(1, ${EmbDim + 1}) t(i)),
-         |m AS (SELECT label, d,
-         |    CAST(sum(CAST(round(v * $q) AS BIGINT)) AS BIGINT) AS s, count(*) AS n
-         |  FROM c GROUP BY label, d)
-         |SELECT label, d,
-         |  CAST(CAST(CAST(s AS DOUBLE) / n / $q.0 AS FLOAT) AS DOUBLE) AS c
-         |FROM m""".stripMargin
-    },
-    // Nearest-centroid assignment: same quantized prototypes, same
-    // left-assoc dot chains, same (cos DESC, label ASC) tie-break.
-    "q_nearest_centroid" -> {
-      val q = graft.operators.Similarity.MeanQuantum
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
-         |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings),
-         |c AS (SELECT label, CAST(i - 1 AS INTEGER) AS d, v[i] AS v
-         |  FROM e CROSS JOIN range(1, ${EmbDim + 1}) t(i)),
-         |m AS (SELECT label, d,
-         |    CAST(sum(CAST(round(v * $q) AS BIGINT)) AS BIGINT) AS s, count(*) AS n
-         |  FROM c GROUP BY label, d),
-         |cent AS (SELECT label, d,
-         |    CAST(CAST(CAST(s AS DOUBLE) / n / $q.0 AS FLOAT) AS DOUBLE) AS c
-         |  FROM m),
-         |cl AS (SELECT label AS pred_label, list(c ORDER BY d ASC) AS cv
-         |  FROM cent GROUP BY label),
-         |score AS (SELECT e.vec_id, e.label, cl.pred_label,
-         |    ${dotSql("e.v", "cl.cv")}
-         |      / (e.nrm * sqrt(${selfDotSql("cl.cv")})) AS cos
-         |  FROM e CROSS JOIN cl),
-         |a AS (SELECT vec_id, label, pred_label,
-         |    row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY cos DESC, pred_label ASC) AS rn
-         |  FROM score)
-         |SELECT label, pred_label, count(*) AS n
-         |FROM a WHERE rn = 1 GROUP BY label, pred_label""".stripMargin
-    },
-    // Compaction is a pure layout rewrite — same oracle as q_events_hourly.
-    "q_compacted_scan" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type""".stripMargin,
-    "ann_lsh" -> annLshOracle,
-    "ann_ivf" -> annIvfOracle,
-    "ann_ivf_trained" -> annIvfTrainedOracle,
-    // the stored-probe twins replay the identical trained pipeline — the
-    // store round-trips exact float32 bits, so the result hashes match
-    "ann_ivf_stored" -> annIvfTrainedOracle,
-    "ann_pq_stored" -> annPqOracle,
-    "q_semdedup" -> semDeDupOracle,
-    "q_sample_diverse" -> cellBalancedSampleOracle,
-    // retrieval eval: exact-cosine global rank per query, label relevance,
-    // integer milli MRR / recall@k
-    "q_retrieval_eval" -> {
-      val (nQ, k) = (10, 10)
-      s"""WITH nz AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
-         |    sqrt(${selfDotSql("CAST(embedding AS DOUBLE[])")}) AS nrm
-         |  FROM embeddings WHERE embedding IS NOT NULL
-         |    AND sqrt(${selfDotSql("CAST(embedding AS DOUBLE[])")}) > 0.0),
-         |lc AS (SELECT label, CAST(count(*) AS BIGINT) AS n_label
-         |  FROM nz GROUP BY label),
-         |r AS (SELECT q.vec_id AS query_id, q.label AS q_label,
-         |    c.label AS nb_label,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${dotSql("q.v", "c.v")} / (q.nrm * c.nrm) DESC,
-         |               c.vec_id ASC) AS rank
-         |  FROM nz q JOIN nz c ON q.vec_id < $nQ AND c.vec_id <> q.vec_id),
-         |rk AS (SELECT * FROM r WHERE rank <= $k),
-         |pq AS (SELECT query_id, q_label,
-         |    CAST(sum(CASE WHEN nb_label = q_label THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS hits,
-         |    min(CASE WHEN nb_label = q_label THEN rank END) AS first_rank
-         |  FROM rk GROUP BY query_id, q_label),
-         |qs AS (SELECT vec_id AS query_id, label AS q_label
-         |  FROM nz WHERE vec_id < $nQ)
-         |SELECT qs.query_id, qs.q_label AS label,
-         |  lc.n_label - 1 AS n_relevant,
-         |  CAST(coalesce(first_rank, 0) AS BIGINT) AS first_rel_rank,
-         |  CASE WHEN first_rank IS NOT NULL THEN 1000 // first_rank
-         |       ELSE 0 END AS rr_milli,
-         |  coalesce(hits, 0) AS hits_at_k,
-         |  CASE WHEN lc.n_label > 1
-         |       THEN (coalesce(hits, 0) * 1000)
-         |            // least(CAST($k AS BIGINT), lc.n_label - 1)
-         |       ELSE 0 END AS recall_milli
-         |FROM qs LEFT JOIN pq
-         |  ON qs.query_id = pq.query_id AND qs.q_label = pq.q_label
-         |JOIN lc ON qs.q_label = lc.label""".stripMargin
-    },
-    "q_knn_label" -> knnLabelOracle,
-    "q_embed_outliers" -> embedOutliersOracle,
-    "q_semdedup_incremental" -> semDeDupIncrementalOracle,
-    "q_semantic_leakage" -> semanticLeakageOracle,
-    "q_embed_drift" -> embeddingDriftOracle,
-    // the streaming drain sums per-batch cell counts into the same card —
-    // oracle shared verbatim with the batch twin
-    "q_stream_embed_drift" -> embeddingDriftOracle,
-    "q_ann_stale" -> annStaleOracle,
-    // metadata-filtered IVF probe: label class in the candidate join
-    "q_ann_filtered" -> annFilteredOracle,
-    // recall vs filter selectivity at label-congruence tiers 10/5/2/1
-    "q_ann_filtered_recall" -> annFilteredRecallOracle,
-    // the streaming twin probes the same frozen index per micro-batch —
-    // same verdicts, same oracle, verbatim
-    "q_stream_semdedup_incremental" -> semDeDupIncrementalOracle,
-    "ann_pq" -> annPqOracle,
-    "ann_ivfpq" -> annIvfPqOracle,
-    "ann_ivfpq_stored" -> annIvfPqOracle,
-    "q_multimodal_meta" ->
-      """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-        |  md5(text) AS content_md5, 'fake/' || source AS format
-        |FROM documents""".stripMargin,
-    // The testdata's payloads all carry `fake/*` formats, which no shipped
-    // codec decodes — so every row is honestly marked undecodable: NULL
-    // features + decodable=false, all predictable in closed form (the
-    // container metadata — byte length, format — stays real).
-    "mm_features" ->
-      """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-        |  'fake/' || source AS format, FALSE AS decodable,
-        |  CAST(NULL AS INTEGER) AS width, CAST(NULL AS INTEGER) AS height,
-        |  CAST(NULL AS INTEGER) AS n_frames,
-        |  CAST(NULL AS INTEGER) AS sample_rate,
-        |  CAST(NULL AS INTEGER) AS channels,
-        |  CAST(NULL AS BIGINT) AS duration_ms,
-        |  CAST(NULL AS DOUBLE) AS luma_mean
-        |FROM documents""".stripMargin,
-    // Closed-form replay of the real-container round-trip: the engine
-    // builds MP4/AVI/BMP payloads whose every header field is a fixed
-    // arithmetic function of doc_id and decodes them with the production
-    // parsers; the oracle computes the same functions directly. Luma is a
-    // solid-color BMP, so (299r+587g+114b)/1000.0 is exact in both engines
-    // (one double division of an exact integer).
-    "q_mm_decoded" ->
-      """WITH p AS (SELECT doc_id, doc_id % 3 AS m,
-        |    doc_id % 31 + 2 AS w, doc_id % 17 + 2 AS h,
-        |    299*((doc_id*37)%256) + 587*((doc_id*59)%256) + 114*((doc_id*83)%256) AS k,
-        |    doc_id % 50 + 1 AS frames, 20000 + (doc_id % 100)*100 AS uspf
-        |  FROM documents)
-        |SELECT doc_id, w AS width, h AS height,
-        |  CASE m WHEN 0 THEN 0 WHEN 1 THEN frames ELSE 1 END AS n_frames,
-        |  CASE m WHEN 0 THEN doc_id % 9000 + 500
-        |    WHEN 1 THEN (uspf * frames) // 1000 ELSE 0 END AS duration_ms,
-        |  CASE WHEN m = 0 THEN 0.0
-        |    ELSE CAST(k AS DOUBLE) / 1000.0 END AS luma_mean
-        |FROM p""".stripMargin,
-    // Streaming twin of q_events_hourly: same grouping, same aggregates,
-    // same oracle — window(ts, '1 hour').start == date_trunc('hour', ts).
-    "q_stream_hourly_complete_oracle" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type""".stripMargin,
-    // Append mode emits a window exactly once — when the final watermark
-    // (max event time - 1 h) passes its end — so the oracle is the batch
-    // aggregation restricted to hour + 2 h <= max(ts). Boundary safety:
-    // Sliding windows: each event lands in exactly 2 windows (start =
-    // floor30(ts) - k*30min for k in 0,1 — both automatically contain ts),
-    // all arithmetic in exact epoch-micros integers.
-    "q_events_sliding" ->
-      """SELECT win_start_us, event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value
-        |FROM (
-        |  SELECT (epoch_us(ts) // 1800000000 - k) * 1800000000 AS win_start_us,
-        |    event_type, value
-        |  FROM events, range(0, 2) t(k))
-        |GROUP BY win_start_us, event_type""".stripMargin,
-    // Same + the append-mode emission cutoff (window end + 1h watermark).
-    // Boundary margin: sliding boundaries land on :00/:30 and every SF's
-    // max(ts) is >= 35 s from a half-hour mark — far past ms truncation.
-    "q_stream_sliding_append" ->
-      """SELECT * FROM (
-        |  SELECT win_start_us, event_type, count(*) AS n,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value
-        |  FROM (
-        |    SELECT (epoch_us(ts) // 1800000000 - k) * 1800000000 AS win_start_us,
-        |      event_type, value
-        |    FROM events, range(0, 2) t(k))
-        |  GROUP BY win_start_us, event_type) t
-        |WHERE win_start_us + 7200000000 <= (SELECT max(epoch_us(ts)) FROM events)""".stripMargin,
-    // max(ts) sits 26-59 min past the hour at every SF, far from the
-    // nanos-vs-micros truncation and <=-vs-< ambiguity at exact boundaries.
-    "q_stream_hourly_append" ->
-      """SELECT * FROM (
-        |  SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value
-        |  FROM events GROUP BY date_trunc('hour', ts), event_type) t
-        |WHERE hour + INTERVAL 2 HOUR <= (SELECT max(ts) FROM events)""".stripMargin,
-    // Gaps-and-islands sessionization (same session iff gap < 30 min,
-    // matching session_window's merge rule), then the append-mode emission
-    // cutoff: a session is emitted iff the final watermark (max event time
-    // - 1 h) passed its end (last event + 30 min). All arithmetic in epoch
-    // micros = exact integers. Boundary assumption: Spark's watermark is
-    // MILLISECOND-truncated while this cutoff is exact micros, so the two
-    // engines could classify a session differently only if its end landed
-    // within 1 ms of (max ts - 1 h); session ends are event-derived (last
-    // event + 30 min exactly), and EventStreamsSpec asserts the fixtures
-    // keep every session end >= 1 ms away from the cutoff.
-    "q_stream_sessions_append" ->
-      """WITH o AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= 1800000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-        |s AS (SELECT user_id, us,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY us ASC, event_id ASC
-        |                     ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o),
-        |sess AS (SELECT user_id, min(us) AS session_start_us,
-        |    max(us) + 1800000000 AS session_end_us, count(*) AS n_events
-        |  FROM s GROUP BY user_id, sid)
-        |SELECT user_id, session_start_us, session_end_us, n_events
-        |FROM sess
-        |WHERE session_end_us + 3600000000 <= (SELECT epoch_us(max(ts)) FROM events)""".stripMargin,
-    // Streaming session windows rolled up per user == batch
-    // gaps-and-islands sessionization (same oracle as q_events_sessions).
-    "q_stream_sessions_complete_oracle" ->
-      """SELECT user_id,
-        |  CAST(1 + sum(CASE WHEN prev_ms IS NOT NULL AND ms - prev_ms >= 1800000
-        |                    THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-        |  count(*) AS n_events
-        |FROM (
-        |  SELECT user_id, epoch_ms(ts) AS ms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_ms
-        |  FROM events) t
-        |GROUP BY user_id""".stripMargin,
-    "q_ann_bruteforce" -> annBruteforceOracle,
-    // Same ranking contract as the brute-force oracle, with the label
-    // inequality in the join — ranks are per-query over the negative set
-    "q_hard_negatives" ->
-      """SELECT query_id, query_label, neighbor_id, neighbor_label, rank FROM (
-        |  SELECT a.vec_id AS query_id, a.label AS query_label,
-        |    b.vec_id AS neighbor_id, b.label AS neighbor_label,
-        |    row_number() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(a.embedding, b.embedding) DESC,
-        |               b.vec_id ASC) AS rank
-        |  FROM embeddings a JOIN embeddings b ON b.label <> a.label
-        |  WHERE a.vec_id < 10) t
-        |WHERE rank <= 5""".stripMargin,
-    // Recall report: recompute all four ANN result sets (the same oracles
-    // as their standalone queries, nested as derived tables) and intersect
-    // — deterministic inputs make the recall EXACT, not an estimate.
-    "q_ann_recall" ->
-      s"""WITH exact AS (SELECT query_id, neighbor_id FROM ($annBruteforceOracle) x),
-         |lsh_r AS (SELECT query_id, neighbor_id FROM (${annLshOracle}) x),
-         |ivf_r AS (SELECT query_id, neighbor_id FROM (${annIvfOracle}) x),
-         |ivfpq_r AS (SELECT query_id, neighbor_id FROM (${annIvfPqOracle}) x),
-         |poss AS (SELECT CAST(count(*) AS BIGINT) AS n_possible FROM exact),
-         |h AS (
-         |  SELECT 'lsh' AS method, CAST(count(*) AS BIGINT) AS n_hits
-         |  FROM exact JOIN lsh_r USING (query_id, neighbor_id)
-         |  UNION ALL
-         |  SELECT 'ivf', CAST(count(*) AS BIGINT)
-         |  FROM exact JOIN ivf_r USING (query_id, neighbor_id)
-         |  UNION ALL
-         |  SELECT 'ivfpq', CAST(count(*) AS BIGINT)
-         |  FROM exact JOIN ivfpq_r USING (query_id, neighbor_id))
-         |SELECT h.method, h.n_hits, poss.n_possible,
-         |  CASE WHEN poss.n_possible > 0
-         |    THEN CAST(h.n_hits AS DOUBLE) / poss.n_possible ELSE 0.0 END AS recall
-         |FROM h, poss""".stripMargin,
-    // JL random projection: each component is one of the engine's ±v[d]
-    // signed sums (same md5 hyperplane family, same left-to-right order),
-    // emitted per (vec_id, k) via the same explode shape.
-    "q_embed_rp" -> {
-      import graft.operators.Similarity.{RpPlanes, RpTable}
-      val hps = graft.operators.Similarity.hyperplanes(RpTable, RpPlanes, EmbDim)
-      val cases = (0 until RpPlanes)
-        .map(p => s"WHEN $p THEN ${signedSumSql("v", hps(p))}")
-        .mkString("\n    ")
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    sqrt(${selfDotSql("v")}) AS nrm FROM embeddings)
-         |SELECT e.vec_id, CAST(k.i AS INTEGER) AS k,
-         |  CASE k.i
-         |    $cases
-         |  END AS rp_value
-         |FROM e CROSS JOIN range(0, $RpPlanes) k(i)""".stripMargin
-    },
-  )
-
-  /** HLL vocabulary oracle, shared by the relational and UDAF forms. */
-  private def hllVocabOracle: String = {
-    import graft.operators.Sketches._
-    s"""WITH t AS (SELECT lang,
-       |    unnest(regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+')) AS tok
-       |  FROM documents),
-       |tt AS (SELECT lang, tok FROM t WHERE length(tok) > 0),
-       |g AS (SELECT lang, ${h60(HllHashSeed, "tok")} AS gh FROM tt),
-       |r AS (SELECT lang, gh % $HllM AS j,
-       |    CASE WHEN (gh // $HllM) = 0 THEN 0
-       |         ELSE length(bin(gh // $HllM)) END AS bl
-       |  FROM g),
-       |rb AS (SELECT lang, j, min(bl) AS minb FROM r GROUP BY lang, j),
-       |p AS (SELECT lang,
-       |    CAST(sum(CAST(1 AS BIGINT) << minb) AS BIGINT) AS denom_present,
-       |    count(*) AS n_present
-       |  FROM rb GROUP BY lang),
-       |e AS (SELECT lang, count(DISTINCT tok) AS exact_distinct
-       |  FROM tt GROUP BY lang)
-       |SELECT p.lang,
-       |  CAST($HllM - p.n_present AS INTEGER) AS n_zero_registers,
-       |  CAST(p.denom_present
-       |    + ($HllM - p.n_present) * (CAST(1 AS BIGINT) << ${HllW + 1})
-       |    AS BIGINT) AS denom,
-       |  $HllNumerator / (p.denom_present
-       |    + ($HllM - p.n_present) * (CAST(1 AS BIGINT) << ${HllW + 1}))
-       |    AS hll_raw_estimate,
-       |  e.exact_distinct
-       |FROM p JOIN e ON p.lang = e.lang""".stripMargin
-  }
-
-  private def stopList: String =
-    graft.operators.TextAnalysis.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
-  private def langHitCols: String =
-    graft.operators.TextAnalysis.LangMarkers.map { case (l, ws) =>
-      val lst = ws.map(w => s"'$w'").mkString("[", ",", "]")
-      s"len(list_filter(toks, w -> list_contains($lst, w))) AS hits_$l"
-    }.mkString(",\n  ")
-
-  /** The langId CTE chain ending in `li(doc_id, lang, hits_*, pred_lang)`
-    * — shared by the per-doc and confusion-rollup oracles.
-    */
-  private def langIdCtes: String =
-    s"""t AS (SELECT doc_id,
-       |  regexp_split_to_array(trim(lower(nfc_normalize(text))), '\\s+') AS toks FROM documents),
-       |h AS (SELECT doc_id, $langHitCols FROM t),
-       |li AS (SELECT d.doc_id, d.lang, h.hits_en, h.hits_de, h.hits_es, h.hits_fr,
-       |  CASE WHEN hits_en >= hits_de AND hits_en >= hits_es AND hits_en >= hits_fr THEN 'en'
-       |       WHEN hits_de >= hits_es AND hits_de >= hits_fr THEN 'de'
-       |       WHEN hits_es >= hits_fr THEN 'es'
-       |       ELSE 'fr' END AS pred_lang
-       |  FROM documents d JOIN h ON d.doc_id = h.doc_id)""".stripMargin
 }

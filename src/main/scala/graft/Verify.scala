@@ -13,15 +13,13 @@ object Verify {
   }
 
   private def run(sfDir: String, outDir: String): Unit = {
+    // dev affordance: SPARK_GRAFT_ONLY=q1,q2 restricts the dump to named
+    // queries (the oracle gate leaves it unset, so it always runs the lot)
+    val queries = SparkEntry.selectFromEnv("verify")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Sessions.local(cores = cpus, shufflePartitions = cpus, appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // dev affordance: SPARK_GRAFT_ONLY=q1,q2 restricts the dump to named
-    // queries (the driver never sets it, so the gate always runs the lot)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val failed = dumpQueries(spark, sfDir, outDir,
-      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) })
+    val failed = dumpQueries(spark, sfDir, outDir, queries)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -34,7 +32,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // sorted keys, so two dumps compare with cmp
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -451,7 +451,7 @@ object Sampling {
 
   /** Default mixture temperature T = [[TempNum]]/[[TempDen]] — a single
     * named pair interpolated into BOTH the registrations and the DuckDB
-    * oracles (SparkEntry.temperedWeightCtes), so changing the default
+    * oracles (SqlFragments.temperedWeightCtes), so changing the default
     * here can never silently desync the two.
     */
   val TempNum = 2L

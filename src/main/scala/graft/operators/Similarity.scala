@@ -26,7 +26,7 @@ object Similarity {
 
   /** Default IVF train geometry (k-means cells / Lloyd rounds) — single
     * named pair shared by every IVF-family default parameter AND the
-    * DuckDB oracles that replay the training (SparkEntry interpolates
+    * DuckDB oracles that replay the training (graft.queries interpolates
     * these, so changing a default here cannot silently desync the
     * registered query from its oracle).
     */
@@ -927,8 +927,8 @@ object Similarity {
 
   /** Deterministic ±1 random hyperplanes from md5 — reproducible across
     * runs and engines, no RNG state. One set per (table, plane).
-    * `private[graft]` so [[graft.SparkEntry]] can mirror the same planes
-    * into the DuckDB oracle SQL.
+    * `private[graft]` so [[graft.queries.SqlFragments]] can mirror the
+    * same planes into the DuckDB oracle SQL.
     */
   private[graft] def hyperplanes(table: Int, planes: Int, dim: Int): Array[Array[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")

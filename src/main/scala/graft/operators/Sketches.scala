@@ -418,7 +418,7 @@ object Sketches {
     * truncated down to the 2^QsLMin resolution): one node per set bit j of
     * `x >> QsLMin` — level `QsLMin + j`, bucket `2·(x >> QsLMin >> (j+1))`
     * — at most QsB nodes whatever the probe. `private[graft]` so the
-    * SparkEntry oracle mirrors the same node lists as SQL literals (the
+    * SketchQueries oracle mirrors the same node lists as SQL literals (the
     * hyperplane pattern).
     */
   private[graft] def prefixNodes(x: Long): Seq[(Int, Long)] = {

@@ -585,7 +585,7 @@ object EventStreams {
   /** Run the append-mode funnel over the driver's events dir to a parquet
     * sink and read it back (the [[hourlyStatsAppendToBatch]] harness
     * shape). The oracle replays the windowed, watermark-gated semantics
-    * exactly — see `q_stream_funnel_append` in SparkEntry.
+    * exactly — see `q_stream_funnel_append` in EventQueries.
     */
   def funnelAppendToBatch(spark: SparkSession, dir: String): DataFrame =
     drainAppendToParquet(funnelRows(source(spark, dir)).toDF())
